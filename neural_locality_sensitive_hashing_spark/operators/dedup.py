@@ -124,12 +124,19 @@ def minhash_dup_pairs(
 ) -> DataFrame:
     """Full candidate-generation + verification -> (a, b, jaccard).
 
+    Not lazy throughout: inside the broadcast-verify gate this call runs
+    eager driver jobs (the gate's ``sigs.count()`` and the shingle-set
+    collect) and creates three broadcast variables; the returned
+    DataFrame is lazy from there on.
+
     Cache lifecycle: `sigs` is persisted because banding AND the verify
-    gather-join consume it; the returned DataFrame is lazy, so the cache
-    must outlive this function. Callers that materialize the result and
-    loop (benchmarks, streaming) should release it via
-    `spark.catalog.clearCache()` or by unpersisting the plan's cached
-    ancestor — bench.py does exactly that between queries."""
+    gather-join consume it, so the cache must outlive this function.
+    Callers that materialize the result and loop (benchmarks, streaming)
+    should release it via `spark.catalog.clearCache()` or by unpersisting
+    the plan's cached ancestor — bench.py does exactly that between
+    queries. ``clearCache()`` does not release the broadcasts: they stay
+    on the driver and executors until the plan holding them is dropped
+    and Spark's ContextCleaner reclaims them."""
     sigs = banded_signatures_fused(docs, cfg, id_col, text_col)
     sigs = sigs.persist()
     bands = explode_fused_bands(sigs)

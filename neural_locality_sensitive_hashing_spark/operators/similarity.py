@@ -38,6 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, LongType
 
+from neural_locality_sensitive_hashing_spark.operators.verify import sorted_positions
+
 
 def dot(a: Column, b: Column) -> Column:
     """Native dot product of two array<double> columns (no Python)."""
@@ -635,8 +637,8 @@ def _make_pair_cosine_bcast_arrow(b_ids, b_mat, keep_above: float):
         for batch in it:
             a_ids = batch.column("a").to_numpy(zero_copy_only=False)
             b_ids_ = batch.column("b").to_numpy(zero_copy_only=False)
-            ia = np.searchsorted(ids, a_ids)
-            ib = np.searchsorted(ids, b_ids_)
+            ia = sorted_positions(ids, a_ids, "embedding")
+            ib = sorted_positions(ids, b_ids_, "embedding")
             a = mat[ia]
             b = mat[ib]
             num = (a * b).sum(axis=1)

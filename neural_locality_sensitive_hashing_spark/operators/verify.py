@@ -144,6 +144,22 @@ def jaccard_verify(
     )
 
 
+def sorted_positions(ids: np.ndarray, query: np.ndarray, table: str) -> np.ndarray:
+    """Row positions of ``query`` ids in the sorted id array ``ids`` of a
+    broadcast lookup table. A bare ``np.searchsorted`` on an absent id
+    returns the NEXT id's row (a silent wrong lookup) or one past the end;
+    this raises a KeyError naming the first absent id instead."""
+    pos = np.searchsorted(ids, query)
+    found = pos < len(ids)
+    found[found] = ids[pos[found]] == query[found]
+    if not found.all():
+        raise KeyError(
+            f"pair names id {int(query[~found][0])}, absent from the broadcast "
+            f"{table} table"
+        )
+    return pos
+
+
 def jaccard_verify_bcast(
     pairs: DataFrame,
     shingle_sets: DataFrame,
@@ -194,8 +210,8 @@ def jaccard_verify_bcast(
         for batch in it:
             a_ids = batch.column("a").to_numpy(zero_copy_only=False)
             b_ids_ = batch.column("b").to_numpy(zero_copy_only=False)
-            ia = np.searchsorted(ids_, a_ids)
-            ib = np.searchsorted(ids_, b_ids_)
+            ia = sorted_positions(ids_, a_ids, "shingle-set")
+            ib = sorted_positions(ids_, b_ids_, "shingle-set")
             out = np.zeros(len(a_ids), dtype=np.float64)
             for i in range(len(a_ids)):
                 a = flat_[offs_[ia[i]] : offs_[ia[i] + 1]]

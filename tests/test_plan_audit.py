@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import pytest
 
-from tools.plan_audit import audit, window_partition_keys
+from tools.plan_audit import audit, count_exchanges, window_partition_keys
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -113,6 +113,24 @@ def test_audit_detects_bad_plans(spark):
 
     shuffled = df.repartition(7).repartition(5).groupBy("id").count()
     assert audit(shuffled)["exchanges"] >= 2
+
+
+def test_exchange_count_includes_unannotated_lines():
+    """A plan_id repeated by a cached subtree counts once; an Exchange line
+    without a plan_id (e.g. a cached subtree rendered unannotated) still
+    counts, so a plan mixing both is not undercounted."""
+    plan = """\
+Project [a]
++- Exchange hashpartitioning(a, 8), ENSURE_REQUIREMENTS, [plan_id=7]
+   +- InMemoryTableScan [a]
+      +- InMemoryRelation [a], StorageLevel(disk, memory, 1 replicas)
+         +- Exchange hashpartitioning(a, 8), ENSURE_REQUIREMENTS, [plan_id=7]
+            +- Exchange RoundRobinPartitioning(8), REPARTITION_BY_NUM
+               +- BroadcastExchange HashedRelationBroadcastMode(List(a)), [plan_id=9]
+                  +- ReusedExchange [a], Exchange hashpartitioning(a, 8), [plan_id=7]
+"""
+    assert count_exchanges(plan) == 2
+    assert count_exchanges(plan, "BroadcastExchange") == 1
 
 
 # Exchange COUNT can't see skew: `Window [lang]` over the raw corpus is

@@ -103,3 +103,23 @@ def test_bcast_verify_equals_join_verify(spark, pages):
     spark.catalog.clearCache()
     assert join_rows, "fixture must contain planted duplicates"
     assert bcast_rows == join_rows
+
+
+def test_bcast_verify_rejects_absent_id(spark):
+    """A candidate pair naming an id the broadcast shingle-set table lacks
+    fails loudly: an id between two present ids would otherwise score
+    against the next doc's set, and one past the largest would index out
+    of range."""
+    from neural_locality_sensitive_hashing_spark.operators.verify import (
+        jaccard_verify_bcast,
+    )
+
+    cfg = DedupConfig(shingle_hash_bytes=4)
+    sh = bytes(range(16))
+    sets_df = spark.createDataFrame([(1, sh), (3, sh)], "doc_id long, sh binary")
+    ok = jaccard_verify_bcast(spark.createDataFrame([(1, 3)], "a long, b long"), sets_df, cfg)
+    assert [(r.a, r.b, r.jaccard) for r in ok.collect()] == [(1, 3, 1.0)]
+    for absent in ((1, 2), (3, 9)):
+        pairs = spark.createDataFrame([absent], "a long, b long")
+        with pytest.raises(Exception, match=f"id {absent[1]}, absent"):
+            jaccard_verify_bcast(pairs, sets_df, cfg).collect()

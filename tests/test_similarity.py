@@ -150,3 +150,32 @@ def test_fast_path_equals_lsh_path(spark):
     assert len(lsh) > 0
     for k in lsh:
         assert repr(lsh[k]) == repr(fast[k]), (k, lsh[k], fast[k])
+
+
+def test_bcast_cosine_kernel_rejects_absent_id():
+    """The broadcast cosine kernel raises on a pair naming an id missing
+    from its table, instead of scoring the next row's vector (id inside
+    the range) or failing on an out-of-range index (id past the end)."""
+    from types import SimpleNamespace
+
+    import pyarrow as pa
+
+    from neural_locality_sensitive_hashing_spark.operators.similarity import (
+        _make_pair_cosine_bcast_arrow,
+    )
+
+    ids = SimpleNamespace(value=np.array([1, 3], dtype=np.int64))
+    mat = SimpleNamespace(value=np.array([[1.0, 0.0], [1.0, 1.0]]))
+    gen = _make_pair_cosine_bcast_arrow(ids, mat, 0.0)
+
+    def run(a, b):
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array([a], pa.int64()), pa.array([b], pa.int64())], names=["a", "b"]
+        )
+        return list(gen(iter([batch])))
+
+    (out,) = run(1, 3)
+    assert out.column("cosine_raw").to_pylist() == pytest.approx([2**-0.5])
+    for a, b, absent in ((1, 2, 2), (9, 3, 9)):
+        with pytest.raises(KeyError, match=f"id {absent}, absent"):
+            run(a, b)

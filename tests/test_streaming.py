@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import glob
 import os
 
 from neural_locality_sensitive_hashing_spark.config import DedupConfig
@@ -9,6 +10,25 @@ from neural_locality_sensitive_hashing_spark.operators.dedup import minhash_dup_
 from neural_locality_sensitive_hashing_spark.streaming.incremental import run_incremental
 
 CFG = DedupConfig()
+
+
+def _data_files(store: str) -> list[str]:
+    return [
+        f for f in glob.glob(f"{store}/**/*.parquet", recursive=True)
+        if os.path.basename(f).startswith("part-")
+    ]
+
+
+def _shuffle_parts(spark) -> int:
+    """A batch's partition count: the signatures fan out to the shuffle
+    parallelism, and each store append is coalesced to it."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def _compacted_file_count(spark, store: str) -> int:
+    """ceil(store bytes ÷ spark.sql.files.maxPartitionBytes)."""
+    max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return -(-sum(os.path.getsize(f) for f in _data_files(store)) // max_bytes)
 
 
 def test_incremental_equals_batch(spark, pages_1k, tmp_path):
@@ -46,57 +66,6 @@ def test_incremental_equals_batch(spark, pages_1k, tmp_path):
         )
 
 
-def test_store_partition_pruning(spark, pages_1k, tmp_path):
-    """Per-batch store reads scale with the batch's bucket/id coverage,
-    not total store size: the partitioned stores prune directories."""
-    from pyspark.sql import functions as F
-
-    from neural_locality_sensitive_hashing_spark.operators.candidates import (
-        candidate_pairs_two_sided,
-        explode_bands,
-    )
-    from neural_locality_sensitive_hashing_spark.operators.dedup import signatures_fused
-
-    pages_path, _ = pages_1k
-    pages = spark.read.parquet(pages_path)
-    input_dir = str(tmp_path / "incoming")
-    os.makedirs(input_dir)
-    for i in range(3):
-        pages.where(f"doc_id % 3 = {i}").coalesce(1).write.parquet(
-            f"{input_dir}/b{i}.parquet"
-        )
-    dedup = run_incremental(spark, f"{input_dir}/*", str(tmp_path / "state"), CFG)
-
-    # a 1-doc probe touches <= 32 buckets -> <= 32 of 64 band partitions
-    probe = signatures_fused(pages.where("doc_id = 999"), CFG)
-    probe_bands = explode_bands(probe, CFG)
-    full_bands = spark.read.parquet(dedup.band_store)
-    pruned_bands = dedup.probe_band_store(probe_bands)
-    n_full, n_pruned = full_bands.count(), pruned_bands.count()
-    assert n_pruned < 0.7 * n_full, f"band pruning ineffective: {n_pruned}/{n_full}"
-
-    # pruning loses no collision: candidates equal vs the unpruned store
-    cfull = {
-        (r.a, r.b)
-        for r in candidate_pairs_two_sided(
-            probe_bands, full_bands.select("band", "bucket", "doc_id"), CFG
-        ).collect()
-    }
-    cpruned = {
-        (r.a, r.b)
-        for r in candidate_pairs_two_sided(probe_bands, pruned_bands, CFG).collect()
-    }
-    assert cfull == cpruned
-
-    # signature gather: 2 ids -> <= 2 of 16 id partitions
-    ids = spark.createDataFrame([(7,), (23,)], "doc_id long")
-    full_sigs = spark.read.parquet(dedup.sig_store).count()
-    pruned_sigs = dedup.gather_old_sets(ids)
-    assert pruned_sigs.count() <= 0.3 * full_sigs
-    got = {r.doc_id for r in pruned_sigs.where(F.col("doc_id").isin([7, 23])).collect()}
-    assert got == {7, 23}
-
-
 def test_incremental_overcap_bucket_cluster_equivalence(spark, tmp_path):
     """Over-cap buckets: pair SETS may differ from batch (rank-dependent
     chain+tree vs new×all) but cluster assignments must agree."""
@@ -131,10 +100,11 @@ def test_incremental_overcap_bucket_cluster_equivalence(spark, tmp_path):
 
 
 def test_store_compaction_bounds_files_and_preserves_output(spark, pages_1k, tmp_path):
-    """compact_stores() collapses per-batch small files to one per partition
-    directory, leaves the pair set bit-identical, keeps pruning working, and
-    a subsequent batch appends cleanly on top of the compacted layout."""
-    import glob
+    """Each batch appends at most one file per batch partition to each flat
+    store; compact_stores() rewrites every store into ceil(bytes ÷
+    maxPartitionBytes) key-range-sorted files, leaves the pair set
+    bit-identical, and a subsequent batch appends cleanly on top."""
+    import pyarrow.parquet as pq
 
     from neural_locality_sensitive_hashing_spark.streaming.incremental import (
         IncrementalDeduper,
@@ -143,55 +113,51 @@ def test_store_compaction_bounds_files_and_preserves_output(spark, pages_1k, tmp
     pages_path, _ = pages_1k
     pages = spark.read.parquet(pages_path)
     dedup = IncrementalDeduper(spark, CFG, str(tmp_path / "state"))
+    stores = (dedup.band_store, dedup.sig_store, dedup.pair_store)
 
     # drive 3 batches directly (same path foreachBatch takes)
     for i in range(3):
+        before = {s: len(_data_files(s)) for s in stores}
         dedup.process_batch(pages.where(f"doc_id % 4 = {i}"), i)
-
-    def data_files(store):
-        return [
-            f for f in glob.glob(f"{store}/**/*.parquet", recursive=True)
-            if os.path.basename(f).startswith("part-")
-        ]
-
-    def files_per_dir(store):
-        per = {}
-        for f in data_files(store):
-            per.setdefault(os.path.dirname(f), 0)
-            per[os.path.dirname(f)] += 1
-        return per
+        for s in stores:
+            assert len(_data_files(s)) - before[s] <= _shuffle_parts(spark), s
 
     before_pairs = sorted(
         (r.a, r.b, r.jaccard) for r in dedup.dup_pairs().collect()
     )
-    n_before = len(data_files(dedup.band_store))
-    assert max(files_per_dir(dedup.band_store).values()) >= 3  # one per batch
+    n_before = len(_data_files(dedup.band_store))
+    assert n_before >= 3  # at least one per batch
 
+    expect = {s: _compacted_file_count(spark, s) for s in stores}
     dedup.compact_stores()
 
-    # bounded: exactly one data file per partition directory, fewer overall
-    for store in (dedup.band_store, dedup.sig_store, dedup.pair_store):
-        per = files_per_dir(store)
-        assert per and all(n == 1 for n in per.values()), per
-    assert len(data_files(dedup.band_store)) < n_before
-    # the pair store is hash-partitioned (pair_pfx = pmod(a, P)) so the
-    # compaction rewrite is P parallel per-directory tasks, never a single
-    # coalesce(1) over the whole accumulated pair set
-    assert len(files_per_dir(dedup.pair_store)) >= 2, (
-        files_per_dir(dedup.pair_store)
-    )
+    # bounded: ceil(bytes ÷ maxPartitionBytes) files per store — one here
+    for s in stores:
+        assert len(_data_files(s)) == expect[s] == 1, s
+    assert len(_data_files(dedup.band_store)) < n_before
 
-    # outputs unchanged and pruning still sound after the rewrite
+    # outputs unchanged after the rewrite
     after_pairs = sorted((r.a, r.b, r.jaccard) for r in dedup.dup_pairs().collect())
     assert after_pairs == before_pairs
-    got = {
-        r.doc_id
-        for r in dedup.gather_old_sets(
-            spark.createDataFrame([(4,), (9,)], "doc_id long")
-        ).collect()
-        if r.doc_id in (4, 9)
-    }
-    assert got == {4, 9}
+
+    # a store larger than maxPartitionBytes splits into key ranges: every
+    # file is sorted on the key and the files' ranges do not overlap
+    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    band_bytes = sum(os.path.getsize(f) for f in _data_files(dedup.band_store))
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(band_bytes // 3 + 1))
+    try:
+        n_max = _compacted_file_count(spark, dedup.band_store)
+        dedup.compact_stores()
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+    ranges = []
+    for f in _data_files(dedup.band_store):
+        keys = pq.read_table(f, columns=["bucket"]).column("bucket").to_pylist()
+        assert keys == sorted(keys), f
+        ranges.append((keys[0], keys[-1]))
+    ranges.sort()
+    assert 2 <= len(ranges) <= n_max == 3, ranges
+    assert all(hi < lo for (_, hi), (lo, _) in zip(ranges, ranges[1:])), ranges
 
     # the stream keeps going: batch 3 appends onto the compacted stores
     dedup.process_batch(pages.where("doc_id % 4 = 3"), 3)
@@ -217,17 +183,17 @@ def test_compaction_crash_window_recovers(spark, pages_1k, tmp_path):
     dedup = IncrementalDeduper(spark, CFG, str(tmp_path / "state"))
     dedup.process_batch(pages.where("doc_id % 4 = 0"), 0)
 
-    n_sigs = spark.read.parquet(dedup.sig_store).count()
+    n_sigs = dedup._read_store(dedup.sig_store).count()
     assert n_sigs > 0
     # simulate the crash window: store renamed away, swap never completed
     os.rename(dedup.sig_store, dedup.sig_store + ".compact.old")
-    got = dedup.gather_old_sets(spark.createDataFrame([(0,), (4,)], "doc_id long"))
+    got = dedup._read_store(dedup.sig_store)
     assert got is not None, "store not recovered from .compact.old"
-    assert spark.read.parquet(dedup.sig_store).count() == n_sigs
+    assert got.count() == n_sigs
     # and compaction itself also heals before rewriting
     os.rename(dedup.band_store, dedup.band_store + ".compact.old")
     dedup.compact_stores()
-    assert spark.read.parquet(dedup.band_store).count() > 0
+    assert dedup._read_store(dedup.band_store).count() > 0
     # dup_pairs() reads route through the same recovery (a crash between
     # the pair-store renames must not strand the accumulated pairs)
     n_pairs = dedup.dup_pairs().count()
@@ -235,63 +201,75 @@ def test_compaction_crash_window_recovers(spark, pages_1k, tmp_path):
     assert dedup.dup_pairs().count() == n_pairs
 
 
-def test_flat_pair_store_migrates_on_resume(spark, pages_1k, tmp_path):
-    """A dup-pair store written by the pre-partitioned layout (flat
-    part-files, no pair_pfx column) is rewritten once into the
-    partitioned layout when a deduper resumes over the state_dir — new
-    appends, reads, and per-partition compaction all work on top."""
-    import glob
+def test_hash_partitioned_state_migrates_on_resume(spark, pages_1k, tmp_path):
+    """A state_dir written by the hash-partitioned layout (pfx / id_pfx /
+    pair_pfx directories, signatures with their sig column) is rewritten
+    once into the flat layout when a deduper resumes over it: dup_pairs()
+    is identical, and later appends and compaction work on top."""
+    import shutil
 
+    from pyspark.sql import functions as F
+
+    from neural_locality_sensitive_hashing_spark.operators.candidates import (
+        explode_bands,
+    )
+    from neural_locality_sensitive_hashing_spark.operators.dedup import (
+        minhash_dup_pairs,
+        signatures_fused,
+    )
     from neural_locality_sensitive_hashing_spark.streaming.incremental import (
         IncrementalDeduper,
     )
 
     pages_path, _ = pages_1k
     pages = spark.read.parquet(pages_path)
-    state = tmp_path / "state"
-    dedup = IncrementalDeduper(spark, CFG, str(state))
-    dedup.process_batch(pages.where("doc_id % 2 = 0"), 0)
-    before = sorted((r.a, r.b) for r in dedup.dup_pairs().collect())
+    state = str(tmp_path / "state")
+    even = pages.where("doc_id % 2 = 0")
+    dedup = IncrementalDeduper(spark, CFG, state)
+    dedup.process_batch(even, 0)
+    before = sorted((r.a, r.b, r.jaccard) for r in dedup.dup_pairs().collect())
 
-    # simulate the legacy layout: flatten the store (drop pair_pfx dirs)
-    legacy = spark.read.parquet(dedup.pair_store).drop("pair_pfx")
-    flat = str(tmp_path / "flat_pairs")
-    legacy.coalesce(1).write.parquet(flat)
-    import shutil as _sh
+    # rewrite the state as the hash-partitioned layout wrote it
+    sigs = signatures_fused(even, CFG)
+    legacy = {
+        dedup.band_store: (explode_bands(sigs, CFG), "pfx", "bucket", 64),
+        dedup.sig_store: (sigs.select("doc_id", "sh", "sig"), "id_pfx", "doc_id", 16),
+        dedup.pair_store: (spark.read.parquet(dedup.pair_store), "pair_pfx", "a", 16),
+    }
+    for store, (df, col, key, parts) in legacy.items():
+        (
+            df.withColumn(col, F.pmod(F.col(key), F.lit(parts)))
+            .repartition(col)
+            .write.partitionBy(col)
+            .parquet(store + ".legacy")
+        )
+        shutil.rmtree(store)
+        shutil.move(store + ".legacy", store)
+        assert any(d.startswith(col + "=") for d in os.listdir(store))
 
-    _sh.rmtree(dedup.pair_store)
-    _sh.move(flat, dedup.pair_store)
-    assert any(
-        f.startswith("part-") for f in os.listdir(dedup.pair_store)
-    )
+    # resume: the constructor flattens all three stores
+    dedup2 = IncrementalDeduper(spark, CFG, state)
+    for store in legacy:
+        assert not any(
+            os.path.isdir(os.path.join(store, d)) for d in os.listdir(store)
+        ), store
+    assert dedup2._read_store(dedup2.sig_store).columns == ["doc_id", "sh"]
+    assert sorted((r.a, r.b, r.jaccard) for r in dedup2.dup_pairs().collect()) == before
 
-    # resume: constructor migrates; batch 1 appends partitioned on top
-    dedup2 = IncrementalDeduper(spark, CFG, str(state))
-    assert not any(
-        f.startswith("part-") for f in os.listdir(dedup2.pair_store)
-    )
-    assert sorted((r.a, r.b) for r in dedup2.dup_pairs().collect()) == before
     dedup2.process_batch(pages.where("doc_id % 2 = 1"), 1)
     dedup2.compact_stores()
-    per_dir: dict[str, int] = {}
-    for f in glob.glob(f"{dedup2.pair_store}/**/*.parquet", recursive=True):
-        if os.path.basename(f).startswith("part-"):
-            per_dir[os.path.dirname(f)] = per_dir.get(os.path.dirname(f), 0) + 1
-    assert per_dir and all(n == 1 for n in per_dir.values()), per_dir
-    from neural_locality_sensitive_hashing_spark.operators.dedup import (
-        minhash_dup_pairs as _mdp,
-    )
-
+    for store in legacy:
+        assert len(_data_files(store)) == 1, store
     assert {(r.a, r.b) for r in dedup2.dup_pairs().collect()} == {
-        (r.a, r.b) for r in _mdp(pages, CFG).collect()
+        (r.a, r.b) for r in minhash_dup_pairs(pages, CFG).collect()
     }
 
 
 def test_compact_every_auto_trigger(spark, pages_1k, tmp_path):
     """compact_every=2 compacts after batches 1 and 3 (0-indexed ids 1, 3):
-    after batch 3 every store partition dir holds exactly one data file."""
-    import glob
-
+    the batches between append at most one file per batch partition, and
+    after batch 3 every store holds ceil(bytes ÷ maxPartitionBytes) files
+    — one here, each store being far below maxPartitionBytes."""
     from neural_locality_sensitive_hashing_spark.streaming.incremental import (
         IncrementalDeduper,
     )
@@ -301,14 +279,16 @@ def test_compact_every_auto_trigger(spark, pages_1k, tmp_path):
     dedup = IncrementalDeduper(
         spark, CFG, str(tmp_path / "state"), compact_every=2
     )
+    stores = (dedup.band_store, dedup.sig_store, dedup.pair_store)
     for i in range(4):
+        before = {s: len(_data_files(s)) for s in stores}
         dedup.process_batch(pages.where(f"doc_id % 4 = {i}"), i)
+        if i % 2 == 0:
+            for s in stores:
+                assert len(_data_files(s)) - before[s] <= _shuffle_parts(spark), s
 
-    per_dir: dict[str, int] = {}
-    for f in glob.glob(f"{dedup.band_store}/**/*.parquet", recursive=True):
-        if os.path.basename(f).startswith("part-"):
-            per_dir[os.path.dirname(f)] = per_dir.get(os.path.dirname(f), 0) + 1
-    assert per_dir and all(n == 1 for n in per_dir.values()), per_dir
+    for s in stores:
+        assert _compacted_file_count(spark, s) == len(_data_files(s)) == 1, s
 
     from neural_locality_sensitive_hashing_spark.operators.dedup import (
         minhash_dup_pairs as _mdp,

@@ -76,23 +76,25 @@ def _strip_initial_plans(plan: str) -> str:
     return "\n".join(out)
 
 
+def count_exchanges(plan: str, op: str = "Exchange") -> int:
+    """Distinct ``op`` nodes in a rendered plan: annotated lines count once
+    per plan_id — the textual rendering repeats a cached (InMemoryRelation)
+    subtree at every cache scan, each repetition carrying the same plan_id
+    — and every line without a plan_id counts on its own, so a plan mixing
+    both never undercounts. The match is on whole words, so "Exchange"
+    does not match BroadcastExchange and shuffle and broadcast counts stay
+    separate."""
+    lines = re.findall(rf"\b{op}\b[^\n]*", plan)
+    ids = {m.group(1) for line in lines if (m := re.search(r"\[plan_id=(\d+)\]", line))}
+    return len(ids) + sum("[plan_id=" not in line for line in lines)
+
+
 def audit(df) -> dict:
     plan = _strip_initial_plans(
         df._jdf.queryExecution().executedPlan().toString()
     )
-    simple = df._jdf.queryExecution().simpleString()
-    # r10: count DISTINCT exchanges by plan_id — the textual rendering
-    # repeats a cached (InMemoryRelation) subtree at every cache scan, so
-    # the old occurrence count charged one physical exchange 2-3x once a
-    # query persisted an intermediate (each repetition carries the same
-    # plan_id). \bExchange\b does not match BroadcastExchange ('t' is a
-    # word char), so shuffle and broadcast counts stay separate.
-    exch_ids = set(re.findall(r"\bExchange\b[^\n]*?\[plan_id=(\d+)\]", plan))
-    bcast_ids = set(re.findall(r"BroadcastExchange[^\n]*?\[plan_id=(\d+)\]", plan))
-    n_exch = len(exch_ids) if exch_ids else len(re.findall(r"\bExchange\b", simple))
-    n_bcast = (
-        len(bcast_ids) if bcast_ids else len(re.findall(r"BroadcastExchange", simple))
-    )
+    n_exch = count_exchanges(plan)
+    n_bcast = count_exchanges(plan, "BroadcastExchange")
     n_wsc = len(set(re.findall(r"\*\((\d+)\)", plan)))
     scans = []
     for m in re.finditer(r"FileScan parquet[^\n]*", plan):
