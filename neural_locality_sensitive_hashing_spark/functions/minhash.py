@@ -1,4 +1,4 @@
-"""MinHash signatures as a batched, vectorized pandas UDF.
+"""MinHash signatures as whole-batch, vectorized pandas UDF kernels.
 
 The reference hashes a full corpus in 4096-row batches through its encoder
 (``nlsh/indexer.py:40-54``); the Spark analogue is one Arrow batch at a time
@@ -7,17 +7,35 @@ through a numpy kernel. Signature definition (frozen for determinism):
     sig[j] = min over shingle-hashes h of  (A[j] * h + B[j])  mod 2^64
 
 with A odd (a bijection on Z_2^64, so uniform inputs stay uniform) and
-(A, B) drawn once from ``default_rng(seed)``. The per-batch inner loop is
-``num_perm`` vectorized passes using ``np.minimum.reduceat`` over the
-concatenated shingle arrays — no per-row Python.
+(A, B) drawn once from ``default_rng(seed)``.
+
+A shingle hash is the rot-xor fold of k consecutive blake2b token hashes
+(tokens = ``str.split()``); a doc with fewer than k tokens hashes as one
+whole-doc token, an empty or null doc as the empty token. The text
+kernels compute this for the whole batch at once: pyarrow splits every
+doc on whitespace, ``dictionary_encode`` leaves one blake2b call per
+distinct token, and the fold runs once over the batch's flat token
+buffer (``_batch_grams``). The ``num_perm`` MinHash passes then run over
+cache-sized blocks of the flat shingle array into one preallocated
+buffer, with ``np.minimum.reduceat`` taking the per-doc minima
+(``_segment_minhash``). Per-row Python is left only where the output is
+per row. ``gram_hashes_python`` / ``shingle_hashes_python`` and
+``minhash_numpy`` are the per-doc references the kernels are tested
+against, bit for bit.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 import numpy as np
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
+
+# elements per block of the num_perm passes: 256 KB of uint64 stays in L2
+# across all passes, where a full-batch pass streams from memory each time
+_PASS_BLOCK = 1 << 15
 
 
 def minhash_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
@@ -37,6 +55,42 @@ def minhash_numpy(shingle_hashes: np.ndarray, a: np.ndarray, b: np.ndarray) -> n
     return vals.min(axis=1).view(np.int64)
 
 
+def _segment_minhash(
+    flat: np.ndarray, starts: np.ndarray, a: np.ndarray, b: np.ndarray
+) -> np.ndarray:
+    """MinHash of every segment flat[starts[i]:starts[i+1]] (uint64,
+    non-empty segments, starts[0] == 0) -> (len(starts), num_perm) uint64.
+
+    The passes run block by block: each block's pieces (cut at segment
+    and block starts) get their minima per permutation, and the pieces of
+    a segment are min-reduced at the end — min is associative, so the
+    result equals one full-width pass per permutation, bit for bit."""
+    n = len(flat)
+    if not len(starts):
+        return np.empty((0, len(a)), dtype=np.uint64)
+    cuts = np.union1d(starts, np.arange(0, n, _PASS_BLOCK))
+    part = np.empty((len(a), len(cuts)), dtype=np.uint64)
+    buf = np.empty(min(n, _PASS_BLOCK), dtype=np.uint64)
+    with np.errstate(over="ignore"):
+        for lo in range(0, n, _PASS_BLOCK):
+            hi = min(lo + _PASS_BLOCK, n)
+            p0, p1 = np.searchsorted(cuts, [lo, hi])
+            local = cuts[p0:p1] - lo
+            blk, v = flat[lo:hi], buf[: hi - lo]
+            for j in range(len(a)):
+                np.multiply(blk, a[j], out=v)
+                np.add(v, b[j], out=v)
+                np.minimum.reduceat(v, local, out=part[j, p0:p1])
+    sigs = np.minimum.reduceat(part, np.searchsorted(cuts, starts), axis=1)
+    return np.ascontiguousarray(sigs.T)
+
+
+def _seg_starts(lens: np.ndarray) -> np.ndarray:
+    starts = np.zeros(len(lens), dtype=np.int64)
+    np.cumsum(lens[:-1], out=starts[1:])
+    return starts
+
+
 def make_minhash_udf(num_perm: int, seed: int):
     """Returns pandas_udf: array<bigint> shingle hashes -> array<bigint> sig.
 
@@ -46,29 +100,16 @@ def make_minhash_udf(num_perm: int, seed: int):
 
     @pandas_udf(ArrayType(LongType()))
     def minhash_sig(hashes: pd.Series) -> pd.Series:
-        arrs = []
-        keep = np.zeros(len(hashes), dtype=bool)
-        for i, v in enumerate(hashes):
-            if v is not None and len(v) > 0:
-                arrs.append(np.asarray(v, dtype=np.int64).view(np.uint64))
-                keep[i] = True
+        keep = np.array([v is not None and len(v) > 0 for v in hashes], dtype=bool)
+        arrs = [np.asarray(v, dtype=np.int64).view(np.uint64) for v in hashes[keep]]
         out = np.empty(len(hashes), dtype=object)
         if arrs:
-            flat = np.concatenate(arrs)
             lens = np.fromiter((len(x) for x in arrs), dtype=np.int64, count=len(arrs))
-            starts = np.zeros(len(arrs), dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts[1:])
-            sigs = np.empty((len(arrs), num_perm), dtype=np.uint64)
-            with np.errstate(over="ignore"):
-                for j in range(num_perm):
-                    v = a_params[j] * flat + b_params[j]
-                    sigs[:, j] = np.minimum.reduceat(v, starts)
-            sig_rows = sigs.view(np.int64)
-            k = 0
-            for i in range(len(hashes)):
-                if keep[i]:
-                    out[i] = sig_rows[k]
-                    k += 1
+            sigs = _segment_minhash(
+                np.concatenate(arrs), _seg_starts(lens), a_params, b_params
+            ).view(np.int64)
+            for i, s in zip(np.flatnonzero(keep), sigs):
+                out[i] = s
         return pd.Series(out)
 
     return minhash_sig
@@ -78,63 +119,31 @@ def _rotl7(x: np.ndarray) -> np.ndarray:
     return (x << np.uint64(7)) | (x >> np.uint64(57))
 
 
-def shingle_hashes_python(text: str, k: int, cache: dict) -> np.ndarray:
-    """tokens -> distinct k-gram rolling rot-xor hash set (uint64).
+def _blake2b64(b: bytes) -> bytes:
+    """The token hash: 8-byte blake2b digest (read as uint64 LE)."""
+    return hashlib.blake2b(b, digest_size=8).digest()
 
-    Same structure as functions.text.shingle_set (token hash, rotl-7 xor
-    fold, whole-doc fallback for short docs) with blake2b as the token
-    hash — set *sizes* (hence Jaccard) agree with the native path whp.
-    """
-    toks = text.split() if text else []
-    n = len(toks)
 
-    def th(t: str) -> int:
-        v = cache.get(t)
-        if v is None:
-            import hashlib
-
-            v = int.from_bytes(
-                hashlib.blake2b(t.encode("utf-8"), digest_size=8).digest(), "little"
-            )
-            cache[t] = v
-        return v
-
-    if n == 0:
-        return np.array([np.uint64(th(""))], dtype=np.uint64)
-    if n < k:
-        return np.array([np.uint64(th(" ".join(toks)))], dtype=np.uint64)
-    h = np.fromiter((th(t) for t in toks), dtype=np.uint64, count=n)
-    m = n - k + 1
-    acc = h[:m].copy()
-    for i in range(1, k):
-        acc = _rotl7(acc) ^ h[i : i + m]
-    return np.unique(acc)
+def _token_hash(t: str, cache: dict) -> int:
+    v = cache.get(t)
+    if v is None:
+        v = cache[t] = int.from_bytes(_blake2b64(t.encode("utf-8")), "little")
+    return v
 
 
 def gram_hashes_python(text: str, k: int, cache: dict) -> np.ndarray:
     """tokens -> POSITIONAL k-gram rolling rot-xor hashes (uint64, one per
-    gram start, order preserved, duplicates kept) — shingle_hashes_python
-    minus the final unique; same token hash (memoized blake2b) and fold,
-    so a doc's distinct set of these IS its shingle_hashes_python set."""
+    gram start, order preserved, duplicates kept): memoized blake2b token
+    hashes folded k at a time with rotl-7 xor; a doc of fewer than k
+    tokens hashes as its space-joined tokens, an empty doc as "".
+    Per-doc reference for ``_batch_grams``."""
     toks = text.split() if text else []
     n = len(toks)
-
-    def th(t: str) -> int:
-        v = cache.get(t)
-        if v is None:
-            import hashlib
-
-            v = int.from_bytes(
-                hashlib.blake2b(t.encode("utf-8"), digest_size=8).digest(), "little"
-            )
-            cache[t] = v
-        return v
-
     if n == 0:
-        return np.array([np.uint64(th(""))], dtype=np.uint64)
+        return np.array([np.uint64(_token_hash("", cache))], dtype=np.uint64)
     if n < k:
-        return np.array([np.uint64(th(" ".join(toks)))], dtype=np.uint64)
-    h = np.fromiter((th(t) for t in toks), dtype=np.uint64, count=n)
+        return np.array([np.uint64(_token_hash(" ".join(toks), cache))], dtype=np.uint64)
+    h = np.fromiter((_token_hash(t, cache) for t in toks), dtype=np.uint64, count=n)
     m = n - k + 1
     acc = h[:m].copy()
     for i in range(1, k):
@@ -142,31 +151,89 @@ def gram_hashes_python(text: str, k: int, cache: dict) -> np.ndarray:
     return acc
 
 
+def shingle_hashes_python(text: str, k: int, cache: dict) -> np.ndarray:
+    """tokens -> distinct k-gram hash set (sorted uint64): the unique of
+    ``gram_hashes_python``. Same structure as functions.text.shingle_set
+    (token hash, rotl-7 xor fold, whole-doc fallback for short docs) with
+    blake2b as the token hash — set *sizes* (hence Jaccard) agree with
+    the native path whp. Per-doc reference for ``make_shingle_sig_udf``."""
+    return np.unique(gram_hashes_python(text, k, cache))
+
+
+def _batch_grams(texts: pd.Series, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """``gram_hashes_python`` for a whole batch -> (grams, offsets): doc
+    i's positional hashes are grams[offsets[i]:offsets[i+1]], bit-identical
+    to ``gram_hashes_python(texts[i], k, {})`` (null docs as "").
+
+    Arrow's whitespace split keeps empty leading/trailing tokens; with
+    those dropped it equals ``str.split()`` on every code point."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    lists = pc.utf8_split_whitespace(pa.array(texts, type=pa.large_string()))
+    toks = pc.list_flatten(lists)
+    nonempty = pc.greater(pc.binary_length(toks), 0)
+    toks = toks.filter(nonempty)
+    doc = pc.list_parent_indices(lists).filter(nonempty).to_numpy()
+    n_tok = np.bincount(doc, minlength=len(texts))
+    enc = toks.dictionary_encode()
+    distinct = enc.dictionary.cast(pa.large_binary()).to_pylist()
+    th = np.frombuffer(b"".join(map(_blake2b64, distinct)), dtype="<u8")
+    h = th[enc.indices.to_numpy()]
+
+    long_ = n_tok >= k
+    out_len = np.where(long_, n_tok - k + 1, 1)
+    offsets = np.zeros(len(texts) + 1, dtype=np.int64)
+    np.cumsum(out_len, out=offsets[1:])
+    grams = np.empty(offsets[-1], dtype=np.uint64)
+    tok_start = _seg_starts(n_tok)
+    m = len(h) - k + 1
+    if m > 0 and long_.any():
+        acc = h[:m].copy()
+        tmp = np.empty_like(acc)
+        for i in range(1, k):
+            np.right_shift(acc, np.uint64(57), out=tmp)
+            np.left_shift(acc, np.uint64(7), out=acc)
+            np.bitwise_or(acc, tmp, out=acc)
+            np.bitwise_xor(acc, h[i : i + m], out=acc)
+        # a fold position is a gram of its doc iff all k tokens are in it
+        d = doc[:m]
+        valid = np.arange(m) - tok_start[d] <= n_tok[d] - k
+        grams[np.repeat(long_, out_len)] = acc[valid]
+    short = np.flatnonzero(~long_)
+    if len(short):
+        whole = [
+            " ".join(toks.slice(int(tok_start[i]), int(n_tok[i])).to_pylist()).encode()
+            for i in short
+        ]
+        grams[offsets[short]] = np.frombuffer(
+            b"".join(map(_blake2b64, whole)), dtype="<u8"
+        )
+    return grams, offsets
+
+
 def make_gram_hash_text_udf(k: int, distinct: bool = True):
     """Fused Arrow kernel: text -> array<bigint> k-gram hashes, replacing
     the interpreted native chain (tokens -> zip_with rolling xxhash64
-    fold) for SET-SEMANTIC consumers: the hash family differs (memoized
-    blake2b token hashes + the same rot-xor fold) but every downstream
+    fold) for SET-SEMANTIC consumers: the hash family differs (blake2b
+    token hashes + the same rot-xor fold) but every downstream
     use — candidate equi-joins, intersection/union sizes, distinct
     counts — depends only on cross-doc gram equality, which both
     families decide identically up to the engine's accepted 2^-64
     collision class. ``distinct=True`` returns the sorted unique set
     (shingle_set semantics), ``distinct=False`` the positional stream
-    (gram-position consumers)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
+    (gram-position consumers). Null text -> null."""
 
     @pandas_udf(ArrayType(LongType()))
     def gram_hashes(texts: pd.Series) -> pd.Series:
-        cache: dict = {}
+        grams, offsets = _batch_grams(texts, k)
         out = []
-        for t in texts:
+        for i, t in enumerate(texts):
+            g = grams[offsets[i] : offsets[i + 1]]
             if t is None:
                 out.append(None)
-            elif distinct:
-                out.append(shingle_hashes_python(t, k, cache).view(np.int64))
             else:
-                out.append(gram_hashes_python(t, k, cache).view(np.int64))
+                out.append((np.unique(g) if distinct else g).view(np.int64))
         return pd.Series(out)
 
     return gram_hashes
@@ -219,8 +286,11 @@ def make_shingle_sig_udf(
     The fused-banding variant additionally avoids caching the 1 KB/doc
     signature and evaluating 32 interpreted slice+xxhash64 exprs per doc
     (32M transient JVM arrays per 1M docs) — the signature never leaves
-    the Python worker. Token hashes are memoized per batch (Zipfian text
-    -> high hit rate).
+    the Python worker. The kernel works on the whole batch: one Arrow
+    whitespace split, one blake2b per distinct token, one fold over the
+    flat token buffer (``_batch_grams``), a per-doc ``np.unique``, and
+    blocked MinHash passes (``_segment_minhash``); the output is
+    bit-identical to ``shingle_hashes_python`` + ``minhash_numpy`` per doc.
     """
     a_params, b_params = minhash_params(num_perm, seed)
     emit_bands = num_bands > 0
@@ -234,19 +304,11 @@ def make_shingle_sig_udf(
 
     @pandas_udf(out_schema)
     def shingle_sig(texts: pd.Series) -> pd.DataFrame:
-        cache: dict = {}
-        sets = [shingle_hashes_python(t, k, cache) for t in texts]
+        grams, offsets = _batch_grams(texts, k)
+        sets = [np.unique(grams[offsets[i] : offsets[i + 1]]) for i in range(len(texts))]
         flat = np.concatenate(sets) if sets else np.empty(0, dtype=np.uint64)
         lens = np.fromiter((len(s) for s in sets), dtype=np.int64, count=len(sets))
-        starts = np.zeros(len(sets), dtype=np.int64)
-        if len(sets) > 1:
-            np.cumsum(lens[:-1], out=starts[1:])
-        sigs = np.empty((len(sets), num_perm), dtype=np.uint64)
-        if len(flat):
-            with np.errstate(over="ignore"):
-                for j in range(num_perm):
-                    v = a_params[j] * flat + b_params[j]
-                    sigs[:, j] = np.minimum.reduceat(v, starts)
+        sigs = _segment_minhash(flat, _seg_starts(lens), a_params, b_params)
         # sh ships as raw little-endian int64 bytes (sorted): a binary
         # column shuffles and Arrow-transfers at ~1/3 the cost of
         # array<long> (no per-element offsets/validity) — verify is the

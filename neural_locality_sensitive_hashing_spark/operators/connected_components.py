@@ -35,13 +35,23 @@ def connected_components(
     Candidate generation caps diameters at O(log n) via the chain+tree
     construction (operators/candidates.py), so the default budget covers
     components up to ~2^49 members.
+
+    ``pairs`` is read once: each pair row emits both directed edges in a
+    single projection (``inline`` of a two-struct array), checkpointed
+    before the loop. A union of two projections would plan ``pairs``
+    twice, and since the verify UDF upstream is non-deterministic Spark
+    reuses no exchange between the branches — candidates and verify
+    would run twice for every unpersisted ``pairs``.
     """
     # with a<b in pairs the two directed copies are disjoint — no dedup
-    edges = (
-        pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .localCheckpoint()
-    )
+    edges = pairs.select(
+        F.inline(
+            F.array(
+                F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
+                F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
+            )
+        )
+    ).localCheckpoint()
     # r10: seed labels with min(self, neighbors) straight from one edge
     # aggregation — identical to one propagation round over identity
     # labels (edges carry both directions, so min over adjacent src ==

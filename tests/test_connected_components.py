@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pandas as pd
+
 from neural_locality_sensitive_hashing_spark.operators.connected_components import (
     clusters_with_singletons,
     connected_components,
@@ -57,3 +59,26 @@ def test_label_sum_exact_at_huge_ids(spark):
     )
     labels = connected_components(pairs).collect()
     assert all(r.cluster_id == base for r in labels)
+
+
+def test_pairs_read_once(spark):
+    """Union-find evaluates its ``pairs`` input once: a non-deterministic
+    upstream (like the verify UDF) is never recomputed for the second
+    edge direction."""
+    from pyspark.sql.functions import pandas_udf
+
+    seen = spark.sparkContext.accumulator(0)
+
+    @pandas_udf("long")
+    def counted(a: pd.Series) -> pd.Series:
+        seen.add(len(a))
+        return a
+
+    edges = [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22)]
+    raw = spark.createDataFrame(edges, "a long, b long")
+    pairs = raw.select(counted.asNondeterministic()("a").alias("a"), "b")
+    labels = {r.doc_id: r.cluster_id for r in connected_components(pairs).collect()}
+    assert seen.value == len(edges)
+    assert labels == {
+        1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20
+    }

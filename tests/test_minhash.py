@@ -3,13 +3,20 @@
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import functions as F
 
+from neural_locality_sensitive_hashing_spark.functions import minhash as M
 from neural_locality_sensitive_hashing_spark.functions.minhash import (
+    band_hashes_numpy,
     estimate_jaccard,
+    gram_hashes_python,
+    make_gram_hash_text_udf,
     make_minhash_udf,
+    make_shingle_sig_udf,
     minhash_numpy,
     minhash_params,
+    shingle_hashes_python,
 )
 
 
@@ -23,6 +30,8 @@ def test_params_deterministic():
 def test_udf_matches_numpy_reference(spark):
     rng = np.random.default_rng(7)
     sets = [rng.integers(-(2**62), 2**62, size=rng.integers(1, 50)).tolist() for _ in range(20)]
+    # one set spanning several pass blocks
+    sets.append(rng.integers(-(2**62), 2**62, size=2 * M._PASS_BLOCK + 7).tolist())
     df = spark.createDataFrame([(i, s) for i, s in enumerate(sets)], "i int, sh array<long>")
     udf = make_minhash_udf(32, 42)
     got = {r.i: list(r.sig) for r in df.select("i", udf(F.col("sh")).alias("sig")).collect()}
@@ -53,3 +62,58 @@ def test_estimate_accuracy():
     est = estimate_jaccard(sig1, sig2)
     true_j = 500 / 1500
     assert abs(est - true_j) < 0.12
+
+
+def _parity_texts(k: int) -> pd.Series:
+    seps = [chr(c) for c in range(0x3001) if chr(c).isspace()]
+    assert {"\x1c", "\x1f", "\x85", "\xa0", "\u3000"} <= set(seps)
+    docs = [None, "", "   ", "\t\n\r", "  lead and trail  ", "\x85only\xa0"]
+    docs += [s.join(f"t{i}" for i in range(k + 2)) + s for s in seps]
+    docs += ["".join(seps), "é ü 日本 語 😀 naïve café " * 3, "日本語"]
+    docs += [" ".join(f"s{j}" for j in range(n)) for n in range(1, k)]
+    # one doc longer than a pass block ...
+    docs.append(" ".join(f"w{j % 40000}" for j in range(M._PASS_BLOCK + 5000)))
+    # ... and block boundaries falling between many small docs
+    rng = np.random.default_rng(3)
+    docs += [
+        " ".join(f"v{x}" for x in rng.integers(0, 500, rng.integers(1, 30)))
+        for _ in range(4000)
+    ]
+    return pd.Series(docs)
+
+
+def test_fused_kernel_bit_identical_to_reference(spark):
+    """The whole-batch kernels equal the per-doc references byte for
+    byte: shingle_hashes_python + minhash_numpy (+ band_hashes_numpy and
+    the uint32 sigp prefix), in both output modes and both sh widths.
+    The kernels run directly on pandas batches; the session only parses
+    their DDL return types."""
+    k, perms, nb, rpb, pref = 5, 64, 16, 4, 8
+    texts = _parity_texts(k)
+    a, b = minhash_params(perms, 7)
+    sets = [shingle_hashes_python(t, k, {}) for t in texts]
+    sigs = np.stack([minhash_numpy(s, a, b) for s in sets]).view(np.uint64)
+    bands = band_hashes_numpy(sigs, nb, rpb)
+    for width in (8, 4):
+        if width == 8:
+            sh = [s.view(np.int64).tobytes() for s in sets]
+        else:
+            sh = [np.unique((s >> np.uint64(32)).astype(np.uint32)).tobytes() for s in sets]
+        plain = make_shingle_sig_udf(k, perms, 7, shingle_hash_bytes=width).func(texts)
+        banded = make_shingle_sig_udf(
+            k, perms, 7, num_bands=nb, rows_per_band=rpb,
+            sig_prefix_perms=pref, shingle_hash_bytes=width,
+        ).func(texts)
+        for i in range(len(texts)):
+            assert plain["sh"][i] == sh[i] and banded["sh"][i] == sh[i], i
+            assert plain["sig"][i].tobytes() == sigs[i].tobytes(), i
+            assert banded["bands"][i].tobytes() == bands[i].tobytes(), i
+            assert banded["sigp"][i] == sigs[i, :pref].astype(np.uint32).tobytes(), i
+    distinct = make_gram_hash_text_udf(k).func(texts)
+    positional = make_gram_hash_text_udf(k, distinct=False).func(texts)
+    for i, t in enumerate(texts):
+        if t is None:
+            assert distinct[i] is None and positional[i] is None
+        else:
+            assert distinct[i].tobytes() == sets[i].tobytes(), i
+            assert positional[i].tobytes() == gram_hashes_python(t, k, {}).tobytes(), i
