@@ -65,8 +65,10 @@ class DedupConfig:
     # table inside one mapInArrow — the two per-pair gather joins (which
     # ship the full sets per candidate through Arrow) disappear. Sized so
     # the flat set table stays ~100s of MB per Python worker (~700 B/doc
-    # web text); 0 disables. Past the gate the join-based verify shape is
-    # unchanged — the values are identical either way (same kernel math).
+    # web text; longer docs stop at the 256 MiB set-byte ceiling,
+    # operators/dedup.py ``_BCAST_MAX_SH_BYTES``); 0 disables. Past the
+    # gate the join-based verify shape is unchanged — the values are
+    # identical either way (same kernel math).
     # The floor is the measured crossover: the broadcast build pays two
     # fixed driver-side jobs (count + set-table collect, ~0.15 s), which
     # outweigh the join savings on corpora where the whole verify is

@@ -18,9 +18,11 @@ distinct token, and the fold runs once over the batch's flat token
 buffer (``_batch_grams``). The ``num_perm`` MinHash passes then run over
 cache-sized blocks of the flat shingle array into one preallocated
 buffer, with ``np.minimum.reduceat`` taking the per-doc minima
-(``_segment_minhash``). Per-row Python is left only where the output is
-per row. ``gram_hashes_python`` / ``shingle_hashes_python`` and
-``minhash_numpy`` are the per-doc references the kernels are tested
+(``_segment_minhash``), and ``band_hashes_numpy`` folds each signature
+into its band buckets inside the same kernel, so the signature itself
+never leaves the Python worker. Per-row Python is left only where the
+output is per row. ``gram_hashes_python`` / ``shingle_hashes_python``
+and ``minhash_numpy`` are the per-doc references the kernels are tested
 against, bit for bit.
 """
 
@@ -89,30 +91,6 @@ def _seg_starts(lens: np.ndarray) -> np.ndarray:
     starts = np.zeros(len(lens), dtype=np.int64)
     np.cumsum(lens[:-1], out=starts[1:])
     return starts
-
-
-def make_minhash_udf(num_perm: int, seed: int):
-    """Returns pandas_udf: array<bigint> shingle hashes -> array<bigint> sig.
-
-    Rows with null/empty shingle sets return null.
-    """
-    a_params, b_params = minhash_params(num_perm, seed)
-
-    @pandas_udf(ArrayType(LongType()))
-    def minhash_sig(hashes: pd.Series) -> pd.Series:
-        keep = np.array([v is not None and len(v) > 0 for v in hashes], dtype=bool)
-        arrs = [np.asarray(v, dtype=np.int64).view(np.uint64) for v in hashes[keep]]
-        out = np.empty(len(hashes), dtype=object)
-        if arrs:
-            lens = np.fromiter((len(x) for x in arrs), dtype=np.int64, count=len(arrs))
-            sigs = _segment_minhash(
-                np.concatenate(arrs), _seg_starts(lens), a_params, b_params
-            ).view(np.int64)
-            for i, s in zip(np.flatnonzero(keep), sigs):
-                out[i] = s
-        return pd.Series(out)
-
-    return minhash_sig
 
 
 def _rotl7(x: np.ndarray) -> np.ndarray:
@@ -243,9 +221,9 @@ def band_hashes_numpy(sigs: np.ndarray, num_bands: int, rows_per_band: int) -> n
     """(n, num_perm) uint64 signatures -> (n, num_bands) int64 band-bucket
     hashes: rotl7-xor-multiply fold of each band's rows with the band index
     mixed in (identical docs collide per band; different bands never
-    collide with each other). Same contract as candidates.band_buckets,
-    different hash family — banding only needs consistency, not a specific
-    hash."""
+    collide with each other). The engine's one band-hash family: batch,
+    the resumable pipeline and the stream all band through it, so their
+    band tables are interchangeable."""
     n = sigs.shape[0]
     b = sigs.reshape(n, num_bands, rows_per_band)
     mult = np.uint64(0x9E3779B97F4A7C15)
@@ -263,46 +241,38 @@ def make_shingle_sig_udf(
     k: int,
     num_perm: int,
     seed: int,
-    num_bands: int = 0,
-    rows_per_band: int = 0,
+    num_bands: int,
+    rows_per_band: int,
     sig_prefix_perms: int = 0,
     shingle_hash_bytes: int = 8,
 ):
-    """Fused text -> struct(sh binary, sig array<long>) pandas UDF — or,
-    with banding params set, text -> struct(sh binary, bands array<long>).
+    """Fused text -> struct(sh binary, bands array<long>, sigp binary)
+    pandas UDF: the shingle set and the LSH band buckets of every doc.
 
-    ``sig_prefix_perms`` > 0 (banded mode) adds a ``sigp`` binary column:
-    the first P minhash values truncated to uint32 LE (4 B/slot) — the
-    verify screen's estimator payload, ~5x lighter than the shingle set.
+    ``sigp`` is the first ``sig_prefix_perms`` minhash values truncated to
+    uint32 LE (4 B/slot) — the verify screen's estimator payload, ~5x
+    lighter than the shingle set; null when ``sig_prefix_perms`` is 0.
     ``shingle_hash_bytes=4`` stores ``sh`` as truncated uint32 (sorted,
     re-uniqued): halves the exact-verify gather bytes; Jaccard
     perturbation is O(|A||B|/2^32) per pair.
 
-    One Arrow pass does tokenize + shingle + MinHash (+ banding) entirely
+    One Arrow pass does tokenize + shingle + MinHash + banding entirely
     in the Python worker (numpy): measured ~2.5x less total CPU than the
     native higher-order-function shingle path at 32 local threads, because
     interpreted zip_with/transform expressions allocate per-element garbage
     that stalls the shared JVM heap — worker processes have no shared GC.
-    The fused-banding variant additionally avoids caching the 1 KB/doc
-    signature and evaluating 32 interpreted slice+xxhash64 exprs per doc
-    (32M transient JVM arrays per 1M docs) — the signature never leaves
-    the Python worker. The kernel works on the whole batch: one Arrow
-    whitespace split, one blake2b per distinct token, one fold over the
-    flat token buffer (``_batch_grams``), a per-doc ``np.unique``, and
-    blocked MinHash passes (``_segment_minhash``); the output is
-    bit-identical to ``shingle_hashes_python`` + ``minhash_numpy`` per doc.
+    The 1 KB/doc signature never leaves the Python worker: only its
+    ``num_bands`` band hashes (``band_hashes_numpy``) do. The kernel works
+    on the whole batch: one Arrow whitespace split, one blake2b per
+    distinct token, one fold over the flat token buffer
+    (``_batch_grams``), a per-doc ``np.unique``, and blocked MinHash passes
+    (``_segment_minhash``); the output is bit-identical to
+    ``shingle_hashes_python`` + ``minhash_numpy`` + ``band_hashes_numpy``
+    per doc.
     """
     a_params, b_params = minhash_params(num_perm, seed)
-    emit_bands = num_bands > 0
-    emit_prefix = emit_bands and sig_prefix_perms > 0
-    if emit_bands:
-        out_schema = "sh binary, bands array<long>"
-        if emit_prefix:
-            out_schema += ", sigp binary"
-    else:
-        out_schema = "sh binary, sig array<long>"
 
-    @pandas_udf(out_schema)
+    @pandas_udf("sh binary, bands array<long>, sigp binary")
     def shingle_sig(texts: pd.Series) -> pd.DataFrame:
         grams, offsets = _batch_grams(texts, k)
         sets = [np.unique(grams[offsets[i] : offsets[i + 1]]) for i in range(len(texts))]
@@ -320,43 +290,17 @@ def make_shingle_sig_udf(
             ]
         else:
             sh_col = [s.view(np.int64).tobytes() for s in sets]
-        if emit_bands:
-            bands = band_hashes_numpy(sigs, num_bands, rows_per_band)
-            cols = {"sh": sh_col, "bands": [bands[i] for i in range(len(sets))]}
-            if emit_prefix:
-                pref = sigs[:, :sig_prefix_perms].astype(np.uint32)  # low 32 bits
-                cols["sigp"] = [pref[i].tobytes() for i in range(len(sets))]
-            return pd.DataFrame(cols)
-        sig_rows = sigs.view(np.int64)
+        bands = band_hashes_numpy(sigs, num_bands, rows_per_band)
+        if sig_prefix_perms:
+            pref = sigs[:, :sig_prefix_perms].astype(np.uint32)  # low 32 bits
+            sigp = [pref[i].tobytes() for i in range(len(sets))]
+        else:
+            sigp = [None] * len(sets)
         return pd.DataFrame(
-            {"sh": sh_col, "sig": [sig_rows[i] for i in range(len(sets))]}
+            {"sh": sh_col, "bands": [bands[i] for i in range(len(sets))], "sigp": sigp}
         )
 
     return shingle_sig
-
-
-def make_sig_prefix_udf(prefix_perms: int):
-    """sig array<long> -> sigp binary: the first P signature slots
-    truncated to uint32 LE (4 B/slot) — bit-identical to the ``sigp`` the
-    fused banded kernel emits, but derived from an already-materialized
-    full signature.  Lets the checkpointed pipeline (whose `signatures`
-    stage stores the full sig) feed the two-tier verify screen without
-    re-signaturing the corpus."""
-
-    @pandas_udf("binary")
-    def sig_prefix(sig: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                None
-                if s is None
-                else np.asarray(s, dtype=np.int64)[:prefix_perms]
-                .astype(np.uint32)
-                .tobytes()
-                for s in sig
-            ]
-        )
-
-    return sig_prefix
 
 
 def shingle_bytes_to_array(b: bytes | None) -> np.ndarray:

@@ -1,4 +1,5 @@
-"""LSH banding + bucket-grouped candidate-pair generation with skew control.
+"""Bucket-grouped candidate-pair generation with skew control, over the
+(doc_id, band, bucket) rows of ``dedup.explode_fused_bands``.
 
 This is the Spark realization of the reference's inverted index + probe
 (``nlsh/indexer.py:6-96``): the bucket→rows dict is never materialized —
@@ -39,33 +40,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from neural_locality_sensitive_hashing_spark.config import DedupConfig
-
-
-def band_buckets(sig_col: Column, num_bands: int, rows_per_band: int) -> Column:
-    """signature array<bigint> -> array<bigint> of per-band bucket hashes.
-
-    bucket[b] = xxhash64(b, sig[b*r : (b+1)*r]) — band index is mixed in so
-    identical row-slices in different bands never collide. Fully native.
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_bands - 1)),
-        lambda b: F.xxhash64(b, F.slice(sig_col, b * F.lit(rows_per_band) + 1, rows_per_band)),
-    )
-
-
-def explode_bands(
-    signatures: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "doc_id",
-    sig_col: str = "sig",
-) -> DataFrame:
-    """(doc_id, sig) -> (doc_id, band, bucket), one row per (doc, band)."""
-    return signatures.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(band_buckets(F.col(sig_col), cfg.num_bands, cfg.rows_per_band)).alias(
-            "band", "bucket"
-        ),
-    )
 
 
 def _all_pairs(ids: Column, s: Column) -> Column:

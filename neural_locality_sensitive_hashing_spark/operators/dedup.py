@@ -1,7 +1,7 @@
 """End-to-end dedup pipelines (SURVEY.md §3 E2 Spark re-expression):
 
-    pages -> shingle/MinHash signatures -> band explode -> bucket self-join
-          -> exact-Jaccard verify -> union-find -> clusters
+    pages -> shingle + MinHash + band kernel -> band explode -> bucket
+          self-join -> exact-Jaccard verify -> union-find -> clusters
 
 plus the cheap exact (fingerprint groupBy) and SimHash variants. Each
 pipeline is a pure DataFrame -> DataFrame function so stages compose with
@@ -15,15 +15,9 @@ from pyspark.sql import functions as F
 
 from neural_locality_sensitive_hashing_spark.config import DedupConfig
 from neural_locality_sensitive_hashing_spark.functions import text as T
-from neural_locality_sensitive_hashing_spark.functions.minhash import (
-    make_minhash_udf,
-    make_shingle_sig_udf,
-)
+from neural_locality_sensitive_hashing_spark.functions.minhash import make_shingle_sig_udf
 from neural_locality_sensitive_hashing_spark.functions.simhash import simhash_udf
-from neural_locality_sensitive_hashing_spark.operators.candidates import (
-    candidate_pairs,
-    explode_bands,
-)
+from neural_locality_sensitive_hashing_spark.operators.candidates import candidate_pairs
 from neural_locality_sensitive_hashing_spark.operators.connected_components import (
     clusters_with_singletons,
     connected_components,
@@ -35,6 +29,11 @@ from neural_locality_sensitive_hashing_spark.operators.verify import (
     simhash_verify,
 )
 from neural_locality_sensitive_hashing_spark.partitioning import fan_out
+
+# byte ceiling of the broadcast-verify set table: the ~700 B/doc x 300k
+# docs that ``verify_broadcast_max_docs`` was sized for. Long pages reach
+# it at far fewer docs; above it the join-based verify runs instead.
+_BCAST_MAX_SH_BYTES = 256 << 20
 
 
 def shingle_documents(
@@ -51,49 +50,19 @@ def shingle_documents(
     )
 
 
-def minhash_signatures(
-    shingled: DataFrame,
-    cfg: DedupConfig,
-) -> DataFrame:
-    """(doc_id, sh) -> (doc_id, sh, sig). One Arrow-batched UDF pass."""
-    udf = make_minhash_udf(cfg.num_perm, cfg.minhash_seed)
-    return shingled.withColumn("sig", udf(F.col("sh")))
-
-
-def signatures_fused(
-    docs: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """docs -> (doc_id, sh, sig) via the fused tokenize+shingle+MinHash UDF
-    — the hot-path variant (one Arrow round trip, no JVM garbage from
-    interpreted higher-order functions). Preferred by the pipeline; the
-    native shingle_set/minhash pair remains for composability and the
-    string-shingle driver queries."""
-    docs = fan_out(docs)
-    udf = make_shingle_sig_udf(
-        cfg.shingle_k, cfg.num_perm, cfg.minhash_seed,
-        shingle_hash_bytes=cfg.shingle_hash_bytes,
-    )
-    return docs.select(
-        F.col(id_col).alias("doc_id"), udf(F.col(text_col)).alias("s")
-    ).select("doc_id", F.col("s.sh").alias("sh"), F.col("s.sig").alias("sig"))
-
-
 def banded_signatures_fused(
     docs: DataFrame,
     cfg: DedupConfig,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """docs -> (doc_id, sh, bands) with the LSH banding fused INTO the
-    Arrow kernel: the 1 KB/doc signature never leaves the Python worker
-    and the per-doc 32x interpreted slice+xxhash64 band exprs disappear —
-    a pure byte/allocation cut on the pipeline's hottest cached table.
-    Candidate semantics are unchanged (identical docs collide per band);
-    only the band hash family differs from explode_bands, which remains
-    the sig-level API."""
+    """docs -> (doc_id, sh, bands[, sigp]): the one way the engine signs
+    and bands documents — batch, the resumable pipeline and the stream all
+    call it. One Arrow kernel tokenizes, shingles, MinHashes and bands
+    (``make_shingle_sig_udf``): the 1 KB/doc signature never leaves the
+    Python worker, only its ``num_bands`` band hashes do. ``sigp`` (the
+    verify screen's estimator prefix) is selected only with
+    ``cfg.verify_screen``."""
     docs = fan_out(docs)
     udf = make_shingle_sig_udf(
         cfg.shingle_k, cfg.num_perm, cfg.minhash_seed,
@@ -125,9 +94,9 @@ def minhash_dup_pairs(
     """Full candidate-generation + verification -> (a, b, jaccard).
 
     Not lazy throughout: inside the broadcast-verify gate this call runs
-    eager driver jobs (the gate's ``sigs.count()`` and the shingle-set
-    collect) and creates three broadcast variables; the returned
-    DataFrame is lazy from there on.
+    eager driver jobs (the gate's doc-count and shingle-byte aggregate and
+    the shingle-set collect) and creates three broadcast variables; the
+    returned DataFrame is lazy from there on.
 
     Cache lifecycle: `sigs` is persisted because banding AND the verify
     gather-join consume it, so the cache must outlive this function.
@@ -149,11 +118,15 @@ def minhash_dup_pairs(
     # through Arrow (~1 KB/pair). The gate count runs on the persisted
     # sigs table (one row per doc), so the same job PREPAYS the cache
     # materialization every downstream consumer needs — no separate scan
-    # of the raw docs. Identical jaccard values either way; both bounds
-    # are measured crossovers (config.py).
+    # of the raw docs. Identical jaccard values either way; both doc
+    # bounds are measured crossovers (config.py), and the same job sums
+    # the set bytes the broadcast would ship (``_BCAST_MAX_SH_BYTES``).
     if cfg.verify_broadcast_max_docs:
-        n_docs = sigs.count()
-        if cfg.verify_broadcast_min_docs < n_docs <= cfg.verify_broadcast_max_docs:
+        n_docs, sh_bytes = sigs.agg(F.count("*"), F.sum(F.length("sh"))).first()
+        if (
+            cfg.verify_broadcast_min_docs < n_docs <= cfg.verify_broadcast_max_docs
+            and sh_bytes <= _BCAST_MAX_SH_BYTES
+        ):
             return jaccard_verify_bcast(cands, sigs.select("doc_id", "sh"), cfg)
     return jaccard_verify(cands, sigs.select("doc_id", "sh"), cfg)
 

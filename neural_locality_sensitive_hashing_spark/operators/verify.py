@@ -267,10 +267,8 @@ def jaccard_verify_screened(
     (miss ~1e-3 at J == tau, inside the >=0.99 recall budget; measured in
     tests/test_screen.py).
 
-    ``sigs`` must carry (doc_id, sh, sigp) — either the fused banded
-    kernel with ``sig_prefix_perms = cfg.screen_perms``, or
-    ``make_sig_prefix_udf`` over a materialized full signature (the
-    checkpointed DedupPipeline path).
+    ``sigs`` must carry (doc_id, sh, sigp), as ``banded_signatures_fused``
+    emits them under ``cfg.verify_screen``.
     """
     reject_below, accept_at = screen_counts(cfg)
     p = cfg.screen_perms

@@ -2,7 +2,7 @@
 
 Stages (each one an idempotent checkpoint table):
 
-    signatures   : pages -> (doc_id, sh, sig, simhash)
+    signatures   : pages -> (doc_id, sh, bands[, sigp], simhash)
     cand_pairs   : band-explode + bucket self-join (+ SimHash chunks)
     dup_pairs    : exact-Jaccard verified pairs (+ SimHash Hamming pairs
                    + suffix long-repeat pairs when enabled); with
@@ -40,14 +40,15 @@ from neural_locality_sensitive_hashing_spark.functions.simhash import simhash_ud
 from neural_locality_sensitive_hashing_spark.operators.candidates import (
     bucket_stats,
     candidate_pairs,
-    explode_bands,
 )
 from neural_locality_sensitive_hashing_spark.operators.connected_components import (
     clusters_with_singletons,
     connected_components,
 )
-from neural_locality_sensitive_hashing_spark.functions.minhash import make_sig_prefix_udf
-from neural_locality_sensitive_hashing_spark.operators.dedup import signatures_fused
+from neural_locality_sensitive_hashing_spark.operators.dedup import (
+    banded_signatures_fused,
+    explode_fused_bands,
+)
 from neural_locality_sensitive_hashing_spark.operators.verify import (
     jaccard_verify,
     jaccard_verify_screened,
@@ -95,8 +96,10 @@ class DedupPipeline:
         upstream = hashlib.sha256(
             json.dumps({"input": self.input_token, "cfg": cfg_d}, sort_keys=True).encode()
         ).hexdigest()
+        # /v2: the signatures stage stores the kernel's bands where v1
+        # stored the full sig, so a v1 checkpoint dir is recomputed, not read
         for stage in self.STAGES:
-            upstream = hashlib.sha256(f"{upstream}/{stage}/v1".encode()).hexdigest()
+            upstream = hashlib.sha256(f"{upstream}/{stage}/v2".encode()).hexdigest()
             fps[stage] = upstream[:24]
         return fps
 
@@ -118,27 +121,21 @@ class DedupPipeline:
         cfg = self.cfg
 
         def compute_signatures() -> DataFrame:
-            sigs = signatures_fused(pages, cfg)
+            # the screen's sigp rides along when cfg.verify_screen (config
+            # is part of the fingerprint, so toggling the screen
+            # invalidates downstream stages)
+            sigs = banded_signatures_fused(pages, cfg)
             if cfg.shingle_hash_bytes == 8:
                 # the SimHash contract is defined over 64-bit shingle
                 # hashes; with the 4-byte scale gather the column is
                 # meaningless (and the kernel would reject the buffer)
                 sigs = sigs.withColumn("simhash", simhash_udf(F.col("sh")))
-            if cfg.verify_screen:
-                # the screen's uint32 estimator prefix, derived from the
-                # full signature so the stage stays one Arrow pass; lands
-                # in the checkpoint (config is part of the fingerprint, so
-                # toggling the screen invalidates downstream stages)
-                sigs = sigs.withColumn(
-                    "sigp", make_sig_prefix_udf(cfg.screen_perms)(F.col("sig"))
-                )
             return sigs
 
         signatures = self._stage("signatures", compute_signatures, report)
 
         def compute_cands() -> DataFrame:
-            bands = explode_bands(signatures, cfg)
-            return candidate_pairs(bands, cfg)
+            return candidate_pairs(explode_fused_bands(signatures), cfg)
 
         cands = self._stage("cand_pairs", compute_cands, report)
 
@@ -195,7 +192,7 @@ class DedupPipeline:
         # per-band candidate fan-out (bucket_stats pair_mass): makes skew
         # drift auditable across runs — a band whose pair_mass balloons is
         # the one a boilerplate template landed in
-        for row in bucket_stats(explode_bands(signatures, cfg)).collect():
+        for row in bucket_stats(explode_fused_bands(signatures)).collect():
             band = int(row["band"])
             metrics[f"band_{band:02d}_pair_mass"] = float(row["pair_mass"])
             metrics[f"band_{band:02d}_max_bucket"] = float(row["max_bucket"])

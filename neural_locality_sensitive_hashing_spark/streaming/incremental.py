@@ -4,7 +4,8 @@ The batch pipeline's stages are idempotent over snapshot tables, which makes
 incremental dedup a `foreachBatch` refinement (SURVEY.md §2.10): for each
 micro-batch of newly crawled pages,
 
-    1. signature the new docs (same kernels as batch),
+    1. sign and band the new docs with batch's kernel
+       (``banded_signatures_fused`` -> ``explode_fused_bands``),
     2. candidate-generate new×new (grouped self-join with skew capping)
        PLUS new×old via an equi-join of the new bands against the
        accumulated BAND STORE — old×old is never rescanned; per-batch
@@ -40,6 +41,13 @@ append wrote up to 96 small files from one task and each read of the
 halves the batch latency. Key-sorted files keep Parquet's row-group
 min/max statistics useful for any selective reader.
 
+The stored bands are only comparable with bands from the same band-hash
+family and signature config, so ``IncrementalDeduper`` writes a one-line
+``<state_dir>/_band_format`` marker naming both, and refuses (ValueError)
+to resume over stores whose marker is absent or differs: a mismatch would
+not fail, it would silently miss every cross-batch pair. Such a state_dir
+has to be re-ingested.
+
 ``compact_parquet_store`` is the periodic maintenance action (Iceberg's
 `rewrite_data_files`): it rewrites a store into ceil(store bytes ÷
 ``spark.sql.files.maxPartitionBytes``) key-range-sorted files — one file
@@ -62,6 +70,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from pathlib import Path
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -71,9 +80,11 @@ from neural_locality_sensitive_hashing_spark.config import DedupConfig
 from neural_locality_sensitive_hashing_spark.operators.candidates import (
     candidate_pairs,
     candidate_pairs_two_sided,
-    explode_bands,
 )
-from neural_locality_sensitive_hashing_spark.operators.dedup import signatures_fused
+from neural_locality_sensitive_hashing_spark.operators.dedup import (
+    banded_signatures_fused,
+    explode_fused_bands,
+)
 from neural_locality_sensitive_hashing_spark.operators.verify import jaccard_verify
 
 PAGES_SCHEMA = (
@@ -95,6 +106,16 @@ def _columns(schema: str) -> list[str]:
     return [field.split()[0] for field in schema.split(",")]
 
 
+def _band_format(cfg: DedupConfig) -> str:
+    """The ``_band_format`` marker line: the band-hash family and the
+    DedupConfig fields that decide the stored bands and shingle sets."""
+    fields = (
+        "shingle_k", "num_perm", "minhash_seed", "num_bands", "rows_per_band",
+        "shingle_hash_bytes",
+    )
+    return "band_hashes_numpy " + " ".join(f"{f}={getattr(cfg, f)}" for f in fields)
+
+
 def compact_parquet_store(
     spark: SparkSession,
     path: str,
@@ -107,8 +128,7 @@ def compact_parquet_store(
     action, done with plain parquet): append-per-batch stores accumulate
     small files, and at ~10^5 batches the FILE COUNT — listing, footers,
     task scheduling — becomes the scan bound, not the bytes. The rewrite
-    keeps only the columns of ``schema`` (DDL), dropping any column or
-    ``col=v`` partition directory an older layout wrote.
+    keeps only the columns of ``schema`` (DDL).
 
     Rewrites into a sibling temp dir, then swaps directories. A crash
     can land in the window between the two renames (store missing, data
@@ -146,8 +166,7 @@ def _swap_rewrite(path: str, write_tmp) -> None:
 
 
 def _data_files(path: str):
-    """The store's parquet data files, at any directory depth (a store
-    written by the hash-partitioned layout nests them in ``col=v`` dirs)."""
+    """The store's parquet data files."""
     for root, _dirs, files in os.walk(path):
         for f in files:
             if f.endswith(".parquet") and not f.startswith((".", "_")):
@@ -191,13 +210,19 @@ class IncrementalDeduper:
             os.path.join(state_dir, name): (key, schema) for name, key, schema in STORES
         }
         self.pair_store, self.band_store, self.sig_store = self.stores
-        # resuming over a state_dir written by the hash-partitioned layout
-        # (``col=v`` subdirectories): rewrite each such store once into the
-        # flat layout, before any append or read
-        for path, (key, schema) in self.stores.items():
+        marker = Path(state_dir, "_band_format")
+        want = _band_format(cfg)
+        have = marker.read_text().strip() if marker.exists() else None
+        for path in self.stores:
             recover_store(path)
-            if os.path.isdir(path) and any("=" in d for d in os.listdir(path)):
-                compact_parquet_store(spark, path, key, schema)
+        if have != want and any(os.path.isdir(p) for p in self.stores):
+            raise ValueError(
+                f"state_dir {state_dir} holds stores of band format {have!r}, "
+                f"not {want!r}: their bands cannot match this config's; "
+                "re-ingest into an empty state_dir"
+            )
+        os.makedirs(state_dir, exist_ok=True)
+        marker.write_text(want + "\n")
 
     def compact_stores(self) -> None:
         """Maintenance: rewrite each store's per-batch small files into
@@ -214,8 +239,8 @@ class IncrementalDeduper:
 
     def process_batch(self, new_pages: DataFrame, batch_id: int) -> None:
         cfg = self.cfg
-        new_sigs = signatures_fused(new_pages, cfg).persist()
-        new_bands = explode_bands(new_sigs, cfg).persist()
+        new_sigs = banded_signatures_fused(new_pages, cfg).persist()
+        new_bands = explode_fused_bands(new_sigs).persist()
 
         # new×new with the full skew-capped machinery ...
         cands = candidate_pairs(new_bands, cfg)

@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
 from neural_locality_sensitive_hashing_spark.functions import minhash as M
 from neural_locality_sensitive_hashing_spark.functions.minhash import (
@@ -12,7 +11,6 @@ from neural_locality_sensitive_hashing_spark.functions.minhash import (
     estimate_jaccard,
     gram_hashes_python,
     make_gram_hash_text_udf,
-    make_minhash_udf,
     make_shingle_sig_udf,
     minhash_numpy,
     minhash_params,
@@ -27,26 +25,19 @@ def test_params_deterministic():
     assert (a1 % 2 == 1).all()  # bijections mod 2^64
 
 
-def test_udf_matches_numpy_reference(spark):
+def test_udf_matches_numpy_reference():
+    """The blocked segment kernel equals minhash_numpy set by set."""
     rng = np.random.default_rng(7)
-    sets = [rng.integers(-(2**62), 2**62, size=rng.integers(1, 50)).tolist() for _ in range(20)]
+    sets = [rng.integers(-(2**62), 2**62, size=rng.integers(1, 50)) for _ in range(20)]
     # one set spanning several pass blocks
-    sets.append(rng.integers(-(2**62), 2**62, size=2 * M._PASS_BLOCK + 7).tolist())
-    df = spark.createDataFrame([(i, s) for i, s in enumerate(sets)], "i int, sh array<long>")
-    udf = make_minhash_udf(32, 42)
-    got = {r.i: list(r.sig) for r in df.select("i", udf(F.col("sh")).alias("sig")).collect()}
+    sets.append(rng.integers(-(2**62), 2**62, size=2 * M._PASS_BLOCK + 7))
+    lens = np.array([len(s) for s in sets])
     a, b = minhash_params(32, 42)
+    got = M._segment_minhash(
+        np.concatenate(sets).view(np.uint64), M._seg_starts(lens), a, b
+    ).view(np.int64)
     for i, s in enumerate(sets):
-        want = list(minhash_numpy(np.array(s, dtype=np.int64), a, b))
-        assert got[i] == want, f"row {i}"
-
-
-def test_null_and_empty(spark):
-    df = spark.createDataFrame([(0, None), (1, []), (2, [5])], "i int, sh array<long>")
-    udf = make_minhash_udf(8, 42)
-    rows = {r.i: r.sig for r in df.select("i", udf(F.col("sh")).alias("sig")).collect()}
-    assert rows[0] is None and rows[1] is None
-    assert len(rows[2]) == 8
+        assert got[i].tobytes() == minhash_numpy(s, a, b).tobytes(), f"row {i}"
 
 
 def test_estimate_accuracy():
@@ -84,8 +75,8 @@ def _parity_texts(k: int) -> pd.Series:
 
 def test_fused_kernel_bit_identical_to_reference(spark):
     """The whole-batch kernels equal the per-doc references byte for
-    byte: shingle_hashes_python + minhash_numpy (+ band_hashes_numpy and
-    the uint32 sigp prefix), in both output modes and both sh widths.
+    byte: shingle_hashes_python + minhash_numpy + band_hashes_numpy and
+    the uint32 sigp prefix (null without a prefix), in both sh widths.
     The kernels run directly on pandas batches; the session only parses
     their DDL return types."""
     k, perms, nb, rpb, pref = 5, 64, 16, 4, 8
@@ -99,16 +90,18 @@ def test_fused_kernel_bit_identical_to_reference(spark):
             sh = [s.view(np.int64).tobytes() for s in sets]
         else:
             sh = [np.unique((s >> np.uint64(32)).astype(np.uint32)).tobytes() for s in sets]
-        plain = make_shingle_sig_udf(k, perms, 7, shingle_hash_bytes=width).func(texts)
         banded = make_shingle_sig_udf(
             k, perms, 7, num_bands=nb, rows_per_band=rpb,
             sig_prefix_perms=pref, shingle_hash_bytes=width,
         ).func(texts)
         for i in range(len(texts)):
-            assert plain["sh"][i] == sh[i] and banded["sh"][i] == sh[i], i
-            assert plain["sig"][i].tobytes() == sigs[i].tobytes(), i
+            assert banded["sh"][i] == sh[i], i
             assert banded["bands"][i].tobytes() == bands[i].tobytes(), i
             assert banded["sigp"][i] == sigs[i, :pref].astype(np.uint32).tobytes(), i
+    no_prefix = make_shingle_sig_udf(k, perms, 7, nb, rpb).func(texts[:20])
+    assert no_prefix["sigp"].isna().all()
+    for i in range(20):
+        assert no_prefix["bands"][i].tobytes() == bands[i].tobytes(), i
     distinct = make_gram_hash_text_udf(k).func(texts)
     positional = make_gram_hash_text_udf(k, distinct=False).func(texts)
     for i, t in enumerate(texts):

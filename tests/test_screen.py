@@ -123,3 +123,36 @@ def test_bcast_verify_rejects_absent_id(spark):
         pairs = spark.createDataFrame([absent], "a long, b long")
         with pytest.raises(Exception, match=f"id {absent[1]}, absent"):
             jaccard_verify_bcast(pairs, sets_df, cfg).collect()
+
+
+def test_bcast_gate_falls_back_on_shingle_bytes(spark, pages, monkeypatch):
+    """minhash_dup_pairs broadcasts the shingle sets only while their bytes
+    stay within _BCAST_MAX_SH_BYTES; above it the join-based verify runs,
+    with the identical (a, b, jaccard) rows."""
+    from neural_locality_sensitive_hashing_spark.operators import dedup as D
+
+    taken = []
+
+    def record(name):
+        fn = getattr(D, name)
+
+        def wrapper(*args, **kwargs):
+            taken.append(name)
+            return fn(*args, **kwargs)
+
+        monkeypatch.setattr(D, name, wrapper)
+
+    record("jaccard_verify")
+    record("jaccard_verify_bcast")
+    cfg = DedupConfig(verify_broadcast_min_docs=0)
+
+    def rows():
+        out = {(r.a, r.b, r.jaccard) for r in D.minhash_dup_pairs(pages, cfg).collect()}
+        spark.catalog.clearCache()
+        return out
+
+    bcast = rows()
+    monkeypatch.setattr(D, "_BCAST_MAX_SH_BYTES", 1024)
+    joined = rows()
+    assert taken == ["jaccard_verify_bcast", "jaccard_verify"]
+    assert bcast and joined == bcast

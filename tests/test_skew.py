@@ -10,8 +10,9 @@ from pyspark.sql import functions as F
 
 from neural_locality_sensitive_hashing_spark.config import DedupConfig
 from neural_locality_sensitive_hashing_spark.operators.dedup import (
+    banded_signatures_fused,
+    explode_fused_bands,
     minhash_dup_pairs,
-    shingle_documents,
 )
 
 # small cap so the 600-member boilerplate group exercises the chain path
@@ -75,12 +76,10 @@ def test_no_silent_truncation_is_observable(spark, skewed_docs):
     emitted pairs) — the drop is measurable, not silent."""
     from neural_locality_sensitive_hashing_spark.operators.candidates import (
         bucket_stats,
-        explode_bands,
     )
-    from neural_locality_sensitive_hashing_spark.operators.dedup import minhash_signatures
 
-    sigs = minhash_signatures(shingle_documents(skewed_docs, CFG), CFG)
-    stats = bucket_stats(explode_bands(sigs, CFG))
+    sigs = banded_signatures_fused(skewed_docs, CFG)
+    stats = bucket_stats(explode_fused_bands(sigs))
     worst = stats.agg(F.max("max_bucket").alias("m"), F.sum("pair_mass").alias("pm")).first()
     assert worst.m >= 600  # the planted mega bucket is visible
     assert worst.pm > 100_000  # and its quadratic pair mass is reported

@@ -201,22 +201,13 @@ def test_compaction_crash_window_recovers(spark, pages_1k, tmp_path):
     assert dedup.dup_pairs().count() == n_pairs
 
 
-def test_hash_partitioned_state_migrates_on_resume(spark, pages_1k, tmp_path):
-    """A state_dir written by the hash-partitioned layout (pfx / id_pfx /
-    pair_pfx directories, signatures with their sig column) is rewritten
-    once into the flat layout when a deduper resumes over it: dup_pairs()
-    is identical, and later appends and compaction work on top."""
-    import shutil
+def test_resume_rejects_foreign_state_dir(spark, pages_1k, tmp_path):
+    """A deduper resumes only over stores its own band format wrote: stores
+    without the _band_format marker (as every older engine left them) and
+    stores marked with another minhash_seed raise instead of silently
+    missing cross-batch pairs; a same-config resume keeps stream == batch."""
+    import pytest
 
-    from pyspark.sql import functions as F
-
-    from neural_locality_sensitive_hashing_spark.operators.candidates import (
-        explode_bands,
-    )
-    from neural_locality_sensitive_hashing_spark.operators.dedup import (
-        minhash_dup_pairs,
-        signatures_fused,
-    )
     from neural_locality_sensitive_hashing_spark.streaming.incremental import (
         IncrementalDeduper,
     )
@@ -224,45 +215,58 @@ def test_hash_partitioned_state_migrates_on_resume(spark, pages_1k, tmp_path):
     pages_path, _ = pages_1k
     pages = spark.read.parquet(pages_path)
     state = str(tmp_path / "state")
-    even = pages.where("doc_id % 2 = 0")
+    IncrementalDeduper(spark, CFG, state).process_batch(pages.where("doc_id % 2 = 0"), 0)
+    marker = tmp_path / "state" / "_band_format"
+    line = marker.read_text()
+
+    marker.unlink()
+    with pytest.raises(ValueError, match="re-ingest") as e:
+        IncrementalDeduper(spark, CFG, state)
+    assert state in str(e.value)
+
+    marker.write_text(line)
+    with pytest.raises(ValueError, match="minhash_seed=42"):
+        IncrementalDeduper(spark, DedupConfig(minhash_seed=7), state)
+    assert marker.read_text() == line  # a refused resume leaves the marker
+
     dedup = IncrementalDeduper(spark, CFG, state)
-    dedup.process_batch(even, 0)
-    before = sorted((r.a, r.b, r.jaccard) for r in dedup.dup_pairs().collect())
-
-    # rewrite the state as the hash-partitioned layout wrote it
-    sigs = signatures_fused(even, CFG)
-    legacy = {
-        dedup.band_store: (explode_bands(sigs, CFG), "pfx", "bucket", 64),
-        dedup.sig_store: (sigs.select("doc_id", "sh", "sig"), "id_pfx", "doc_id", 16),
-        dedup.pair_store: (spark.read.parquet(dedup.pair_store), "pair_pfx", "a", 16),
-    }
-    for store, (df, col, key, parts) in legacy.items():
-        (
-            df.withColumn(col, F.pmod(F.col(key), F.lit(parts)))
-            .repartition(col)
-            .write.partitionBy(col)
-            .parquet(store + ".legacy")
-        )
-        shutil.rmtree(store)
-        shutil.move(store + ".legacy", store)
-        assert any(d.startswith(col + "=") for d in os.listdir(store))
-
-    # resume: the constructor flattens all three stores
-    dedup2 = IncrementalDeduper(spark, CFG, state)
-    for store in legacy:
-        assert not any(
-            os.path.isdir(os.path.join(store, d)) for d in os.listdir(store)
-        ), store
-    assert dedup2._read_store(dedup2.sig_store).columns == ["doc_id", "sh"]
-    assert sorted((r.a, r.b, r.jaccard) for r in dedup2.dup_pairs().collect()) == before
-
-    dedup2.process_batch(pages.where("doc_id % 2 = 1"), 1)
-    dedup2.compact_stores()
-    for store in legacy:
-        assert len(_data_files(store)) == 1, store
-    assert {(r.a, r.b) for r in dedup2.dup_pairs().collect()} == {
+    dedup.process_batch(pages.where("doc_id % 2 = 1"), 1)
+    assert {(r.a, r.b) for r in dedup.dup_pairs().collect()} == {
         (r.a, r.b) for r in minhash_dup_pairs(pages, CFG).collect()
     }
+
+
+def test_stream_and_pipeline_band_like_batch(spark, pages_1k, tmp_path):
+    """The stream's band store and the pipeline's candidates come from the
+    batch kernel's bands (banded_signatures_fused -> explode_fused_bands),
+    not from a second band-hash family."""
+    from neural_locality_sensitive_hashing_spark.operators.candidates import (
+        candidate_pairs,
+    )
+    from neural_locality_sensitive_hashing_spark.operators.dedup import (
+        banded_signatures_fused,
+        explode_fused_bands,
+    )
+    from neural_locality_sensitive_hashing_spark.plans.pipeline import DedupPipeline
+    from neural_locality_sensitive_hashing_spark.streaming.incremental import (
+        IncrementalDeduper,
+    )
+
+    pages_path, _ = pages_1k
+    pages = spark.read.parquet(pages_path).where("doc_id % 2 = 0")
+    bands = explode_fused_bands(banded_signatures_fused(pages, CFG))
+
+    dedup = IncrementalDeduper(spark, CFG, str(tmp_path / "state"))
+    dedup.process_batch(pages, 0)
+    stored = dedup._read_store(dedup.band_store).select("band", "bucket", "doc_id")
+    want = bands.select("band", "bucket", "doc_id")
+    assert sorted(map(tuple, stored.collect())) == sorted(map(tuple, want.collect()))
+
+    pipe = DedupPipeline(spark, CFG, str(tmp_path / "ckpt"), input_token="even")
+    pipe.run(pages)
+    got = {tuple(r) for r in pipe.catalog.read_snapshot("cand_pairs").collect()}
+    assert got == {tuple(r) for r in candidate_pairs(bands, CFG).collect()}
+    assert got
 
 
 def test_compact_every_auto_trigger(spark, pages_1k, tmp_path):
