@@ -11,8 +11,8 @@ quick probe.
 The per-query numbers are end-to-end (plan + execute + collect-to-count);
 `webtext_dedup` is the flagship: the full MinHash-LSH dedup pipeline over a
 generated 50k-page Common-Crawl-style corpus (datagen time excluded, corpus
-cached on disk). Scaling evidence across parallelism levels is produced by
-tools/bench_scaling.py (writes BENCH/BASELINE.md).
+cached on disk). Scaling evidence across parallelism levels is recorded in
+BENCH/BASELINE.md (raw: BENCH/scaling_raw*.json).
 """
 
 from __future__ import annotations

@@ -44,10 +44,11 @@ class DedupConfig:
     # margins: binomial miss probability at J == tau is ~1e-3 (see
     # verify.screen_counts) — inside the >=0.99 dup-pair recall budget.
     # Off by default so oracle-checked queries stay exactly equal to the
-    # exact-threshold SQL. Measured (tools/shuffle_bytes.py, 250k synthetic
-    # docs): the screen's second exchange cancels its byte cut when shingle
-    # sets are small (~1.2 KB, only ~5x the prefix) — enable it for corpora
-    # whose sets dwarf the 256 B prefix (real web pages, 5-10 KB/set).
+    # exact-threshold SQL. Measured (BENCH/BASELINE.md byte evidence, 250k
+    # synthetic docs): the screen's second exchange cancels its byte cut
+    # when shingle sets are small (~1.2 KB, only ~5x the prefix) — enable
+    # it for corpora whose sets dwarf the 256 B prefix (real web pages,
+    # 5-10 KB/set).
     verify_screen: bool = False
     screen_perms: int = 64
     screen_reject_sigmas: float = 3.0

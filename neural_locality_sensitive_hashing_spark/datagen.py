@@ -232,8 +232,8 @@ def augment_with_recrawls(
     collapse each variant back onto its base page (newest crawl wins, so
     the RECRAWL row survives), leaving exactly the original text multiset:
     content dedup downstream therefore produces the same cluster count as
-    the un-augmented corpus — the cross-check tools/bench_recrawl.py
-    asserts on the 1M-doc benchmark corpus."""
+    the un-augmented corpus — the cross-check the 1M-doc recrawl run in
+    BENCH/BASELINE.md (raw: BENCH/recrawl_raw.json) asserted."""
     n = pages.num_rows
     rng = np.random.default_rng(seed + 1_000_003)
     k = int(n * recrawl_rate)
@@ -296,21 +296,3 @@ def augment_with_recrawls(
     # no combine_chunks: concatenating the 1M-doc html column back into one
     # chunk is exactly the 32-bit-offset overflow the per-chunk take avoids
     return pa.concat_tables([pages, recrawls])
-
-
-def write_recrawled_pages_dataset(
-    out_dir: str, n_docs: int, seed: int = 42, recrawl_rate: float = 0.3
-) -> tuple[str, str]:
-    """pages.parquet with recrawl augmentation (idempotent cache like
-    write_pages_dataset); truth_groups.parquet covers the base docs."""
-    os.makedirs(out_dir, exist_ok=True)
-    pages_path = os.path.join(out_dir, "pages.parquet")
-    truth_path = os.path.join(out_dir, "truth_groups.parquet")
-    if os.path.exists(pages_path) and os.path.exists(truth_path):
-        return pages_path, truth_path
-    pages, truth = generate_pages(n_docs, seed)
-    pages = augment_with_recrawls(pages, recrawl_rate, seed)
-    row_group = max(512, min(pages.num_rows // 64, 8 * 1024))
-    pq.write_table(pages, pages_path, row_group_size=row_group)
-    pq.write_table(truth, truth_path)
-    return pages_path, truth_path

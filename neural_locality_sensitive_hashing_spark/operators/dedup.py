@@ -6,6 +6,12 @@
 plus the cheap exact (fingerprint groupBy) and SimHash variants. Each
 pipeline is a pure DataFrame -> DataFrame function so stages compose with
 the checkpoint manager (plans/pipeline.py).
+
+This module is the one place batch dedup is composed: the resumable
+pipeline, the spark-submit job (tools/run_dedup_job.py) and the oracle
+lanes call these stages instead of rebuilding the chain. ``verify_pairs``
+is the one verify policy (screen, size-gated broadcast, or join), and
+``keep_list`` the one survivor derivation.
 """
 
 from __future__ import annotations
@@ -93,10 +99,11 @@ def minhash_dup_pairs(
 ) -> DataFrame:
     """Full candidate-generation + verification -> (a, b, jaccard).
 
-    Not lazy throughout: inside the broadcast-verify gate this call runs
-    eager driver jobs (the gate's doc-count and shingle-byte aggregate and
-    the shingle-set collect) and creates three broadcast variables; the
-    returned DataFrame is lazy from there on.
+    Not lazy throughout: inside the broadcast-verify gate
+    (``verify_pairs``) this call runs eager driver jobs (the gate's
+    doc-count and shingle-byte aggregate and the shingle-set collect) and
+    creates three broadcast variables; the returned DataFrame is lazy from
+    there on.
 
     Cache lifecycle: `sigs` is persisted because banding AND the verify
     gather-join consume it, so the cache must outlive this function.
@@ -108,19 +115,27 @@ def minhash_dup_pairs(
     and Spark's ContextCleaner reclaims them."""
     sigs = banded_signatures_fused(docs, cfg, id_col, text_col)
     sigs = sigs.persist()
-    bands = explode_fused_bands(sigs)
-    cands = candidate_pairs(bands, cfg)
+    cands = candidate_pairs(explode_fused_bands(sigs), cfg)
+    return verify_pairs(cands, sigs, cfg)
+
+
+def verify_pairs(cands: DataFrame, sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """(a, b) candidates + (doc_id, sh[, sigp]) signatures -> (a, b,
+    jaccard): the engine's one verify policy, shared by batch and the
+    resumable pipeline.
+
+    With ``cfg.verify_screen`` the two-tier MinHash-prefix screen runs.
+    Otherwise the size gate (r10, guide §3.2/§8) picks the strategy: within
+    it the shingle-set table is broadcast once and pairs verify via local
+    lookup — the gather joins shipped the full sets per candidate pair
+    through Arrow (~1 KB/pair). The gate's one ``agg`` job counts the docs
+    and sums the set bytes the broadcast would ship
+    (``_BCAST_MAX_SH_BYTES``); on a persisted ``sigs`` it also PREPAYS the
+    cache every downstream consumer needs — no separate scan of the raw
+    docs. Both doc bounds are measured crossovers (config.py). Identical
+    jaccard values on every path."""
     if cfg.verify_screen:
         return jaccard_verify_screened(cands, sigs.select("doc_id", "sh", "sigp"), cfg)
-    # r10 size-gated verify strategy (guide §3.2/§8): within the gate the
-    # shingle-set table is broadcast once and pairs verify via local
-    # lookup — the gather joins shipped the full sets per candidate pair
-    # through Arrow (~1 KB/pair). The gate count runs on the persisted
-    # sigs table (one row per doc), so the same job PREPAYS the cache
-    # materialization every downstream consumer needs — no separate scan
-    # of the raw docs. Identical jaccard values either way; both doc
-    # bounds are measured crossovers (config.py), and the same job sums
-    # the set bytes the broadcast would ship (``_BCAST_MAX_SH_BYTES``).
     if cfg.verify_broadcast_max_docs:
         n_docs, sh_bytes = sigs.agg(F.count("*"), F.sum(F.length("sh"))).first()
         if (
@@ -129,6 +144,22 @@ def minhash_dup_pairs(
         ):
             return jaccard_verify_bcast(cands, sigs.select("doc_id", "sh"), cfg)
     return jaccard_verify(cands, sigs.select("doc_id", "sh"), cfg)
+
+
+def keep_list(clusters: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id) -> (doc_id, n_docs_represented): the deduped
+    corpus, one survivor per cluster with how many docs it stands for.
+    The union-find labels a cluster by its min doc_id, so survivors are
+    the rows where doc_id == cluster_id; one size aggregate, no shuffle
+    of pairs or corpus."""
+    sizes = clusters.groupBy("cluster_id").agg(
+        F.count("*").alias("n_docs_represented")
+    )
+    return (
+        clusters.where(F.col("doc_id") == F.col("cluster_id"))
+        .join(sizes, "cluster_id")
+        .select("doc_id", "n_docs_represented")
+    )
 
 
 def minhash_dedup_clusters(

@@ -63,31 +63,3 @@ def run_metrics_rows(spark, metrics: dict[str, float], run_id: str) -> DataFrame
     metrics sink — the Spark analogue of logger.log(name, value, step)."""
     rows = [(run_id, k, float(v)) for k, v in metrics.items()]
     return spark.createDataFrame(rows, "run_id string, metric string, value double")
-
-
-def bucket_join_candidate_count(
-    queries: DataFrame,
-    corpus: DataFrame,
-    query_codes_udf,
-    corpus_codes_udf,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
-    """Distinct (query, neighbor) candidate count for a code-bucket join —
-    the measurement half of ``_code_join_ann``'s candidate stage, shared
-    by the probe-sweep and grid benchmarks so their BENCH/*.md artifacts
-    can never drift apart on what "mean candidates" means."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.explode(query_codes_udf(F.col(vec_col))).alias("bucket"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.explode(corpus_codes_udf(F.col(vec_col))).alias("bucket"),
-    )
-    return (
-        q.join(c, "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .count()
-    )

@@ -2,16 +2,16 @@
 
 Stages (each one an idempotent checkpoint table):
 
-    signatures   : pages -> (doc_id, sh, bands[, sigp], simhash)
-    cand_pairs   : band-explode + bucket self-join (+ SimHash chunks)
-    dup_pairs    : exact-Jaccard verified pairs (+ SimHash Hamming pairs
-                   + suffix long-repeat pairs when enabled); with
-                   cfg.verify_screen the two-tier MinHash-prefix screen
-                   verifies instead (clear accepts report est-Jaccard,
-                   only the uncertainty band gathers full shingle sets)
+    signatures   : pages -> (doc_id, sh, bands[, sigp])
+                   (dedup.banded_signatures_fused)
+    cand_pairs   : band-explode + bucket self-join (candidate_pairs)
+    dup_pairs    : verified pairs via dedup.verify_pairs — the batch
+                   verify policy with the same gates: the two-tier
+                   MinHash-prefix screen under cfg.verify_screen, else the
+                   size-gated broadcast verify, else the join verify
     clusters     : union-find fixpoint over dup_pairs, singletons included
-    keep_list    : the SHIPPED table — one representative per cluster
-                   (doc_id == cluster_id) + docs-represented count;
+    keep_list    : the SHIPPED table (dedup.keep_list) — one
+                   representative per cluster + docs-represented count;
                    derived from the clusters checkpoint, so a resume
                    after a dropped keep_list restores from clusters
                    without recomputing pairs or the union-find
@@ -36,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from neural_locality_sensitive_hashing_spark.config import DedupConfig
-from neural_locality_sensitive_hashing_spark.functions.simhash import simhash_udf
 from neural_locality_sensitive_hashing_spark.operators.candidates import (
     bucket_stats,
     candidate_pairs,
@@ -48,10 +47,8 @@ from neural_locality_sensitive_hashing_spark.operators.connected_components impo
 from neural_locality_sensitive_hashing_spark.operators.dedup import (
     banded_signatures_fused,
     explode_fused_bands,
-)
-from neural_locality_sensitive_hashing_spark.operators.verify import (
-    jaccard_verify,
-    jaccard_verify_screened,
+    keep_list,
+    verify_pairs,
 )
 from neural_locality_sensitive_hashing_spark.sources.checkpoint import CheckpointCatalog
 
@@ -120,54 +117,27 @@ class DedupPipeline:
         report = PipelineReport()
         cfg = self.cfg
 
-        def compute_signatures() -> DataFrame:
-            # the screen's sigp rides along when cfg.verify_screen (config
-            # is part of the fingerprint, so toggling the screen
-            # invalidates downstream stages)
-            sigs = banded_signatures_fused(pages, cfg)
-            if cfg.shingle_hash_bytes == 8:
-                # the SimHash contract is defined over 64-bit shingle
-                # hashes; with the 4-byte scale gather the column is
-                # meaningless (and the kernel would reject the buffer)
-                sigs = sigs.withColumn("simhash", simhash_udf(F.col("sh")))
-            return sigs
-
-        signatures = self._stage("signatures", compute_signatures, report)
-
-        def compute_cands() -> DataFrame:
-            return candidate_pairs(explode_fused_bands(signatures), cfg)
-
-        cands = self._stage("cand_pairs", compute_cands, report)
-
-        def compute_dups() -> DataFrame:
-            if cfg.verify_screen:
-                return jaccard_verify_screened(
-                    cands, signatures.select("doc_id", "sh", "sigp"), cfg
-                )
-            return jaccard_verify(cands, signatures.select("doc_id", "sh"), cfg)
-
-        dups = self._stage("dup_pairs", compute_dups, report)
+        # the screen's sigp rides along when cfg.verify_screen (config is
+        # part of the fingerprint, so toggling the screen invalidates
+        # downstream stages)
+        signatures = self._stage(
+            "signatures", lambda: banded_signatures_fused(pages, cfg), report
+        )
+        cands = self._stage(
+            "cand_pairs",
+            lambda: candidate_pairs(explode_fused_bands(signatures), cfg),
+            report,
+        )
+        dups = self._stage(
+            "dup_pairs", lambda: verify_pairs(cands, signatures, cfg), report
+        )
 
         def compute_clusters() -> DataFrame:
             labels = connected_components(dups, cfg.max_cc_iterations)
             return clusters_with_singletons(labels, signatures, "doc_id")
 
         clusters = self._stage("clusters", compute_clusters, report)
-
-        def compute_keep_list() -> DataFrame:
-            # one size aggregate over the CLUSTERS CHECKPOINT — survivors
-            # are the doc_id == cluster_id rows (the union-find labels
-            # clusters by min doc_id), no shuffle of pairs or corpus
-            sizes = clusters.groupBy("cluster_id").agg(
-                F.count("*").alias("n_docs_represented")
-            )
-            return (
-                clusters.where(F.col("doc_id") == F.col("cluster_id"))
-                .join(sizes, "cluster_id")
-                .select("doc_id", "n_docs_represented")
-            )
-
-        self._stage("keep_list", compute_keep_list, report)
+        self._stage("keep_list", lambda: keep_list(clusters), report)
 
         # S8 metrics sink: one quality/efficiency row set per run, next to
         # the per-partition lineage (the reference logs recall/query_size/

@@ -29,6 +29,8 @@ from neural_locality_sensitive_hashing_spark.operators.connected_components impo
     connected_components,
 )
 from neural_locality_sensitive_hashing_spark.operators.dedup import (
+    keep_list,
+    minhash_dedup_clusters,
     minhash_dup_pairs,
     simhash_dup_pairs,
 )
@@ -396,10 +398,7 @@ SELECT a, b, jaccard FROM jac WHERE jaccard >= {CFG.jaccard_threshold}
 
 
 def q_minhash_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    pairs = minhash_dup_pairs(docs, CFG)
-    labels = connected_components(pairs, CFG.max_cc_iterations)
-    return clusters_with_singletons(labels, docs)
+    return minhash_dedup_clusters(load(spark, sf_dir, "documents"), CFG)
 
 
 SQL_MINHASH_DEDUP_CLUSTERS = f"""
@@ -424,19 +423,8 @@ def q_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     (everything upstream exists to produce this table). Representative =
     the cluster's min doc_id (deterministic; cluster_id IS that min by
     the union-find labeling, so survivors are exactly the rows where
-    doc_id == cluster_id — no extra shuffle beyond the clusters query)."""
-    docs = load(spark, sf_dir, "documents")
-    pairs = minhash_dup_pairs(docs, CFG)
-    labels = connected_components(pairs, CFG.max_cc_iterations)
-    clusters = clusters_with_singletons(labels, docs)
-    sizes = clusters.groupBy("cluster_id").agg(
-        F.count("*").alias("n_docs_represented")
-    )
-    return (
-        clusters.where(F.col("doc_id") == F.col("cluster_id"))
-        .join(sizes, "cluster_id")
-        .select("doc_id", "n_docs_represented")
-    )
+    doc_id == cluster_id — dedup.keep_list)."""
+    return keep_list(minhash_dedup_clusters(load(spark, sf_dir, "documents"), CFG))
 
 
 SQL_DEDUP_KEEP_LIST = f"""
@@ -1672,7 +1660,7 @@ def q_ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH approximate neighbors (J1 bucket join + exact
     re-rank). Value-checked against a DuckDB oracle that replays the same
     hyperplanes; the multi-probe recall knob is exercised in
-    tests/test_similarity.py and tools/bench_probe_sweep.py."""
+    tests/test_similarity.py and BENCH/PROBE_SWEEP.md."""
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 32)
     return S.ann_lsh(

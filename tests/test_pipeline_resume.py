@@ -154,3 +154,41 @@ def test_keep_list_stage_resumes_from_clusters(spark, pipeline_env):
     }
     kl2 = sorted(tuple(r) for r in pipe.catalog.read_snapshot("keep_list").collect())
     assert kl2 == kl1
+
+
+def test_job_checkpoint_mode_reports_and_resumes(pages_1k, tmp_path):
+    """`run_dedup_job --checkpoint-dir` in a fresh spark-submit-style
+    process: the first run reports the same dup_pairs (the dup_pairs
+    snapshot's row count) and clusters as the straight-line job, and an
+    identical re-submission resumes every stage from its snapshot."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    pages_path, _ = pages_1k
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "8", "PYTHONPATH": repo}
+
+    def run_job(name, *extra):
+        out = tmp_path / f"{name}.json"
+        subprocess.run(
+            [sys.executable, os.path.join(repo, "tools", "run_dedup_job.py"),
+             "--pages", pages_path, "--shuffle-partitions", "8",
+             "--json-out", str(out), *extra],
+            check=True, cwd=repo, timeout=420,
+            stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL, env=env,
+        )
+        return json.loads(out.read_text())
+
+    straight = run_job("straight")
+    assert straight["dup_pairs"] > 0
+    ckpt = str(tmp_path / "ckpt")
+    first = run_job("first", "--checkpoint-dir", ckpt)
+    assert first["resumed_stages"] == []
+    assert first["dup_pairs"] == straight["dup_pairs"]
+    assert first["clusters"] == straight["clusters"]
+    second = run_job("second", "--checkpoint-dir", ckpt)
+    assert second["resumed_stages"] == sorted(DedupPipeline.STAGES)
+    assert second["dup_pairs"] == straight["dup_pairs"]
+    assert second["clusters"] == straight["clusters"]

@@ -28,8 +28,11 @@ PLAN_BOUNDS = {
     # single-file scan; a no-op (no exchange) once the scan has >= session
     # parallelism partitions, i.e. on any at-scale corpus
     "minhash_dedup_pairs": 3,
-    "minhash_dedup_clusters": 3,
-    "embedding_dup_pairs": 2,
+    # union-find materializes its labels (localCheckpoint), so the plan is
+    # the doc_id join of the doc scan with the labels: one exchange a side
+    "minhash_dedup_clusters": 2,
+    # the doc_id repartition; the gated fast path broadcasts the vectors
+    "embedding_dup_pairs": 1,
     "ann_lsh_cosine": 2,
     "ann_lsh_l2": 2,
     "ivf_ann_cosine": 2,
@@ -69,10 +72,10 @@ PLAN_BOUNDS = {
     # shingle-count agg + join-back (reuses the agg partitioning) +
     # per-doc aggregation
     "boilerplate_shingles": 3,
-    # z-score moments broadcast back over the exploded scan + the
-    # per-vec_id norm-sum agg + the join back onto the base projection
-    # (r9: the folded embedding_normalized check adds the vec_id agg)
-    "embedding_stats": 3,
+    # the per-dim_idx moments agg (broadcast back over the exploded scan)
+    # + the per-vec_id norm-sum agg (broadcast back onto the base
+    # projection)
+    "embedding_stats": 2,
     # dims broadcast (customer/nation/region + reused builds), the
     # exchanges are lineitem->orders co-partitioning + the rollup aggs
     "revenue_rollup": 4,

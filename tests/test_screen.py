@@ -125,25 +125,28 @@ def test_bcast_verify_rejects_absent_id(spark):
             jaccard_verify_bcast(pairs, sets_df, cfg).collect()
 
 
+def record(monkeypatch, *names):
+    """Wrap each named verify function in operators/dedup.py; returns the
+    list the wrappers append their names to, in call order."""
+    from neural_locality_sensitive_hashing_spark.operators import dedup as D
+
+    taken = []
+    for name in names:
+        def wrapper(*args, _name=name, _fn=getattr(D, name), **kwargs):
+            taken.append(_name)
+            return _fn(*args, **kwargs)
+
+        monkeypatch.setattr(D, name, wrapper)
+    return taken
+
+
 def test_bcast_gate_falls_back_on_shingle_bytes(spark, pages, monkeypatch):
     """minhash_dup_pairs broadcasts the shingle sets only while their bytes
     stay within _BCAST_MAX_SH_BYTES; above it the join-based verify runs,
     with the identical (a, b, jaccard) rows."""
     from neural_locality_sensitive_hashing_spark.operators import dedup as D
 
-    taken = []
-
-    def record(name):
-        fn = getattr(D, name)
-
-        def wrapper(*args, **kwargs):
-            taken.append(name)
-            return fn(*args, **kwargs)
-
-        monkeypatch.setattr(D, name, wrapper)
-
-    record("jaccard_verify")
-    record("jaccard_verify_bcast")
+    taken = record(monkeypatch, "jaccard_verify", "jaccard_verify_bcast")
     cfg = DedupConfig(verify_broadcast_min_docs=0)
 
     def rows():
@@ -154,5 +157,29 @@ def test_bcast_gate_falls_back_on_shingle_bytes(spark, pages, monkeypatch):
     bcast = rows()
     monkeypatch.setattr(D, "_BCAST_MAX_SH_BYTES", 1024)
     joined = rows()
+    assert taken == ["jaccard_verify_bcast", "jaccard_verify"]
+    assert bcast and joined == bcast
+
+
+def test_pipeline_takes_batch_verify_gate(spark, pages, monkeypatch, tmp_path):
+    """DedupPipeline's dup_pairs stage verifies through the batch policy
+    (dedup.verify_pairs): the same broadcast gate with the same shingle-
+    byte fallback, and identical dup_pairs snapshot rows either way."""
+    from neural_locality_sensitive_hashing_spark.operators import dedup as D
+    from neural_locality_sensitive_hashing_spark.plans.pipeline import DedupPipeline
+
+    taken = record(monkeypatch, "jaccard_verify", "jaccard_verify_bcast")
+    cfg = DedupConfig(verify_broadcast_min_docs=0)
+
+    def rows(name):
+        # a fresh checkpoint dir per run: the byte ceiling is not part of
+        # the stage fingerprints, so a shared dir would resume dup_pairs
+        pipe = DedupPipeline(spark, cfg, str(tmp_path / name), input_token="pages")
+        pipe.run(pages)
+        return sorted(tuple(r) for r in pipe.catalog.read_snapshot("dup_pairs").collect())
+
+    bcast = rows("bcast")
+    monkeypatch.setattr(D, "_BCAST_MAX_SH_BYTES", 1024)
+    joined = rows("join")
     assert taken == ["jaccard_verify_bcast", "jaccard_verify"]
     assert bcast and joined == bcast

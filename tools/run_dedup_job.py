@@ -3,9 +3,10 @@
     spark-submit --master local[N] --py-files nlsh_spark.zip \
         tools/run_dedup_job.py --pages /path/pages.parquet --json-out out.json
 
-Runs the full MinHash-LSH dedup pipeline (signatures -> candidates ->
-verify -> clusters) and writes a one-line JSON timing report with
-per-stage wall times.
+Runs the engine's MinHash-LSH dedup (operators/dedup.py: signatures ->
+candidates -> verify -> clusters -> keep-list) and writes a one-line JSON
+report: docs, dup pairs, clusters and wall time; with --checkpoint-dir
+also the resumable pipeline's per-stage cached/rows/wall.
 """
 
 from __future__ import annotations
@@ -36,25 +37,19 @@ def _input_token(pages_path: str, n_docs: int) -> str:
 
 
 def _write_survivors_archives(
-    pages_full, clusters, out_dir: str, fmt: str
+    pages_full, keep, out_dir: str, fmt: str
 ) -> dict:
-    """Keep-list pages (one per cluster: doc_id == cluster_id) re-shipped
-    as crawl archives via the distributed sink — one shuffle (the doc_id
+    """Keep-list pages (one per cluster) re-shipped as crawl archives via the distributed sink — one shuffle (the doc_id
     join back to the full pages), one archive per partition. ``fmt`` =
     'warc' (full pages: url/warc_ts/html) or 'wet' (extracted text only:
     url/warc_ts/text — the Common Crawl WARC->WET flow applied to the
     deduplicated keep-list)."""
-    from pyspark.sql import functions as F
-
     from neural_locality_sensitive_hashing_spark.sources.warc import (
         write_warc,
         write_wet,
     )
 
-    survivors = clusters.where(
-        F.col("doc_id") == F.col("cluster_id")
-    ).select("doc_id")
-    kept = pages_full.join(survivors, "doc_id")
+    kept = pages_full.join(keep.select("doc_id"), "doc_id")
     if fmt == "warc":
         manifest = write_warc(
             kept.select("url", "warc_ts", "html"), out_dir
@@ -113,22 +108,6 @@ def main() -> None:
         "local corpus still fans out across all cores (at cluster scale "
         "inputs are many files and the default 128m applies)",
     )
-    ap.add_argument("--with-simhash", action="store_true")
-    ap.add_argument(
-        "--fast", action="store_true",
-        help="skip per-stage count() actions: one end-to-end run (plus the "
-        "union-find's own convergence actions) — the throughput-measurement "
-        "mode; per-stage timings are omitted",
-    )
-    ap.add_argument(
-        "--repartition", type=int, default=-1,
-        help="repartition the narrow (doc_id, text) projection to N "
-        "partitions before compute; 0 = 2x defaultParallelism; -1 (default) "
-        "= no repartition — the parquet scan's maxPartitionBytes splits "
-        "already fan out across cores, and skipping the exchange keeps the "
-        "full corpus text out of the shuffle entirely",
-    )
-    ap.add_argument("--with-longrepeat", action="store_true")
     ap.add_argument(
         "--long-repeat-exact", type=int, default=None, metavar="MIN_RUN",
         help="exact long-repeat verifier tier (SURVEY §7 stage 3): winnowed "
@@ -146,7 +125,7 @@ def main() -> None:
         help="two-tier verify (MinHash-prefix screen, exact Jaccard only in "
         "the uncertainty band); deterministic across parallelism, ~1e-3 "
         "miss at J == tau (recall gate in tests/test_screen.py). Measured "
-        "on the synthetic corpus (tools/shuffle_bytes.py, 250k docs): "
+        "on the synthetic corpus (BENCH/BASELINE.md, 250k docs): "
         "shuffle 1.25 GB vs 1.22 GB for plain 4-byte exact — the extra "
         "screen exchange cancels the byte cut when shingle sets are this "
         "small (~1.2 KB); worth enabling when sets >> the 256 B prefix "
@@ -160,7 +139,8 @@ def main() -> None:
         "--checkpoint-dir", default=None,
         help="run through the RESUMABLE DedupPipeline instead of the "
         "straight-line plan: each stage (signatures, cand_pairs, "
-        "dup_pairs, clusters) lands in a fingerprinted snapshot table; "
+        "dup_pairs, clusters, keep_list) lands in a fingerprinted snapshot "
+        "table; "
         "re-submitting the identical job resumes at the first stage whose "
         "fingerprint misses (kill it mid-run and re-run to see). The "
         "report's stages carry cached/rows per stage",
@@ -188,9 +168,6 @@ def main() -> None:
         "8 = full 64-bit, bit-compatible with the round-2 runs",
     )
     args = ap.parse_args()
-    if args.with_simhash and args.shingle_bytes != 8:
-        ap.error("--with-simhash requires --shingle-bytes 8 (the 64-bit "
-                 "SimHash contract is defined over 64-bit shingle hashes)")
     if args.from_warc and args.from_wet:
         ap.error("--from-warc and --from-wet are mutually exclusive")
     if args.survivors_warc_out and not args.from_warc:
@@ -202,36 +179,25 @@ def main() -> None:
         ap.error("--survivors-wet-out needs --from-warc or --from-wet "
                  "(only the archive input paths carry the url/warc_ts/"
                  "text page columns the WET writer re-ships)")
-    if args.checkpoint_dir and (
-        args.with_simhash or args.with_longrepeat or args.long_repeat_exact
-    ):
+    if args.checkpoint_dir and args.long_repeat_exact is not None:
         # validate BEFORE the JVM starts and the input is scanned
         ap.error("--checkpoint-dir covers the exact-Jaccard pipeline; "
-                 "run the secondary verifiers in the straight-line mode")
+                 "run --long-repeat-exact in the straight-line mode")
 
     from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
 
     from neural_locality_sensitive_hashing_spark.config import DedupConfig
-    from neural_locality_sensitive_hashing_spark.functions.simhash import simhash_udf
-    from neural_locality_sensitive_hashing_spark.operators.candidates import (
-        candidate_pairs,
-    )
     from neural_locality_sensitive_hashing_spark.operators.connected_components import (
         clusters_with_singletons,
         connected_components,
     )
     from neural_locality_sensitive_hashing_spark.operators.dedup import (
-        banded_signatures_fused,
-        explode_fused_bands,
+        keep_list,
+        minhash_dup_pairs,
     )
     from neural_locality_sensitive_hashing_spark.operators.suffix import (
-        long_repeat_pairs,
         long_repeat_pairs_exact,
-    )
-    from neural_locality_sensitive_hashing_spark.operators.verify import (
-        jaccard_verify,
-        jaccard_verify_screened,
-        simhash_verify,
     )
 
     builder = SparkSession.builder.appName("nlsh-dedup-job")
@@ -304,164 +270,69 @@ def main() -> None:
 
         # narrow FIRST: the window's one exchange must carry only
         # (doc_id, url, warc_ts, text) — shuffling the html payload too
-        # doubled the pre-stage wall when measured (tools/bench_recrawl.py)
-        # and at 10^12 docs would make the tier a corpus-payload shuffle
+        # doubled the pre-stage wall when measured (BENCH/BASELINE.md, WARC
+        # source section) and at 10^12 docs would make the tier a
+        # corpus-payload shuffle
         pages = latest_crawl_per_url(
             pages.select("doc_id", "url", "warc_ts", "text")
         )
     pages = pages.select("doc_id", "text")
-    if args.repartition >= 0:
-        # optional: balance the narrow projection across all cores
-        # regardless of the source file's row-group layout
-        nparts = args.repartition or 2 * cores
-        pages = pages.repartition(nparts, "doc_id")
 
+    t_all = time.time()
+    report = {"docs": n_docs, "cores": cores}
     if args.checkpoint_dir:
         from neural_locality_sensitive_hashing_spark.plans.pipeline import DedupPipeline
 
-        t_all = time.time()
         pipe = DedupPipeline(
             spark, cfg, args.checkpoint_dir,
             input_token=_input_token(args.pages, n_docs),
         )
-        clusters, rep = pipe.run(pages)
-        n_clusters = clusters.select("cluster_id").distinct().count()
-        wall = round(time.time() - t_all, 2)
-        report = {
-            "docs": n_docs,
-            "cores": cores,
-            "wall_sec": wall,
-            "docs_per_sec": round(n_docs / wall, 1),
-            "stages": {
-                s.stage: {"cached": s.cached, "rows": s.rows, "wall_sec": s.wall_sec}
-                for s in rep.stages
-            },
-            "candidate_pairs": -1,
-            "dup_pairs": -1,
-            "clusters": n_clusters,
-            "resumed_stages": sorted(rep.cached_stages()),
+        _, rep = pipe.run(pages)
+        report["stages"] = {
+            s.stage: {"cached": s.cached, "rows": s.rows, "wall_sec": s.wall_sec}
+            for s in rep.stages
         }
-        if args.keep_list_out:
-            kl = pipe.catalog.read_snapshot("keep_list")
-            kl.write.mode("overwrite").parquet(args.keep_list_out)
-            report["keep_list_out"] = args.keep_list_out
-        if args.survivors_warc_out:
-            report["survivors_warc"] = _write_survivors_archives(
-                pages_full, clusters, args.survivors_warc_out, "warc"
-            )
-        if args.survivors_wet_out:
-            report["survivors_wet"] = _write_survivors_archives(
-                pages_full, clusters, args.survivors_wet_out, "wet"
-            )
-        line = json.dumps(report)
-        print(line)
-        if args.json_out:
-            with open(args.json_out, "w") as f:
-                f.write(line + "\n")
-        spark.stop()
-        return
-
-    stages: dict[str, float] = {}
-    t_all = time.time()
-
-    t0 = time.time()
-    sigs = banded_signatures_fused(pages, cfg)
-    if args.with_simhash:
-        from pyspark.sql import functions as F
-
-        sigs = sigs.withColumn("simhash", simhash_udf(F.col("sh")))
-    sigs = sigs.persist()
-    if not args.fast:
-        sigs.count()
-        stages["signatures"] = round(time.time() - t0, 2)
-
-    t0 = time.time()
-    cands = candidate_pairs(explode_fused_bands(sigs), cfg).persist()
-    n_cands = -1
-    if not args.fast:
-        n_cands = cands.count()
-        stages["cand_pairs"] = round(time.time() - t0, 2)
-
-    t0 = time.time()
-    if cfg.verify_screen:
-        dups = jaccard_verify_screened(cands, sigs.select("doc_id", "sh", "sigp"), cfg)
+        report["resumed_stages"] = sorted(rep.cached_stages())
+        n_dups = pipe.catalog.read_snapshot("dup_pairs").count()
+        keep = pipe.catalog.read_snapshot("keep_list")
     else:
-        dups = jaccard_verify(cands, sigs.select("doc_id", "sh"), cfg)
-    if args.with_simhash:
-        from pyspark.sql import functions as F
-
-        sim_pairs = simhash_verify(cands, sigs.select("doc_id", "simhash"), cfg).select(
-            "a", "b", F.lit(1.0).alias("jaccard")
-        )
-        dups = dups.unionByName(sim_pairs).dropDuplicates(["a", "b"])
-    if args.with_longrepeat:
-        from pyspark.sql import functions as F
-
-        lr = long_repeat_pairs(pages, cfg).select("a", "b", F.lit(1.0).alias("jaccard"))
-        dups = dups.unionByName(lr).dropDuplicates(["a", "b"])
-    n_lre = -1
-    if args.long_repeat_exact is not None:
-        from pyspark.sql import functions as F
-
-        lre = (
-            long_repeat_pairs_exact(pages, cfg)
-            .where(F.col("max_run") >= F.lit(args.long_repeat_exact))
-            .persist()
-        )
-        if not args.fast:
-            n_lre = lre.count()
-        dups = dups.unionByName(
-            lre.select("a", "b", F.lit(1.0).alias("jaccard"))
-        ).dropDuplicates(["a", "b"])
-    dups = dups.persist()
-    n_dups = -1
-    if not args.fast:
+        dups = minhash_dup_pairs(pages, cfg)
+        if args.long_repeat_exact is not None:
+            lre = (
+                long_repeat_pairs_exact(pages, cfg)
+                .where(F.col("max_run") >= F.lit(args.long_repeat_exact))
+                .persist()
+            )
+            report["long_repeat_exact"] = {
+                "min_run": args.long_repeat_exact,
+                "pairs": lre.count(),
+            }
+            dups = dups.unionByName(
+                lre.select("a", "b", F.lit(1.0).alias("jaccard"))
+            ).dropDuplicates(["a", "b"])
+        dups = dups.persist()
         n_dups = dups.count()
-        stages["verify"] = round(time.time() - t0, 2)
-
-    t0 = time.time()
-    labels = connected_components(dups, cfg.max_cc_iterations)
-    clusters = clusters_with_singletons(labels, sigs, "doc_id")
-    n_clusters = clusters.select("cluster_id").distinct().count()
-    stages["clusters"] = round(time.time() - t0, 2)
-
+        labels = connected_components(dups, cfg.max_cc_iterations)
+        keep = keep_list(clusters_with_singletons(labels, pages)).persist()
+    # one keep-list row per cluster
+    n_clusters = keep.count()
     wall = round(time.time() - t_all, 2)
-    report = {
-        "docs": n_docs,
-        "cores": cores,
-        "wall_sec": wall,
-        "docs_per_sec": round(n_docs / wall, 1),
-        "stages": stages,
-        "candidate_pairs": n_cands,
-        "dup_pairs": n_dups,
-        "clusters": n_clusters,
-    }
-    if args.long_repeat_exact is not None:
-        report["long_repeat_exact"] = {
-            "min_run": args.long_repeat_exact,
-            "pairs": n_lre,
-        }
+    report.update(
+        wall_sec=wall,
+        docs_per_sec=round(n_docs / wall, 1),
+        dup_pairs=n_dups,
+        clusters=n_clusters,
+    )
     if args.keep_list_out:
-        from pyspark.sql import functions as F
-
-        sizes = clusters.groupBy("cluster_id").agg(
-            F.count("*").alias("n_docs_represented")
-        )
-        (
-            clusters.where(F.col("doc_id") == F.col("cluster_id"))
-            .join(sizes, "cluster_id")
-            .select("doc_id", "n_docs_represented")
-            .write.mode("overwrite")
-            .parquet(args.keep_list_out)
-        )
+        keep.write.mode("overwrite").parquet(args.keep_list_out)
         report["keep_list_out"] = args.keep_list_out
     if args.survivors_warc_out:
         report["survivors_warc"] = _write_survivors_archives(
-            pages_full, clusters, args.survivors_warc_out, "warc"
+            pages_full, keep, args.survivors_warc_out, "warc"
         )
     if args.survivors_wet_out:
         report["survivors_wet"] = _write_survivors_archives(
-            pages_full, clusters, args.survivors_wet_out, "wet"
+            pages_full, keep, args.survivors_wet_out, "wet"
         )
     line = json.dumps(report)
     print(line)
