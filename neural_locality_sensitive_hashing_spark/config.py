@@ -91,7 +91,8 @@ class DedupConfig:
     # (bounded per-row memory for degenerate buckets, one extra exchange)
     pair_strategy: str = "grouped"
 
-    # connected components
+    # connected components: label-propagation round budget, used only
+    # above the driver union-find's byte ceiling (connected_components.py)
     max_cc_iterations: int = 50
 
     # suffix-array long-repeat pass

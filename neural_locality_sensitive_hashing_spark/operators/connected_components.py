@@ -1,23 +1,36 @@
-"""Distributed connected components (union-find) over a pair DataFrame.
+"""Connected components (union-find) over a pair DataFrame.
 
 The reference returns per-query neighbor lists and never clusters
 (SURVEY.md §2.4 A7) — this is the one genuinely new aggregate the dedup
 engine needs: dup_pairs -> cluster ids = connected components.
 
-Algorithm: iterative min-label propagation to fixpoint, driven from the
-driver with a `localCheckpoint` per iteration to cut lineage (a fixpoint
-loop without checkpointing grows an exponential plan). Per iteration each
-node adopts min(own label, neighbors' labels); converged when no label
-changes. Iteration count is bounded by the component diameter — small for
-dedup graphs (dup groups are dense). Scale note: each iteration is one
-shuffle-join on doc_id + one groupBy; both hash-partition on the same key,
-so AQE reuses the exchange layout.
+Algorithm: ``pairs`` is projected to ``(a, b)`` and materialized once with
+``localCheckpoint``, which also counts the edges (an observed metric, no
+extra job). Under a byte ceiling (edges x 16 B <= ``_DRIVER_UF_MAX_BYTES``)
+the edges are collected once through Arrow and labelled by a numpy
+union-find on the driver; dedup graphs are small next to the corpus, and
+the labels go back as a local relation that the singleton join
+broadcasts. Above the ceiling, iterative min-label propagation runs to
+fixpoint on the executors with a ``localCheckpoint`` per round to cut
+lineage (a fixpoint loop without checkpointing grows an exponential
+plan). Per round each node adopts min(own label, neighbors' labels);
+converged when no label changes. The round count is bounded by the
+component diameter. Each round is one shuffle-join on doc_id + one
+groupBy; both hash-partition on the same key, so AQE reuses the exchange
+layout.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+# byte ceiling of the driver-side union-find: edges x 16 B (two int64 ids
+# per edge) collected to the driver. Above it the labels are propagated on
+# the executors instead.
+_DRIVER_UF_MAX_BYTES = 256 << 20
 
 
 def connected_components(
@@ -29,29 +42,72 @@ def connected_components(
     Only nodes that appear in at least one pair are returned; singletons
     are each their own cluster and are added by the caller when needed.
 
-    Raises ``RuntimeError`` if the fixpoint is not reached within
-    ``max_iterations`` (component diameter too large for the budget) —
-    returning non-converged labels would silently mislabel clusters.
-    Candidate generation caps diameters at O(log n) via the chain+tree
-    construction (operators/candidates.py), so the default budget covers
-    components up to ~2^49 members.
+    ``pairs`` is read once: its ``(a, b)`` projection is checkpointed, and
+    both strategies read the checkpoint. Since the verify UDF upstream is
+    non-deterministic, Spark reuses no exchange between two reads of an
+    unpersisted ``pairs`` — candidates and verify would run twice.
 
-    ``pairs`` is read once: each pair row emits both directed edges in a
-    single projection (``inline`` of a two-struct array), checkpointed
-    before the loop. A union of two projections would plan ``pairs``
-    twice, and since the verify UDF upstream is non-deterministic Spark
-    reuses no exchange between the branches — candidates and verify
-    would run twice for every unpersisted ``pairs``.
+    Above the driver ceiling, raises ``RuntimeError`` if the fixpoint is
+    not reached within ``max_iterations`` (component diameter too large
+    for the budget) — returning non-converged labels would silently
+    mislabel clusters. Candidate generation caps diameters at O(log n) via
+    the chain+tree construction (operators/candidates.py), so the default
+    budget covers components up to ~2^49 members. The driver union-find
+    has no budget: every round merges at least one pair of components.
     """
+    obs = Observation()
+    ab = (
+        pairs.select("a", "b")
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
+    if obs.get["n"] * 16 <= _DRIVER_UF_MAX_BYTES:
+        edges = ab.toArrow()
+        ids, labels = _union_find(
+            edges.column("a").to_numpy(), edges.column("b").to_numpy()
+        )
+        return pairs.sparkSession.createDataFrame(
+            pd.DataFrame({"doc_id": ids, "cluster_id": labels}),
+            "doc_id long, cluster_id long",
+        )
+    return _propagate_labels(ab, max_iterations)
+
+
+def _union_find(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Edge endpoint arrays -> (sorted distinct ids, min id of each id's
+    component). Ids are compacted to their rank in ``np.unique`` order, so
+    a component's min rank is its min id. Each round hooks every root to
+    the smallest root it shares an edge with, then pointer-jumps until
+    every node points at its root; edges inside one component drop out."""
+    ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    parent = np.arange(len(ids))
+    u, v = inv[: len(a)], inv[len(a) :]
+    while True:
+        u, v = parent[u], parent[v]
+        live = u != v
+        if not live.any():
+            return ids, ids[parent]
+        u, v = u[live], v[live]
+        # parent[x] <= x always, so hooking never closes a cycle
+        np.minimum.at(parent, np.maximum(u, v), np.minimum(u, v))
+        while True:
+            grand = parent[parent]
+            if np.array_equal(grand, parent):
+                break
+            parent = grand
+
+
+def _propagate_labels(ab: DataFrame, max_iterations: int) -> DataFrame:
+    """Min-label propagation to fixpoint over checkpointed (a, b) edges."""
     # with a<b in pairs the two directed copies are disjoint — no dedup
-    edges = pairs.select(
+    edges = ab.select(
         F.inline(
             F.array(
                 F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
                 F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
             )
         )
-    ).localCheckpoint()
+    )
     # r10: seed labels with min(self, neighbors) straight from one edge
     # aggregation — identical to one propagation round over identity
     # labels (edges carry both directions, so min over adjacent src ==
@@ -76,8 +132,6 @@ def connected_components(
     # in decimal(38,0): exact and overflow-free even at 10^12 docs with
     # 10^12-scale ids (int64 would overflow ~10^5 such labels and throw
     # under ANSI mode).
-    from pyspark.sql import Observation
-
     def _sum_of(lbl: DataFrame) -> tuple[DataFrame, Observation]:
         obs = Observation()
         return (

@@ -9,7 +9,7 @@ Stages (each one an idempotent checkpoint table):
                    verify policy with the same gates: the two-tier
                    MinHash-prefix screen under cfg.verify_screen, else the
                    size-gated broadcast verify, else the join verify
-    clusters     : union-find fixpoint over dup_pairs, singletons included
+    clusters     : union-find over dup_pairs, singletons included
     keep_list    : the SHIPPED table (dedup.keep_list) — one
                    representative per cluster + docs-represented count;
                    derived from the clusters checkpoint, so a resume

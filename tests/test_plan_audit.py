@@ -28,9 +28,9 @@ PLAN_BOUNDS = {
     # single-file scan; a no-op (no exchange) once the scan has >= session
     # parallelism partitions, i.e. on any at-scale corpus
     "minhash_dedup_pairs": 3,
-    # union-find materializes its labels (localCheckpoint), so the plan is
-    # the doc_id join of the doc scan with the labels: one exchange a side
-    "minhash_dedup_clusters": 2,
+    # union-find labels come back from the driver as a local relation, so
+    # the plan is the doc scan broadcast-joined with them: no exchange
+    "minhash_dedup_clusters": 0,
     # the doc_id repartition; the gated fast path broadcasts the vectors
     "embedding_dup_pairs": 1,
     "ann_lsh_cosine": 2,
