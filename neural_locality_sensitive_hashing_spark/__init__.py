@@ -17,7 +17,12 @@ native Catalyst expressions (no per-row Python).
 
 __version__ = "0.1.0"
 
+from neural_locality_sensitive_hashing_spark import zipcache
 from neural_locality_sensitive_hashing_spark.config import DedupConfig
 from neural_locality_sensitive_hashing_spark.session import spark_session
+
+# every Python worker that unpickles an engine function imports this
+# package, so each pays the per-task zip re-read at most until here
+zipcache.install()
 
 __all__ = ["DedupConfig", "spark_session", "__version__"]

@@ -25,6 +25,22 @@ from neural_locality_sensitive_hashing_spark.config import DedupConfig
 from neural_locality_sensitive_hashing_spark.functions.simhash import hamming_distance
 
 
+def sorted_set_jaccard(a: np.ndarray, b: np.ndarray) -> float:
+    """Exact Jaccard of two ascending, duplicate-free hash arrays: a
+    ``searchsorted`` probe of the smaller set into the larger (O(m log n),
+    no per-pair sort), then ``inter / union`` (0.0 for two empty sets).
+    The one per-pair kernel of both verify flavours. Being a module-level
+    engine function, it also makes every Python worker that runs a verify
+    kernel import the engine package (and so ``zipcache.install()``)."""
+    if a.size > b.size:
+        a, b = b, a
+    idx = np.searchsorted(b, a)
+    valid = idx < b.size
+    inter = int(np.count_nonzero(b[idx[valid]] == a[valid]))
+    union = a.size + b.size - inter
+    return inter / union if union else 0.0
+
+
 def make_jaccard_udf(shingle_hash_bytes: int = 8):
     """Exact set Jaccard of two shingle-set columns (elements unique).
 
@@ -36,11 +52,11 @@ def make_jaccard_udf(shingle_hash_bytes: int = 8):
     kernel removes the regression). Binary inputs decode at the configured
     element width — as the UNSIGNED view (8 = uint64 LE, 4 = uint32 LE),
     under which the fused kernel's np.unique output is sorted ascending,
-    so the per-pair intersection is a searchsorted probe of the smaller
-    set into the larger (O(m log n), no per-pair sort — np.intersect1d
-    re-sorts the concatenation per pair, ~2.5x more kernel CPU on the
-    bench corpus). Set SIZES are representation-independent, so the
-    jaccard value is bit-identical to the int64-view implementation.
+    so the per-pair intersection is ``sorted_set_jaccard``'s probe of the
+    smaller set into the larger (np.intersect1d re-sorts the concatenation
+    per pair, ~2.5x more kernel CPU on the bench corpus). Set SIZES are
+    representation-independent, so the jaccard value is bit-identical to
+    the int64-view implementation.
     array<long> inputs (the non-fused path) are not sorted and keep the
     intersect1d path.
 
@@ -62,18 +78,11 @@ def make_jaccard_udf(shingle_hash_bytes: int = 8):
             if a is None or b is None:
                 continue
             if isinstance(a, (bytes, bytearray)) and isinstance(b, (bytes, bytearray)):
-                a = np.frombuffer(a, dtype=dt)
-                b = np.frombuffer(b, dtype=dt)
-                if a.size > b.size:
-                    a, b = b, a
-                # both sorted ascending: probe the smaller into the larger
-                idx = np.searchsorted(b, a)
-                valid = idx < b.size
-                inter = int(np.count_nonzero(b[idx[valid]] == a[valid]))
-            else:
-                a = np.frombuffer(a, dtype=dt) if isinstance(a, (bytes, bytearray)) else np.asarray(a, dtype=np.int64)
-                b = np.frombuffer(b, dtype=dt) if isinstance(b, (bytes, bytearray)) else np.asarray(b, dtype=np.int64)
-                inter = np.intersect1d(a, b, assume_unique=True).size
+                out[i] = sorted_set_jaccard(np.frombuffer(a, dtype=dt), np.frombuffer(b, dtype=dt))
+                continue
+            a = np.frombuffer(a, dtype=dt) if isinstance(a, (bytes, bytearray)) else np.asarray(a, dtype=np.int64)
+            b = np.frombuffer(b, dtype=dt) if isinstance(b, (bytes, bytearray)) else np.asarray(b, dtype=np.int64)
+            inter = np.intersect1d(a, b, assume_unique=True).size
             union = a.size + b.size - inter
             out[i] = inter / union if union else 0.0
         return pd.Series(out)
@@ -171,10 +180,9 @@ def jaccard_verify_bcast(
     (doc_id, sh) table is collected once, packed into (sorted ids,
     element offsets, one flat hash array) and broadcast; candidate pairs
     stream through ONE mapInArrow that looks both sets up locally — no
-    per-pair set gather joins, candidate rows stay 16 B. The kernel's
-    per-pair math is byte-identical to ``make_jaccard_udf`` (same sorted
-    unsigned views, same searchsorted probe, same inter/union division),
-    so jaccard values and the `>= tau` cut are unchanged. Caller gates on
+    per-pair set gather joins, candidate rows stay 16 B. Both flavours run
+    ``sorted_set_jaccard`` on the same sorted unsigned views, so jaccard
+    values and the `>= tau` cut are identical. Caller gates on
     corpus size (``cfg.verify_broadcast_max_docs``)."""
     dt = "<u8" if cfg.shingle_hash_bytes == 8 else "<u4"
     item = cfg.shingle_hash_bytes
@@ -214,15 +222,10 @@ def jaccard_verify_bcast(
             ib = sorted_positions(ids_, b_ids_, "shingle-set")
             out = np.zeros(len(a_ids), dtype=np.float64)
             for i in range(len(a_ids)):
-                a = flat_[offs_[ia[i]] : offs_[ia[i] + 1]]
-                b = flat_[offs_[ib[i]] : offs_[ib[i] + 1]]
-                if a.size > b.size:
-                    a, b = b, a
-                idx = np.searchsorted(b, a)
-                valid = idx < b.size
-                inter = int(np.count_nonzero(b[idx[valid]] == a[valid]))
-                union = a.size + b.size - inter
-                out[i] = inter / union if union else 0.0
+                out[i] = sorted_set_jaccard(
+                    flat_[offs_[ia[i]] : offs_[ia[i] + 1]],
+                    flat_[offs_[ib[i]] : offs_[ib[i] + 1]],
+                )
             keep = out >= tau
             yield pa.RecordBatch.from_arrays(
                 [
