@@ -152,10 +152,6 @@ def main() -> None:
         f"for {n_docs} docs = {docs_per_sec} docs/s",
         file=sys.stderr,
     )
-    # The optional two-tier verify screen is NOT benched here: measured to
-    # not pay on this corpus's ~1.2 KB shingle sets (BENCH/BASELINE.md
-    # byte-evidence section); bench it via
-    # `tools/run_dedup_job.py --verify-screen` on corpora with larger sets.
 
     total = round(sum(timings.values()), 3)
     print(json.dumps({

@@ -15,7 +15,7 @@ moved from a learned loss to the (b, r) split.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -33,26 +33,6 @@ class DedupConfig:
 
     # verification
     jaccard_threshold: float = 0.7
-
-    # two-tier verify screen (the 100 TB bytes-cut): candidate pairs are
-    # first screened on a `screen_perms`-slot MinHash-prefix estimate
-    # (4 B/slot) — est < tau - screen_reject_sigmas*sigma rejects,
-    # est >= tau + screen_accept_sigmas*sigma accepts with the estimate as
-    # the reported jaccard, and only the middle band gathers full shingle
-    # sets for exact Jaccard. sigma = sqrt(tau*(1-tau)/screen_perms).
-    # Deterministic (pure function of the signatures) but NOT exact at the
-    # margins: binomial miss probability at J == tau is ~1e-3 (see
-    # verify.screen_counts) — inside the >=0.99 dup-pair recall budget.
-    # Off by default so oracle-checked queries stay exactly equal to the
-    # exact-threshold SQL. Measured (BENCH/BASELINE.md byte evidence, 250k
-    # synthetic docs): the screen's second exchange cancels its byte cut
-    # when shingle sets are small (~1.2 KB, only ~5x the prefix) — enable
-    # it for corpora whose sets dwarf the 256 B prefix (real web pages,
-    # 5-10 KB/set).
-    verify_screen: bool = False
-    screen_perms: int = 64
-    screen_reject_sigmas: float = 3.0
-    screen_accept_sigmas: float = 2.0
 
     # shingle hash width (bytes of the binary `sh` representation): 8 =
     # full 64-bit (exact, oracle-replayable); 4 = truncated 32-bit —
@@ -79,7 +59,6 @@ class DedupConfig:
     verify_broadcast_max_docs: int = 300_000
 
     # SimHash secondary verifier
-    simhash_bits: int = 64
     simhash_hamming_max: int = 3
 
     # skew handling: buckets larger than this emit a sorted chain of
@@ -98,25 +77,12 @@ class DedupConfig:
     # suffix-array long-repeat pass
     long_repeat_min_tokens: int = 64
 
-    # partitioning
-    candidate_partitions: int | None = None  # None → spark.sql.shuffle.partitions
-
-    extra: dict = field(default_factory=dict)
-
     def __post_init__(self) -> None:
         if self.num_bands * self.rows_per_band != self.num_perm:
             raise ValueError(
                 f"num_bands({self.num_bands}) * rows_per_band({self.rows_per_band})"
                 f" != num_perm({self.num_perm})"
             )
-        if self.verify_screen and self.screen_perms > self.num_perm:
-            raise ValueError(
-                f"screen_perms({self.screen_perms}) > num_perm({self.num_perm})"
-            )
         if self.shingle_hash_bytes not in (4, 8):
             raise ValueError("shingle_hash_bytes must be 4 or 8")
 
-    @property
-    def lsh_s_curve_threshold(self) -> float:
-        """Jaccard at which collision probability = 50% for this banding."""
-        return (1.0 / self.num_bands) ** (1.0 / self.rows_per_band)

@@ -243,15 +243,11 @@ def make_shingle_sig_udf(
     seed: int,
     num_bands: int,
     rows_per_band: int,
-    sig_prefix_perms: int = 0,
     shingle_hash_bytes: int = 8,
 ):
-    """Fused text -> struct(sh binary, bands array<long>, sigp binary)
-    pandas UDF: the shingle set and the LSH band buckets of every doc.
+    """Fused text -> struct(sh binary, bands array<long>) pandas UDF:
+    the shingle set and the LSH band buckets of every doc.
 
-    ``sigp`` is the first ``sig_prefix_perms`` minhash values truncated to
-    uint32 LE (4 B/slot) — the verify screen's estimator payload, ~5x
-    lighter than the shingle set; null when ``sig_prefix_perms`` is 0.
     ``shingle_hash_bytes=4`` stores ``sh`` as truncated uint32 (sorted,
     re-uniqued): halves the exact-verify gather bytes; Jaccard
     perturbation is O(|A||B|/2^32) per pair.
@@ -272,7 +268,7 @@ def make_shingle_sig_udf(
     """
     a_params, b_params = minhash_params(num_perm, seed)
 
-    @pandas_udf("sh binary, bands array<long>, sigp binary")
+    @pandas_udf("sh binary, bands array<long>")
     def shingle_sig(texts: pd.Series) -> pd.DataFrame:
         grams, offsets = _batch_grams(texts, k)
         sets = [np.unique(grams[offsets[i] : offsets[i + 1]]) for i in range(len(texts))]
@@ -291,23 +287,9 @@ def make_shingle_sig_udf(
         else:
             sh_col = [s.view(np.int64).tobytes() for s in sets]
         bands = band_hashes_numpy(sigs, num_bands, rows_per_band)
-        if sig_prefix_perms:
-            pref = sigs[:, :sig_prefix_perms].astype(np.uint32)  # low 32 bits
-            sigp = [pref[i].tobytes() for i in range(len(sets))]
-        else:
-            sigp = [None] * len(sets)
-        return pd.DataFrame(
-            {"sh": sh_col, "bands": [bands[i] for i in range(len(sets))], "sigp": sigp}
-        )
+        return pd.DataFrame({"sh": sh_col, "bands": [bands[i] for i in range(len(sets))]})
 
     return shingle_sig
-
-
-def shingle_bytes_to_array(b: bytes | None) -> np.ndarray:
-    """Decode the binary shingle-set representation (sorted int64 LE)."""
-    if b is None:
-        return np.empty(0, dtype=np.int64)
-    return np.frombuffer(b, dtype="<i8")
 
 
 def estimate_jaccard(sig_a: np.ndarray, sig_b: np.ndarray) -> float:

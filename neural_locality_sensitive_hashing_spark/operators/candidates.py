@@ -96,8 +96,6 @@ def _candidate_pairs_grouped(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
     materializes its O(s²) all-pairs array — only the O(s) chain+tree.
     """
     cap = cfg.bucket_pair_cap
-    if cfg.candidate_partitions:
-        bands = bands.repartition(cfg.candidate_partitions, "band", "bucket")
     grouped = (
         bands.groupBy("band", "bucket")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
@@ -119,7 +117,6 @@ def _candidate_pairs_windowed(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
     per-row memory; two exchanges + a sort. Emits the same pair set as the
     grouped strategy (verified in tests/test_candidates.py)."""
     cap = cfg.bucket_pair_cap
-    nparts = cfg.candidate_partitions
     # one exchange on (band, bucket) feeds both the size tag and the rank
     w = Window.partitionBy("band", "bucket")
     tagged = bands.select(
@@ -131,8 +128,6 @@ def _candidate_pairs_windowed(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
     ).persist()
 
     small = tagged.where(F.col("bucket_size") <= cap).select("band", "bucket", "doc_id")
-    if nparts:
-        small = small.repartition(nparts, "band", "bucket")
     l = small.alias("l")
     r = small.alias("r")
     pairs_small = (

@@ -10,8 +10,8 @@ the checkpoint manager (plans/pipeline.py).
 This module is the one place batch dedup is composed: the resumable
 pipeline, the spark-submit job (tools/run_dedup_job.py) and the oracle
 lanes call these stages instead of rebuilding the chain. ``verify_pairs``
-is the one verify policy (screen, size-gated broadcast, or join), and
-``keep_list`` the one survivor derivation.
+is the one verify policy (exact Jaccard, through a size-gated broadcast or
+a join), and ``keep_list`` the one survivor derivation.
 """
 
 from __future__ import annotations
@@ -31,7 +31,6 @@ from neural_locality_sensitive_hashing_spark.operators.connected_components impo
 from neural_locality_sensitive_hashing_spark.operators.verify import (
     jaccard_verify,
     jaccard_verify_bcast,
-    jaccard_verify_screened,
     simhash_verify,
 )
 from neural_locality_sensitive_hashing_spark.partitioning import fan_out
@@ -62,26 +61,20 @@ def banded_signatures_fused(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """docs -> (doc_id, sh, bands[, sigp]): the one way the engine signs
-    and bands documents — batch, the resumable pipeline and the stream all
+    """docs -> (doc_id, sh, bands): the one way the engine signs and
+    bands documents — batch, the resumable pipeline and the stream all
     call it. One Arrow kernel tokenizes, shingles, MinHashes and bands
     (``make_shingle_sig_udf``): the 1 KB/doc signature never leaves the
-    Python worker, only its ``num_bands`` band hashes do. ``sigp`` (the
-    verify screen's estimator prefix) is selected only with
-    ``cfg.verify_screen``."""
+    Python worker, only its ``num_bands`` band hashes do."""
     docs = fan_out(docs)
     udf = make_shingle_sig_udf(
         cfg.shingle_k, cfg.num_perm, cfg.minhash_seed,
         num_bands=cfg.num_bands, rows_per_band=cfg.rows_per_band,
-        sig_prefix_perms=cfg.screen_perms if cfg.verify_screen else 0,
         shingle_hash_bytes=cfg.shingle_hash_bytes,
     )
-    cols = ["doc_id", F.col("s.sh").alias("sh"), F.col("s.bands").alias("bands")]
-    if cfg.verify_screen:
-        cols.append(F.col("s.sigp").alias("sigp"))
     return docs.select(
         F.col(id_col).alias("doc_id"), udf(F.col(text_col)).alias("s")
-    ).select(*cols)
+    ).select("doc_id", F.col("s.sh").alias("sh"), F.col("s.bands").alias("bands"))
 
 
 def explode_fused_bands(banded: DataFrame) -> DataFrame:
@@ -120,13 +113,12 @@ def minhash_dup_pairs(
 
 
 def verify_pairs(cands: DataFrame, sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """(a, b) candidates + (doc_id, sh[, sigp]) signatures -> (a, b,
-    jaccard): the engine's one verify policy, shared by batch and the
-    resumable pipeline.
+    """(a, b) candidates + (doc_id, sh) signatures -> (a, b, jaccard)
+    with exact jaccard >= tau: the engine's one verify policy, shared by
+    batch and the resumable pipeline.
 
-    With ``cfg.verify_screen`` the two-tier MinHash-prefix screen runs.
-    Otherwise the size gate (r10, guide §3.2/§8) picks the strategy: within
-    it the shingle-set table is broadcast once and pairs verify via local
+    The size gate (r10, guide §3.2/§8) picks the strategy: within it the
+    shingle-set table is broadcast once and pairs verify via local
     lookup — the gather joins shipped the full sets per candidate pair
     through Arrow (~1 KB/pair). The gate's one ``agg`` job counts the docs
     and sums the set bytes the broadcast would ship
@@ -134,8 +126,6 @@ def verify_pairs(cands: DataFrame, sigs: DataFrame, cfg: DedupConfig) -> DataFra
     cache every downstream consumer needs — no separate scan of the raw
     docs. Both doc bounds are measured crossovers (config.py). Identical
     jaccard values on every path."""
-    if cfg.verify_screen:
-        return jaccard_verify_screened(cands, sigs.select("doc_id", "sh", "sigp"), cfg)
     if cfg.verify_broadcast_max_docs:
         n_docs, sh_bytes = sigs.agg(F.count("*"), F.sum(F.length("sh"))).first()
         if (

@@ -1,15 +1,18 @@
 """Exact verification of candidate pairs — the reference's "true distance"
 pass (``nlsh/indexer.py:84-91``: gather candidates, exact distance, top-k)
-re-expressed as a gather-join back to the shingle sets + a Jaccard kernel.
+re-expressed as a gather of the shingle sets + an exact Jaccard kernel.
 
-The Jaccard itself runs as an Arrow-batched numpy merge-intersection
-(``_jaccard_udf``): it replaced the native ``array_intersect`` /
-``array_union`` expressions after measurement showed the JVM
-implementations allocate a hash set + two result arrays per row, stalling
-the shared local heap at high thread counts (see the UDF docstring for
-numbers). The native expressions remain available through
-``functions.text``/SQL for composability; SimHash verification stays fully
-native (``bit_count(a ^ b)``).
+Every candidate pair is checked against the exact set Jaccard
+(``sorted_set_jaccard``), in one of two physical shapes with identical
+values: ``jaccard_verify`` gathers both sets per pair through two joins
+into an Arrow-batched numpy UDF (``make_jaccard_udf``), and
+``jaccard_verify_bcast`` looks them up in a broadcast set table inside one
+``mapInArrow``; ``dedup.verify_pairs`` picks between them. The UDF
+replaced the native ``array_intersect`` / ``array_union`` expressions
+after measurement showed the JVM implementations allocate a hash set +
+two result arrays per row, stalling the shared local heap at high thread
+counts (see the UDF docstring for numbers). SimHash verification stays
+fully native (``bit_count(a ^ b)``).
 """
 
 from __future__ import annotations
@@ -19,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType, IntegerType
+from pyspark.sql.types import DoubleType
 
 from neural_locality_sensitive_hashing_spark.config import DedupConfig
 from neural_locality_sensitive_hashing_spark.functions.simhash import hamming_distance
@@ -90,45 +93,6 @@ def make_jaccard_udf(shingle_hash_bytes: int = 8):
     return jaccard.asNondeterministic()
 
 
-_jaccard_udf = make_jaccard_udf(8)
-
-
-@pandas_udf(IntegerType())
-def _sig_matches_udf(pa_: pd.Series, pb_: pd.Series) -> pd.Series:
-    """Matching-slot count of two equal-length uint32 signature prefixes
-    (binary, 4 B/slot). est-Jaccard = matches / P."""
-    out = np.zeros(len(pa_), dtype=np.int32)
-    for i in range(len(pa_)):
-        a = pa_.iloc[i]
-        b = pb_.iloc[i]
-        if a is None or b is None:
-            continue
-        out[i] = int(
-            (np.frombuffer(a, dtype="<u4") == np.frombuffer(b, dtype="<u4")).sum()
-        )
-    return pd.Series(out)
-
-
-# screened verify filters twice on the matches column (reject + accept
-# tiers) — the same §4.4 duplicated-eval hazard as the jaccard kernel
-_sig_matches_udf = _sig_matches_udf.asNondeterministic()
-
-
-def screen_counts(cfg: DedupConfig) -> tuple[int, int]:
-    """(reject_below, accept_at_or_above) matching-slot thresholds for the
-    two-tier screen. sigma = sqrt(tau(1-tau)/P); a pair at exactly J = tau
-    is missed with P(Binom(P, tau) < reject_below) ~ Phi(-reject_sigmas)
-    (~1e-3 at 3 sigma), and a pair is accepted without exact verification
-    only when its estimate clears tau + accept_sigmas*sigma (false-accept
-    at J = tau - sigma is ~Phi(-(reject+accept) sigmas))."""
-    tau = cfg.jaccard_threshold
-    p = cfg.screen_perms
-    sigma = (tau * (1.0 - tau) / p) ** 0.5
-    reject_below = int(np.ceil((tau - cfg.screen_reject_sigmas * sigma) * p))
-    accept_at = int(np.ceil((tau + cfg.screen_accept_sigmas * sigma) * p))
-    return max(reject_below, 0), min(accept_at, p)
-
-
 def jaccard_verify(
     pairs: DataFrame,
     shingle_sets: DataFrame,
@@ -182,8 +146,9 @@ def jaccard_verify_bcast(
     stream through ONE mapInArrow that looks both sets up locally — no
     per-pair set gather joins, candidate rows stay 16 B. Both flavours run
     ``sorted_set_jaccard`` on the same sorted unsigned views, so jaccard
-    values and the `>= tau` cut are identical. Caller gates on
-    corpus size (``cfg.verify_broadcast_max_docs``)."""
+    values and the `>= tau` cut are identical. The caller gates on doc
+    count and set bytes (``dedup.verify_pairs``): the whole set table is
+    collected on the driver and held by every Python worker."""
     dt = "<u8" if cfg.shingle_hash_bytes == 8 else "<u4"
     item = cfg.shingle_hash_bytes
     spark = shingle_sets.sparkSession
@@ -248,52 +213,6 @@ def jaccard_verify_bcast(
         .repartition(nparts, "a", "b")
         .mapInArrow(gen, "a long, b long, jaccard double")
     )
-
-
-def jaccard_verify_screened(
-    pairs: DataFrame,
-    sigs: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Two-tier verify: MinHash-prefix screen, exact Jaccard only for the
-    uncertainty band -> (a, b, jaccard).
-
-    The 100 TB bytes-cut for the pipeline's dominant data mover: the
-    full shingle sets (KBs/doc, growing with document length) are gathered
-    only for pairs whose ``screen_perms``-slot estimate lands between the
-    reject and accept thresholds (``screen_counts``); clear rejects ship
-    256 B of prefix and stop, clear accepts report est-Jaccard
-    (matches/P, rounded to 1e-6) instead of the exact value. Deterministic
-    — a pure function of the signatures — so results stay bit-identical
-    across parallelism; NOT bit-equal to the exact path at the margins
-    (miss ~1e-3 at J == tau, inside the >=0.99 recall budget; measured in
-    tests/test_screen.py).
-
-    ``sigs`` must carry (doc_id, sh, sigp), as ``banded_signatures_fused``
-    emits them under ``cfg.verify_screen``.
-    """
-    reject_below, accept_at = screen_counts(cfg)
-    p = cfg.screen_perms
-    pa = sigs.select(F.col(id_col).alias("a"), F.col("sigp").alias("sigp_a"))
-    pb = sigs.select(F.col(id_col).alias("b"), F.col("sigp").alias("sigp_b"))
-    # persisted: both tiers consume it, and without the cache each branch
-    # would re-run the upstream candidate exchange (same lifecycle contract
-    # as minhash_dup_pairs' sigs cache — bench/callers clearCache between
-    # runs); the cached (a, b, m) rows are ~20 B each
-    screened = (
-        pairs.join(pa, "a")
-        .join(pb, "b")
-        .select("a", "b", _sig_matches_udf(F.col("sigp_a"), F.col("sigp_b")).alias("m"))
-        .where(F.col("m") >= reject_below)
-        .persist()
-    )
-    accepted = screened.where(F.col("m") >= accept_at).select(
-        "a", "b", F.round(F.col("m") / F.lit(float(p)), 6).alias("jaccard")
-    )
-    middle = screened.where(F.col("m") < accept_at).select("a", "b")
-    exact = jaccard_verify(middle, sigs.select(id_col, "sh"), cfg, id_col=id_col)
-    return accepted.unionByName(exact)
 
 
 def simhash_verify(

@@ -2,12 +2,11 @@
 
 Stages (each one an idempotent checkpoint table):
 
-    signatures   : pages -> (doc_id, sh, bands[, sigp])
+    signatures   : pages -> (doc_id, sh, bands)
                    (dedup.banded_signatures_fused)
     cand_pairs   : band-explode + bucket self-join (candidate_pairs)
-    dup_pairs    : verified pairs via dedup.verify_pairs — the batch
-                   verify policy with the same gates: the two-tier
-                   MinHash-prefix screen under cfg.verify_screen, else the
+    dup_pairs    : exact-Jaccard verified pairs via dedup.verify_pairs —
+                   the batch verify policy with the same gates: the
                    size-gated broadcast verify, else the join verify
     clusters     : union-find over dup_pairs, singletons included
     keep_list    : the SHIPPED table (dedup.keep_list) — one
@@ -17,12 +16,15 @@ Stages (each one an idempotent checkpoint table):
                    without recomputing pairs or the union-find
 
 Resume semantics (the reference's cache-the-expensive-intermediate pattern,
-``precompute.py:89-97``, generalized): each stage's fingerprint is a hash of
-(engine version, config, input token, upstream fingerprint). A rerun reuses
-every stage whose fingerprint matches and recomputes from the first miss —
-so a job killed after `cand_pairs` resumes at `dup_pairs`, and a config
-change (e.g. new threshold) invalidates exactly the stages downstream of
-the change.
+``precompute.py:89-97``, generalized): the fingerprint chain starts from a
+hash of the input token and ``asdict(cfg)``; each stage hashes its
+upstream fingerprint plus ``/<stage>/v2``. A rerun reuses every stage whose
+fingerprint matches and recomputes from the first miss — so a job killed
+after `cand_pairs` resumes at `dup_pairs`. Any config change (a new
+threshold, or an added or removed ``DedupConfig`` field) misses every
+stage. No engine version is hashed: a code change that alters a stage's
+output under the same config resumes stale snapshots unless it bumps the
+``/vN`` suffix.
 """
 
 from __future__ import annotations
@@ -117,9 +119,6 @@ class DedupPipeline:
         report = PipelineReport()
         cfg = self.cfg
 
-        # the screen's sigp rides along when cfg.verify_screen (config is
-        # part of the fingerprint, so toggling the screen invalidates
-        # downstream stages)
         signatures = self._stage(
             "signatures", lambda: banded_signatures_fused(pages, cfg), report
         )

@@ -240,49 +240,55 @@ class IncrementalDeduper:
     def process_batch(self, new_pages: DataFrame, batch_id: int) -> None:
         cfg = self.cfg
         new_sigs = banded_signatures_fused(new_pages, cfg).persist()
-        new_bands = explode_fused_bands(new_sigs).persist()
+        new_bands = cands = None
+        # the caches are released whether or not the batch succeeds: a
+        # caller that survives a failed batch and carries on (a retrying
+        # drain loop) would otherwise accumulate them
+        try:
+            new_bands = explode_fused_bands(new_sigs).persist()
 
-        # new×new with the full skew-capped machinery ...
-        cands = candidate_pairs(new_bands, cfg)
-        # ... plus new×old: an equi-join of the new bands against the band
-        # store — the only work touching earlier batches; no old×old
-        # candidate is regenerated.
-        old_bands = self._read_store(self.band_store)
-        if old_bands is not None:
-            cands = cands.unionByName(
-                candidate_pairs_two_sided(new_bands, old_bands, cfg)
-            ).dropDuplicates(["a", "b"])
-        cands = cands.persist()
+            # new×new with the full skew-capped machinery ...
+            cands = candidate_pairs(new_bands, cfg)
+            # ... plus new×old: an equi-join of the new bands against the band
+            # store — the only work touching earlier batches; no old×old
+            # candidate is regenerated.
+            old_bands = self._read_store(self.band_store)
+            if old_bands is not None:
+                cands = cands.unionByName(
+                    candidate_pairs_two_sided(new_bands, old_bands, cfg)
+                ).dropDuplicates(["a", "b"])
+            cands = cands.persist()
 
-        all_sets = new_sigs.select("doc_id", "sh")
-        old_sigs = self._read_store(self.sig_store)
-        if old_sigs is not None:
-            ids = cands.select(F.col("a").alias("doc_id")).unionByName(
-                cands.select(F.col("b").alias("doc_id"))
+            all_sets = new_sigs.select("doc_id", "sh")
+            old_sigs = self._read_store(self.sig_store)
+            if old_sigs is not None:
+                ids = cands.select(F.col("a").alias("doc_id")).unionByName(
+                    cands.select(F.col("b").alias("doc_id"))
+                )
+                all_sets = all_sets.unionByName(old_sigs.join(ids, "doc_id", "left_semi"))
+
+            dups = jaccard_verify(cands, all_sets, cfg).withColumn(
+                "batch_id", F.lit(int(batch_id))
             )
-            all_sets = all_sets.unionByName(old_sigs.join(ids, "doc_id", "left_semi"))
-
-        dups = jaccard_verify(cands, all_sets, cfg).withColumn(
-            "batch_id", F.lit(int(batch_id))
-        )
-        # at most one file per batch partition, i.e. per shuffle partition
-        # (the signatures fan out to that many): the verified pairs can
-        # come out of a join streamed over new + old sets, with more
-        # partitions, and coalesce merges those without an exchange
-        parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        for df, (path, (key, schema)) in zip(
-            (dups, new_bands, new_sigs), self.stores.items()
-        ):
-            (
-                df.select(*_columns(schema))
-                .coalesce(parts)
-                .sortWithinPartitions(key)
-                .write.mode("append")
-                .parquet(path)
-            )
-        cands.unpersist()
-        new_bands.unpersist()
-        new_sigs.unpersist()
+            # at most one file per batch partition, i.e. per shuffle partition
+            # (the signatures fan out to that many): the verified pairs can
+            # come out of a join streamed over new + old sets, with more
+            # partitions, and coalesce merges those without an exchange
+            parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+            for df, (path, (key, schema)) in zip(
+                (dups, new_bands, new_sigs), self.stores.items()
+            ):
+                (
+                    df.select(*_columns(schema))
+                    .coalesce(parts)
+                    .sortWithinPartitions(key)
+                    .write.mode("append")
+                    .parquet(path)
+                )
+        finally:
+            for df in (cands, new_bands, new_sigs):
+                if df is not None:
+                    df.unpersist()
         if self.compact_every and (int(batch_id) + 1) % self.compact_every == 0:
             self.compact_stores()
 

@@ -75,11 +75,11 @@ def _parity_texts(k: int) -> pd.Series:
 
 def test_fused_kernel_bit_identical_to_reference(spark):
     """The whole-batch kernels equal the per-doc references byte for
-    byte: shingle_hashes_python + minhash_numpy + band_hashes_numpy and
-    the uint32 sigp prefix (null without a prefix), in both sh widths.
+    byte: shingle_hashes_python + minhash_numpy + band_hashes_numpy, in
+    both sh widths.
     The kernels run directly on pandas batches; the session only parses
     their DDL return types."""
-    k, perms, nb, rpb, pref = 5, 64, 16, 4, 8
+    k, perms, nb, rpb = 5, 64, 16, 4
     texts = _parity_texts(k)
     a, b = minhash_params(perms, 7)
     sets = [shingle_hashes_python(t, k, {}) for t in texts]
@@ -91,17 +91,12 @@ def test_fused_kernel_bit_identical_to_reference(spark):
         else:
             sh = [np.unique((s >> np.uint64(32)).astype(np.uint32)).tobytes() for s in sets]
         banded = make_shingle_sig_udf(
-            k, perms, 7, num_bands=nb, rows_per_band=rpb,
-            sig_prefix_perms=pref, shingle_hash_bytes=width,
+            k, perms, 7, num_bands=nb, rows_per_band=rpb, shingle_hash_bytes=width,
         ).func(texts)
+        assert list(banded.columns) == ["sh", "bands"]
         for i in range(len(texts)):
             assert banded["sh"][i] == sh[i], i
             assert banded["bands"][i].tobytes() == bands[i].tobytes(), i
-            assert banded["sigp"][i] == sigs[i, :pref].astype(np.uint32).tobytes(), i
-    no_prefix = make_shingle_sig_udf(k, perms, 7, nb, rpb).func(texts[:20])
-    assert no_prefix["sigp"].isna().all()
-    for i in range(20):
-        assert no_prefix["bands"][i].tobytes() == bands[i].tobytes(), i
     distinct = make_gram_hash_text_udf(k).func(texts)
     positional = make_gram_hash_text_udf(k, distinct=False).func(texts)
     for i, t in enumerate(texts):

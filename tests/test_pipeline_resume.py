@@ -23,22 +23,31 @@ def _cluster_map(df):
     return {r.doc_id: r.cluster_id for r in df.collect()}
 
 
+def _dup_pair_rows(pipe):
+    rows = pipe.catalog.read_snapshot("dup_pairs").collect()
+    return sorted((r.a, r.b, r.jaccard) for r in rows)
+
+
 def test_full_run_then_resume_is_identical_and_skips_stages(spark, pipeline_env):
     pages, ckpt = pipeline_env
     pipe = DedupPipeline(spark, CFG, ckpt, input_token="pages_1k")
     clusters1, rep1 = pipe.run(pages)
     m1 = _cluster_map(clusters1)
     assert rep1.cached_stages() == set()
+    pairs1 = _dup_pair_rows(pipe)
+    assert pairs1
 
     # rerun without dropping anything: everything cached
     clusters2, rep2 = pipe.run(pages)
     assert rep2.cached_stages() == set(DedupPipeline.STAGES)
     assert _cluster_map(clusters2) == m1
 
-    # kill after cand_pairs: drop dup_pairs + clusters, resume
+    # kill after cand_pairs: drop dup_pairs + clusters, resume; the
+    # re-verified (a, b, jaccard) rows are bit-identical
     pipe.drop_from("dup_pairs")
     clusters3, rep3 = pipe.run(pages)
     assert rep3.cached_stages() == {"signatures", "cand_pairs"}
+    assert _dup_pair_rows(pipe) == pairs1
     assert _cluster_map(clusters3) == m1
 
 
@@ -68,48 +77,6 @@ def test_lineage_written(spark, pipeline_env):
         .collect()
     )
     assert any(r.n == pages.count() for r in total)
-
-
-def test_screened_pipeline_runs_and_resumes_bit_identical(spark, pages_1k, tmp_path_factory):
-    """cfg.verify_screen threads the two-tier verify through the pipeline:
-    same dup-pair SET and clusters as the exact path on this corpus (dups
-    sit far from the tau margin), checkpoint/resume still bit-identical."""
-    pages_path, _ = pages_1k
-    pages = spark.read.parquet(pages_path)
-    ckpt = str(tmp_path_factory.mktemp("ckpt_screen"))
-
-    cfg_s = DedupConfig(verify_screen=True)
-    pipe = DedupPipeline(spark, cfg_s, ckpt, input_token="pages_1k")
-    clusters1, rep1 = pipe.run(pages)
-    m1 = _cluster_map(clusters1)
-    assert rep1.cached_stages() == set()
-    pairs1 = sorted(
-        (r.a, r.b, r.jaccard)
-        for r in pipe.catalog.read_snapshot("dup_pairs").collect()
-    )
-    assert pairs1  # the screen actually verified pairs
-
-    # kill after cand_pairs; resume reuses upstream, re-verifies, and the
-    # recomputed dup_pairs + clusters are bit-identical
-    pipe.drop_from("dup_pairs")
-    clusters2, rep2 = pipe.run(pages)
-    assert rep2.cached_stages() == {"signatures", "cand_pairs"}
-    pairs2 = sorted(
-        (r.a, r.b, r.jaccard)
-        for r in pipe.catalog.read_snapshot("dup_pairs").collect()
-    )
-    assert pairs2 == pairs1
-    assert _cluster_map(clusters2) == m1
-
-    # pair SET and clusters agree with the exact-verify pipeline
-    exact_ckpt = str(tmp_path_factory.mktemp("ckpt_exact"))
-    pipe_e = DedupPipeline(spark, DedupConfig(), exact_ckpt, input_token="pages_1k")
-    clusters_e, _ = pipe_e.run(pages)
-    pairs_e = {
-        (r.a, r.b) for r in pipe_e.catalog.read_snapshot("dup_pairs").collect()
-    }
-    assert {(a, b) for a, b, _ in pairs1} == pairs_e
-    assert _cluster_map(clusters_e) == m1
 
 
 def test_pipeline_with_4byte_shingles(spark, pages_1k, tmp_path_factory):

@@ -331,3 +331,26 @@ def test_dup_pairs_readable_when_early_batches_verify_nothing(spark, tmp_path):
     dedup.process_batch(docs.where(F.col("doc_id") >= 100), 1)
     got = {(r.a, r.b) for r in dedup.dup_pairs().collect()}
     assert got == {(100, 101)}
+
+
+def test_failed_batch_releases_its_caches(spark, tmp_path, monkeypatch):
+    """A batch that raises after persisting its signatures, bands and
+    candidates unpersists all three, so a caller that survives the failure
+    and carries on does not accumulate cached plans."""
+    import pytest
+
+    from neural_locality_sensitive_hashing_spark.streaming import incremental
+
+    def broken_verify(*args, **kwargs):
+        raise RuntimeError("verify failed")
+
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"tok{(i + j) % 50}" for j in range(30))) for i in range(20)],
+        "doc_id long, text string",
+    )
+    dedup = incremental.IncrementalDeduper(spark, CFG, str(tmp_path / "state"))
+    spark.catalog.clearCache()
+    monkeypatch.setattr(incremental, "jaccard_verify", broken_verify)
+    with pytest.raises(RuntimeError, match="verify failed"):
+        dedup.process_batch(docs, 0)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

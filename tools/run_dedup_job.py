@@ -121,21 +121,6 @@ def main() -> None:
         "merges a COMPLETE pair set, not a sampled one",
     )
     ap.add_argument(
-        "--verify-screen", dest="verify_screen", action="store_true", default=False,
-        help="two-tier verify (MinHash-prefix screen, exact Jaccard only in "
-        "the uncertainty band); deterministic across parallelism, ~1e-3 "
-        "miss at J == tau (recall gate in tests/test_screen.py). Measured "
-        "on the synthetic corpus (BENCH/BASELINE.md, 250k docs): "
-        "shuffle 1.25 GB vs 1.22 GB for plain 4-byte exact — the extra "
-        "screen exchange cancels the byte cut when shingle sets are this "
-        "small (~1.2 KB); worth enabling when sets >> the 256 B prefix "
-        "(real web pages at 5-10 KB/set)",
-    )
-    ap.add_argument(
-        "--no-verify-screen", dest="verify_screen", action="store_false",
-        help="exact Jaccard for every candidate pair (the default)",
-    )
-    ap.add_argument(
         "--checkpoint-dir", default=None,
         help="run through the RESUMABLE DedupPipeline instead of the "
         "straight-line plan: each stage (signatures, cand_pairs, "
@@ -214,9 +199,7 @@ def main() -> None:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     cores = spark.sparkContext.defaultParallelism
-    cfg = DedupConfig(
-        verify_screen=args.verify_screen, shingle_hash_bytes=args.shingle_bytes
-    )
+    cfg = DedupConfig(shingle_hash_bytes=args.shingle_bytes)
     lre_bound = cfg.long_repeat_min_tokens + 16 - 1
     if args.long_repeat_exact is not None and args.long_repeat_exact < lre_bound:
         raise SystemExit(
