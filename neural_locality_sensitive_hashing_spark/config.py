@@ -65,9 +65,12 @@ class DedupConfig:
     # consecutive pairs instead of all O(n^2) pairs (connectivity-preserving)
     bucket_pair_cap: int = 256
 
-    # candidate physical strategy: "grouped" = one hash-agg exchange with
-    # native pair emission (default); "windowed" = round-1 rank + self-join
-    # (bounded per-row memory for degenerate buckets, one extra exchange)
+    # batch candidate physical strategy: "grouped" = one hash-agg exchange
+    # with native pair emission (default); "windowed" = round-1 rank +
+    # self-join (bounded per-row memory for degenerate buckets, one extra
+    # exchange). Both emit the same pair set. A batch-only choice: the
+    # stream's one pass over new + stored bands is always grouped
+    # (candidates.candidate_pairs_incremental).
     pair_strategy: str = "grouped"
 
     # connected components: label-propagation round budget, used only

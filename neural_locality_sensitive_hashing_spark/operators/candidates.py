@@ -32,51 +32,52 @@ Two physical strategies (``DedupConfig.pair_strategy``):
     memory (streaming window), at the cost of an extra exchange + sort and
     three rank joins for over-cap buckets. Keep for environments where a
     single degenerate bucket exceeds task memory.
+
+The stream's micro-batches take neither: ``candidate_pairs_incremental``
+is the grouped pass over a batch's bands ∪ the stored bands, with the
+stored side of each bucket rank-capped by a window on the same exchange.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from neural_locality_sensitive_hashing_spark.config import DedupConfig
 
 
-def _all_pairs(ids: Column, s: Column) -> Column:
-    """Sorted member array -> array<struct<a,b>> of all C(s,2) pairs, a<b."""
-    return F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), s - 1),
-            lambda i: F.transform(
-                F.slice(ids, i + 1, s - i),
-                lambda x: F.struct(
-                    F.element_at(ids, i).alias("a"), x.alias("b")
-                ),
-            ),
-        )
-    )
+# The pair arrays are SQL text over the sorted member array column `ids`:
+# one parse per call, where the same trees built from Python lambdas cost
+# a py4j round trip per expression node (~0.1 s of driver time per plan).
 
+# `ids` -> array<struct<a,b>> of all C(s,2) pairs, a < b
+_ALL_PAIRS = (
+    "flatten(transform(sequence(1, size(ids) - 1), i -> transform("
+    "slice(ids, i + 1, size(ids) - i), "
+    "x -> named_struct('a', element_at(ids, i), 'b', x))))"
+)
 
-def _chain_tree_pairs(ids: Column, s: Column) -> Column:
-    """Sorted member array -> O(s) connectivity-preserving pairs:
-    chain (i, i+1) keeps locally-adjacent (most-likely-to-verify) pairs;
-    tree (i//2, i) caps the component diameter at O(log s) so union-find
-    converges in logarithmically many rounds even for a mega-bucket (a
-    chain alone would need O(s) label-propagation rounds — fatal at 10^12
-    docs). Identical pair set to the round-1 rank-join construction."""
-    chain = F.zip_with(
-        F.slice(ids, 1, s - 1),
-        F.slice(ids, 2, s - 1),
-        lambda x, y: F.struct(x.alias("a"), y.alias("b")),
-    )
-    tree = F.transform(
-        F.sequence(F.lit(2), s),
-        lambda i: F.struct(
-            F.element_at(ids, F.floor(i / 2).cast("int")).alias("a"),
-            F.element_at(ids, i).alias("b"),
-        ),
-    )
-    return F.concat(chain, tree)
+# `ids` -> O(s) connectivity-preserving pairs: chain (i, i+1) keeps
+# locally-adjacent (most-likely-to-verify) pairs; tree (i//2, i), 1-based,
+# caps the component diameter at O(log s) so union-find converges in
+# logarithmically many rounds even for a mega-bucket (a chain alone would
+# need O(s) label-propagation rounds — fatal at 10^12 docs). Identical
+# pair set to the round-1 rank-join construction.
+_CHAIN_TREE_PAIRS = (
+    "concat("
+    "zip_with(slice(ids, 1, size(ids) - 1), slice(ids, 2, size(ids) - 1), "
+    "(x, y) -> named_struct('a', x, 'b', y)), "
+    "transform(sequence(2, size(ids)), "
+    "i -> named_struct('a', element_at(ids, cast(floor(i / 2) AS int)), "
+    "'b', element_at(ids, i))))"
+)
+
+# `ids` × the array column `old` -> every (new, old) pair as (least,
+# greatest), skipping an id present on both sides
+_CROSS_PAIRS = (
+    "flatten(transform(ids, x -> transform(filter(old, y -> y != x), "
+    "y -> named_struct('a', least(x, y), 'b', greatest(x, y)))))"
+)
 
 
 def candidate_pairs(
@@ -101,21 +102,24 @@ def _candidate_pairs_grouped(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .where(F.size("ids") >= 2)
     )
-    ids = F.col("ids")
-    s = F.size(ids)
-    pairs_arr = F.when(s <= cap, _all_pairs(ids, s)).otherwise(_chain_tree_pairs(ids, s))
-    return (
-        grouped.select(F.explode(pairs_arr).alias("p"))
-        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .dropDuplicates(["a", "b"])
+    pairs_arr = F.expr(
+        f"CASE WHEN size(ids) <= {cap} THEN {_ALL_PAIRS} ELSE {_CHAIN_TREE_PAIRS} END"
     )
+    return grouped.select(F.inline(pairs_arr)).dropDuplicates(["a", "b"])
 
 
 def _candidate_pairs_windowed(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Round-1 strategy: window size-tag + rank, self-join for small
     buckets, rank-joins for the chain+tree of over-cap buckets. Bounded
     per-row memory; two exchanges + a sort. Emits the same pair set as the
-    grouped strategy (verified in tests/test_candidates.py)."""
+    grouped strategy (verified in tests/test_candidates.py).
+
+    Cache lifecycle: `tagged` is persisted because the small-bucket
+    self-join and the over-cap rank joins all read it, so the cache must
+    outlive this call: the returned plan reads it. Callers that
+    materialize the result and loop release it with
+    `spark.catalog.clearCache()` or by unpersisting the plan's cached
+    ancestor."""
     cap = cfg.bucket_pair_cap
     # one exchange on (band, bucket) feeds both the size tag and the rank
     w = Window.partitionBy("band", "bucket")
@@ -167,47 +171,63 @@ def _candidate_pairs_windowed(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
     return pairs_small.unionByName(pairs_big).dropDuplicates(["a", "b"])
 
 
-def candidate_pairs_two_sided(
-    left_bands: DataFrame,
-    right_bands: DataFrame,
+def candidate_pairs_incremental(
+    new_bands: DataFrame,
+    stored_bands: DataFrame | None,
     cfg: DedupConfig,
 ) -> DataFrame:
-    """left×right candidate pairs: (a, b) with a < b, a from either side.
+    """The stream's candidate pass: new×new plus new×stored pairs of a
+    micro-batch's (doc_id, band, bucket) rows against the band store
+    (``None``: an empty store), as distinct (a, b) with a < b. Old×old
+    pairs are never emitted.
 
-    The streaming increment's new×all probe (and any query-vs-corpus J1
-    join): an equi-join on (band, bucket) between two band tables — never
-    the all-accumulated self-join.
+    ONE pass, hash-partitioned on (band, bucket) over new ∪ stored rows:
+    a window ranks each bucket's stored members by doc_id and keeps the
+    ``bucket_pair_cap`` lowest; the aggregate and the pair emission reuse
+    the window's exchange, and one ``dropDuplicates`` ends the pass. Per
+    bucket it emits
 
-    Skew: AQE skew-join only SPLITS oversized partitions, it does not
-    reduce pair count — a degenerate (boilerplate) bucket in the
-    accumulated store would otherwise emit O(new_in_bucket × old_bucket)
-    pairs, growing without bound as the store grows. The right (corpus)
-    side is therefore capped at ``bucket_pair_cap`` members per
-    (band, bucket) via a rank filter on doc_id: every probe links to the
-    same lowest-id anchor members, which the batch path's chain+tree
-    already connected among themselves — connectivity is preserved, pair
-    count per probe is bounded. (Caveat, mirrored from the batch cap: a
-    true dup whose only collision is an over-cap bucket verifies only if
-    it also matches an anchor — boilerplate buckets are mutually similar,
-    so this holds in practice and is the same trade the batch path makes.)
+    * new×new exactly as ``candidate_pairs`` does: all pairs up to
+      ``bucket_pair_cap`` members, chain+tree above;
+    * new × the kept stored ids, skipping a stored id equal to the new
+      one (a replayed doc).
+
+    Skew: the cap bounds the stored side of a bucket the way the batch
+    chain+tree bounds its new side: a boilerplate bucket's stored members
+    never enter an array past the cap, and each new member links to the
+    same lowest-id anchors, which the batch that stored them already
+    connected among themselves. (Caveat, as in the batch cap: a true dup
+    whose only collision is an over-cap bucket verifies only if it also
+    matches an anchor; boilerplate buckets are mutually similar.)
+
+    Always the grouped strategy: ``DedupConfig.pair_strategy`` chooses
+    among batch plans that emit the same pair set.
     """
-    w = Window.partitionBy("band", "bucket").orderBy("doc_id")
-    r = (
-        right_bands.select("band", "bucket", "doc_id")
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= cfg.bucket_pair_cap)
-        .select("band", "bucket", F.col("doc_id").alias("r_id"))
-    )
-    l = left_bands.select("band", "bucket", F.col("doc_id").alias("l_id"))
-    return (
-        l.join(r, ["band", "bucket"])
-        .where(F.col("l_id") != F.col("r_id"))
-        .select(
-            F.least("l_id", "r_id").alias("a"),
-            F.greatest("l_id", "r_id").alias("b"),
+    cap = cfg.bucket_pair_cap
+    rows = new_bands.select("band", "bucket", "doc_id", F.lit(True).alias("new"))
+    if stored_bands is not None:
+        # stored rows sort first, so their row number is their rank
+        w = Window.partitionBy("band", "bucket").orderBy("new", "doc_id")
+        rows = (
+            rows.unionByName(
+                stored_bands.select(
+                    "band", "bucket", "doc_id", F.lit(False).alias("new")
+                )
+            )
+            .withColumn("rn", F.row_number().over(w))
+            .where(F.col("new") | (F.col("rn") <= cap))
         )
-        .dropDuplicates(["a", "b"])
+    grouped = rows.groupBy("band", "bucket").agg(
+        F.sort_array(F.collect_list(F.when(F.col("new"), F.col("doc_id")))).alias("ids"),
+        F.collect_list(F.when(~F.col("new"), F.col("doc_id"))).alias("old"),
     )
+    # a stored-only bucket (empty `ids`) emits an empty array
+    pairs_arr = F.expr(
+        f"CASE WHEN size(ids) < 2 THEN {_CROSS_PAIRS} "
+        f"WHEN size(ids) <= {cap} THEN concat({_ALL_PAIRS}, {_CROSS_PAIRS}) "
+        f"ELSE concat({_CHAIN_TREE_PAIRS}, {_CROSS_PAIRS}) END"
+    )
+    return grouped.select(F.inline(pairs_arr)).dropDuplicates(["a", "b"])
 
 
 def bucket_stats(bands: DataFrame) -> DataFrame:

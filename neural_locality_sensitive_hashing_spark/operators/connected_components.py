@@ -6,14 +6,15 @@ engine needs: dup_pairs -> cluster ids = connected components.
 
 Algorithm: ``pairs`` is projected to ``(a, b)`` and materialized once with
 ``localCheckpoint``, which also counts the edges (an observed metric, no
-extra job). Under a byte ceiling (edges x 16 B <= ``_DRIVER_UF_MAX_BYTES``)
+extra job); the checkpoint is released before the call returns
+(``checkpoints.local_checkpoints``). Under a byte ceiling (edges x 16 B <= ``_DRIVER_UF_MAX_BYTES``)
 the edges are collected once through Arrow and labelled by a numpy
 union-find on the driver; dedup graphs are small next to the corpus, and
 the labels go back as a local relation that the singleton join
 broadcasts. Above the ceiling, iterative min-label propagation runs to
 fixpoint on the executors with a ``localCheckpoint`` per round to cut
 lineage (a fixpoint loop without checkpointing grows an exponential
-plan). Per round each node adopts min(own label, neighbors' labels);
+plan); each round's checkpoint is released once the next one is built. Per round each node adopts min(own label, neighbors' labels);
 converged when no label changes. The round count is bounded by the
 component diameter. Each round is one shuffle-join on doc_id + one
 groupBy; both hash-partition on the same key, so AQE reuses the exchange
@@ -27,6 +28,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from neural_locality_sensitive_hashing_spark.checkpoints import (
+    local_checkpoints,
+    release,
+)
 # byte ceiling of the driver-side union-find: edges x 16 B (two int64 ids
 # per edge) collected to the driver. Above it the labels are propagated on
 # the executors instead.
@@ -54,23 +59,28 @@ def connected_components(
     the chain+tree construction (operators/candidates.py), so the default
     budget covers components up to ~2^49 members. The driver union-find
     has no budget: every round merges at least one pair of components.
+
+    The pairs checkpoint is released before returning, on success and on
+    failure. The returned labels are the caller's to keep: the driver
+    path's are a local relation; label propagation's are the last round's
+    ``localCheckpoint``, which ``checkpoints.release`` frees (Spark's
+    ContextCleaner does once the frame is garbage collected).
     """
     obs = Observation()
-    ab = (
-        pairs.select("a", "b")
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
-    if obs.get["n"] * 16 <= _DRIVER_UF_MAX_BYTES:
-        edges = ab.toArrow()
-        ids, labels = _union_find(
-            edges.column("a").to_numpy(), edges.column("b").to_numpy()
+    with local_checkpoints() as checkpoint:
+        ab = checkpoint(
+            pairs.select("a", "b").observe(obs, F.count(F.lit(1)).alias("n"))
         )
-        return pairs.sparkSession.createDataFrame(
-            pd.DataFrame({"doc_id": ids, "cluster_id": labels}),
-            "doc_id long, cluster_id long",
-        )
-    return _propagate_labels(ab, max_iterations)
+        if obs.get["n"] * 16 <= _DRIVER_UF_MAX_BYTES:
+            edges = ab.toArrow()
+            ids, labels = _union_find(
+                edges.column("a").to_numpy(), edges.column("b").to_numpy()
+            )
+            return pairs.sparkSession.createDataFrame(
+                pd.DataFrame({"doc_id": ids, "cluster_id": labels}),
+                "doc_id long, cluster_id long",
+            )
+        return _propagate_labels(ab, max_iterations)
 
 
 def _union_find(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -144,7 +154,6 @@ def _propagate_labels(ab: DataFrame, max_iterations: int) -> DataFrame:
     labels, obs0 = _sum_of(labels)
     labels = labels.localCheckpoint()
     prev_sum = obs0.get["s"]
-    converged = False
 
     def _propagate(lbl: DataFrame) -> DataFrame:
         msgs = edges.join(
@@ -156,21 +165,24 @@ def _propagate_labels(ab: DataFrame, max_iterations: int) -> DataFrame:
             .agg(F.min("cluster_id").alias("cluster_id"))
         )
 
-    for _ in range(max_iterations):
-        nxt, obs = _sum_of(_propagate(labels))
-        labels = nxt.localCheckpoint()
-        cur_sum = obs.get["s"]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
+    try:
+        for _ in range(max_iterations):
+            nxt, obs = _sum_of(_propagate(labels))
+            nxt = nxt.localCheckpoint()
+            release(labels)  # the next round is built: this one is unread
+            labels = nxt
+            cur_sum = obs.get["s"]
+            if cur_sum == prev_sum:
+                return labels
+            prev_sum = cur_sum
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} "
             "iterations — component diameter exceeds the budget; raise "
             "max_cc_iterations or check candidate diameter capping"
         )
-    return labels
+    except BaseException:
+        release(labels)
+        raise
 
 
 def clusters_with_singletons(

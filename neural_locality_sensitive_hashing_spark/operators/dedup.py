@@ -207,7 +207,13 @@ def simhash_dup_pairs(
     """SimHash near-dup pairs: band the 64-bit code into 4×16-bit chunks
     (any pair within Hamming distance <= 3 shares at least one exact chunk
     — pigeonhole), bucket self-join per chunk, verify with bit_count.
-    -> (a, b, hamming)."""
+    -> (a, b, hamming).
+
+    Cache lifecycle: `codes` is persisted because the chunk explode AND
+    the verify joins consume it, so the cache must outlive this call: the
+    returned plan reads it. Callers that materialize the result and loop
+    release it with `spark.catalog.clearCache()` or by unpersisting the
+    plan's cached ancestor."""
     codes = fan_out(docs).select(
         F.col(id_col).alias("doc_id"),
         simhash_udf(T.shingle_set(F.col(text_col), cfg.shingle_k)).alias("simhash"),

@@ -450,11 +450,11 @@ GROUP BY cluster_id
 def q_minhash_dedup_pairs_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING content-dedup tier in the value-check lane (the
     pattern recrawl_latest_incremental proved): drain the corpus through
-    streaming/incremental.py's band-store / two-sided-join path in three
+    streaming/incremental.py's band-store path (one grouped candidate pass
+    over each batch's new bands and the stored bands) in three
     deterministic micro-batches (split by doc_id % 3 — order-scrambling:
     a dup pair's two ends usually arrive in different batches, so most
-    pairs are found via the new×old band-store probe, not the in-batch
-    self-join) and return the accumulated dup-pair store. The oracle is
+    pairs are found as new×stored pairs of that pass, not new×new) and return the accumulated dup-pair store. The oracle is
     EXACTLY the batch tier's SQL (exact Jaccard >= tau), so the driver's
     hash compare certifies incremental == batch == oracle — the
     amortized build-once-probe-many index of the reference
@@ -490,7 +490,8 @@ def q_minhash_dedup_clusters_incremental(spark: SparkSession, sf_dir: str) -> Da
     accumulated incremental pair store, then singleton fill-in — and
     must hash-match the BATCH clusters oracle (SQL_MINHASH_DEDUP_
     CLUSTERS). A green row proves the whole incremental pipeline (band
-    store, two-sided probes, connected components, cluster labeling)
+    store, grouped new×new + new×stored candidate pass, connected
+    components, cluster labeling)
     equals the one-shot batch job: the reference's amortized
     build-once-probe-many index (nlsh/indexer.py:34-38) carried to its
     logical end, cluster assignments included. Same 3-batch

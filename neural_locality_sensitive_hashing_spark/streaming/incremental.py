@@ -5,13 +5,26 @@ incremental dedup a `foreachBatch` refinement (SURVEY.md §2.10): for each
 micro-batch of newly crawled pages,
 
     1. sign and band the new docs with batch's kernel
-       (``banded_signatures_fused`` -> ``explode_fused_bands``),
-    2. candidate-generate new×new (grouped self-join with skew capping)
-       PLUS new×old via an equi-join of the new bands against the
-       accumulated BAND STORE — old×old is never rescanned; per-batch
-       work is O(new×new + new-band probes), not O(total²),
-    3. exact-verify and append to the dup_pairs store (tagged batch_id),
-    4. append new signatures and new bands to their stores.
+       (``banded_signatures_fused``; the bands are its
+       ``explode_fused_bands`` projection),
+    2. candidate-generate new×new AND new×old in ONE grouped pass over
+       the new bands ∪ the accumulated BAND STORE
+       (``candidate_pairs_incremental``: hash-partitioned on (band,
+       bucket), the stored side ranked and capped at
+       ``bucket_pair_cap`` per bucket) — old×old is never emitted;
+       per-batch pair work is O(new×new + new×cap), not O(total²),
+    3. gather the candidates' shingle sets (the new ones plus a left-semi
+       join of the signature store on the candidates' distinct ids),
+       exact-verify and append to the dup_pairs store (tagged batch_id),
+    4. append new bands and new signatures to their stores.
+
+The batch's signatures, candidates and gathered set table are each
+computed once, by the one job of a ``localCheckpoint`` (after the shuffle
+stages feeding it) that every later reader reuses; all three are released
+when the batch ends, on success and on failure
+(``checkpoints.local_checkpoints``). A store-probing batch runs 13 Spark
+jobs: sign 2, candidates 3, gather 3, verify + pair append 3 (two of them
+broadcasts), band and signature appends 2.
 
 State lives in parquet stores (Iceberg-style append tables), not in Spark's
 operator state — so the stream can restart from its checkpoint.
@@ -26,10 +39,10 @@ each kept sorted by its key —
 A batch appends its rows to each store sorted within the partitions they
 already have: no extra exchange, at most ``spark.sql.shuffle.partitions``
 files per append (the parallelism the batch's signatures fan out to).
-Per batch the stream reads the WHOLE band store (a plain join of the new
-bands against it) and the signature store through a left-semi join on the
-candidates' ids; both reads run inside the jobs that verify the batch,
-so the stores add no driver round trip of their own.
+Per batch the stream reads the WHOLE band store (it enters the candidate
+pass's one exchange beside the new bands) and the signature store through
+a left-semi join on the candidates' distinct ids; each read runs inside the job that checkpoints its step, so
+the stores add no driver round trip of their own.
 
 Why flat: the layout used to split the stores into 64/16/16 ``pmod`` hash
 directories and prune them with two driver ``distinct().collect()``
@@ -37,8 +50,8 @@ probes. At 150 docs × 32 bands = 4,800 bucket hashes per batch the prune
 lists covered every directory, so the probes pruned nothing, while each
 append wrote up to 96 small files from one task and each read of the
 64-directory band store started a parallel-listing job. On 4 cores with
-150-doc batches the flat layout runs 22 jobs per batch instead of 28 and
-halves the batch latency. Key-sorted files keep Parquet's row-group
+150-doc batches the flat layout ran 22 jobs per batch instead of 28 and
+halved the batch latency. Key-sorted files keep Parquet's row-group
 min/max statistics useful for any selective reader.
 
 The stored bands are only comparable with bands from the same band-hash
@@ -59,9 +72,10 @@ Equivalence contract vs a batch run over the union of all inputs:
 *identical pair set for buckets below ``bucket_pair_cap``* (each pair is
 emitted exactly once — by the batch that contributes its later doc). For
 over-cap buckets the batch pipeline emits rank-dependent chain+tree pairs
-while the increment emits new×anchor collisions (the two-sided cap keeps
-the old side bounded), so pair SETS differ there; both preserve bucket
-connectivity, so cluster assignments agree (test_streaming.py asserts
+while the increment emits new×anchor collisions (the stored side of a
+bucket is capped at its ``bucket_pair_cap`` lowest ids), so pair SETS
+differ there; both preserve bucket connectivity, so cluster assignments
+agree (test_streaming.py asserts
 pair-set equality below cap and cluster-level equivalence with a planted
 over-cap bucket).
 """
@@ -76,10 +90,10 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from neural_locality_sensitive_hashing_spark.checkpoints import local_checkpoints
 from neural_locality_sensitive_hashing_spark.config import DedupConfig
 from neural_locality_sensitive_hashing_spark.operators.candidates import (
-    candidate_pairs,
-    candidate_pairs_two_sided,
+    candidate_pairs_incremental,
 )
 from neural_locality_sensitive_hashing_spark.operators.dedup import (
     banded_signatures_fused,
@@ -92,9 +106,8 @@ PAGES_SCHEMA = (
 )
 
 # (directory, sort key, schema) per store, in the order a batch appends
-# them: the pair store goes first, while the band store the batch probed
-# is still the one it listed. Reading with the schema skips the one-task
-# footer job Spark runs to infer it.
+# them. Reading with the schema skips the one-task footer job Spark runs
+# to infer it.
 STORES = (
     ("dup_pairs", "a", "a bigint, b bigint, jaccard double, batch_id int"),
     ("bands", "bucket", "band int, bucket bigint, doc_id bigint"),
@@ -239,33 +252,30 @@ class IncrementalDeduper:
 
     def process_batch(self, new_pages: DataFrame, batch_id: int) -> None:
         cfg = self.cfg
-        new_sigs = banded_signatures_fused(new_pages, cfg).persist()
-        new_bands = cands = None
-        # the caches are released whether or not the batch succeeds: a
-        # caller that survives a failed batch and carries on (a retrying
-        # drain loop) would otherwise accumulate them
-        try:
-            new_bands = explode_fused_bands(new_sigs).persist()
-
-            # new×new with the full skew-capped machinery ...
-            cands = candidate_pairs(new_bands, cfg)
-            # ... plus new×old: an equi-join of the new bands against the band
-            # store — the only work touching earlier batches; no old×old
-            # candidate is regenerated.
-            old_bands = self._read_store(self.band_store)
-            if old_bands is not None:
-                cands = cands.unionByName(
-                    candidate_pairs_two_sided(new_bands, old_bands, cfg)
-                ).dropDuplicates(["a", "b"])
-            cands = cands.persist()
-
+        # the batch's signatures, candidates and gathered set table are
+        # each computed once, by one checkpoint job, and released when the
+        # block exits, whether or not the batch succeeds: a caller that
+        # survives a failed batch and carries on (a retrying drain loop)
+        # would otherwise accumulate them
+        with local_checkpoints() as checkpoint:
+            new_sigs = checkpoint(banded_signatures_fused(new_pages, cfg))
+            new_bands = explode_fused_bands(new_sigs)
+            cands = checkpoint(
+                candidate_pairs_incremental(
+                    new_bands, self._read_store(self.band_store), cfg
+                )
+            )
             all_sets = new_sigs.select("doc_id", "sh")
             old_sigs = self._read_store(self.sig_store)
             if old_sigs is not None:
-                ids = cands.select(F.col("a").alias("doc_id")).unionByName(
-                    cands.select(F.col("b").alias("doc_id"))
+                ids = (
+                    cands.select(F.col("a").alias("doc_id"))
+                    .unionByName(cands.select(F.col("b").alias("doc_id")))
+                    .distinct()
                 )
-                all_sets = all_sets.unionByName(old_sigs.join(ids, "doc_id", "left_semi"))
+                all_sets = checkpoint(
+                    all_sets.unionByName(old_sigs.join(ids, "doc_id", "left_semi"))
+                )
 
             dups = jaccard_verify(cands, all_sets, cfg).withColumn(
                 "batch_id", F.lit(int(batch_id))
@@ -285,10 +295,6 @@ class IncrementalDeduper:
                     .write.mode("append")
                     .parquet(path)
                 )
-        finally:
-            for df in (cands, new_bands, new_sigs):
-                if df is not None:
-                    df.unpersist()
         if self.compact_every and (int(batch_id) + 1) % self.compact_every == 0:
             self.compact_stores()
 

@@ -4,6 +4,8 @@
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from neural_locality_sensitive_hashing_spark.config import DedupConfig
@@ -11,6 +13,7 @@ from neural_locality_sensitive_hashing_spark.functions.minhash import band_hashe
 from neural_locality_sensitive_hashing_spark.operators.candidates import (
     bucket_stats,
     candidate_pairs,
+    candidate_pairs_incremental,
 )
 
 CFG = DedupConfig(num_perm=8, num_bands=4, rows_per_band=2, bucket_pair_cap=4)
@@ -120,3 +123,89 @@ def test_grouped_equals_windowed_strategy(spark):
     got_g = {(r.a, r.b) for r in g.collect()}
     got_w = {(r.a, r.b) for r in w.collect()}
     assert got_g == got_w and len(got_g) > 0
+
+
+# -- the stream's fused pass against a pure-Python reference -------------------
+
+
+def reference_incremental_pairs(new_rows, stored_rows, cap) -> set[tuple[int, int]]:
+    """Per (band, bucket): the sorted new ids give all pairs (at most
+    ``cap`` members) or chain (i, i+1) + binary-heap tree ((i - 1) // 2,
+    i); each new id pairs with the ``cap`` lowest stored ids other than
+    itself."""
+    buckets: dict = {}
+    for side, rows in ((0, new_rows), (1, stored_rows)):
+        for doc_id, band, bucket in rows:
+            buckets.setdefault((band, bucket), ([], []))[side].append(doc_id)
+    pairs = set()
+    for new, stored in buckets.values():
+        new = sorted(new)
+        if len(new) <= cap:
+            pairs |= {(a, b) for i, a in enumerate(new) for b in new[i + 1 :]}
+        else:
+            pairs |= {(new[i], new[i + 1]) for i in range(len(new) - 1)}
+            pairs |= {(new[(i - 1) // 2], new[i]) for i in range(1, len(new))}
+        anchors = sorted(stored)[:cap]
+        pairs |= {(min(x, y), max(x, y)) for x in new for y in anchors if x != y}
+    return pairs
+
+
+def random_band_rows(rng, ids, n_buckets=12):
+    """(doc_id, band, bucket) rows: every doc gets one bucket per band,
+    drawn from a few buckets so that they collide."""
+    return [
+        (int(d), band, int(rng.integers(0, n_buckets)))
+        for d in ids
+        for band in range(CFG.num_bands)
+    ]
+
+
+def _split(rng):
+    ids = rng.choice(10**6, 80, replace=False)
+    return random_band_rows(rng, ids[:30]), random_band_rows(rng, ids[30:])
+
+
+def _overcap_new(rng):
+    new, stored = _split(rng)
+    return new + [(5_000_000 + i, 0, 99) for i in range(3 * CFG.bucket_pair_cap)], stored
+
+
+def _overcap_stored(rng):
+    new, stored = _split(rng)
+    big = [(6_000_000 - i, 1, 77) for i in range(5 * CFG.bucket_pair_cap)]
+    return new + [(6_000_000 + 1, 1, 77), (10, 1, 77)], stored + big
+
+
+def _replay(rng):
+    new, stored = _split(rng)
+    replayed = [r for r in new if r[0] == new[0][0] or r[0] == new[-1][0]]
+    return new, stored + replayed
+
+
+INCREMENTAL_CASES = {
+    "random_split": _split,
+    "overcap_new": _overcap_new,
+    "overcap_stored": _overcap_stored,
+    "replay": _replay,
+    "empty_store": lambda rng: (_split(rng)[0], None),
+}
+
+
+@pytest.mark.parametrize("case", sorted(INCREMENTAL_CASES))
+def test_incremental_matches_reference(spark, case):
+    """``candidate_pairs_incremental`` emits the reference's pair set on
+    every case; each side arrives spread over several partitions."""
+    new, stored = INCREMENTAL_CASES[case](np.random.default_rng(5))
+
+    def frame(rows):
+        pdf = pd.DataFrame(rows, columns=["doc_id", "band", "bucket"])
+        return spark.createDataFrame(pdf, "doc_id long, band int, bucket long").repartition(3)
+
+    got = candidate_pairs_incremental(
+        frame(new), None if stored is None else frame(stored), CFG
+    )
+    assert got.schema.simpleString() == "struct<a:bigint,b:bigint>"
+    rows = [tuple(r) for r in got.collect()]
+    assert len(rows) == len(set(rows))
+    want = reference_incremental_pairs(new, stored or [], CFG.bucket_pair_cap)
+    assert set(rows) == want and want

@@ -219,3 +219,46 @@ def test_all_unique_corpus_labels_itself(spark):
     kept = sorted(tuple(r) for r in keep_list(clusters).collect())
     spark.catalog.clearCache()
     assert kept == [(i, 1) for i in range(40)]
+
+
+def rdd_storage(spark) -> set[int]:
+    """Ids of the RDDs holding blocks: persisted frames AND local
+    checkpoints, which the cache manager never sees."""
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_driver_path_releases_its_checkpoint(spark):
+    """Clusters + ``clearCache()`` (what a caller looping over queries
+    does) leave no RDD storage behind: the pairs checkpoint is released
+    inside the call, not whenever the ContextCleaner gets to it."""
+    from neural_locality_sensitive_hashing_spark.config import DedupConfig
+    from neural_locality_sensitive_hashing_spark.operators.dedup import (
+        minhash_dedup_clusters,
+    )
+
+    text = " ".join(f"w{t}" for t in range(60))
+    docs = spark.createDataFrame(
+        [(i, text if i < 4 else f"{text} x{i}") for i in range(12)],
+        "doc_id long, text string",
+    )
+    before = rdd_storage(spark)
+    for _ in range(2):
+        clusters = minhash_dedup_clusters(docs, DedupConfig()).toPandas()
+        spark.catalog.clearCache()
+        assert clusters["cluster_id"].nunique() < len(clusters)  # pairs were clustered
+        assert rdd_storage(spark) <= before
+
+
+def test_propagation_keeps_only_the_returned_labels(spark, monkeypatch):
+    """Above the ceiling every round's checkpoint but the returned one is
+    released (and the pairs checkpoint); the caller frees the labels."""
+    from neural_locality_sensitive_hashing_spark.checkpoints import release
+
+    above_ceiling(monkeypatch)
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(12)], "a long, b long")
+    before = rdd_storage(spark)
+    labels = connected_components(pairs)
+    assert {r.cluster_id for r in labels.collect()} == {0}
+    assert len(rdd_storage(spark) - before) == 1
+    release(labels)
+    assert rdd_storage(spark) <= before

@@ -80,10 +80,11 @@ def test_lineage_written(spark, pipeline_env):
 
 
 def test_pipeline_with_4byte_shingles(spark, pages_1k, tmp_path_factory):
-    """Regression: the pipeline's signatures stage must not feed 4-byte
-    shingle hashes to the 64-bit SimHash kernel (crashed with 'buffer size
-    must be a multiple of element size'); with shingle_hash_bytes=4 the
-    simhash column is skipped and clusters match the 8-byte run."""
+    """The pipeline applies shingle_hash_bytes=4 to its signatures stage
+    (its snapshot's shingle sets are 4-byte hashes) and its clusters match
+    the 8-byte run's. Truncating to 32 bits re-uniques the set, so per doc
+    the 4-byte ``sh`` is at most half as many bytes as the 8-byte one; a
+    stage that ignored the width would store equal lengths."""
     pages_path, _ = pages_1k
     pages = spark.read.parquet(pages_path)
     ckpt = str(tmp_path_factory.mktemp("ckpt4"))
@@ -91,11 +92,19 @@ def test_pipeline_with_4byte_shingles(spark, pages_1k, tmp_path_factory):
     pipe4 = DedupPipeline(spark, cfg4, ckpt, input_token="pages_1k")
     clusters4, _ = pipe4.run(pages)
     m4 = _cluster_map(clusters4)
-    # the SIGNATURES snapshot (where the column would live) must skip it
-    assert "simhash" not in pipe4.catalog.read_snapshot("signatures").columns
     ckpt8 = str(tmp_path_factory.mktemp("ckpt8"))
-    clusters8, _ = DedupPipeline(spark, CFG, ckpt8, input_token="pages_1k").run(pages)
+    pipe8 = DedupPipeline(spark, CFG, ckpt8, input_token="pages_1k")
+    clusters8, _ = pipe8.run(pages)
     assert m4 == _cluster_map(clusters8)
+
+    def sh_bytes(pipe):
+        sigs = pipe.catalog.read_snapshot("signatures")
+        return {r.doc_id: len(r.sh or b"") for r in sigs.select("doc_id", "sh").collect()}
+
+    len4, len8 = sh_bytes(pipe4), sh_bytes(pipe8)
+    assert len4.keys() == len8.keys() and any(len8.values())
+    too_long = [d for d in len8 if 2 * len4[d] > len8[d]]
+    assert not too_long, f"4-byte sh over half the 8-byte length: {too_long[:5]}"
 
 
 def test_keep_list_stage_resumes_from_clusters(spark, pipeline_env):

@@ -5,6 +5,8 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
+
 from neural_locality_sensitive_hashing_spark.config import DedupConfig
 from neural_locality_sensitive_hashing_spark.operators.dedup import minhash_dup_pairs
 from neural_locality_sensitive_hashing_spark.streaming.incremental import run_incremental
@@ -206,8 +208,6 @@ def test_resume_rejects_foreign_state_dir(spark, pages_1k, tmp_path):
     without the _band_format marker (as every older engine left them) and
     stores marked with another minhash_seed raise instead of silently
     missing cross-batch pairs; a same-config resume keeps stream == batch."""
-    import pytest
-
     from neural_locality_sensitive_hashing_spark.streaming.incremental import (
         IncrementalDeduper,
     )
@@ -333,12 +333,16 @@ def test_dup_pairs_readable_when_early_batches_verify_nothing(spark, tmp_path):
     assert got == {(100, 101)}
 
 
-def test_failed_batch_releases_its_caches(spark, tmp_path, monkeypatch):
-    """A batch that raises after persisting its signatures, bands and
-    candidates unpersists all three, so a caller that survives the failure
-    and carries on does not accumulate cached plans."""
-    import pytest
+def _rdd_storage(spark) -> set[int]:
+    """Ids of the RDDs holding blocks: persisted frames AND local
+    checkpoints, which the cache manager never sees."""
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
+
+def test_failed_batch_releases_its_caches(spark, tmp_path, monkeypatch):
+    """A batch that raises after materializing its signatures, candidates
+    and gathered set table releases all three, so a caller that survives
+    the failure and carries on does not accumulate stored blocks."""
     from neural_locality_sensitive_hashing_spark.streaming import incremental
 
     def broken_verify(*args, **kwargs):
@@ -350,7 +354,63 @@ def test_failed_batch_releases_its_caches(spark, tmp_path, monkeypatch):
     )
     dedup = incremental.IncrementalDeduper(spark, CFG, str(tmp_path / "state"))
     spark.catalog.clearCache()
+    dedup.process_batch(docs.where("doc_id < 10"), 0)  # the next batch probes a store
+    before = _rdd_storage(spark)
     monkeypatch.setattr(incremental, "jaccard_verify", broken_verify)
     with pytest.raises(RuntimeError, match="verify failed"):
-        dedup.process_batch(docs, 0)
+        dedup.process_batch(docs.where("doc_id >= 10"), 1)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert _rdd_storage(spark) <= before
+
+
+def test_batches_release_their_intermediates(spark, pages_1k, tmp_path):
+    """The success-path twin: after each of 3 batches neither the cache
+    manager nor the block manager holds anything the batch made."""
+    from neural_locality_sensitive_hashing_spark.streaming.incremental import (
+        IncrementalDeduper,
+    )
+
+    pages_path, _ = pages_1k
+    pages = spark.read.parquet(pages_path)
+    dedup = IncrementalDeduper(spark, CFG, str(tmp_path / "state"))
+    spark.catalog.clearCache()
+    before = _rdd_storage(spark)
+    for i in range(3):
+        dedup.process_batch(pages.where(f"doc_id % 6 = {i}"), i)
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), i
+        assert _rdd_storage(spark) <= before, i
+    assert dedup._read_store(dedup.pair_store) is not None
+
+
+# Spark jobs of a store-probing micro-batch of ~170 docs in one scan
+# partition: sign 2 (the fan-out exchange, the kernel + checkpoint),
+# candidates 3 (the (band, bucket) exchange over new ∪ stored bands, the
+# dropDuplicates exchange, the checkpoint), gather 3 (the distinct id
+# exchange, its broadcast, the checkpoint), verify 3 (two set-table
+# broadcasts, the verify + pair append), band and signature appends 2.
+STREAM_BATCH_JOBS = 13
+
+
+@pytest.mark.parametrize("budget", [STREAM_BATCH_JOBS])
+def test_stream_batch_job_budget(spark, pages_1k, tmp_path, budget):
+    """Every per-batch intermediate is computed once: a batch that probes
+    the stores runs at most ``budget`` jobs (a rebuilt cache or a second
+    candidate pass shows up here as extra jobs)."""
+    from neural_locality_sensitive_hashing_spark.streaming.incremental import (
+        IncrementalDeduper,
+    )
+
+    pages_path, _ = pages_1k
+    pages = spark.read.parquet(pages_path)
+    dedup = IncrementalDeduper(spark, CFG, str(tmp_path / "state"))
+    sc = spark.sparkContext
+    group = f"job-budget-{tmp_path.name}"
+    for i in range(3):
+        if i == 2:
+            sc.setJobGroup(group, "third batch")
+        try:
+            dedup.process_batch(pages.where(f"doc_id % 6 = {i}"), i)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= budget, f"{len(jobs)} jobs > budget {budget}"
