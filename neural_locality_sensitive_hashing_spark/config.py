@@ -68,7 +68,10 @@ class DedupConfig:
     # batch candidate physical strategy: "grouped" = one hash-agg exchange
     # with native pair emission (default); "windowed" = round-1 rank +
     # self-join (bounded per-row memory for degenerate buckets, one extra
-    # exchange). Both emit the same pair set. A batch-only choice: the
+    # exchange). Both emit the same pair set. One 10^7-member bucket at
+    # local[4]: grouped 47.3 s, windowed 55.9 s at the default 8 GB driver
+    # heap; at 2 GB grouped runs out of heap, windowed passes in 58.1 s
+    # (candidates.py has the 10^6 numbers). A batch-only choice: the
     # stream's one pass over new + stored bands is always grouped
     # (candidates.candidate_pairs_incremental).
     pair_strategy: str = "grouped"

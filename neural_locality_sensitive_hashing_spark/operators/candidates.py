@@ -30,8 +30,15 @@ Two physical strategies (``DedupConfig.pair_strategy``):
 
 ``windowed`` — the round-1 plan (window rank + self-join). Bounded per-row
     memory (streaming window), at the cost of an extra exchange + sort and
-    three rank joins for over-cap buckets. Keep for environments where a
-    single degenerate bucket exceeds task memory.
+    three rank joins for over-cap buckets. Measured on one bucket of n
+    members (``local[4]``, 4-core host): at n = 10^6 grouped took 9.9 s
+    and windowed 15.6 s (8 GB driver heap; 12.6 / 19.4 s at 2 GB), with
+    the same 1,999,997 pairs; at n = 10^7 and the default 8 GB heap
+    grouped took 47.3 s and windowed 55.9 s (19,999,997 pairs), but at a
+    2 GB heap grouped died of ``OutOfMemoryError: Java heap space`` after
+    ~100 s while windowed passed in 58.1 s. So windowed stays: it is the
+    plan that runs a degenerate bucket larger than the heap can hold as
+    one array.
 
 The stream's micro-batches take neither: ``candidate_pairs_incremental``
 is the grouped pass over a batch's bands ∪ the stored bands, with the
@@ -177,7 +184,7 @@ def candidate_pairs_incremental(
     cfg: DedupConfig,
 ) -> DataFrame:
     """The stream's candidate pass: new×new plus new×stored pairs of a
-    micro-batch's (doc_id, band, bucket) rows against the band store
+    micro-batch's (doc_id, band, bucket) rows against the stored rows
     (``None``: an empty store), as distinct (a, b) with a < b. Old×old
     pairs are never emitted.
 

@@ -1,11 +1,8 @@
-"""Quality/efficiency metrics as first-class engine operators.
+"""Quality metrics as engine operators.
 
-The reference logs recall@K, mean candidate count, qps and bucket-size
-dispersion on every eval (``nlsh/trainers/base.py:87-108``,
-``nlsh/metrics.py:4-25``, ``nlsh/loggers.py``); here the same metrics are
-DataFrame operators whose outputs land in the checkpoint catalog's
-``_metrics`` table (sources/checkpoint.py) so every pipeline run leaves an
-auditable quality trail next to its lineage.
+The reference logs recall@K on every eval (``nlsh/metrics.py:4-25``);
+here it is a DataFrame operator, ``recall_at_k``, which the
+``ann_recall_at_k`` oracle lane calls.
 """
 
 from __future__ import annotations
@@ -40,26 +37,3 @@ def recall_at_k(
         .groupBy("query_id")
         .agg(F.round(F.count("hit") / F.lit(float(k)), 6).alias("recall"))
     )
-
-
-def mean_recall_at_k(predicted: DataFrame, golden: DataFrame, k: int) -> float:
-    """Scalar mean recall (the reference's logged ``test/recall``)."""
-    df = recall_at_k(predicted, golden, k)
-    row = df.agg(F.avg("recall")).first()
-    return float(row[0]) if row[0] is not None else 0.0
-
-
-def candidate_count_per_query(candidates: DataFrame, query_col: str = "query_id") -> DataFrame:
-    """Per-query candidate fan-out -> (query_id, n_candidates) — the
-    reference's ``test/query_size`` efficiency proxy
-    (``nlsh/trainers/base.py:98``)."""
-    return candidates.groupBy(F.col(query_col).alias("query_id")).agg(
-        F.count("*").alias("n_candidates")
-    )
-
-
-def run_metrics_rows(spark, metrics: dict[str, float], run_id: str) -> DataFrame:
-    """(metric, value, run_id) rows ready for the checkpoint catalog's
-    metrics sink — the Spark analogue of logger.log(name, value, step)."""
-    rows = [(run_id, k, float(v)) for k, v in metrics.items()]
-    return spark.createDataFrame(rows, "run_id string, metric string, value double")

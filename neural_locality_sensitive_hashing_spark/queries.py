@@ -450,8 +450,8 @@ GROUP BY cluster_id
 def q_minhash_dedup_pairs_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING content-dedup tier in the value-check lane (the
     pattern recrawl_latest_incremental proved): drain the corpus through
-    streaming/incremental.py's band-store path (one grouped candidate pass
-    over each batch's new bands and the stored bands) in three
+    streaming/incremental.py (one grouped candidate pass over each
+    batch's new bands and the bands kept in the signature store) in three
     deterministic micro-batches (split by doc_id % 3 — order-scrambling:
     a dup pair's two ends usually arrive in different batches, so most
     pairs are found as new×stored pairs of that pass, not new×new) and return the accumulated dup-pair store. The oracle is

@@ -8,41 +8,46 @@ micro-batch of newly crawled pages,
        (``banded_signatures_fused``; the bands are its
        ``explode_fused_bands`` projection),
     2. candidate-generate new×new AND new×old in ONE grouped pass over
-       the new bands ∪ the accumulated BAND STORE
+       the new bands ∪ the stored bands, i.e. the ``explode_fused_bands``
+       projection of the signature store's ``bands`` column
        (``candidate_pairs_incremental``: hash-partitioned on (band,
        bucket), the stored side ranked and capped at
        ``bucket_pair_cap`` per bucket) — old×old is never emitted;
        per-batch pair work is O(new×new + new×cap), not O(total²),
     3. gather the candidates' shingle sets (the new ones plus a left-semi
-       join of the signature store on the candidates' distinct ids),
-       exact-verify and append to the dup_pairs store (tagged batch_id),
-    4. append new bands and new signatures to their stores.
+       join of the signature store's (doc_id, sh) on the candidates'
+       distinct ids), exact-verify and append to the dup_pairs store
+       (tagged batch_id),
+    4. append the new signatures, bands included, to the signature store.
 
 The batch's signatures, candidates and gathered set table are each
 computed once, by the one job of a ``localCheckpoint`` (after the shuffle
 stages feeding it) that every later reader reuses; all three are released
 when the batch ends, on success and on failure
-(``checkpoints.local_checkpoints``). A store-probing batch runs 13 Spark
+(``checkpoints.local_checkpoints``). A store-probing batch runs 12 Spark
 jobs: sign 2, candidates 3, gather 3, verify + pair append 3 (two of them
-broadcasts), band and signature appends 2.
+broadcasts), signature append 1.
 
 State lives in parquet stores (Iceberg-style append tables), not in Spark's
 operator state — so the stream can restart from its checkpoint.
 
-State-store layout: three FLAT parquet directories, no ``partitionBy``,
+State-store layout: two FLAT parquet directories, no ``partitionBy``,
 each kept sorted by its key —
 
     dup_pairs/  (a, b, jaccard, batch_id)  sorted by a
-    bands/      (band, bucket, doc_id)     sorted by bucket
-    signatures/ (doc_id, sh)               sorted by doc_id
+    signatures/ (doc_id, sh, bands)        sorted by doc_id
 
-A batch appends its rows to each store sorted within the partitions they
-already have: no extra exchange, at most ``spark.sql.shuffle.partitions``
-files per append (the parallelism the batch's signatures fan out to).
-Per batch the stream reads the WHOLE band store (it enters the candidate
-pass's one exchange beside the new bands) and the signature store through
-a left-semi join on the candidates' distinct ids; each read runs inside the job that checkpoints its step, so
-the stores add no driver round trip of their own.
+A doc's bands sit beside its set, so one append stores both: no window in
+which a doc's bands are stored but its set is not. A batch appends its
+rows to each store sorted within the partitions they already have: no
+extra exchange, at most ``spark.sql.shuffle.partitions`` files per append
+(the parallelism the batch's signatures fan out to). Per batch the stream
+reads the signature store once, as one frame with two readers: the
+candidate pass scans its WHOLE (doc_id, bands) columns (parquet prunes
+``sh``; the exploded rows enter the pass's one exchange beside the new
+bands), and the gather scans its (doc_id, sh) columns through a left-semi
+join on the candidates' distinct ids. Each scan runs inside the job that
+checkpoints its step, so the store adds no driver round trip of its own.
 
 Why flat: the layout used to split the stores into 64/16/16 ``pmod`` hash
 directories and prune them with two driver ``distinct().collect()``
@@ -56,10 +61,12 @@ min/max statistics useful for any selective reader.
 
 The stored bands are only comparable with bands from the same band-hash
 family and signature config, so ``IncrementalDeduper`` writes a one-line
-``<state_dir>/_band_format`` marker naming both, and refuses (ValueError)
-to resume over stores whose marker is absent or differs: a mismatch would
-not fail, it would silently miss every cross-batch pair. Such a state_dir
-has to be re-ingested.
+``<state_dir>/_band_format`` marker naming both and the store layout, and
+refuses (ValueError) to resume over stores whose marker is absent or
+differs: a mismatch would not fail, it would silently miss every
+cross-batch pair (a state_dir of the three-store layout, with its bands
+in a ``bands/`` store, would be read with no stored bands at all). Such a
+state_dir has to be re-ingested.
 
 ``compact_parquet_store`` is the periodic maintenance action (Iceberg's
 `rewrite_data_files`): it rewrites a store into ceil(store bytes ÷
@@ -110,8 +117,7 @@ PAGES_SCHEMA = (
 # to infer it.
 STORES = (
     ("dup_pairs", "a", "a bigint, b bigint, jaccard double, batch_id int"),
-    ("bands", "bucket", "band int, bucket bigint, doc_id bigint"),
-    ("signatures", "doc_id", "doc_id bigint, sh binary"),
+    ("signatures", "doc_id", "doc_id bigint, sh binary, bands array<bigint>"),
 )
 
 
@@ -120,13 +126,17 @@ def _columns(schema: str) -> list[str]:
 
 
 def _band_format(cfg: DedupConfig) -> str:
-    """The ``_band_format`` marker line: the band-hash family and the
+    """The ``_band_format`` marker line: the band-hash family, the store
+    layout (``sig_bands``: the bands stored beside each set, in the
+    signature store, not in a ``bands/`` store of their own) and the
     DedupConfig fields that decide the stored bands and shingle sets."""
     fields = (
         "shingle_k", "num_perm", "minhash_seed", "num_bands", "rows_per_band",
         "shingle_hash_bytes",
     )
-    return "band_hashes_numpy " + " ".join(f"{f}={getattr(cfg, f)}" for f in fields)
+    return "band_hashes_numpy layout=sig_bands " + " ".join(
+        f"{f}={getattr(cfg, f)}" for f in fields
+    )
 
 
 def compact_parquet_store(
@@ -206,7 +216,7 @@ def recover_store(path: str) -> None:
 
 
 class IncrementalDeduper:
-    """foreachBatch sink: maintains signature + band + dup-pair stores."""
+    """foreachBatch sink: maintains the signature and dup-pair stores."""
 
     def __init__(
         self,
@@ -222,7 +232,7 @@ class IncrementalDeduper:
         self.stores = {
             os.path.join(state_dir, name): (key, schema) for name, key, schema in STORES
         }
-        self.pair_store, self.band_store, self.sig_store = self.stores
+        self.pair_store, self.sig_store = self.stores
         marker = Path(state_dir, "_band_format")
         want = _band_format(cfg)
         have = marker.read_text().strip() if marker.exists() else None
@@ -259,14 +269,17 @@ class IncrementalDeduper:
         # would otherwise accumulate them
         with local_checkpoints() as checkpoint:
             new_sigs = checkpoint(banded_signatures_fused(new_pages, cfg))
-            new_bands = explode_fused_bands(new_sigs)
+            # one store read: the candidate pass reads its (doc_id, bands)
+            # columns, the gather its (doc_id, sh) columns
+            old_sigs = self._read_store(self.sig_store)
             cands = checkpoint(
                 candidate_pairs_incremental(
-                    new_bands, self._read_store(self.band_store), cfg
+                    explode_fused_bands(new_sigs),
+                    None if old_sigs is None else explode_fused_bands(old_sigs),
+                    cfg,
                 )
             )
             all_sets = new_sigs.select("doc_id", "sh")
-            old_sigs = self._read_store(self.sig_store)
             if old_sigs is not None:
                 ids = (
                     cands.select(F.col("a").alias("doc_id"))
@@ -274,7 +287,9 @@ class IncrementalDeduper:
                     .distinct()
                 )
                 all_sets = checkpoint(
-                    all_sets.unionByName(old_sigs.join(ids, "doc_id", "left_semi"))
+                    all_sets.unionByName(
+                        old_sigs.select("doc_id", "sh").join(ids, "doc_id", "left_semi")
+                    )
                 )
 
             dups = jaccard_verify(cands, all_sets, cfg).withColumn(
@@ -285,9 +300,7 @@ class IncrementalDeduper:
             # come out of a join streamed over new + old sets, with more
             # partitions, and coalesce merges those without an exchange
             parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-            for df, (path, (key, schema)) in zip(
-                (dups, new_bands, new_sigs), self.stores.items()
-            ):
+            for df, (path, (key, schema)) in zip((dups, new_sigs), self.stores.items()):
                 (
                     df.select(*_columns(schema))
                     .coalesce(parts)

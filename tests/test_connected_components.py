@@ -128,10 +128,11 @@ def reference_labels(edges) -> dict[int, int]:
 
 def chain_tree(ids) -> list[tuple[int, int]]:
     """The over-cap bucket shape of operators/candidates.py: over the
-    sorted members, chain (i, i+1) plus tree (i // 2, i)."""
+    sorted members, chain (i, i+1) plus binary-heap tree ((i - 1) // 2, i)
+    (the 0-based form of its 1-based floor(i / 2))."""
     ids = sorted(ids)
     chain = [(ids[i], ids[i + 1]) for i in range(len(ids) - 1)]
-    tree = [(ids[i // 2], ids[i]) for i in range(1, len(ids))]
+    tree = [(ids[(i - 1) // 2], ids[i]) for i in range(1, len(ids))]
     return chain + tree
 
 

@@ -1,12 +1,8 @@
-"""recall_at_k / candidate-count operators + the checkpoint metrics sink."""
+"""The recall_at_k operator + the checkpoint metrics sink."""
 
 from __future__ import annotations
 
-from neural_locality_sensitive_hashing_spark.operators.metrics import (
-    candidate_count_per_query,
-    mean_recall_at_k,
-    recall_at_k,
-)
+from neural_locality_sensitive_hashing_spark.operators.metrics import recall_at_k
 
 
 def test_recall_at_k_golden(spark):
@@ -21,15 +17,6 @@ def test_recall_at_k_golden(spark):
     )
     got = {r.query_id: r.recall for r in recall_at_k(pred, golden, k=3).collect()}
     assert got == {1: 1.0, 2: 0.333333, 3: 0.0}
-    assert abs(mean_recall_at_k(pred, golden, k=3) - (1.0 + 0.333333 + 0.0) / 3) < 1e-6
-
-
-def test_candidate_count_per_query(spark):
-    cands = spark.createDataFrame(
-        [(1, 5), (1, 6), (2, 5)], "query_id long, neighbor_id long"
-    )
-    got = {r.query_id: r.n_candidates for r in candidate_count_per_query(cands).collect()}
-    assert got == {1: 2, 2: 1}
 
 
 def test_pipeline_writes_metrics_table(spark, pages_1k, tmp_path):

@@ -115,7 +115,7 @@ def test_store_compaction_bounds_files_and_preserves_output(spark, pages_1k, tmp
     pages_path, _ = pages_1k
     pages = spark.read.parquet(pages_path)
     dedup = IncrementalDeduper(spark, CFG, str(tmp_path / "state"))
-    stores = (dedup.band_store, dedup.sig_store, dedup.pair_store)
+    stores = (dedup.sig_store, dedup.pair_store)
 
     # drive 3 batches directly (same path foreachBatch takes)
     for i in range(3):
@@ -127,7 +127,7 @@ def test_store_compaction_bounds_files_and_preserves_output(spark, pages_1k, tmp
     before_pairs = sorted(
         (r.a, r.b, r.jaccard) for r in dedup.dup_pairs().collect()
     )
-    n_before = len(_data_files(dedup.band_store))
+    n_before = len(_data_files(dedup.sig_store))
     assert n_before >= 3  # at least one per batch
 
     expect = {s: _compacted_file_count(spark, s) for s in stores}
@@ -136,7 +136,7 @@ def test_store_compaction_bounds_files_and_preserves_output(spark, pages_1k, tmp
     # bounded: ceil(bytes ÷ maxPartitionBytes) files per store — one here
     for s in stores:
         assert len(_data_files(s)) == expect[s] == 1, s
-    assert len(_data_files(dedup.band_store)) < n_before
+    assert len(_data_files(dedup.sig_store)) < n_before
 
     # outputs unchanged after the rewrite
     after_pairs = sorted((r.a, r.b, r.jaccard) for r in dedup.dup_pairs().collect())
@@ -145,16 +145,16 @@ def test_store_compaction_bounds_files_and_preserves_output(spark, pages_1k, tmp
     # a store larger than maxPartitionBytes splits into key ranges: every
     # file is sorted on the key and the files' ranges do not overlap
     prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    band_bytes = sum(os.path.getsize(f) for f in _data_files(dedup.band_store))
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(band_bytes // 3 + 1))
+    sig_bytes = sum(os.path.getsize(f) for f in _data_files(dedup.sig_store))
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(sig_bytes // 3 + 1))
     try:
-        n_max = _compacted_file_count(spark, dedup.band_store)
+        n_max = _compacted_file_count(spark, dedup.sig_store)
         dedup.compact_stores()
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
     ranges = []
-    for f in _data_files(dedup.band_store):
-        keys = pq.read_table(f, columns=["bucket"]).column("bucket").to_pylist()
+    for f in _data_files(dedup.sig_store):
+        keys = pq.read_table(f, columns=["doc_id"]).column("doc_id").to_pylist()
         assert keys == sorted(keys), f
         ranges.append((keys[0], keys[-1]))
     ranges.sort()
@@ -193,9 +193,9 @@ def test_compaction_crash_window_recovers(spark, pages_1k, tmp_path):
     assert got is not None, "store not recovered from .compact.old"
     assert got.count() == n_sigs
     # and compaction itself also heals before rewriting
-    os.rename(dedup.band_store, dedup.band_store + ".compact.old")
+    os.rename(dedup.sig_store, dedup.sig_store + ".compact.old")
     dedup.compact_stores()
-    assert dedup._read_store(dedup.band_store).count() > 0
+    assert dedup._read_store(dedup.sig_store).count() == n_sigs
     # dup_pairs() reads route through the same recovery (a crash between
     # the pair-store renames must not strand the accumulated pairs)
     n_pairs = dedup.dup_pairs().count()
@@ -203,11 +203,42 @@ def test_compaction_crash_window_recovers(spark, pages_1k, tmp_path):
     assert dedup.dup_pairs().count() == n_pairs
 
 
+def test_state_dir_holds_two_stores_with_kernel_bands(spark, pages_1k, tmp_path):
+    """The state_dir holds the pair store and the signature store only; the
+    signature store keeps each doc's kernel bands beside its set, before
+    and after a compaction (which keeps only the schema's columns)."""
+    from neural_locality_sensitive_hashing_spark.operators.dedup import (
+        banded_signatures_fused,
+    )
+    from neural_locality_sensitive_hashing_spark.streaming.incremental import (
+        IncrementalDeduper,
+    )
+
+    pages_path, _ = pages_1k
+    pages = spark.read.parquet(pages_path)
+    state = tmp_path / "state"
+    dedup = IncrementalDeduper(spark, CFG, str(state))
+    for i in range(2):
+        dedup.process_batch(pages.where(f"doc_id % 4 = {i}"), i)
+    assert sorted(p.name for p in state.iterdir() if p.is_dir()) == [
+        "dup_pairs", "signatures",
+    ]
+
+    want = banded_signatures_fused(pages.where("doc_id % 4 < 2"), CFG)
+    want = sorted((r.doc_id, bytes(r.sh), tuple(r.bands)) for r in want.collect())
+    assert len(want) == 500
+    for _ in range(2):
+        got = dedup._read_store(dedup.sig_store).collect()
+        assert sorted((r.doc_id, bytes(r.sh), tuple(r.bands)) for r in got) == want
+        dedup.compact_stores()
+
+
 def test_resume_rejects_foreign_state_dir(spark, pages_1k, tmp_path):
     """A deduper resumes only over stores its own band format wrote: stores
-    without the _band_format marker (as every older engine left them) and
-    stores marked with another minhash_seed raise instead of silently
-    missing cross-batch pairs; a same-config resume keeps stream == batch."""
+    without the _band_format marker (as every older engine left them),
+    stores of the three-store layout and stores marked with another
+    minhash_seed raise instead of silently missing cross-batch pairs; a
+    same-config resume keeps stream == batch."""
     from neural_locality_sensitive_hashing_spark.streaming.incremental import (
         IncrementalDeduper,
     )
@@ -224,6 +255,14 @@ def test_resume_rejects_foreign_state_dir(spark, pages_1k, tmp_path):
         IncrementalDeduper(spark, CFG, state)
     assert state in str(e.value)
 
+    # the three-store layout: its marker line had no layout token, and its
+    # bands sat in a bands/ store that this layout would never read
+    marker.write_text(line.replace(" layout=sig_bands", ""))
+    (tmp_path / "state" / "bands").mkdir()
+    with pytest.raises(ValueError, match="re-ingest"):
+        IncrementalDeduper(spark, CFG, state)
+    (tmp_path / "state" / "bands").rmdir()
+
     marker.write_text(line)
     with pytest.raises(ValueError, match="minhash_seed=42"):
         IncrementalDeduper(spark, DedupConfig(minhash_seed=7), state)
@@ -237,7 +276,7 @@ def test_resume_rejects_foreign_state_dir(spark, pages_1k, tmp_path):
 
 
 def test_stream_and_pipeline_band_like_batch(spark, pages_1k, tmp_path):
-    """The stream's band store and the pipeline's candidates come from the
+    """The stream's stored bands and the pipeline's candidates come from the
     batch kernel's bands (banded_signatures_fused -> explode_fused_bands),
     not from a second band-hash family."""
     from neural_locality_sensitive_hashing_spark.operators.candidates import (
@@ -258,7 +297,9 @@ def test_stream_and_pipeline_band_like_batch(spark, pages_1k, tmp_path):
 
     dedup = IncrementalDeduper(spark, CFG, str(tmp_path / "state"))
     dedup.process_batch(pages, 0)
-    stored = dedup._read_store(dedup.band_store).select("band", "bucket", "doc_id")
+    stored = explode_fused_bands(dedup._read_store(dedup.sig_store)).select(
+        "band", "bucket", "doc_id"
+    )
     want = bands.select("band", "bucket", "doc_id")
     assert sorted(map(tuple, stored.collect())) == sorted(map(tuple, want.collect()))
 
@@ -283,7 +324,7 @@ def test_compact_every_auto_trigger(spark, pages_1k, tmp_path):
     dedup = IncrementalDeduper(
         spark, CFG, str(tmp_path / "state"), compact_every=2
     )
-    stores = (dedup.band_store, dedup.sig_store, dedup.pair_store)
+    stores = (dedup.sig_store, dedup.pair_store)
     for i in range(4):
         before = {s: len(_data_files(s)) for s in stores}
         dedup.process_batch(pages.where(f"doc_id % 4 = {i}"), i)
@@ -387,8 +428,8 @@ def test_batches_release_their_intermediates(spark, pages_1k, tmp_path):
 # candidates 3 (the (band, bucket) exchange over new ∪ stored bands, the
 # dropDuplicates exchange, the checkpoint), gather 3 (the distinct id
 # exchange, its broadcast, the checkpoint), verify 3 (two set-table
-# broadcasts, the verify + pair append), band and signature appends 2.
-STREAM_BATCH_JOBS = 13
+# broadcasts, the verify + pair append), the signature append 1.
+STREAM_BATCH_JOBS = 12
 
 
 @pytest.mark.parametrize("budget", [STREAM_BATCH_JOBS])
