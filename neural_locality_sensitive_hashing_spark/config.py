@@ -71,9 +71,9 @@ class DedupConfig:
     # exchange). Both emit the same pair set. One 10^7-member bucket at
     # local[4]: grouped 47.3 s, windowed 55.9 s at the default 8 GB driver
     # heap; at 2 GB grouped runs out of heap, windowed passes in 58.1 s
-    # (candidates.py has the 10^6 numbers). A batch-only choice: the
-    # stream's one pass over new + stored bands is always grouped
-    # (candidates.candidate_pairs_incremental).
+    # (candidates.py has the 10^6 numbers). A batch-only choice: grouped
+    # is the stream's pass (candidates.candidate_pairs_incremental) with
+    # no stored bands, and the stream always takes it.
     pair_strategy: str = "grouped"
 
     # connected components: label-propagation round budget, used only

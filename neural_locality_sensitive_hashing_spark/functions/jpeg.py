@@ -1,8 +1,8 @@
 """Pure-python/numpy baseline JPEG (ITU-T T.81) codec.
 
-Retires the last `_fake_decode` surface in functions/multimodal.py: with
-this module, MJPEG frames demuxed out of MP4 containers — and standalone
-JFIF image payloads — get a REAL pixel decode with no PIL/libav.
+Standalone: no engine module imports it, only ``tests/test_jpeg.py``. It
+is the last piece of the media decode tier, which is outside the dedup
+path, and is deleted next.
 
 Scope (the baseline process, which is what MJPEG uses):
 
@@ -10,8 +10,7 @@ Scope (the baseline process, which is what MJPEG uses):
   components, any 1-2 sampling factors (4:4:4, 4:2:2, 4:2:0), restart
   markers (DRI/RSTn), 8- or 16-bit quantization tables, single
   interleaved scan. Progressive (SOF2), arithmetic coding, 12-bit, and
-  hierarchical modes return None — the caller's stub tier stays the
-  observable fallback, never a silent wrong decode.
+  hierarchical modes return None, never a silent wrong decode.
 - encode: baseline JFIF writer (the deterministic test/datagen inverse):
   IJG-style quality-scaled Annex K quantization tables, per-image
   OPTIMAL canonical Huffman tables derived with the spec's own
@@ -22,8 +21,7 @@ Scope (the baseline process, which is what MJPEG uses):
 Everything here is from the public JPEG spec; decode totality (any
 byte string → ndarray or None, never an exception) is fuzz-tested in
 tests/test_jpeg.py. Reference parity note: the reference engine has no
-media codecs at all — this module exists for the engine's multimodal
-columns (SURVEY.md §2.13), not for reference parity.
+media codecs at all.
 """
 
 from __future__ import annotations

@@ -26,7 +26,9 @@ Two physical strategies (``DedupConfig.pair_strategy``):
     chain the shard minima — same connectivity, rows capped at
     bucket_size/n_salt). Replaces the round-1 windowed plan after it
     measured as the worst-scaling stage (window sort + self-join = two
-    exchanges + a sort vs one agg exchange).
+    exchanges + a sort vs one agg exchange). It is the stream's pass,
+    ``candidate_pairs_incremental``, with no stored side: batch and
+    stream share one pair emission.
 
 ``windowed`` — the round-1 plan (window rank + self-join). Bounded per-row
     memory (streaming window), at the cost of an extra exchange + sort and
@@ -40,9 +42,9 @@ Two physical strategies (``DedupConfig.pair_strategy``):
     plan that runs a degenerate bucket larger than the heap can hold as
     one array.
 
-The stream's micro-batches take neither: ``candidate_pairs_incremental``
-is the grouped pass over a batch's bands ∪ the stored bands, with the
-stored side of each bucket rank-capped by a window on the same exchange.
+The stream's micro-batches always take the grouped pass, over a batch's
+bands ∪ the stored bands, with the stored side of each bucket rank-capped
+by a window on the same exchange.
 """
 
 from __future__ import annotations
@@ -94,25 +96,7 @@ def candidate_pairs(
     """(doc_id, band, bucket) -> distinct candidate (a, b) with a < b."""
     if cfg.pair_strategy == "windowed":
         return _candidate_pairs_windowed(bands, cfg)
-    return _candidate_pairs_grouped(bands, cfg)
-
-
-def _candidate_pairs_grouped(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """One exchange: hash-agg to sorted member arrays, emit pairs natively.
-
-    CASE branches are evaluated lazily per row, so a mega-bucket never
-    materializes its O(s²) all-pairs array — only the O(s) chain+tree.
-    """
-    cap = cfg.bucket_pair_cap
-    grouped = (
-        bands.groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .where(F.size("ids") >= 2)
-    )
-    pairs_arr = F.expr(
-        f"CASE WHEN size(ids) <= {cap} THEN {_ALL_PAIRS} ELSE {_CHAIN_TREE_PAIRS} END"
-    )
-    return grouped.select(F.inline(pairs_arr)).dropDuplicates(["a", "b"])
+    return candidate_pairs_incremental(bands, None, cfg)
 
 
 def _candidate_pairs_windowed(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -185,8 +169,9 @@ def candidate_pairs_incremental(
 ) -> DataFrame:
     """The stream's candidate pass: new×new plus new×stored pairs of a
     micro-batch's (doc_id, band, bucket) rows against the stored rows
-    (``None``: an empty store), as distinct (a, b) with a < b. Old×old
-    pairs are never emitted.
+    (``None``: an empty store, which is the batch's grouped
+    ``candidate_pairs``), as distinct (a, b) with a < b. Old×old pairs
+    are never emitted.
 
     ONE pass, hash-partitioned on (band, bucket) over new ∪ stored rows:
     a window ranks each bucket's stored members by doc_id and keeps the
@@ -194,8 +179,9 @@ def candidate_pairs_incremental(
     the window's exchange, and one ``dropDuplicates`` ends the pass. Per
     bucket it emits
 
-    * new×new exactly as ``candidate_pairs`` does: all pairs up to
-      ``bucket_pair_cap`` members, chain+tree above;
+    * new×new: all pairs up to ``bucket_pair_cap`` members, chain+tree
+      above (CASE arms are evaluated lazily per row, so a mega-bucket
+      never materializes its O(s²) all-pairs array);
     * new × the kept stored ids, skipping a stored id equal to the new
       one (a replayed doc).
 

@@ -21,7 +21,9 @@ exact distance → top-k, ``nlsh/indexer.py:56-96``) in DataFrame form:
 - ``embedding_dup_pairs``: embedding-cosine near-duplicate PAIRS (the J2
   self-join flavor): LSH-bucketed candidates + exact-cosine verify by
   default; an explicitly size-gated broadcast-matmul fast path for small
-  dimension tables (never a driver ``collect`` in the default plan).
+  dimension tables. Both gate on the table's bytes
+  (``_BCAST_MAX_BYTES``), never on its row count, and collect through
+  Arrow; past the gate the LSH plan has no driver collect.
 
 Shuffle discipline: band explodes carry (id, band, bucket) ONLY — vectors
 are gathered back by a join AFTER candidate pairs are deduped (the J3
@@ -618,6 +620,32 @@ def lsh_bucket_self_join(ec: DataFrame) -> DataFrame:
     )
 
 
+# Broadcast gate of both embedding dup-pair plans: a table whose ids and
+# float64 vectors (8 B each) fit in this many bytes is collected to the
+# driver and broadcast. 1 GiB admits what a 2M-row gate admitted at 64
+# dims (2M × (1 + 64) × 8 B ≈ 0.97 GiB).
+_BCAST_MAX_BYTES = 1 << 30
+
+
+def _table_bytes(emb: DataFrame, vec_col: str) -> int:
+    """Bytes of ``emb``'s ids and vectors as int64 / float64, from one
+    aggregate job (the cost of a ``count()``)."""
+    n, elems = emb.agg(F.count(F.lit(1)), F.sum(F.size(vec_col))).first()
+    return 8 * (n + (elems or 0))
+
+
+def _collect_matrix(emb: DataFrame, id_col: str, vec_col: str):
+    """``emb`` -> (ids ascending, float64 matrix whose row i is ids[i]'s
+    vector), collected through Arrow with no per-row Python."""
+    tbl = emb.select(id_col, vec_col).toArrow()
+    ids = tbl.column(0).to_numpy().astype(np.int64, copy=False)
+    if len(ids) == 0:  # no offsets to read a width from
+        return ids, np.zeros((0, 0))
+    mat = _list_col_matrix(tbl.column(1).combine_chunks())
+    order = np.argsort(ids, kind="stable")
+    return ids[order], mat[order]
+
+
 def _make_pair_cosine_bcast_arrow(b_ids, b_mat, keep_above: float):
     """mapInArrow kernel factory: (a, b) pair batches -> (a, b, cosine_raw)
     for pairs with cosine_raw >= ``keep_above``, looking both vectors up in
@@ -667,7 +695,6 @@ def embedding_dup_pairs_lsh(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_bands: int = 32,
-    broadcast_verify_max_rows: int = 2_000_000,
 ) -> DataFrame:
     """All pairs with cosine >= tau via hyperplane-LSH self-join + exact
     verify. The default 100 TB plan: no crossJoin; past the broadcast gate
@@ -683,8 +710,8 @@ def embedding_dup_pairs_lsh(
     Physical verify strategy is SIZE-GATED (r10, guide §3.2/§8 "decide
     with small rows, broadcast what fits" — the same gate class as
     ``embedding_dup_pairs_broadcast`` and the decontam broadcast): when the
-    table is within ``broadcast_verify_max_rows`` (≤ ~1 GB of float64
-    matrix at 64 dims), the id->vector matrix is broadcast once and the
+    table's ids and float64 vectors fit in ``_BCAST_MAX_BYTES`` (1 GiB),
+    the id->vector matrix is broadcast once and the
     verify is ONE shuffle-free mapInArrow lookup over the deduped
     candidate pairs — the two per-pair vector gather joins (which shipped
     ~1 KB of vectors per candidate through Arrow) disappear, and the tiny
@@ -708,12 +735,9 @@ def embedding_dup_pairs_lsh(
 
     ec = emb.select(F.col(id_col).alias("doc_id"), F.explode(udf(F.col(vec_col))).alias("bucket"))
 
-    if broadcast_verify_max_rows and emb.count() <= broadcast_verify_max_rows:
+    if _table_bytes(emb, vec_col) <= _BCAST_MAX_BYTES:
         spark = emb.sparkSession
-        rows = emb.select(id_col, vec_col).collect()
-        order = np.argsort(np.array([r[0] for r in rows], dtype=np.int64), kind="stable")
-        ids = np.array([rows[i][0] for i in order], dtype=np.int64)
-        mat = np.array([list(rows[i][1]) for i in order], dtype=np.float64)
+        ids, mat = _collect_matrix(emb, id_col, vec_col)
         b_ids = spark.sparkContext.broadcast(ids)
         b_mat = spark.sparkContext.broadcast(mat)
         # a small table reads as 1-2 scan partitions, which would run the
@@ -769,24 +793,22 @@ def embedding_dup_pairs_broadcast(
     tau: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    small_side_max_rows: int = 2_000_000,
 ) -> DataFrame:
     """Size-gated broadcast-matmul fast path for SMALL dimension tables:
-    the table is collected once to the driver (gate-checked), broadcast as
-    one L2-normalized matrix, and each Arrow batch does a single
+    the table is collected once to the driver through Arrow when its ids
+    and float64 vectors fit in ``_BCAST_MAX_BYTES``, broadcast as one
+    L2-normalized matrix, and each Arrow batch does a single
     (batch × dim) @ (dim × N) matmul; pair emission is a whole-matrix
     ``np.nonzero`` (no per-row Python loop). Raises if the gate trips —
     the LSH plan above is the large-table path."""
     spark = emb.sparkSession
-    n = emb.count()
-    if n > small_side_max_rows:
+    nbytes = _table_bytes(emb, vec_col)
+    if nbytes > _BCAST_MAX_BYTES:
         raise ValueError(
-            f"broadcast path gated at {small_side_max_rows} rows, got {n}; "
+            f"broadcast path gated at {_BCAST_MAX_BYTES} bytes, got {nbytes}; "
             "use embedding_dup_pairs_lsh"
         )
-    rows = emb.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    m = np.array([list(r[1]) for r in rows], dtype=np.float64)
+    ids, m = _collect_matrix(emb, id_col, vec_col)
     m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-300)
     b_ids = spark.sparkContext.broadcast(ids)
     b_m = spark.sparkContext.broadcast(m)

@@ -56,7 +56,7 @@ WET_SCHEMA = (
 
 
 # ---------------------------------------------------------------------------
-# encode (test/datagen inverse, like encode_jpeg / encode_wav / encode_mp4)
+# encode (the test/datagen inverse of the reader)
 # ---------------------------------------------------------------------------
 
 

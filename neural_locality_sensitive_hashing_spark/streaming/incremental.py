@@ -312,16 +312,17 @@ class IncrementalDeduper:
             self.compact_stores()
 
     def dup_pairs(self) -> DataFrame:
-        # _read_store heals an interrupted compaction swap before reading —
-        # every store read must route through it, or a crash between the
-        # compaction renames leaves dup_pairs() failing on a missing path
-        # while the data sits intact under <path>.compact.old.
-        store = self._read_store(self.pair_store)
-        if store is None:
-            raise FileNotFoundError(self.pair_store)
-        return store.select("a", "b", "jaccard").dropDuplicates(["a", "b"])
+        return (
+            self.dup_pairs_with_batch()
+            .select("a", "b", "jaccard")
+            .dropDuplicates(["a", "b"])
+        )
 
     def dup_pairs_with_batch(self) -> DataFrame:
+        # _read_store heals an interrupted compaction swap before reading —
+        # every store read must route through it, or a crash between the
+        # compaction renames leaves this failing on a missing path while
+        # the data sits intact under <path>.compact.old.
         store = self._read_store(self.pair_store)
         if store is None:
             raise FileNotFoundError(self.pair_store)

@@ -160,62 +160,3 @@ def test_canonical_url_idempotent_and_order_free(
     )
     assert c2 == c1, (url, c1, c2)  # idempotent
     assert c3 == c1, (url, url_rev, c1, c3)  # order-free
-
-
-@given(st.binary(min_size=0, max_size=512))
-@settings(max_examples=200, deadline=None)
-def test_parse_mp4_never_raises_on_junk(payload):
-    """parse_mp4 over arbitrary bytes: returns a dict or None, never
-    raises — the bounds-hardening contract for crafted/corrupt inputs."""
-    from neural_locality_sensitive_hashing_spark.functions import codecs
-
-    info = codecs.parse_mp4(payload)
-    assert info is None or isinstance(info, dict)
-    if info is not None:
-        # and frame sampling over whatever survived is also total
-        assert isinstance(codecs.sample_video_frames(payload, info), list)
-
-
-@given(st.binary(min_size=0, max_size=256), st.integers(0, 40))
-@settings(max_examples=100, deadline=None)
-def test_parse_mp4_never_raises_on_mutated_valid(prefix, cut):
-    """Truncations/mutations of a VALID container (the harder fuzz
-    surface: plausible box headers with wrong interiors) stay total."""
-    from neural_locality_sensitive_hashing_spark.functions import codecs
-
-    base = codecs.encode_mp4([b"abc" * 10, b"xyz" * 7], 32, 32)
-    mutated = base[: len(base) - cut] + prefix
-    info = codecs.parse_mp4(mutated)
-    if info is not None:
-        assert isinstance(codecs.sample_video_frames(mutated, info), list)
-
-
-@given(st.binary(min_size=0, max_size=512))
-@settings(max_examples=200, deadline=None)
-def test_png_wav_decoders_total_on_junk(payload):
-    """decode_png_pixels / decode_wav_samples over arbitrary bytes: a
-    decoded value or None, never an exception (the same crafted-input
-    totality contract as parse_mp4)."""
-    from neural_locality_sensitive_hashing_spark.functions import codecs
-
-    px = codecs.decode_png_pixels(payload)
-    assert px is None or px.ndim == 3
-    wav = codecs.decode_wav_samples(payload)
-    assert wav is None or (len(wav) == 2 and wav[0].ndim == 2)
-
-
-@given(st.binary(min_size=0, max_size=128), st.integers(0, 60))
-@settings(max_examples=100, deadline=None)
-def test_png_wav_decoders_total_on_mutated_valid(tail, cut):
-    """Truncations/mutations of VALID PNG/WAV payloads stay total."""
-    import numpy as np
-
-    from neural_locality_sensitive_hashing_spark.functions import codecs
-
-    rng = np.random.default_rng(5)
-    png = codecs.encode_png(rng.integers(0, 256, (8, 6, 3), dtype=np.uint8))
-    wav = codecs.encode_wav(rng.standard_normal((200, 1)) * 0.2, rate=8000)
-    for base in (png, wav):
-        mutated = base[: len(base) - cut] + tail
-        codecs.decode_png_pixels(mutated)
-        codecs.decode_wav_samples(mutated)

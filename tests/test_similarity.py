@@ -99,6 +99,7 @@ def test_knn_rank_and_dedup(spark, vectors):
     per_q = {}
     for r in nn:
         per_q.setdefault(r.query_id, []).append(r)
+    assert sorted(per_q) == [0, 1, 2, 3, 4]  # k rows for every query
     for qid, rows in per_q.items():
         assert len(rows) == 10
         assert sorted(r.rank for r in rows) == list(range(1, 11))
@@ -150,6 +151,34 @@ def test_fast_path_equals_lsh_path(spark):
     assert len(lsh) > 0
     for k in lsh:
         assert repr(lsh[k]) == repr(fast[k]), (k, lsh[k], fast[k])
+
+
+def test_embedding_broadcast_gate_counts_bytes(spark, vectors, monkeypatch):
+    """Both embedding dup-pair plans gate their driver collect on the
+    table's bytes (ids and vectors as 8-byte values): with the ceiling one
+    byte under the table, the LSH plan takes the join path, with no
+    collect and the same rows, and the broadcast plan refuses."""
+    from neural_locality_sensitive_hashing_spark.operators import similarity as S
+
+    collects = []
+    collect_matrix = S._collect_matrix
+    monkeypatch.setattr(
+        S, "_collect_matrix", lambda *a: collects.append(a) or collect_matrix(*a)
+    )
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    tau = 0.9
+    bcast = rows(S.embedding_dup_pairs_lsh(vectors, tau, dim=16))
+    assert len(collects) == 1 and len(bcast) > 0
+
+    monkeypatch.setattr(S, "_BCAST_MAX_BYTES", 8 * (400 + 400 * 16) - 1)
+    assert rows(S.embedding_dup_pairs_lsh(vectors, tau, dim=16)) == bcast
+    assert len(collects) == 1
+    with pytest.raises(ValueError, match="gated at"):
+        S.embedding_dup_pairs_broadcast(vectors, tau)
+    assert len(collects) == 1
 
 
 def test_bcast_cosine_kernel_rejects_absent_id():
