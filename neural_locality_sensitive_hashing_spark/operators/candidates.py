@@ -210,11 +210,17 @@ def candidate_pairs_incremental(
             .withColumn("rn", F.row_number().over(w))
             .where(F.col("new") | (F.col("rn") <= cap))
         )
-    grouped = rows.groupBy("band", "bucket").agg(
-        F.sort_array(F.collect_list(F.when(F.col("new"), F.col("doc_id")))).alias("ids"),
-        F.collect_list(F.when(~F.col("new"), F.col("doc_id"))).alias("old"),
+    grouped = (
+        rows.groupBy("band", "bucket")
+        .agg(
+            F.sort_array(F.collect_list(F.when(F.col("new"), F.col("doc_id")))).alias("ids"),
+            F.collect_list(F.when(~F.col("new"), F.col("doc_id"))).alias("old"),
+        )
+        # only a bucket holding a new member and one more can emit a pair;
+        # the rest (singletons, stored-only buckets: most of them) skip the
+        # pair expressions, whose lambdas are interpreted row by row
+        .where("size(ids) >= 1 AND size(ids) + size(old) >= 2")
     )
-    # a stored-only bucket (empty `ids`) emits an empty array
     pairs_arr = F.expr(
         f"CASE WHEN size(ids) < 2 THEN {_CROSS_PAIRS} "
         f"WHEN size(ids) <= {cap} THEN concat({_ALL_PAIRS}, {_CROSS_PAIRS}) "
