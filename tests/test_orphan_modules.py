@@ -1,5 +1,5 @@
 """No orphan engine modules: every module of the package is reachable by
-import from an entry point (the driver entry, ``bench.py``, ``tools/*.py``,
+import from an entry point (``__spark_entry__.py``, ``bench.py``, ``tools/*.py``,
 ``perfbench/*.py``, the package ``__init__``). A static AST scan, with
 function-local imports included; no Spark session."""
 
