@@ -25,6 +25,11 @@ threshold, or an added or removed ``DedupConfig`` field) misses every
 stage. No engine version is hashed: a code change that alters a stage's
 output under the same config resumes stale snapshots unless it bumps the
 ``/vN`` suffix.
+
+Counts ride the stage writes: each stage's rows (and dup_pairs'
+``avg(jaccard)``) are observed on the job that writes its snapshot and
+kept in its meta, and ``_metrics`` is read from them, so a fully cached
+rerun runs no Spark job.
 """
 
 from __future__ import annotations
@@ -102,18 +107,15 @@ class DedupPipeline:
             fps[stage] = upstream[:24]
         return fps
 
-    def _stage(self, name: str, compute, report: PipelineReport) -> DataFrame:
+    def _stage(self, name: str, compute, report: PipelineReport, **aggs) -> DataFrame:
         t0 = time.time()
         fp = self._fps[name]
-        if self.catalog.has_snapshot(name, fp):
-            df = self.catalog.read_snapshot(name)
-            report.stages.append(StageReport(name, True, -1, round(time.time() - t0, 3)))
-            return df
-        df = self.catalog.write_snapshot(compute(), name, fp)
-        report.stages.append(
-            StageReport(name, False, df.count(), round(time.time() - t0, 3))
-        )
-        return df
+        cached = self.catalog.has_snapshot(name, fp)
+        if not cached:
+            self.catalog.write_snapshot(compute(), name, fp, **aggs)
+        rows = self.catalog.meta(name)["rows"]
+        report.stages.append(StageReport(name, cached, rows, round(time.time() - t0, 3)))
+        return self.catalog.read_snapshot(name)
 
     def run(self, pages: DataFrame) -> tuple[DataFrame, PipelineReport]:
         report = PipelineReport()
@@ -128,7 +130,8 @@ class DedupPipeline:
             report,
         )
         dups = self._stage(
-            "dup_pairs", lambda: verify_pairs(cands, signatures, cfg), report
+            "dup_pairs", lambda: verify_pairs(cands, signatures, cfg), report,
+            avg_jaccard=F.avg("jaccard"),
         )
 
         def compute_clusters() -> DataFrame:
@@ -139,23 +142,23 @@ class DedupPipeline:
         self._stage("keep_list", lambda: keep_list(clusters), report)
 
         # S8 metrics sink: one quality/efficiency row set per run, next to
-        # the per-partition lineage (the reference logs recall/query_size/
-        # bucket stats every eval — nlsh/trainers/base.py:87-108).
+        # the per-file lineage (the reference logs recall/query_size/
+        # bucket stats every eval — nlsh/trainers/base.py:87-108), from
+        # the stage rows: keep_list holds one survivor per cluster.
         # A fully-cached resume recomputes nothing, so it also re-logs
         # nothing: the run_id (clusters fingerprint) already has its rows.
         if all(s.cached for s in report.stages):
             return clusters, report
-        agg = dups.agg(
-            F.count("*").alias("n_pairs"), F.avg("jaccard").alias("avg_j")
-        ).first()
-        n_docs = signatures.count()
-        n_clusters = clusters.select("cluster_id").distinct().count()
+        rows = {s.stage: s.rows for s in report.stages}
+        avg_j = self.catalog.meta("dup_pairs").get("avg_jaccard")
+        if avg_j is None and rows["dup_pairs"]:  # a meta written before it was observed
+            avg_j = dups.agg(F.avg("jaccard")).first()[0]
         metrics = {
-            "n_docs": float(n_docs),
-            "dup_pairs": float(agg["n_pairs"]),
-            "avg_jaccard": float(agg["avg_j"] or 0.0),
-            "n_clusters": float(n_clusters),
-            "candidate_pairs": float(cands.count()),
+            "n_docs": float(rows["signatures"]),
+            "dup_pairs": float(rows["dup_pairs"]),
+            "avg_jaccard": float(avg_j or 0.0),
+            "n_clusters": float(rows["keep_list"]),
+            "candidate_pairs": float(rows["cand_pairs"]),
             "wall_sec": round(sum(s.wall_sec for s in report.stages), 3),
         }
         # per-band candidate fan-out (bucket_stats pair_mass): makes skew

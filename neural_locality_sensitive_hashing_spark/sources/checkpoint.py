@@ -1,4 +1,4 @@
-"""Checkpoint catalog: per-stage snapshot tables + per-partition lineage.
+"""Checkpoint catalog: per-stage snapshot tables + per-file lineage.
 
 The reference caches its expensive intermediate (self-kNN) to a file and
 reloads it if present (``precompute.py:89-97``, ``nlsh/data.py:41-44``);
@@ -7,11 +7,11 @@ content fingerprint, so a killed job resumes at the first missing stage
 and completed stages are never recomputed.
 
 Storage is parquet directories with a ``_meta.json`` sidecar (an
-Iceberg-style snapshot: fingerprint, schema, row count, commit time — the
-sandbox has no Iceberg runtime jar; when one is available the same writer
-API maps to ``df.writeTo(...).createOrReplace()``, gated in
-``write_snapshot``). Lineage: every write appends one row per partition
-(stage, partition_id, rows, fingerprint) to the ``_lineage`` table.
+Iceberg-style snapshot: fingerprint, schema, counts observed on the one
+job that writes it). Reads take the sidecar's schema, so none runs a
+schema-inference job. Lineage: every write appends one row per data file
+(its footer's rows) to ``_lineage``; it and ``_metrics`` are appended by
+pyarrow, without a Spark job.
 """
 
 from __future__ import annotations
@@ -20,149 +20,107 @@ import json
 import os
 import shutil
 import time
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
-
-def _meta_path(base: str, stage: str) -> str:
-    return os.path.join(base, stage, "_meta.json")
-
-
-def _data_path(base: str, stage: str) -> str:
-    return os.path.join(base, stage, "data")
+# the append tables' columns, as the Spark writer of earlier versions typed
+# them, so a checkpoint dir holding both writers' files reads as one table
+LINEAGE = pa.schema(
+    [("stage", pa.string()), ("partition_id", pa.int32()), ("rows", pa.int64()),
+     ("fingerprint", pa.string()), ("wall_ms", pa.int32())]
+)
+METRICS = pa.schema([("run_id", pa.string()), ("metric", pa.string()), ("value", pa.float64())])
 
 
 class CheckpointCatalog:
     """Filesystem-backed stage snapshot catalog with lineage metrics."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        base_dir: str,
-        iceberg_table_prefix: str | None = None,
-    ):
-        """``iceberg_table_prefix`` (e.g. ``"cat.db"``) switches snapshot
-        writes to the Iceberg DataFrameWriterV2 path:
-        ``df.writeTo(f"{prefix}.{stage}").createOrReplace()``. Requires an
-        Iceberg runtime jar + a configured ``spark.sql.catalog.<cat>``;
-        absent those, write_snapshot raises a clean RuntimeError instead of
-        a deep Spark stack. Default (None) keeps the parquet + _meta.json
-        sidecar layout."""
+    def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.base = base_dir
-        self.iceberg_table_prefix = iceberg_table_prefix
         os.makedirs(base_dir, exist_ok=True)
+
+    def _path(self, *parts: str) -> str:
+        return os.path.join(self.base, *parts)
 
     # -- snapshots ----------------------------------------------------------
 
-    def has_snapshot(self, stage: str, fingerprint: str) -> bool:
-        p = _meta_path(self.base, stage)
-        if not os.path.exists(p):
-            return False
+    def meta(self, stage: str) -> dict | None:
+        """The stage's ``_meta.json``, or None when absent or unreadable."""
         try:
-            with open(p) as f:
-                meta = json.load(f)
+            with open(self._path(stage, "_meta.json")) as f:
+                return json.load(f)
         except (OSError, json.JSONDecodeError):
-            return False
+            return None
+
+    def has_snapshot(self, stage: str, fingerprint: str) -> bool:
+        meta = self.meta(stage) or {}
         return meta.get("fingerprint") == fingerprint and meta.get("committed") is True
 
     def read_snapshot(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(_data_path(self.base, stage))
+        schema = StructType.fromJson(self.meta(stage)["schema"])
+        return self.spark.read.schema(schema).parquet(self._path(stage, "data"))
 
-    def write_snapshot(self, df: DataFrame, stage: str, fingerprint: str) -> DataFrame:
-        """Write stage output + meta + per-partition lineage; returns a
-        re-read of the snapshot (so downstream reads columnar parquet and
-        the upstream lineage is cut — the checkpoint role in the fixpoint
-        loop)."""
+    def write_snapshot(
+        self, df: DataFrame, stage: str, fingerprint: str, **aggs: Column
+    ) -> DataFrame:
+        """Write stage output + meta + per-file lineage in one Spark job;
+        returns a read of the snapshot (so downstream reads columnar
+        parquet and the upstream lineage is cut — the checkpoint role in
+        the fixpoint loop). The meta records ``rows`` and each of ``aggs``
+        (name -> aggregate column) as observed on the write."""
         t0 = time.time()
-        if self.iceberg_table_prefix is not None:
-            table = f"{self.iceberg_table_prefix}.{stage}"
-            try:
-                df.writeTo(table).using("iceberg").createOrReplace()
-            except Exception as e:  # missing jar / unconfigured catalog
-                raise RuntimeError(
-                    f"Iceberg snapshot write to {table!r} failed — the "
-                    "Iceberg runtime jar and spark.sql.catalog."
-                    f"{self.iceberg_table_prefix.split('.')[0]} must be "
-                    "configured; unset iceberg_table_prefix to use the "
-                    "parquet sidecar layout"
-                ) from e
-        stage_dir = os.path.join(self.base, stage)
-        if os.path.exists(stage_dir):
-            shutil.rmtree(stage_dir)
-        data = _data_path(self.base, stage)
-        df.write.mode("overwrite").parquet(data)
-
-        out = self.spark.read.parquet(data)
-        part_rows = (
-            out.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("rows"))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("fingerprint", F.lit(fingerprint))
-            .withColumn("wall_ms", F.lit(int((time.time() - t0) * 1000)))
-        )
-        lineage_dir = os.path.join(self.base, "_lineage")
-        part_rows.select(
-            "stage", "partition_id", "rows", "fingerprint", "wall_ms"
-        ).write.mode("append").parquet(lineage_dir)
-
-        n_rows = out.count()
-        with open(_meta_path(self.base, stage), "w") as f:
-            json.dump(
-                {
-                    "stage": stage,
-                    "fingerprint": fingerprint,
-                    "rows": n_rows,
-                    "schema": out.schema.jsonValue(),
-                    "wall_ms": int((time.time() - t0) * 1000),
-                    "committed": True,
-                },
-                f,
-            )
-        return out
+        self.drop_snapshot(stage)
+        data = self._path(stage, "data")
+        obs = Observation(f"snapshot_{stage}")
+        exprs = [col.alias(name) for name, col in aggs.items()]
+        df.observe(obs, F.count(F.lit(1)).alias("rows"), *exprs).write.parquet(data)
+        wall_ms = int((time.time() - t0) * 1000)
+        # part-00003-<uuid>-c000.snappy.parquet: written by task partition 3
+        files = sorted(f for f in os.listdir(data) if f.startswith("part-"))
+        self._append("_lineage", LINEAGE, [
+            (stage, int(f.split("-")[1]), pq.read_metadata(os.path.join(data, f)).num_rows,
+             fingerprint, wall_ms)
+            for f in files
+        ])
+        meta = {"stage": stage, "fingerprint": fingerprint, **obs.get,
+                "schema": df.schema.jsonValue(), "wall_ms": wall_ms, "committed": True}
+        with open(self._path(stage, "_meta.json"), "w") as f:
+            json.dump(meta, f)
+        return self.read_snapshot(stage)
 
     def drop_snapshot(self, stage: str) -> None:
-        stage_dir = os.path.join(self.base, stage)
-        if os.path.exists(stage_dir):
-            shutil.rmtree(stage_dir)
+        if os.path.exists(self._path(stage)):
+            shutil.rmtree(self._path(stage))
 
-    def write_bucketed_table(
-        self, df: DataFrame, table: str, bucket_col: str, n_buckets: int = 32
-    ) -> DataFrame:
-        """Persist a snapshot as a BUCKETED catalog table (hash-bucketed +
-        sorted by ``bucket_col``): any later equi-join on that column
-        scans the table co-located — Spark shuffles only the other side
-        (verified by plan assertion in tests/test_bucketed_join.py). This
-        is the 100 TB pattern for repeatedly-probed state (signature /
-        band stores): pay the partitioning once at write, never again per
-        query. Maps 1:1 onto Iceberg ``bucket(n, col)`` partition
-        transforms."""
-        (
-            df.write.mode("overwrite")
-            .bucketBy(n_buckets, bucket_col)
-            .sortBy(bucket_col)
-            .option("path", os.path.join(self.base, f"_table_{table}"))
-            .saveAsTable(table)
-        )
-        return self.spark.table(table)
+    # -- append tables: lineage and metrics (S8: the reference's
+    #    logger.log(name, value, step) sink, ``nlsh/loggers.py:6-97``) ------
+
+    def _append(self, table: str, schema: pa.Schema, rows: list[tuple]) -> None:
+        """Append one parquet file of ``rows``, written under a hidden name
+        and renamed into place, so a reader never sees a partial file."""
+        os.makedirs(self._path(table), exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        data = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema)
+        pq.write_table(data, self._path(table, "." + name))
+        os.replace(self._path(table, "." + name), self._path(table, name))
+
+    def _read(self, table: str, schema: pa.Schema) -> DataFrame | None:
+        if not os.path.exists(self._path(table)):
+            return None
+        return self.spark.read.schema(from_arrow_schema(schema)).parquet(self._path(table))
 
     def lineage(self) -> DataFrame | None:
-        p = os.path.join(self.base, "_lineage")
-        if not os.path.exists(p):
-            return None
-        return self.spark.read.parquet(p)
-
-    # -- metrics (S8: the reference's logger.log(name, value, step) sink,
-    #    ``nlsh/loggers.py:6-97``, as an appendable table next to lineage) --
+        return self._read("_lineage", LINEAGE)
 
     def write_metrics(self, metrics: dict[str, float], run_id: str) -> None:
-        rows = [(run_id, k, float(v)) for k, v in metrics.items()]
-        df = self.spark.createDataFrame(rows, "run_id string, metric string, value double")
-        df.write.mode("append").parquet(os.path.join(self.base, "_metrics"))
+        self._append("_metrics", METRICS, [(run_id, k, float(v)) for k, v in metrics.items()])
 
     def metrics(self) -> DataFrame | None:
-        p = os.path.join(self.base, "_metrics")
-        if not os.path.exists(p):
-            return None
-        return self.spark.read.parquet(p)
+        return self._read("_metrics", METRICS)

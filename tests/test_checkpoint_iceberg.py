@@ -1,23 +1,15 @@
-"""Iceberg writer flag: clean error when the catalog is absent; the
-parquet sidecar path is unaffected by the flag's existence."""
+"""The checkpoint catalog's parquet + ``_meta.json`` sidecar layout (an
+Iceberg-style snapshot: fingerprint, schema, observed rows)."""
 
 from __future__ import annotations
 
-import pytest
-
 from neural_locality_sensitive_hashing_spark.sources.checkpoint import CheckpointCatalog
-
-
-def test_iceberg_flag_clean_error_without_catalog(spark, tmp_path):
-    cat = CheckpointCatalog(spark, str(tmp_path), iceberg_table_prefix="ice.db")
-    df = spark.range(5)
-    with pytest.raises(RuntimeError, match="Iceberg"):
-        cat.write_snapshot(df, "stage_x", "fp1")
 
 
 def test_sidecar_path_unchanged(spark, tmp_path):
     cat = CheckpointCatalog(spark, str(tmp_path))
     out = cat.write_snapshot(spark.range(7), "stage_y", "fp2")
     assert out.count() == 7
+    assert cat.meta("stage_y")["rows"] == 7
     assert cat.has_snapshot("stage_y", "fp2")
     assert not cat.has_snapshot("stage_y", "other-fp")

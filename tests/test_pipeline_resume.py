@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -61,22 +63,53 @@ def test_config_change_invalidates(spark, pipeline_env):
     assert clusters.count() == pages.count()
 
 
-def test_lineage_written(spark, pipeline_env):
-    pages, ckpt = pipeline_env
-    pipe = DedupPipeline(spark, CFG, ckpt, input_token="pages_1k")
-    pipe.run(pages)
-    lineage = pipe.catalog.lineage()
-    assert lineage is not None
-    stages = {r.stage for r in lineage.select("stage").distinct().collect()}
-    assert set(DedupPipeline.STAGES) <= stages
-    # per-partition rows sum to stage totals for the latest clusters snapshot
-    total = (
-        lineage.where(F.col("stage") == "clusters")
-        .groupBy("fingerprint")
-        .agg(F.sum("rows").alias("n"))
-        .collect()
-    )
-    assert any(r.n == pages.count() for r in total)
+def test_lineage_written(spark, pages_1k, tmp_path):
+    """Each stage's lineage rows (one per written data file, from its
+    footer) sum to the rows its meta recorded, and a resume from the
+    clusters stage logs the fresh run's metrics again: its avg_jaccard
+    comes from the cached dup_pairs meta."""
+    pages = spark.read.parquet(pages_1k[0])
+    pipe = DedupPipeline(spark, CFG, str(tmp_path / "ckpt"), input_token="pages_1k")
+    _, rep = pipe.run(pages)
+    lineage = pipe.catalog.lineage().groupBy("stage", "fingerprint").agg(F.sum("rows"))
+    sums = {(stage, fp): n for stage, fp, n in lineage.collect()}
+    assert len(sums) == len(DedupPipeline.STAGES)
+    for s in rep.stages:
+        meta = pipe.catalog.meta(s.stage)
+        assert sums[s.stage, meta["fingerprint"]] == meta["rows"] == s.rows, s.stage
+    assert rep.stages[0].rows == pages.count()
+
+    def metric_rows():
+        return Counter(r for r in pipe.catalog.metrics().collect() if r.metric != "wall_sec")
+
+    fresh = metric_rows()
+    assert {r.metric for r in fresh} >= {"n_docs", "dup_pairs", "avg_jaccard", "n_clusters"}
+    pipe.drop_from("clusters")
+    _, rep2 = pipe.run(pages)
+    assert rep2.cached_stages() == {"signatures", "cand_pairs", "dup_pairs"}
+    assert [s.rows for s in rep2.stages] == [s.rows for s in rep.stages]
+    assert metric_rows() - fresh == fresh
+
+
+@pytest.mark.parametrize("fresh_budget, cached_budget", [(20, 0)])
+def test_pipeline_job_budget(spark, pages_1k, tmp_path, fresh_budget, cached_budget):
+    """Each stage's counts ride the job that writes it: a fresh run runs
+    at most ``fresh_budget`` jobs (a recount of a snapshot, or a lineage
+    or metrics write through Spark, shows up here as extra jobs), and an
+    identical rerun reads every snapshot without a job."""
+    pages = spark.read.parquet(pages_1k[0])
+    sc = spark.sparkContext
+    jobs = []
+    for run in ("fresh", "cached"):
+        group = f"pipeline-budget-{run}-{tmp_path.name}"
+        sc.setJobGroup(group, f"{run} pipeline run")
+        try:
+            DedupPipeline(spark, CFG, str(tmp_path / "ckpt"), "pages_1k").run(pages)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert 0 < jobs[0] <= fresh_budget, f"fresh run: {jobs[0]} jobs > budget {fresh_budget}"
+    assert jobs[1] <= cached_budget, f"cached run: {jobs[1]} jobs > budget {cached_budget}"
 
 
 def test_pipeline_with_4byte_shingles(spark, pages_1k, tmp_path_factory):

@@ -276,7 +276,9 @@ def main() -> None:
             for s in rep.stages
         }
         report["resumed_stages"] = sorted(rep.cached_stages())
-        n_dups = pipe.catalog.read_snapshot("dup_pairs").count()
+        # the stage rows: keep_list holds one survivor per cluster
+        n_dups = report["stages"]["dup_pairs"]["rows"]
+        n_clusters = report["stages"]["keep_list"]["rows"]
         keep = pipe.catalog.read_snapshot("keep_list")
     else:
         dups = minhash_dup_pairs(pages, cfg)
@@ -297,8 +299,8 @@ def main() -> None:
         n_dups = dups.count()
         labels = connected_components(dups, cfg.max_cc_iterations)
         keep = keep_list(clusters_with_singletons(labels, pages)).persist()
-    # one keep-list row per cluster
-    n_clusters = keep.count()
+        # one keep-list row per cluster
+        n_clusters = keep.count()
     wall = round(time.time() - t_all, 2)
     report.update(
         wall_sec=wall,
