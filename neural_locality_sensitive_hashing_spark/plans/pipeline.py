@@ -28,8 +28,9 @@ output under the same config resumes stale snapshots unless it bumps the
 
 Counts ride the stage writes: each stage's rows (and dup_pairs'
 ``avg(jaccard)``) are observed on the job that writes its snapshot and
-kept in its meta, and ``_metrics`` is read from them, so a fully cached
-rerun runs no Spark job.
+kept in its meta, ``_metrics`` is read from them, and lineage is one row
+per written data file, from its footer. A fully cached rerun runs no
+Spark job.
 """
 
 from __future__ import annotations
