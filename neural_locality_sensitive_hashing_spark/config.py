@@ -58,9 +58,6 @@ class DedupConfig:
     verify_broadcast_min_docs: int = 16_000
     verify_broadcast_max_docs: int = 300_000
 
-    # SimHash secondary verifier
-    simhash_hamming_max: int = 3
-
     # skew handling: buckets larger than this emit a sorted chain of
     # consecutive pairs instead of all O(n^2) pairs (connectivity-preserving)
     bucket_pair_cap: int = 256

@@ -290,10 +290,3 @@ def make_shingle_sig_udf(
         return pd.DataFrame({"sh": sh_col, "bands": [bands[i] for i in range(len(sets))]})
 
     return shingle_sig
-
-
-def estimate_jaccard(sig_a: np.ndarray, sig_b: np.ndarray) -> float:
-    """MinHash Jaccard estimate = fraction of agreeing signature slots."""
-    a = np.asarray(sig_a)
-    b = np.asarray(sig_b)
-    return float((a == b).mean())

@@ -199,8 +199,3 @@ def quality_score(text_col: Column) -> Column:
 def fingerprint(text_col: Column) -> Column:
     """Stable document fingerprint: xxhash64 of whitespace-normalized text."""
     return F.xxhash64(F.array_join(tokens(text_col), " "))
-
-
-def fingerprint_md5(text_col: Column) -> Column:
-    """MD5 hex fingerprint (oracle-friendly: DuckDB md5() matches)."""
-    return F.md5(F.array_join(tokens(text_col), " "))

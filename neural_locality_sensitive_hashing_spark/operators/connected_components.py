@@ -185,13 +185,9 @@ def _propagate_labels(ab: DataFrame, max_iterations: int) -> DataFrame:
         raise
 
 
-def clusters_with_singletons(
-    labels: DataFrame,
-    all_docs: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Extend component labels to every doc: singletons label themselves."""
-    docs = all_docs.select(F.col(id_col).alias("doc_id"))
-    return docs.join(labels, "doc_id", "left").select(
+def clusters_with_singletons(labels: DataFrame, all_docs: DataFrame) -> DataFrame:
+    """Extend component labels to every doc of ``all_docs`` (keyed by
+    doc_id): singletons label themselves."""
+    return all_docs.select("doc_id").join(labels, "doc_id", "left").select(
         "doc_id", F.coalesce("cluster_id", "doc_id").alias("cluster_id")
     )

@@ -1,11 +1,12 @@
-"""End-to-end dedup pipelines (SURVEY.md §3 E2 Spark re-expression):
+"""The MinHash dedup pipeline (SURVEY.md §3 E2 Spark re-expression):
 
     pages -> shingle + MinHash + band kernel -> band explode -> bucket
           self-join -> exact-Jaccard verify -> union-find -> clusters
 
-plus the cheap exact (fingerprint groupBy) and SimHash variants. Each
-pipeline is a pure DataFrame -> DataFrame function so stages compose with
-the checkpoint manager (plans/pipeline.py).
+Each stage is a pure DataFrame -> DataFrame function over (doc_id, text)
+docs or (doc_id, sh) sets, so stages compose with the checkpoint manager
+(plans/pipeline.py). The exact-duplicate and SimHash oracle lanes
+(queries.py) carry their own plans.
 
 This module is the one place batch dedup is composed: the resumable
 pipeline, the spark-submit job (tools/run_dedup_job.py) and the oracle
@@ -16,13 +17,12 @@ a join), and ``keep_list`` the one survivor derivation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from neural_locality_sensitive_hashing_spark.config import DedupConfig
 from neural_locality_sensitive_hashing_spark.functions import text as T
 from neural_locality_sensitive_hashing_spark.functions.minhash import make_shingle_sig_udf
-from neural_locality_sensitive_hashing_spark.functions.simhash import simhash_udf
 from neural_locality_sensitive_hashing_spark.operators.candidates import candidate_pairs
 from neural_locality_sensitive_hashing_spark.operators.connected_components import (
     clusters_with_singletons,
@@ -31,7 +31,6 @@ from neural_locality_sensitive_hashing_spark.operators.connected_components impo
 from neural_locality_sensitive_hashing_spark.operators.verify import (
     jaccard_verify,
     jaccard_verify_bcast,
-    simhash_verify,
 )
 from neural_locality_sensitive_hashing_spark.partitioning import fan_out
 
@@ -41,29 +40,17 @@ from neural_locality_sensitive_hashing_spark.partitioning import fan_out
 _BCAST_MAX_SH_BYTES = 256 << 20
 
 
-def shingle_documents(
-    docs: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """-> (doc_id, sh) narrow projection. Column pruning happens here: only
-    (id, text) are read from the source; `html` never crosses a shuffle."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        T.shingle_set(F.col(text_col), cfg.shingle_k).alias("sh"),
-    )
+def shingle_documents(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """(doc_id, text) docs -> (doc_id, sh) narrow projection. Column
+    pruning happens here: only (doc_id, text) are read from the source;
+    `html` never crosses a shuffle."""
+    return docs.select("doc_id", T.shingle_set(F.col("text"), cfg.shingle_k).alias("sh"))
 
 
-def banded_signatures_fused(
-    docs: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """docs -> (doc_id, sh, bands): the one way the engine signs and
-    bands documents — batch, the resumable pipeline and the stream all
-    call it. One Arrow kernel tokenizes, shingles, MinHashes and bands
+def banded_signatures_fused(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """(doc_id, text) docs -> (doc_id, sh, bands): the one way the engine
+    signs and bands documents — batch, the resumable pipeline and the
+    stream all call it. One Arrow kernel tokenizes, shingles, MinHashes and bands
     (``make_shingle_sig_udf``): the 1 KB/doc signature never leaves the
     Python worker, only its ``num_bands`` band hashes do."""
     docs = fan_out(docs)
@@ -72,9 +59,9 @@ def banded_signatures_fused(
         num_bands=cfg.num_bands, rows_per_band=cfg.rows_per_band,
         shingle_hash_bytes=cfg.shingle_hash_bytes,
     )
-    return docs.select(
-        F.col(id_col).alias("doc_id"), udf(F.col(text_col)).alias("s")
-    ).select("doc_id", F.col("s.sh").alias("sh"), F.col("s.bands").alias("bands"))
+    return docs.select("doc_id", udf(F.col("text")).alias("s")).select(
+        "doc_id", F.col("s.sh").alias("sh"), F.col("s.bands").alias("bands")
+    )
 
 
 def explode_fused_bands(banded: DataFrame) -> DataFrame:
@@ -84,13 +71,9 @@ def explode_fused_bands(banded: DataFrame) -> DataFrame:
     )
 
 
-def minhash_dup_pairs(
-    docs: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Full candidate-generation + verification -> (a, b, jaccard).
+def minhash_dup_pairs(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """(doc_id, text) docs -> (a, b, jaccard): full candidate generation
+    and verification.
 
     Not lazy throughout: inside the broadcast-verify gate
     (``verify_pairs``) this call runs eager driver jobs (the gate's
@@ -106,8 +89,7 @@ def minhash_dup_pairs(
     queries. ``clearCache()`` does not release the broadcasts: they stay
     on the driver and executors until the plan holding them is dropped
     and Spark's ContextCleaner reclaims them."""
-    sigs = banded_signatures_fused(docs, cfg, id_col, text_col)
-    sigs = sigs.persist()
+    sigs = banded_signatures_fused(docs, cfg).persist()
     cands = candidate_pairs(explode_fused_bands(sigs), cfg)
     return verify_pairs(cands, sigs, cfg)
 
@@ -152,79 +134,9 @@ def keep_list(clusters: DataFrame) -> DataFrame:
     )
 
 
-def minhash_dedup_clusters(
-    docs: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """-> (doc_id, cluster_id) over ALL docs (singletons label themselves)."""
-    pairs = minhash_dup_pairs(docs, cfg, id_col, text_col)
+def minhash_dedup_clusters(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """(doc_id, text) docs -> (doc_id, cluster_id) over ALL docs
+    (singletons label themselves)."""
+    pairs = minhash_dup_pairs(docs, cfg)
     labels = connected_components(pairs, cfg.max_cc_iterations)
-    return clusters_with_singletons(labels, docs, id_col)
-
-
-def exact_dup_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Exact duplicates via fingerprint equi-join -> (a, b). No O(n²):
-    group on the 128-bit fingerprint, self-join within groups."""
-    fp = docs.select(
-        F.col(id_col).alias("doc_id"), T.fingerprint_md5(F.col(text_col)).alias("fp")
-    )
-    l = fp.alias("l")
-    r = fp.alias("r")
-    return (
-        l.join(r, "fp")
-        .where(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-    )
-
-
-def exact_dedup_clusters(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """-> (doc_id, cluster_id = min doc_id sharing the fingerprint).
-    One shuffle (window over fp) — no join, no union-find needed since
-    exact-duplicate equality is already transitive."""
-    fp = docs.select(
-        F.col(id_col).alias("doc_id"), T.fingerprint_md5(F.col(text_col)).alias("fp")
-    )
-    w = Window.partitionBy("fp")
-    return fp.select("doc_id", F.min("doc_id").over(w).alias("cluster_id"))
-
-
-def simhash_dup_pairs(
-    docs: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """SimHash near-dup pairs: band the 64-bit code into 4×16-bit chunks
-    (any pair within Hamming distance <= 3 shares at least one exact chunk
-    — pigeonhole), bucket self-join per chunk, verify with bit_count.
-    -> (a, b, hamming).
-
-    Cache lifecycle: `codes` is persisted because the chunk explode AND
-    the verify joins consume it, so the cache must outlive this call: the
-    returned plan reads it. Callers that materialize the result and loop
-    release it with `spark.catalog.clearCache()` or by unpersisting the
-    plan's cached ancestor."""
-    codes = fan_out(docs).select(
-        F.col(id_col).alias("doc_id"),
-        simhash_udf(T.shingle_set(F.col(text_col), cfg.shingle_k)).alias("simhash"),
-    ).persist()
-    chunks = codes.select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                "transform(sequence(0, 3), c -> shiftrightunsigned(simhash, c * 16) & 65535)"
-            )
-        ).alias("band", "bucket"),
-    )
-    cands = candidate_pairs(chunks, cfg)
-    return simhash_verify(cands, codes, cfg)
+    return clusters_with_singletons(labels, docs)

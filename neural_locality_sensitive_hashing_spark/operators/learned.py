@@ -86,8 +86,6 @@ def learned_dup_pairs(
     weights: dict[str, np.ndarray] | list[dict[str, np.ndarray]] | None = None,
     n_probes: int = 4,
     embed_dim: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_bands: int | None = None,
 ) -> DataFrame:
     """Dedup with the learned partitioner: embed -> probe codes -> bucket
@@ -102,9 +100,7 @@ def learned_dup_pairs(
     grouped exchange (see BENCH/LEARNED_DEDUP.md for the measured
     candidate-fan-out comparison against MinHash banding)."""
     embed = make_hashed_embedding_udf(dim=embed_dim, seed=cfg.minhash_seed)
-    emb = docs.select(
-        F.col(id_col).alias("doc_id"), embed(F.col(text_col)).alias("embedding")
-    ).persist()
+    emb = docs.select("doc_id", embed(F.col("text")).alias("embedding")).persist()
     if weights is None:
         if n_bands:
             weights = fit_multiband_on_sample(
@@ -125,7 +121,7 @@ def learned_dup_pairs(
         ["doc_id", "bucket"]
     )
     cands = candidate_pairs(buckets, cfg)
-    sh = shingle_documents(docs, cfg, id_col, text_col)
+    sh = shingle_documents(docs, cfg)
     return jaccard_verify(cands, sh, cfg)
 
 

@@ -54,10 +54,6 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def cosine_similarity(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
 def l2_distance(a: Column, b: Column) -> Column:
     """Native Euclidean distance ‖a − b‖₂ (K9 — reference
     ``nlsh/data.py:176-201``; serves non-normalized vector corpora)."""
@@ -172,8 +168,8 @@ def knn_bruteforce(
     ties broken deterministically by neighbor_id.
     """
     # r10: per-side norms are hoisted OUT of the per-pair expression —
-    # cosine_similarity inline re-derived ‖q‖ and ‖c‖ for every one of
-    # the n_queries×n_corpus pairs (two extra interpreted array
+    # dot(q, c) / (‖q‖ ‖c‖) per pair re-derived both norms for every one
+    # of the n_queries×n_corpus pairs (two extra interpreted array
     # aggregates per pair); computing each norm once per row and
     # multiplying the scalars in the pair context is the same float64
     # product, so round(...,6) is bit-identical.

@@ -11,8 +11,8 @@ into an Arrow-batched numpy UDF (``make_jaccard_udf``), and
 replaced the native ``array_intersect`` / ``array_union`` expressions
 after measurement showed the JVM implementations allocate a hash set +
 two result arrays per row, stalling the shared local heap at high thread
-counts (see the UDF docstring for numbers). SimHash verification stays
-fully native (``bit_count(a ^ b)``).
+counts (see the UDF docstring for numbers). Both take (a, b) candidates
+and a (doc_id, sh) set table.
 """
 
 from __future__ import annotations
@@ -25,7 +25,6 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
 from neural_locality_sensitive_hashing_spark.config import DedupConfig
-from neural_locality_sensitive_hashing_spark.functions.simhash import hamming_distance
 
 
 def sorted_set_jaccard(a: np.ndarray, b: np.ndarray) -> float:
@@ -94,11 +93,7 @@ def make_jaccard_udf(shingle_hash_bytes: int = 8):
 
 
 def jaccard_verify(
-    pairs: DataFrame,
-    shingle_sets: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "doc_id",
-    set_col: str = "sh",
+    pairs: DataFrame, shingle_sets: DataFrame, cfg: DedupConfig
 ) -> DataFrame:
     """(a, b) candidates × (doc_id, sh) -> (a, b, jaccard) with jaccard >= τ.
 
@@ -107,8 +102,8 @@ def jaccard_verify(
     `html`/`text` are pruned out of the shuffle.
     """
     judf = make_jaccard_udf(cfg.shingle_hash_bytes)
-    sets_a = shingle_sets.select(F.col(id_col).alias("a"), F.col(set_col).alias("sh_a"))
-    sets_b = shingle_sets.select(F.col(id_col).alias("b"), F.col(set_col).alias("sh_b"))
+    sets_a = shingle_sets.select(F.col("doc_id").alias("a"), F.col("sh").alias("sh_a"))
+    sets_b = shingle_sets.select(F.col("doc_id").alias("b"), F.col("sh").alias("sh_b"))
     return (
         pairs.join(sets_a, "a")
         .join(sets_b, "b")
@@ -134,11 +129,7 @@ def sorted_positions(ids: np.ndarray, query: np.ndarray, table: str) -> np.ndarr
 
 
 def jaccard_verify_bcast(
-    pairs: DataFrame,
-    shingle_sets: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "doc_id",
-    set_col: str = "sh",
+    pairs: DataFrame, shingle_sets: DataFrame, cfg: DedupConfig
 ) -> DataFrame:
     """Gated broadcast flavor of ``jaccard_verify`` (guide §3.2/§8): the
     (doc_id, sh) table is collected once, packed into (sorted ids,
@@ -152,9 +143,7 @@ def jaccard_verify_bcast(
     dt = "<u8" if cfg.shingle_hash_bytes == 8 else "<u4"
     item = cfg.shingle_hash_bytes
     spark = shingle_sets.sparkSession
-    pdf = shingle_sets.select(
-        F.col(id_col).alias("doc_id"), F.col(set_col).alias("sh")
-    ).toPandas()
+    pdf = shingle_sets.select("doc_id", "sh").toPandas()
     ids = pdf["doc_id"].to_numpy(dtype=np.int64)
     order = np.argsort(ids, kind="stable")
     ids = ids[order]
@@ -212,22 +201,4 @@ def jaccard_verify_bcast(
         pairs.select("a", "b")
         .repartition(nparts, "a", "b")
         .mapInArrow(gen, "a long, b long, jaccard double")
-    )
-
-
-def simhash_verify(
-    pairs: DataFrame,
-    codes: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "doc_id",
-    code_col: str = "simhash",
-) -> DataFrame:
-    """(a, b) × (doc_id, simhash) -> pairs within the Hamming ball."""
-    ca = codes.select(F.col(id_col).alias("a"), F.col(code_col).alias("code_a"))
-    cb = codes.select(F.col(id_col).alias("b"), F.col(code_col).alias("code_b"))
-    return (
-        pairs.join(ca, "a")
-        .join(cb, "b")
-        .select("a", "b", hamming_distance(F.col("code_a"), F.col("code_b")).alias("hamming"))
-        .where(F.col("hamming") <= cfg.simhash_hamming_max)
     )

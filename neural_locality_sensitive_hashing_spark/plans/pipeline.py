@@ -137,7 +137,7 @@ class DedupPipeline:
 
         def compute_clusters() -> DataFrame:
             labels = connected_components(dups, cfg.max_cc_iterations)
-            return clusters_with_singletons(labels, signatures, "doc_id")
+            return clusters_with_singletons(labels, signatures)
 
         clusters = self._stage("clusters", compute_clusters, report)
         self._stage("keep_list", lambda: keep_list(clusters), report)

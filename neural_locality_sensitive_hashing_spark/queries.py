@@ -32,7 +32,6 @@ from neural_locality_sensitive_hashing_spark.operators.dedup import (
     keep_list,
     minhash_dedup_clusters,
     minhash_dup_pairs,
-    simhash_dup_pairs,
 )
 
 CFG = DedupConfig()
@@ -977,12 +976,9 @@ def _simhash60_code_udf(k: int = CFG.shingle_k):
 def q_simhash_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash Hamming-ball near-dup pairs, fully native Catalyst AND
     SQL-mirrorable: 60-bit code from md5'd shingles (the shared _h60
-    contract), 4x15-bit pigeonhole banding, bit_count(xor) verify.
-
-    The engine's hot-path variant (xxhash64 Arrow kernel, 64-bit —
-    functions/simhash.py, operators/dedup.py:simhash_dup_pairs) computes
-    the same semantics faster; this named query trades the kernel for a
-    DuckDB-checkable hash so the driver can value-verify the whole pipeline.
+    contract), 4x15-bit pigeonhole banding, bit_count(xor) verify. The
+    lane is self-contained, and the md5 hash keeps every step
+    DuckDB-checkable, so the driver value-verifies it end to end.
     """
     docs = load(spark, sf_dir, "documents")
     # r10: the whole code derivation — distinct k-gram h60 hashes, the

@@ -16,8 +16,6 @@ from neural_locality_sensitive_hashing_spark.operators.connected_components impo
     connected_components,
 )
 from neural_locality_sensitive_hashing_spark.operators.dedup import (
-    exact_dedup_clusters,
-    exact_dup_pairs,
     minhash_dedup_clusters,
     minhash_dup_pairs,
     shingle_documents,
@@ -77,25 +75,6 @@ def test_cluster_partition_matches_oracle(spark, corpus):
     assert ours == oracle
 
 
-def test_exact_dup_groups_recovered(spark, corpus):
-    pages, truth, _ = corpus
-    pairs = exact_dup_pairs(pages)
-    # every truth 'exact' group is one fingerprint-cluster
-    clusters = exact_dedup_clusters(pages)
-    j = truth.where(F.col("kind") == "exact").join(clusters, "doc_id")
-    split = j.groupBy("group_id").agg(F.countDistinct("cluster_id").alias("k")).where("k > 1")
-    assert split.count() == 0
-    # and no false merges: distinct texts never share a cluster
-    merged = (
-        clusters.join(pages.select("doc_id", "text"), "doc_id")
-        .groupBy("cluster_id")
-        .agg(F.countDistinct("text").alias("k"))
-        .where("k > 1")
-    )
-    assert merged.count() == 0
-    assert pairs.count() > 0
-
-
 def test_determinism_two_runs(spark, corpus):
     pages, _, _ = corpus
     p1 = sorted((r.a, r.b) for r in minhash_dup_pairs(pages, CFG).collect())
@@ -120,3 +99,33 @@ def test_decontam_broadcast_gate_and_shuffle_fallback(spark):
         tuple(r) for r in q_benchmark_decontam(spark, sf, broadcast=False).collect()
     }
     assert fast and fast == slow
+
+
+# Spark jobs of one minhash_dedup_clusters(...).collect() on pages_1k
+# (1,000 docs, the join-verify path): the verify gate's aggregate over the
+# persisted signatures 4 (with the exchanges it runs under adaptive
+# execution), the candidate and verify exchanges 4, union-find 2 (the
+# pairs checkpoint, the Arrow collect of the edges), the singleton join's
+# collect 2.
+BATCH_JOBS = 12
+
+
+@pytest.mark.parametrize("budget", [BATCH_JOBS])
+def test_batch_job_budget(spark, pages_1k, budget):
+    """A batch dedup computes each intermediate once: one
+    ``minhash_dedup_clusters(...).collect()`` runs at most ``budget`` jobs
+    (a rebuilt cache or a re-run candidate pass shows up here as extra
+    jobs)."""
+    spark.catalog.clearCache()
+    pages = spark.read.parquet(pages_1k[0])
+    sc = spark.sparkContext
+    group = "batch-job-budget"
+    sc.setJobGroup(group, "minhash_dedup_clusters")
+    try:
+        rows = minhash_dedup_clusters(pages, CFG).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.catalog.clearCache()
+    assert len(rows) == 1000
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= budget, f"{jobs} jobs > budget {budget}"

@@ -1,7 +1,9 @@
-"""No orphan engine modules: every module of the package is reachable by
+"""No orphan engine code: every module of the package is reachable by
 import from an entry point (``__spark_entry__.py``, ``bench.py``, ``tools/*.py``,
-``perfbench/*.py``, the package ``__init__``). A static AST scan, with
-function-local imports included; no Spark session."""
+``perfbench/*.py``, the package ``__init__``), every top-level function of the
+dedup path's operator modules is used by non-test code, and every
+``DedupConfig`` field is read there. Static AST scans, with function-local
+imports included; no Spark session."""
 
 from __future__ import annotations
 
@@ -34,10 +36,14 @@ def _imports(path: Path):
             yield from (f"{mod}.{a.name}" for a in node.names)
 
 
+def _tool_files() -> list[Path]:
+    return sorted((ROOT / "tools").glob("*.py")) + sorted((ROOT / "perfbench").glob("*.py"))
+
+
 def _unreachable() -> set[str]:
     engine = {_name(p): p for p in (ROOT / PKG).rglob("*.py")}
     roots = [ROOT / "bench.py", ROOT / "__spark_entry__.py", ROOT / PKG / "__init__.py"]
-    roots += sorted((ROOT / "tools").glob("*.py")) + sorted((ROOT / "perfbench").glob("*.py"))
+    roots += _tool_files()
     seen: set[str] = {PKG}
     todo = list(roots)
     while todo:
@@ -56,3 +62,78 @@ def test_no_orphan_engine_modules():
     # the set is empty: a module that becomes unreachable is deleted with
     # its tests, not added here
     assert _unreachable() == set()
+
+
+# the dedup path's operator modules (signatures -> bands -> candidates ->
+# verify -> union-find): each of their top-level functions must be used
+DEDUP_OPERATORS = ("dedup", "candidates", "verify", "connected_components")
+
+
+def _reads() -> list[tuple[str, str, tuple[str, str | None]]]:
+    """(name, base, (module, enclosing top-level function or None)) for
+    every name or attribute read in non-test code; ``base`` is the last
+    name of an attribute's owner (``cfg`` in ``self.cfg.x``), else "".
+    Import statements and ``def`` names are not reads."""
+    files = [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+    files += sorted((ROOT / PKG).rglob("*.py")) + _tool_files()
+    reads = []
+    for path in files:
+        module = _name(path)
+        for top in ast.parse(path.read_text(), str(path)).body:
+            where = (module, top.name if isinstance(top, ast.FunctionDef) else None)
+            for node in ast.walk(top):
+                if isinstance(node, ast.Name):
+                    reads.append((node.id, "", where))
+                elif isinstance(node, ast.Attribute):
+                    base = node.value
+                    base = base.attr if isinstance(base, ast.Attribute) else getattr(base, "id", "")
+                    reads.append((node.attr, base, where))
+    return reads
+
+
+def _dead_functions(reads) -> set[tuple[str, str]]:
+    """(module, name) of each top-level function of ``DEDUP_OPERATORS``
+    that nothing uses: no read outside its own body, other than from a
+    function already found dead (so a helper that only a dead function
+    calls is dead too)."""
+    funcs = {
+        (f"{PKG}.operators.{mod}", node.name)
+        for mod in DEDUP_OPERATORS
+        for node in ast.parse((ROOT / PKG / "operators" / f"{mod}.py").read_text()).body
+        if isinstance(node, ast.FunctionDef)
+    }
+    dead: set[tuple[str, str]] = set()
+    while True:
+        newly = {
+            f for f in funcs - dead
+            if not any(
+                name == f[1] and where != f and where not in dead
+                for name, _, where in reads
+            )
+        }
+        if not newly:
+            return dead
+        dead |= newly
+
+
+def test_no_dead_dedup_operator_functions():
+    # a dead function is deleted with its tests, not kept for them
+    dead = _dead_functions(_reads())
+    assert {f"{m.rpartition('.')[2]}.{fn}" for m, fn in dead} == set()
+
+
+def test_every_config_field_is_read():
+    """Each ``DedupConfig`` field is read as ``cfg.<field>`` (an owner
+    named ``cfg`` in any case: ``cfg``, ``self.cfg``, ``CFG``) by non-test
+    code outside a dead operator function: a field that only tests set is
+    configuration nothing obeys."""
+    tree = ast.parse((ROOT / PKG / "config.py").read_text())
+    cls = next(n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "DedupConfig")
+    fields = {n.target.id for n in cls.body if isinstance(n, ast.AnnAssign)}
+    reads = _reads()
+    dead = _dead_functions(reads)
+    read = {
+        name for name, base, where in reads
+        if base.lower() == "cfg" and where not in dead
+    }
+    assert fields - read == set()

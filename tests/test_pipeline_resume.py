@@ -168,8 +168,10 @@ def test_keep_list_stage_resumes_from_clusters(spark, pipeline_env):
 def test_job_checkpoint_mode_reports_and_resumes(pages_1k, tmp_path):
     """`run_dedup_job --checkpoint-dir` in a fresh spark-submit-style
     process: the first run reports the same dup_pairs (the dup_pairs
-    snapshot's row count) and clusters as the straight-line job, and an
-    identical re-submission resumes every stage from its snapshot."""
+    snapshot's row count) and clusters as the straight-line job, an
+    identical re-submission resumes every stage from its snapshot, and a
+    submission with ``--recrawl-dedup`` (another input stage over the same
+    files and pre-recrawl count) resumes none."""
     import json
     import os
     import subprocess
@@ -201,3 +203,5 @@ def test_job_checkpoint_mode_reports_and_resumes(pages_1k, tmp_path):
     assert second["resumed_stages"] == sorted(DedupPipeline.STAGES)
     assert second["dup_pairs"] == straight["dup_pairs"]
     assert second["clusters"] == straight["clusters"]
+    recrawl = run_job("recrawl", "--checkpoint-dir", ckpt, "--recrawl-dedup")
+    assert recrawl["resumed_stages"] == []

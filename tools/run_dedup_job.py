@@ -18,12 +18,14 @@ import os
 import time
 
 
-def _input_token(pages_path: str, n_docs: int) -> str:
+def _input_token(pages_path: str, n_docs: int, recrawl_dedup: bool) -> str:
     """Content-derived resume token: path + row count alone would resume
     stale snapshots if the input files were regenerated in place with the
     same cardinality — fold in every data file's (name, size, mtime) so
-    any rewrite invalidates the checkpoint fingerprints."""
-    h = hashlib.sha256(f"{pages_path}@{n_docs}".encode())
+    any rewrite invalidates the checkpoint fingerprints. ``n_docs`` is
+    counted before the recrawl pre-stage, so the flag is folded in too:
+    a run with it dedups other pages than one without."""
+    h = hashlib.sha256(f"{pages_path}@{n_docs}@recrawl={recrawl_dedup}".encode())
     if os.path.isdir(pages_path):
         for root, _, files in sorted(os.walk(pages_path)):
             for f in sorted(files):
@@ -268,7 +270,7 @@ def main() -> None:
 
         pipe = DedupPipeline(
             spark, cfg, args.checkpoint_dir,
-            input_token=_input_token(args.pages, n_docs),
+            input_token=_input_token(args.pages, n_docs, args.recrawl_dedup),
         )
         _, rep = pipe.run(pages)
         report["stages"] = {
