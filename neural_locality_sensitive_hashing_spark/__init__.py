@@ -6,7 +6,11 @@ read-only) as a Spark-first LSH dedup stack:
 
     pages -> extract text -> shingle -> MinHash signature -> LSH banding
           -> bucket self-join (candidate pairs) -> exact-Jaccard verify
-          -> distributed union-find -> near-duplicate clusters
+          -> union-find -> near-duplicate clusters
+
+Union-find runs on the driver while the edges fit its 256 MiB ceiling,
+and as distributed label propagation above it
+(operators/connected_components.py).
 
 The reference trains a neural encoder mapping vectors to h-bit codes and
 probes an in-memory inverted index (``nlsh/indexer.py:6-96``); here the

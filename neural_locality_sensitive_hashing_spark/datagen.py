@@ -219,80 +219,3 @@ def write_pages_dataset(out_dir: str, n_docs: int, seed: int = 42) -> tuple[str,
     pq.write_table(pages, pages_path, row_group_size=row_group)
     pq.write_table(truth, truth_path)
     return pages_path, truth_path
-
-
-def augment_with_recrawls(
-    pages: pa.Table, recrawl_rate: float = 0.3, seed: int = 42
-) -> pa.Table:
-    """Append RECRAWL rows to a pages table: ``recrawl_rate`` of the pages
-    get one extra crawl under a trivially-different URL (tracking params,
-    www. prefix, default port + fragment, case — the four variant shapes
-    operators/recrawl.py canonicalizes away) with a NEWER warc_ts and
-    identical html/text — a faithful re-fetch. The recrawl tier must
-    collapse each variant back onto its base page (newest crawl wins, so
-    the RECRAWL row survives), leaving exactly the original text multiset:
-    content dedup downstream therefore produces the same cluster count as
-    the un-augmented corpus — the cross-check the 1M-doc recrawl run in
-    BENCH/BASELINE.md (raw: BENCH/recrawl_raw.json) asserted."""
-    n = pages.num_rows
-    rng = np.random.default_rng(seed + 1_000_003)
-    k = int(n * recrawl_rate)
-    idx = np.sort(rng.choice(n, size=k, replace=False))
-    base_urls = pages.column("url").to_pylist()
-    base_ts = pages.column("warc_ts").to_numpy(zero_copy_only=False)
-
-    def gather(col: pa.ChunkedArray) -> pa.ChunkedArray:
-        # per-chunk local take: at 1M docs the html/text columns exceed one
-        # 2 GiB arrow chunk, and a whole-table take concatenates chunks
-        # (ArrowInvalid offset overflow); taking inside each chunk keeps
-        # every intermediate under the 32-bit offset limit
-        out, start = [], 0
-        for chunk in col.chunks:
-            lo = np.searchsorted(idx, start)
-            hi = np.searchsorted(idx, start + len(chunk))
-            if hi > lo:
-                out.append(chunk.take(pa.array(idx[lo:hi] - start, pa.int64())))
-            start += len(chunk)
-        return pa.chunked_array(out or [pa.array([], type=col.type)])
-
-    def variant(u: str, j: int) -> str:
-        # all four shapes canonicalize to canonical_url(u) — but ONLY for
-        # query-free, slash-free base URLs: m==0 appends '/' after the
-        # path and m==1/3 append a fresh '?', so a base URL that already
-        # carries a query string or trailing slash would produce variants
-        # that no longer collapse onto it, silently breaking the
-        # cluster-count invariant the bench asserts. generate_pages emits
-        # 'https://siteN.example/p/i' (compliant); assert the precondition
-        # so a future corpus fails loudly here instead.
-        assert u.startswith("https://")
-        assert "?" not in u and "#" not in u and not u.endswith("/"), u
-        host_path = u[len("https://"):]
-        host, _, path = host_path.partition("/")
-        m = j % 4
-        if m == 0:
-            return f"https://www.{host}/{path}/"
-        if m == 1:
-            return f"https://{host}/{path}?utm_source=feed&utm_campaign=rc{j}"
-        if m == 2:
-            return f"https://{host}:443/{path}#rcfrag"
-        return f"HTTPS://{host.upper()}/{path}?ref"
-
-    new_urls = [variant(base_urls[int(i)], int(i)) for i in idx]
-    # newer by 1..90 days so the recrawl row always wins the window
-    bump = rng.integers(1, 90 * 24 * 3600, k).astype("timedelta64[s]").astype(
-        "timedelta64[us]"
-    )
-    new_ts = base_ts[idx] + bump
-    recrawls = pa.table(
-        {
-            "doc_id": pa.array(np.arange(n, n + k, dtype=np.int64)),
-            "url": pa.array(new_urls, pa.string()),
-            "warc_ts": pa.array(new_ts),
-            "html": gather(pages.column("html")),
-            "text": gather(pages.column("text")),
-            "lang": gather(pages.column("lang")),
-        }
-    )
-    # no combine_chunks: concatenating the 1M-doc html column back into one
-    # chunk is exactly the 32-bit-offset overflow the per-chunk take avoids
-    return pa.concat_tables([pages, recrawls])

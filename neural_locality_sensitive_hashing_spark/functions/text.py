@@ -194,8 +194,3 @@ def quality_score(text_col: Column) -> Column:
     # doc length band
     size_ok = F.when((n_tok >= 10) & (n_tok <= 100000), 1.0).otherwise(0.0)
     return F.round((len_ok + alpha_ratio + size_ok) / F.lit(3.0), 6)
-
-
-def fingerprint(text_col: Column) -> Column:
-    """Stable document fingerprint: xxhash64 of whitespace-normalized text."""
-    return F.xxhash64(F.array_join(tokens(text_col), " "))

@@ -194,24 +194,6 @@ def train_partitioner(
     return {"W": w.astype(np.float64), "b": b.astype(np.float64)}
 
 
-def train_pca_partitioner(x: np.ndarray, n_bits: int = 16) -> dict[str, np.ndarray]:
-    """Autoencoder-style partitioner (reference ``nlsh/trainers/ae.py``):
-    for a LINEAR encoder/decoder the reconstruction-optimal code directions
-    are exactly the top principal components, so the AE trainer collapses
-    to PCA hashing — bits = sign of the centered projection onto the top
-    ``n_bits`` PCs. Deterministic (SVD with sign-canonicalized components),
-    no iteration. Returns the same (W, b) contract as train_partitioner:
-    code bit k = sigmoid(x·W_k + b_k) > 0.5 == (x - mean)·V_k > 0."""
-    x = np.asarray(x, dtype=np.float64)
-    mean = x.mean(axis=0)
-    _, _, vt = np.linalg.svd(x - mean, full_matrices=False)
-    v = vt[:n_bits].T  # (d, n_bits)
-    # canonicalize component signs (largest-|coef| entry positive)
-    idx = np.abs(v).argmax(axis=0)
-    v *= np.sign(v[idx, np.arange(v.shape[1])])
-    return {"W": v, "b": -(mean @ v)}
-
-
 def train_multiband_partitioner(
     x: np.ndarray,
     n_bands: int = 4,
@@ -306,19 +288,6 @@ def make_multiband_code_udf(
         return pd.Series(out)
 
     return codes
-
-
-def save_partitioner(path: str, weights: dict[str, np.ndarray]) -> None:
-    """Model sink — the reference's TorchScript save (S5) as an .npz."""
-    np.savez(path, **weights)
-
-
-def load_partitioner(path: str) -> dict[str, np.ndarray]:
-    with np.load(path) as z:
-        return {k: z[k] for k in z.files}
-
-
-_POW2 = None
 
 
 def _pack_bits_msb(bits: np.ndarray) -> np.ndarray:

@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from neural_locality_sensitive_hashing_spark.config import DedupConfig
-from neural_locality_sensitive_hashing_spark.functions import text as T
 from neural_locality_sensitive_hashing_spark.functions.minhash import make_shingle_sig_udf
 from neural_locality_sensitive_hashing_spark.operators.candidates import candidate_pairs
 from neural_locality_sensitive_hashing_spark.operators.connected_components import (
@@ -38,13 +37,6 @@ from neural_locality_sensitive_hashing_spark.partitioning import fan_out
 # docs that ``verify_broadcast_max_docs`` was sized for. Long pages reach
 # it at far fewer docs; above it the join-based verify runs instead.
 _BCAST_MAX_SH_BYTES = 256 << 20
-
-
-def shingle_documents(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """(doc_id, text) docs -> (doc_id, sh) narrow projection. Column
-    pruning happens here: only (doc_id, text) are read from the source;
-    `html` never crosses a shuffle."""
-    return docs.select("doc_id", T.shingle_set(F.col("text"), cfg.shingle_k).alias("sh"))
 
 
 def banded_signatures_fused(docs: DataFrame, cfg: DedupConfig) -> DataFrame:

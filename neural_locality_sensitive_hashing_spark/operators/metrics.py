@@ -11,13 +11,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def recall_at_k(
-    predicted: DataFrame,
-    golden: DataFrame,
-    k: int,
-    query_col: str = "query_id",
-    neighbor_col: str = "neighbor_id",
-) -> DataFrame:
+def recall_at_k(predicted: DataFrame, golden: DataFrame, k: int) -> DataFrame:
     """Per-query recall@k -> (query_id, recall).
 
     ``|golden ∩ predicted| / k`` with both sides given as flat
@@ -25,15 +19,10 @@ def recall_at_k(
     shape) — the exploded-join form of the reference's set-intersection
     metric (``nlsh/metrics.py:4-25``). Queries present in ``golden`` but
     absent from ``predicted`` score 0.0 (left join, not inner)."""
-    p = predicted.select(
-        F.col(query_col).alias("query_id"), F.col(neighbor_col).alias("p_n")
-    )
-    g = golden.select(
-        F.col(query_col).alias("query_id"), F.col(neighbor_col).alias("g_n")
-    )
+    p = predicted.select(F.col("query_id").alias("p_q"), F.col("neighbor_id").alias("hit"))
+    g = golden.select("query_id", F.col("neighbor_id").alias("g_n"))
     return (
-        g.join(p, (g.query_id == p.query_id) & (g.g_n == p.p_n), "left")
-        .select(g.query_id.alias("query_id"), p.p_n.alias("hit"))
+        g.join(p, (F.col("query_id") == F.col("p_q")) & (F.col("g_n") == F.col("hit")), "left")
         .groupBy("query_id")
         .agg(F.round(F.count("hit") / F.lit(float(k)), 6).alias("recall"))
     )

@@ -75,19 +75,15 @@ def canonical_url(url: Column) -> Column:
     )
 
 
-def latest_crawl_per_url(
-    pages: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """One row per canonical URL: the newest crawl (ties broken by highest
-    id — deterministic). Adds ``canonical_url`` and ``n_crawls`` (how many
-    crawl rows collapsed into this one) to the surviving rows."""
+def latest_crawl_per_url(pages: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """One row per canonical ``url``: the newest crawl by ``warc_ts`` (ties
+    broken by highest ``id_col`` — deterministic). Adds ``canonical_url``
+    and ``n_crawls`` (how many crawl rows collapsed into this one) to the
+    surviving rows."""
     w = Window.partitionBy("canonical_url")
-    wr = w.orderBy(F.desc(ts_col), F.desc(id_col))
+    wr = w.orderBy(F.desc("warc_ts"), F.desc(id_col))
     return (
-        pages.withColumn("canonical_url", canonical_url(F.col(url_col)))
+        pages.withColumn("canonical_url", canonical_url(F.col("url")))
         .withColumn("_rk", F.row_number().over(wr))
         .withColumn("n_crawls", F.count("*").over(w))
         .where(F.col("_rk") == 1)
@@ -95,11 +91,11 @@ def latest_crawl_per_url(
     )
 
 
-def recrawl_stats(pages: DataFrame, url_col: str = "url") -> DataFrame:
-    """(canonical_url, n_crawls) for URLs crawled more than once — the
+def recrawl_stats(pages: DataFrame) -> DataFrame:
+    """(canonical_url, n_crawls) for ``url``s crawled more than once — the
     audit view of how much the recrawl tier removes."""
     return (
-        pages.select(canonical_url(F.col(url_col)).alias("canonical_url"))
+        pages.select(canonical_url(F.col("url")).alias("canonical_url"))
         .groupBy("canonical_url")
         .agg(F.count("*").alias("n_crawls"))
         .where(F.col("n_crawls") > 1)

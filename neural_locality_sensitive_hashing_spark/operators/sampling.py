@@ -37,15 +37,10 @@ from pyspark.sql import functions as F
 BUCKET_CHARS = 2  # 16^2 = 256 md5-prefix buckets per language
 
 
-def _bucketed(
-    docs: DataFrame, lang_col: str, text_col: str, id_col: str
-) -> DataFrame:
-    h = F.md5(F.col(text_col))
+def _bucketed(docs: DataFrame) -> DataFrame:
+    h = F.md5(F.col("text"))
     return docs.select(
-        F.col(lang_col).alias("lang"),
-        F.col(id_col).alias("doc_id"),
-        h.alias("h"),
-        F.substring(h, 1, BUCKET_CHARS).alias("bkt"),
+        "lang", "doc_id", h.alias("h"), F.substring(h, 1, BUCKET_CHARS).alias("bkt")
     )
 
 
@@ -65,19 +60,13 @@ def _bucket_offsets(base: DataFrame) -> DataFrame:
     )
 
 
-def contributing_buckets(
-    docs: DataFrame,
-    quota,
-    lang_col: str = "lang",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def contributing_buckets(docs: DataFrame, quota) -> DataFrame:
     """The pruned phase-2 input: only rows whose (lang, bucket) can still
     contribute a rank <= quota. Exposed separately so tests can assert
     the exact window's input is bounded by the boundary buckets, not the
     corpus. ``quota`` is an int, or a 1-row DataFrame with column
     ``quota`` (for data-derived quotas, e.g. min language class size)."""
-    base = _bucketed(docs, lang_col, text_col, id_col)
+    base = _bucketed(docs)
     off = _bucket_offsets(base)
     if isinstance(quota, DataFrame):
         off = off.crossJoin(F.broadcast(quota))
@@ -87,18 +76,12 @@ def contributing_buckets(
     return base.join(F.broadcast(keep), ["lang", "bkt"])
 
 
-def quota_rank(
-    docs: DataFrame,
-    quota,
-    lang_col: str = "lang",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(lang, doc_id, rk) for every row whose per-language rank over
-    (md5(text), doc_id) is <= quota — bit-identical to the naive
-    whole-corpus window, with the window bounded as per the module
-    docstring."""
-    pruned = contributing_buckets(docs, quota, lang_col, text_col, id_col)
+def quota_rank(docs: DataFrame, quota) -> DataFrame:
+    """(doc_id, lang, text) docs -> (lang, doc_id, rk) for every row whose
+    per-language rank over (md5(text), doc_id) is <= quota — bit-identical
+    to the naive whole-corpus window, with the window bounded as per the
+    module docstring."""
+    pruned = contributing_buckets(docs, quota)
     w = Window.partitionBy("lang", "bkt").orderBy("h", "doc_id")
     return (
         pruned.withColumn(

@@ -159,8 +159,6 @@ def knn_bruteforce(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k cosine neighbors -> (query_id, neighbor_id, cosine, rank).
 
@@ -174,10 +172,10 @@ def knn_bruteforce(
     # multiplying the scalars in the pair context is the same float64
     # product, so round(...,6) is bit-identical.
     q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
+        F.col("vec_id").alias("query_id"), _as_double(F.col("embedding")).alias("qv")
     ).withColumn("qn", l2_norm(F.col("qv")))
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
+        F.col("vec_id").alias("neighbor_id"), _as_double(F.col("embedding")).alias("cv")
     ).withColumn("cn", l2_norm(F.col("cv")))
     sim = (
         F.broadcast(q)
@@ -198,16 +196,14 @@ def knn_bruteforce_l2(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k EUCLIDEAN neighbors -> (query_id, neighbor_id, dist, rank).
     The reference's SIFT-euclidean ground-truth path (K9)."""
     q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
+        F.col("vec_id").alias("query_id"), _as_double(F.col("embedding")).alias("qv")
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
+        F.col("vec_id").alias("neighbor_id"), _as_double(F.col("embedding")).alias("cv")
     )
     sim = (
         F.broadcast(q)
@@ -300,13 +296,54 @@ def make_hyperplane_udf(
     return codes
 
 
-def _explode_codes(df: DataFrame, name: str, udf, id_col: str, vec_col: str) -> DataFrame:
+def _explode_codes(df: DataFrame, name: str, udf) -> DataFrame:
     """Narrow (id, bucket) band explosion — the vector column is NOT
     carried through the explode/shuffle (gathered back post-dedup)."""
     return df.select(
-        F.col(id_col).alias(name),
-        F.explode(udf(F.col(vec_col))).alias("bucket"),
+        F.col("vec_id").alias(name),
+        F.explode(udf(F.col("embedding"))).alias("bucket"),
     )
+
+
+def code_join_candidates(
+    queries: DataFrame, corpus: DataFrame, query_udf, corpus_udf
+) -> DataFrame:
+    """Deduped (query_id, neighbor_id) pairs sharing a bucket: the query
+    and corpus (vec_id, embedding) tables exploded to (id, bucket) by
+    their code UDFs, equi-joined on bucket, self-matches dropped."""
+    qc = _explode_codes(queries, "query_id", query_udf)
+    cc = _explode_codes(corpus, "neighbor_id", corpus_udf)
+    return (
+        qc.join(cc, "bucket")
+        .where(F.col("query_id") != F.col("neighbor_id"))
+        .dropDuplicates(["query_id", "neighbor_id"])
+    )
+
+
+def _gather_rank(
+    cand: DataFrame, queries: DataFrame, corpus: DataFrame, k: int, score, name: str, order
+) -> DataFrame:
+    """Top-k of (query_id, neighbor_id) candidates by ``score`` (a pandas
+    UDF of the two vectors): the vectors are gathered back AFTER the pair
+    dedup (J3; query side broadcast) and scored in Arrow batches."""
+    qv = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
+    cv = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"))
+    sim = (
+        cand.join(F.broadcast(qv), "query_id")
+        .join(cv, "neighbor_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(score(F.col("qv"), F.col("cv")), 6).alias(name),
+        )
+    )
+    return _rank_topk(sim, k, order(name))
+
+
+def cosine_topk(cand: DataFrame, queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id) candidates -> exact-cosine top-k
+    (query_id, neighbor_id, cosine, rank)."""
+    return _gather_rank(cand, queries, corpus, k, _cosine_udf, "cosine", F.desc)
 
 
 def ann_lsh_candidates(
@@ -317,8 +354,6 @@ def ann_lsh_candidates(
     bits_per_band: int = 8,
     n_probes: int = 1,
     seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Deduped (query_id, neighbor_id) candidate pairs from the hyperplane
     bucket join — exposed separately so the probe sweep can measure the
@@ -328,17 +363,11 @@ def ann_lsh_candidates(
     corpus_udf = make_hyperplane_udf(planes, num_bands, bits_per_band, n_probes=1)
     query_udf = make_hyperplane_udf(planes, num_bands, bits_per_band, n_probes=n_probes)
 
-    qc = _explode_codes(queries, "query_id", query_udf, id_col, vec_col)
     # NOT fanned out (r10 A/B): the hyperplane code kernel is one cheap
     # matmul, and the repartition cost beat the parallelism gain
     # (interleaved medians 1.20 vs 0.99 s) — unlike the md5-family text
     # kernels where fan_out wins (partitioning.py)
-    cc = _explode_codes(corpus, "neighbor_id", corpus_udf, id_col, vec_col)
-    return (
-        qc.join(cc, "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
+    return code_join_candidates(queries, corpus, query_udf, corpus_udf)
 
 
 def ann_lsh(
@@ -350,8 +379,6 @@ def ann_lsh(
     bits_per_band: int = 8,
     n_probes: int = 1,
     seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k cosine via hyperplane-LSH bucket join.
 
@@ -360,21 +387,8 @@ def ann_lsh(
     probe. Pairs dedup BEFORE the vectors are gathered back (J3), then a
     vectorized exact-cosine kernel re-ranks. ``n_probes`` widens the query
     probe set per band (recall knob at constant index)."""
-    cand = ann_lsh_candidates(
-        queries, corpus, dim, num_bands, bits_per_band, n_probes, seed, id_col, vec_col
-    )
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    cv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    sim = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(_cosine_udf(F.col("qv"), F.col("cv")), 6).alias("cosine"),
-        )
-    )
-    return _rank_topk(sim, k, F.desc("cosine"))
+    cand = ann_lsh_candidates(queries, corpus, dim, num_bands, bits_per_band, n_probes, seed)
+    return cosine_topk(cand, queries, corpus, k)
 
 
 # ---------------------------------------------------------------------------
@@ -515,8 +529,6 @@ def ann_lsh_l2(
     bucket_width: float = 4.0,
     n_probes: int = 1,
     seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k Euclidean neighbors via E2LSH bucket join; exact
     L2 re-rank (vectorized kernel) after pair dedup. ``n_probes`` widens
@@ -528,25 +540,8 @@ def ann_lsh_l2(
         v, b, num_bands, rows_per_band, bucket_width, n_probes=n_probes
     )
 
-    qc = _explode_codes(queries, "query_id", q_udf, id_col, vec_col)
-    cc = _explode_codes(corpus, "neighbor_id", udf, id_col, vec_col)
-    cand = (
-        qc.join(cc, "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    cv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    sim = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(_l2_udf(F.col("qv"), F.col("cv")), 6).alias("dist"),
-        )
-    )
-    return _rank_topk(sim, k, F.asc("dist"))
+    cand = code_join_candidates(queries, corpus, q_udf, udf)
+    return _gather_rank(cand, queries, corpus, k, _l2_udf, "dist", F.asc)
 
 
 # ---------------------------------------------------------------------------
@@ -623,17 +618,17 @@ def lsh_bucket_self_join(ec: DataFrame) -> DataFrame:
 _BCAST_MAX_BYTES = 1 << 30
 
 
-def _table_bytes(emb: DataFrame, vec_col: str) -> int:
+def _table_bytes(emb: DataFrame) -> int:
     """Bytes of ``emb``'s ids and vectors as int64 / float64, from one
     aggregate job (the cost of a ``count()``)."""
-    n, elems = emb.agg(F.count(F.lit(1)), F.sum(F.size(vec_col))).first()
+    n, elems = emb.agg(F.count(F.lit(1)), F.sum(F.size("embedding"))).first()
     return 8 * (n + (elems or 0))
 
 
-def _collect_matrix(emb: DataFrame, id_col: str, vec_col: str):
+def _collect_matrix(emb: DataFrame):
     """``emb`` -> (ids ascending, float64 matrix whose row i is ids[i]'s
     vector), collected through Arrow with no per-row Python."""
-    tbl = emb.select(id_col, vec_col).toArrow()
+    tbl = emb.select("vec_id", "embedding").toArrow()
     ids = tbl.column(0).to_numpy().astype(np.int64, copy=False)
     if len(ids) == 0:  # no offsets to read a width from
         return ids, np.zeros((0, 0))
@@ -688,8 +683,6 @@ def embedding_dup_pairs_lsh(
     num_bands: int | None = None,
     bits_per_band: int | None = None,
     seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_bands: int = 32,
 ) -> DataFrame:
     """All pairs with cosine >= tau via hyperplane-LSH self-join + exact
@@ -729,11 +722,13 @@ def embedding_dup_pairs_lsh(
     planes = hyperplane_params(dim, num_bands, bits_per_band, seed)
     udf = make_hyperplane_udf(planes, num_bands, bits_per_band, n_probes=1)
 
-    ec = emb.select(F.col(id_col).alias("doc_id"), F.explode(udf(F.col(vec_col))).alias("bucket"))
+    ec = emb.select(
+        F.col("vec_id").alias("doc_id"), F.explode(udf(F.col("embedding"))).alias("bucket")
+    )
 
-    if _table_bytes(emb, vec_col) <= _BCAST_MAX_BYTES:
+    if _table_bytes(emb) <= _BCAST_MAX_BYTES:
         spark = emb.sparkSession
-        ids, mat = _collect_matrix(emb, id_col, vec_col)
+        ids, mat = _collect_matrix(emb)
         b_ids = spark.sparkContext.broadcast(ids)
         b_mat = spark.sparkContext.broadcast(mat)
         # a small table reads as 1-2 scan partitions, which would run the
@@ -766,8 +761,8 @@ def embedding_dup_pairs_lsh(
         ).where(F.col("cosine") >= tau)
 
     cand = lsh_bucket_self_join(ec)
-    va = emb.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"))
-    vb = emb.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"))
+    va = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"))
+    vb = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"))
     # exact verify as ONE mapInArrow pass over (a, b, va, vb): the
     # previous expression form — select(round(_cosine_udf(...))).where —
     # planned the pandas UDF TWICE (once under the pushed threshold
@@ -787,8 +782,6 @@ def embedding_dup_pairs_lsh(
 def embedding_dup_pairs_broadcast(
     emb: DataFrame,
     tau: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Size-gated broadcast-matmul fast path for SMALL dimension tables:
     the table is collected once to the driver through Arrow when its ids
@@ -798,13 +791,13 @@ def embedding_dup_pairs_broadcast(
     ``np.nonzero`` (no per-row Python loop). Raises if the gate trips —
     the LSH plan above is the large-table path."""
     spark = emb.sparkSession
-    nbytes = _table_bytes(emb, vec_col)
+    nbytes = _table_bytes(emb)
     if nbytes > _BCAST_MAX_BYTES:
         raise ValueError(
             f"broadcast path gated at {_BCAST_MAX_BYTES} bytes, got {nbytes}; "
             "use embedding_dup_pairs_lsh"
         )
-    ids, m = _collect_matrix(emb, id_col, vec_col)
+    ids, m = _collect_matrix(emb)
     m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-300)
     b_ids = spark.sparkContext.broadcast(ids)
     b_m = spark.sparkContext.broadcast(m)
@@ -813,9 +806,9 @@ def embedding_dup_pairs_broadcast(
         cids = b_ids.value
         cm = b_m.value
         for pdf in batches:
-            x = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
+            x = np.array([list(v) for v in pdf["embedding"]], dtype=np.float64)
             x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-300)
-            vids = pdf[id_col].to_numpy(dtype=np.int64)
+            vids = pdf["vec_id"].to_numpy(dtype=np.int64)
             sims = np.round(x @ cm.T, 6)
             mask = (sims >= tau) & (cids[None, :] > vids[:, None])
             ii, jj = np.nonzero(mask)
@@ -823,4 +816,4 @@ def embedding_dup_pairs_broadcast(
                 {"a": vids[ii], "b": cids[jj], "cosine": sims[ii, jj]}
             )
 
-    return emb.select(id_col, vec_col).mapInPandas(gen, "a long, b long, cosine double")
+    return emb.select("vec_id", "embedding").mapInPandas(gen, "a long, b long, cosine double")

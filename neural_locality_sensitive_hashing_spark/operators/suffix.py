@@ -16,7 +16,8 @@ a fingerprint column:
 The L-gram hashing runs in numpy (one (m, L) windowed multiply per doc)
 because an L=64 rolling fold as native expressions would need 63 chained
 zip_with passes — the Arrow batch kernel is the faster path here.
-Detected pairs feed the same union-find as MinHash/SimHash pairs.
+``tools/run_dedup_job.py --long-repeat-exact`` feeds the detected pairs
+into the same union-find as the MinHash pairs.
 """
 
 from __future__ import annotations
@@ -32,19 +33,9 @@ from neural_locality_sensitive_hashing_spark.config import DedupConfig
 from neural_locality_sensitive_hashing_spark.functions import text as T
 
 
-_LIVE_CACHES: list[DataFrame] = []
-
-
-def release_caches() -> None:
-    """Unpersist every cached intermediate registered by
-    :func:`long_repeat_pairs_exact` in this process. Long-lived drivers
-    that call the operator repeatedly should invoke this once the
-    returned plan has been consumed (the explicit counterpart to the
-    blunt ``spark.catalog.clearCache()`` contract — this releases ONLY
-    the suffix-stage caches, leaving e.g. a concurrently-live dedup
-    sigs cache intact)."""
-    while _LIVE_CACHES:
-        _LIVE_CACHES.pop().unpersist()
+# the winnowing window w: a shared run of >= long_repeat_min_tokens + w - 1
+# tokens always shares a fingerprint (the guarantee bound)
+WINNOW_WINDOW = 16
 
 
 def _gram_weights(gram_len: int) -> np.ndarray:
@@ -116,36 +107,25 @@ def make_gram_hash_udf(gram_len: int):
     return gram_hash
 
 
-def long_repeat_pairs_exact(
-    docs: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    winnow_window: int = 16,
-    persist_grams: bool = False,
-    complete_only: bool = True,
-) -> DataFrame:
-    """-> (a, b, max_run): candidate pairs from the winnowed fingerprint
-    join, each verified with the EXACT length in tokens of the longest
-    verbatim block the pair shares — the §2.8 suffix-array pass carried
-    to its end at scale without materializing a suffix array.
+def long_repeat_pairs_exact(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """(doc_id, text) docs -> (a, b, max_run): candidate pairs from the
+    winnowed fingerprint join, each verified with the EXACT length in
+    tokens of the longest verbatim block the pair shares — the §2.8
+    suffix-array pass carried to its end at scale without materializing a
+    suffix array.
 
-    Completeness contract: every reported max_run is exact, but the SET
-    of pairs is complete only at or above the winnowing guarantee bound
-    gram_len + winnow_window - 1. Below it, a pair appears only when
-    winnowing happened to sample a shared fingerprint (best-effort).
-    ``complete_only=True`` (default) filters the output to the bound so
-    the result is both exact AND complete over what it returns;
-    ``complete_only=False`` additionally keeps the best-effort
-    sub-bound rows — callers must then threshold at the bound
-    themselves before treating the set as exhaustive.
+    Completeness contract: the candidate SET is complete only at or above
+    the winnowing guarantee bound gram_len + WINNOW_WINDOW - 1 (below it
+    a pair appears only when winnowing happened to sample a shared
+    fingerprint), so the output keeps only rows at or above the bound:
+    every row is exact, and the set is complete over what it returns.
 
     Two-stage shape (the classical candidate -> verify discipline every
     other dedup tier here uses):
 
       1. candidates — :func:`long_repeat_pairs`'s winnowed-fingerprint
          equi-join (cheap, recall-guaranteed for runs >=
-         gram_len + winnow_window - 1 by the winnowing theorem);
+         gram_len + WINNOW_WINDOW - 1 by the winnowing theorem);
       2. exact verify — positional L-gram hashes are re-derived for
          candidate docs only (semi-join pruning), matches between a
          pair's gram streams become (i, j) points, and the longest
@@ -162,25 +142,16 @@ def long_repeat_pairs_exact(
     gram_len = cfg.long_repeat_min_tokens
     # persisted: the candidate set feeds the match join AND (twice) the
     # id semi-join pruning — unpersisted, the winnow join would re-run
-    # three times. Handles are registered in _LIVE_CACHES so long-lived
-    # callers can release exactly these via release_caches() once the
-    # returned plan is consumed (clearCache() also works, but blunt).
-    cand = (
-        long_repeat_pairs(
-            docs, cfg, id_col=id_col, text_col=text_col,
-            winnow_window=winnow_window,
-        )
-        .select("a", "b")
-        .persist()
-    )
-    _LIVE_CACHES.append(cand)
+    # three times. The caller releases it (``spark.catalog.clearCache()``)
+    # once the returned plan is consumed.
+    cand = long_repeat_pairs(docs, cfg).select("a", "b").persist()
     ids = (
         cand.select(F.col("a").alias("doc_id"))
         .union(cand.select("b"))
         .distinct()
     )
     token_hashes = F.transform(
-        T.tokens(F.col(text_col)), lambda t: F.xxhash64(t)
+        T.tokens(F.col("text")), lambda t: F.xxhash64(t)
     )
     # gp feeds both sides of the match join below on DIFFERENT shuffle
     # keys (l on doc_id=a, r on (doc_id, g)), so ReusedExchange cannot
@@ -191,16 +162,10 @@ def long_repeat_pairs_exact(
     # recomputed 60-133 s in adjacent windows — BENCH/BASELINE.md
     # long-repeat section), while the candidate-doc gram arrays (~GBs
     # deserialized for ~0.5M docs) clearly pressure a storage pool this
-    # small. Default = recompute (no cache footprint); on a cluster with
-    # per-executor memory sized for the candidate set, flip persist_grams.
-    ga = docs.select(
-        F.col(id_col).alias("doc_id"), token_hashes.alias("th")
-    ).join(ids, "doc_id").select(  # candidate docs only
+    # small. So the frame is recomputed: no cache footprint.
+    ga = docs.select("doc_id", token_hashes.alias("th")).join(ids, "doc_id").select(
         "doc_id", make_gram_hash_udf(gram_len)(F.col("th")).alias("gh")
-    )
-    if persist_grams:
-        ga = ga.persist()
-        _LIVE_CACHES.append(ga)
+    )  # candidate docs only
     gp = ga.select("doc_id", F.posexplode("gh").alias("i", "g"))
     m = (
         cand.join(gp.alias("l"), F.col("a") == F.col("l.doc_id"))
@@ -216,31 +181,24 @@ def long_repeat_pairs_exact(
     )
     w = Window.partitionBy("a", "b", "diag").orderBy("i")
     runs = m.withColumn("grp", F.col("i") - F.row_number().over(w))
-    out = (
+    return (
         runs.groupBy("a", "b", "diag", "grp")
         .agg(F.count("*").alias("rl"))
         .groupBy("a", "b")
         .agg((F.max("rl") + F.lit(gram_len - 1)).alias("max_run"))
+        .where(F.col("max_run") >= F.lit(gram_len + WINNOW_WINDOW - 1))
     )
-    if complete_only:
-        out = out.where(F.col("max_run") >= F.lit(gram_len + winnow_window - 1))
-    return out
 
 
-def long_repeat_pairs(
-    docs: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    winnow_window: int = 16,
-) -> DataFrame:
-    """-> (a, b, n_shared_fp): doc pairs sharing >=1 winnowed fingerprint,
-    i.e. a verbatim block of >= gram_len + window - 1 tokens."""
+def long_repeat_pairs(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """(doc_id, text) docs -> (a, b, n_shared_fp): doc pairs sharing >=1
+    winnowed fingerprint, i.e. every pair sharing a verbatim block of
+    >= gram_len + WINNOW_WINDOW - 1 tokens, and some sharing less."""
     gram_len = cfg.long_repeat_min_tokens
     fps = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.explode(
-            winnow_fingerprints(T.tokens(F.col(text_col)), gram_len, winnow_window)
+            winnow_fingerprints(T.tokens(F.col("text")), gram_len, WINNOW_WINDOW)
         ).alias("fp"),
     ).dropDuplicates(["doc_id", "fp"])
     l = fps.alias("l")

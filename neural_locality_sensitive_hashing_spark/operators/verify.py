@@ -44,14 +44,14 @@ def sorted_set_jaccard(a: np.ndarray, b: np.ndarray) -> float:
 
 
 def make_jaccard_udf(shingle_hash_bytes: int = 8):
-    """Exact set Jaccard of two shingle-set columns (elements unique).
+    """Exact set Jaccard of two binary shingle-set columns (elements unique).
 
     numpy merge-intersection per pair; chosen over native
     `array_intersect`/`array_union` because the JVM implementations
     allocate a hash set + two result arrays per row — at 32 local threads
     that allocation rate stalls the shared heap (measured 9.5s at
     local[8] -> 37.5s at local[32] for the same verify stage; the Arrow
-    kernel removes the regression). Binary inputs decode at the configured
+    kernel removes the regression). The sets decode at the configured
     element width — as the UNSIGNED view (8 = uint64 LE, 4 = uint32 LE),
     under which the fused kernel's np.unique output is sorted ascending,
     so the per-pair intersection is ``sorted_set_jaccard``'s probe of the
@@ -59,8 +59,6 @@ def make_jaccard_udf(shingle_hash_bytes: int = 8):
     per pair, ~2.5x more kernel CPU on the bench corpus). Set SIZES are
     representation-independent, so the jaccard value is bit-identical to
     the int64-view implementation.
-    array<long> inputs (the non-fused path) are not sorted and keep the
-    intersect1d path.
 
     Returned marked non-deterministic: every caller filters on the UDF's
     output column, and a deterministic python UDF under a pushed filter
@@ -77,16 +75,8 @@ def make_jaccard_udf(shingle_hash_bytes: int = 8):
         for i in range(len(sa)):
             a = sa.iloc[i]
             b = sb.iloc[i]
-            if a is None or b is None:
-                continue
-            if isinstance(a, (bytes, bytearray)) and isinstance(b, (bytes, bytearray)):
+            if a is not None and b is not None:
                 out[i] = sorted_set_jaccard(np.frombuffer(a, dtype=dt), np.frombuffer(b, dtype=dt))
-                continue
-            a = np.frombuffer(a, dtype=dt) if isinstance(a, (bytes, bytearray)) else np.asarray(a, dtype=np.int64)
-            b = np.frombuffer(b, dtype=dt) if isinstance(b, (bytes, bytearray)) else np.asarray(b, dtype=np.int64)
-            inter = np.intersect1d(a, b, assume_unique=True).size
-            union = a.size + b.size - inter
-            out[i] = inter / union if union else 0.0
         return pd.Series(out)
 
     return jaccard.asNondeterministic()

@@ -644,7 +644,7 @@ def q_recrawl_latest_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     crawls = spark.read.parquet(ensure_planted_crawls(sf_dir))
     state = tempfile.mkdtemp(prefix="nlsh_recrawl_inc_")
     try:
-        sink = IncrementalRecrawl(spark, state, id_col="crawl_id")
+        sink = IncrementalRecrawl(spark, state)
         for i in range(3):
             sink.process_batch(crawls.where(F.col("crawl_id") % 3 == i), i)
         out = sink.latest_crawls().select(
@@ -1256,8 +1256,7 @@ def _train_slice(sf_dir: str) -> np.ndarray:
     is driver-side by design, SURVEY §3 E1). Single definition: the slice
     contract (sort, head, dtype) must never diverge between query
     families, or a family silently trains on a different slice and its
-    oracle replay stops matching. Spark-sampled training stays available
-    through operators.learned.fit_partitioner_on_sample."""
+    oracle replay stops matching."""
     import pyarrow.parquet as pq
 
     t = pq.read_table(f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"])

@@ -359,20 +359,15 @@ def iter_warc_records(buf: bytes) -> Iterator[dict]:
         yield from recs
 
 
-def parse_warc_records(buf: bytes) -> list[dict]:
-    """List form of :func:`iter_warc_records` (total, never raises)."""
-    return list(iter_warc_records(buf))
-
-
 # ---------------------------------------------------------------------------
 # Spark readers
 # ---------------------------------------------------------------------------
 
 
 def _parse_partitions(batches):
-    """mapInPandas kernel shared by the batch and streaming reads: only
-    *response* records with a target URI become rows — warcinfo /
-    request / metadata records are crawl bookkeeping, not pages."""
+    """mapInPandas kernel of :func:`read_warc`: only *response* records
+    with a target URI become rows — warcinfo / request / metadata records
+    are crawl bookkeeping, not pages."""
     import pandas as pd
 
     cols = ["path", "seq", "url", "warc_ts", "html"]
@@ -493,64 +488,6 @@ def read_wet(spark, path: str):
     return files.mapInPandas(_parse_wet_partitions, WET_SCHEMA)
 
 
-def read_warc_stream(spark, path: str, max_files_per_trigger: int = 1):
-    """Streaming flavour of :func:`read_warc` for CONTINUOUS crawl
-    ingestion: archives landing in ``path`` become micro-batches
-    (``maxFilesPerTrigger`` archives each) of ``(crawl_id, path, url,
-    warc_ts, html)`` rows.
-
-    ``crawl_id = xxhash64(path, seq)`` (seq = parse-order ordinal within
-    the file) is DETERMINISTIC over the file content, not an arrival
-    counter — and unique even for same-URL-same-second re-fetches — a replayed micro-batch (the
-    foreachBatch at-least-once window) reproduces bit-identical rows,
-    which the incremental store's ``last_batch_id`` replay guard
-    requires. Same zero-shuffle shape as the batch read: file listing ->
-    mapInPandas, nothing else."""
-    from pyspark.sql import functions as F
-
-    # binaryFile's fixed schema, required explicitly by streaming sources
-    _require_utc_session(spark)
-    bin_schema = (
-        "path string, modificationTime timestamp, length long, content binary"
-    )
-    files = (
-        spark.readStream.format("binaryFile")
-        .schema(bin_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(path)
-        .select("path", "content")
-    )
-
-    return files.mapInPandas(_parse_partitions, WARC_SCHEMA).withColumn(
-        "crawl_id", F.xxhash64("path", "seq")
-    )
-
-
-def read_wet_stream(spark, path: str, max_files_per_trigger: int = 1):
-    """Streaming flavour of :func:`read_wet`: WET archives landing in
-    ``path`` become micro-batches of ``(crawl_id, path, url, warc_ts,
-    text)`` rows. Same deterministic content-derived
-    ``crawl_id = xxhash64(path, seq)`` and zero-shuffle shape as
-    :func:`read_warc_stream` — only the record-type filter and payload
-    differ."""
-    from pyspark.sql import functions as F
-
-    _require_utc_session(spark)
-    bin_schema = (
-        "path string, modificationTime timestamp, length long, content binary"
-    )
-    files = (
-        spark.readStream.format("binaryFile")
-        .schema(bin_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(path)
-        .select("path", "content")
-    )
-    return files.mapInPandas(_parse_wet_partitions, WET_SCHEMA).withColumn(
-        "crawl_id", F.xxhash64("path", "seq")
-    )
-
-
 def warc_pages(spark, path: str):
     """WARC archives -> the engine's input-hint page shape
     ``(crawl_id, url, warc_ts, html, text, lang)``, ready for the
@@ -562,7 +499,7 @@ def warc_pages(spark, path: str):
     ordinal within its file) is content-derived and collision-free on
     the natural key — same-URL-same-second re-fetches collide on
     (url, warc_ts) but never on (path, seq). The 64-bit hash itself is
-    probabilistically unique (~3%% chance of ANY collision at 10^9
+    probabilistically unique (~3% chance of ANY collision at 10^9
     records); past that scale derive a 128-bit id or key on the
     retained (path, seq) columns directly. run_dedup_job --from-warc
     asserts distinctness before building on it — so

@@ -12,9 +12,9 @@ Per batch (bounded by BATCH size, never store size):
     1. canonicalize + reduce the batch: one winner row + count per
        canonical URL (``max_by`` over (warc_ts, crawl_id)),
     2. read ONLY the store partitions the batch's canonical URLs hash
-       into (``pfx = pmod(xxhash64(canonical_url), parts)``; driver-side
-       ``isin`` on the partition column → parquet directory pruning,
-       same layout contract as streaming/incremental.py's stores),
+       into (``pfx = pmod(xxhash64(canonical_url), 16)``; driver-side
+       ``isin`` on the partition column → parquet directory pruning; the
+       store is read with its schema, so no footer-inference job runs),
     3. full-outer merge on canonical_url: newest crawl wins, counts sum,
     4. dynamic-partition-overwrite the TOUCHED partitions only
        (untouched directories are never listed, read, or rewritten —
@@ -58,57 +58,49 @@ from pyspark.sql import functions as F
 
 from neural_locality_sensitive_hashing_spark.operators.recrawl import canonical_url
 from neural_locality_sensitive_hashing_spark.streaming.incremental import (
-    PAGES_SCHEMA,
+    _columns,
     recover_store,
 )
 
-_STORE_COLS = [
-    "canonical_url",
-    "crawl_id",
-    "url",
-    "warc_ts",
-    "n_crawls",
-    "last_batch_id",
-    "pfx",
-]
+# hash partitions of the store: pfx = pmod(xxhash64(canonical_url), 16)
+_STORE_PARTS = 16
+# the store's schema, pfx (the partition column) included. Reading with it
+# skips the footer job Spark runs to infer it; these are the types that
+# job inferred (a partition value reads back as int).
+_STORE_SCHEMA = (
+    "canonical_url string, crawl_id bigint, url string, warc_ts timestamp_ntz, "
+    "n_crawls bigint, last_batch_id int, pfx int"
+)
+_STORE_COLS = _columns(_STORE_SCHEMA)
 
 
 class IncrementalRecrawl:
     """foreachBatch sink: maintains the latest-crawl-per-canonical-URL
-    store (one row per canonical URL, hash-partitioned)."""
+    store (one row per canonical URL, hash-partitioned) over crawl pages
+    ``(crawl_id, url, warc_ts, ...)``."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        state_dir: str,
-        store_parts: int = 16,
-        id_col: str = "doc_id",
-    ):
+    def __init__(self, spark: SparkSession, state_dir: str):
         self.spark = spark
-        self.store_parts = store_parts
-        self.id_col = id_col
         self.store = os.path.join(state_dir, "latest_crawls")
 
-    def _pfx(self, col):
-        return F.pmod(F.xxhash64(col), F.lit(self.store_parts))
-
-    def _read_touched(self, pfx_values: list[int]) -> DataFrame | None:
+    def _read_store(self) -> DataFrame | None:
         recover_store(self.store)
         if not os.path.exists(self.store):
             return None
-        return (
-            self.spark.read.parquet(self.store)
-            .where(F.col("pfx").isin(pfx_values))
-        )
+        return self.spark.read.schema(_STORE_SCHEMA).parquet(self.store)
 
     def _reduce_batch(self, pages: DataFrame, batch_id: int) -> DataFrame:
         """One row per canonical URL in the batch: the winning crawl +
         how many batch rows collapsed into it."""
-        c = pages.withColumn("canonical_url", canonical_url(F.col("url")))
-        ordk = F.struct(F.col("warc_ts"), F.col(self.id_col))
+        # warc_ts is stored as timestamp_ntz, the planted crawls' type
+        c = pages.select(
+            canonical_url(F.col("url")).alias("canonical_url"),
+            "crawl_id",
+            "url",
+            F.col("warc_ts").cast("timestamp_ntz").alias("warc_ts"),
+        )
         win = F.max_by(
-            F.struct(F.col(self.id_col).alias("crawl_id"), "url", "warc_ts"),
-            ordk,
+            F.struct("crawl_id", "url", "warc_ts"), F.struct("warc_ts", "crawl_id")
         ).alias("w")
         return (
             c.groupBy("canonical_url")
@@ -120,7 +112,7 @@ class IncrementalRecrawl:
                 F.col("w.warc_ts").alias("warc_ts"),
                 F.col("new_crawls"),
                 F.lit(int(batch_id)).alias("last_batch_id"),
-                self._pfx(F.col("canonical_url")).alias("pfx"),
+                F.pmod(F.xxhash64("canonical_url"), F.lit(_STORE_PARTS)).alias("pfx"),
             )
         )
 
@@ -135,7 +127,7 @@ class IncrementalRecrawl:
             # and on an existing store it is a no-op anyway. Skip it.
             b.unpersist()
             return
-        old = self._read_touched(pfx_values)
+        old = self._read_store()
         if old is None:
             merged = b.select(
                 "canonical_url",
@@ -147,7 +139,7 @@ class IncrementalRecrawl:
                 "pfx",
             )
         else:
-            o = old.select(
+            o = old.where(F.col("pfx").isin(pfx_values)).select(
                 *[F.col(c).alias(f"o_{c}") for c in _STORE_COLS]
             )
             j = b.join(
@@ -196,97 +188,8 @@ class IncrementalRecrawl:
         b.unpersist()
 
     def latest_crawls(self) -> DataFrame:
-        recover_store(self.store)
-        if not os.path.exists(self.store):
+        store = self._read_store()
+        if store is None:
             raise FileNotFoundError(self.store)
-        return self.spark.read.parquet(self.store).select(
-            "canonical_url", "crawl_id", "url", "warc_ts", "n_crawls"
-        )
+        return store.select("canonical_url", "crawl_id", "url", "warc_ts", "n_crawls")
 
-
-def run_incremental_recrawl(
-    spark: SparkSession,
-    input_dir: str,
-    state_dir: str,
-    store_parts: int = 16,
-) -> IncrementalRecrawl:
-    """Drain all available files from input_dir through the incremental
-    recrawl tier (Trigger.AvailableNow) and return the sink."""
-    sink = IncrementalRecrawl(spark, state_dir, store_parts)
-    stream = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink.process_batch)
-        .option("checkpointLocation", os.path.join(state_dir, "_stream_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return sink
-
-
-def run_incremental_recrawl_warc(
-    spark: SparkSession,
-    warc_dir: str,
-    state_dir: str,
-    store_parts: int = 16,
-    max_files_per_trigger: int = 1,
-) -> IncrementalRecrawl:
-    """Continuous crawl ingestion from RAW archives: WARC files landing
-    in ``warc_dir`` drain straight into the latest-crawl store — the
-    crawler drops an archive, the store stays current; no parquet
-    staging hop. One archive per micro-batch by default, and the parse
-    is the same zero-shuffle binaryFile -> mapInPandas read as the batch
-    tier (sources/warc.py), so each micro-batch's only exchange is the
-    store upsert's own canonical_url aggregation.
-
-    The per-record ``crawl_id`` is content-derived (xxhash64 of path +
-    in-file record ordinal, see read_warc_stream) so a replayed
-    micro-batch reproduces identical rows for the ``last_batch_id``
-    replay guard."""
-    from neural_locality_sensitive_hashing_spark.sources.warc import (
-        read_warc_stream,
-    )
-
-    sink = IncrementalRecrawl(spark, state_dir, store_parts, id_col="crawl_id")
-    pages = read_warc_stream(spark, warc_dir, max_files_per_trigger)
-    q = (
-        pages.writeStream.foreachBatch(sink.process_batch)
-        .option("checkpointLocation", os.path.join(state_dir, "_stream_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return sink
-
-
-def run_incremental_recrawl_wet(
-    spark: SparkSession,
-    wet_dir: str,
-    state_dir: str,
-    store_parts: int = 16,
-    max_files_per_trigger: int = 1,
-) -> IncrementalRecrawl:
-    """WET flavour of :func:`run_incremental_recrawl_warc`: extracted-text
-    archives landing in ``wet_dir`` drain into the same latest-crawl
-    store — the store is a (canonical_url, crawl_id, url, warc_ts, ...)
-    index with no payload column, so the two archive flavours feed it
-    identically; only the zero-shuffle parse differs. Same content-derived
-    ``crawl_id`` replay-idempotence contract."""
-    from neural_locality_sensitive_hashing_spark.sources.warc import (
-        read_wet_stream,
-    )
-
-    sink = IncrementalRecrawl(spark, state_dir, store_parts, id_col="crawl_id")
-    pages = read_wet_stream(spark, wet_dir, max_files_per_trigger)
-    q = (
-        pages.writeStream.foreachBatch(sink.process_batch)
-        .option("checkpointLocation", os.path.join(state_dir, "_stream_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return sink

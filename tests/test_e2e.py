@@ -12,13 +12,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from neural_locality_sensitive_hashing_spark.config import DedupConfig
+from neural_locality_sensitive_hashing_spark.functions import text as T
 from neural_locality_sensitive_hashing_spark.operators.connected_components import (
     connected_components,
 )
 from neural_locality_sensitive_hashing_spark.operators.dedup import (
     minhash_dedup_clusters,
     minhash_dup_pairs,
-    shingle_documents,
 )
 
 CFG = DedupConfig()
@@ -29,7 +29,7 @@ def corpus(spark, pages_1k):
     pages_path, truth_path = pages_1k
     pages = spark.read.parquet(pages_path).persist()
     truth = spark.read.parquet(truth_path).persist()
-    sh = shingle_documents(pages, CFG).persist()
+    sh = pages.select("doc_id", T.shingle_set(F.col("text"), CFG.shingle_k).alias("sh")).persist()
     l = sh.select(F.col("doc_id").alias("a"), F.col("sh").alias("sh_a"))
     r = sh.select(F.col("doc_id").alias("b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")

@@ -1,4 +1,4 @@
-"""Learned partitioner: trainer quality, kernel parity, e2e dedup + ANN."""
+"""Learned partitioner: trainer quality, code kernels and ANN recall."""
 
 from __future__ import annotations
 
@@ -6,25 +6,13 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from neural_locality_sensitive_hashing_spark.config import DedupConfig
-from neural_locality_sensitive_hashing_spark.functions.embedding import (
-    embed_tokens_numpy,
-    make_hashed_embedding_udf,
-)
 from neural_locality_sensitive_hashing_spark.learned.partitioner import (
     _pack_bits_msb,
     hash_codes_numpy,
-    load_partitioner,
-    save_partitioner,
     train_partitioner,
 )
-from neural_locality_sensitive_hashing_spark.operators.learned import (
-    learned_ann,
-    learned_dup_pairs,
-)
+from neural_locality_sensitive_hashing_spark.operators.learned import learned_ann
 from neural_locality_sensitive_hashing_spark.operators.similarity import knn_bruteforce
-
-CFG = DedupConfig()
 
 
 def test_pack_bits_msb_golden():
@@ -33,16 +21,6 @@ def test_pack_bits_msb_golden():
     assert _pack_bits_msb(np.array([[1, 0, 1]]))[0] == 5
     assert _pack_bits_msb(np.array([[0, 1, 1, 1]]))[0] == 7
     assert _pack_bits_msb(np.array([[1] * 16]))[0] == (1 << 16) - 1
-
-
-def test_embedding_udf_matches_numpy(spark):
-    texts = ["the cat sat", "a b c d e f", "zzz zzz zzz"]
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, text string")
-    udf = make_hashed_embedding_udf(dim=32, seed=7)
-    got = {r.i: np.array(r.e) for r in df.select("i", udf("text").alias("e")).collect()}
-    for i, t in enumerate(texts):
-        want = embed_tokens_numpy(t.split(), 32, 7)
-        np.testing.assert_allclose(got[i], want, rtol=1e-6)
 
 
 def test_trainer_balance_and_cohesion():
@@ -59,15 +37,6 @@ def test_trainer_balance_and_cohesion():
     from collections import Counter
 
     assert max(Counter(codes.tolist()).values()) <= 60
-
-
-def test_save_load_roundtrip(tmp_path):
-    w = train_partitioner(np.random.default_rng(1).standard_normal((100, 8)), n_bits=4, epochs=5)
-    p = str(tmp_path / "part.npz")
-    save_partitioner(p, w)
-    w2 = load_partitioner(p)
-    np.testing.assert_array_equal(w["W"], w2["W"])
-    np.testing.assert_array_equal(w["b"], w2["b"])
 
 
 @pytest.fixture(scope="module")
@@ -98,52 +67,6 @@ def test_learned_ann_recall(spark, clustered_vectors):
     recalls = [len(truth[qq] & got.get(qq, set())) / len(truth[qq]) for qq in truth]
     mean_recall = sum(recalls) / len(recalls)
     assert mean_recall >= 0.8, f"learned ANN recall {mean_recall:.3f}"
-
-
-def test_learned_dedup_finds_exact_dups(spark):
-    rng = np.random.default_rng(5)
-    vocab = [f"w{i:04d}" for i in range(5000)]
-    docs = []
-    for i in range(60):
-        toks = [vocab[j] for j in rng.integers(0, 5000, 80)]
-        docs.append((2 * i, " ".join(toks)))
-        docs.append((2 * i + 1, " ".join(toks)))  # exact dup partner
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    pairs = learned_dup_pairs(df, CFG, n_probes=4)
-    got = {(r.a, r.b) for r in pairs.collect()}
-    want = {(2 * i, 2 * i + 1) for i in range(60)}
-    missed = want - got
-    assert len(missed) <= 1, f"learned partitioner missed exact-dup pairs: {missed}"
-
-
-def test_fit_sample_spans_partitions(spark):
-    """The trainer sample must draw from every partition, not just the
-    first (a `.limit()` would see one shard's distribution only)."""
-    import pandas as pd
-    from neural_locality_sensitive_hashing_spark.operators.learned import (
-        fit_partitioner_on_sample,
-    )
-
-    # partition 0 holds cluster A, partition 1 holds cluster B
-    rng = np.random.default_rng(1)
-    a = rng.standard_normal(16) * 0.01 + 5.0
-    b = rng.standard_normal(16) * 0.01 - 5.0
-    rows = [(i, [float(v) for v in (a if i < 500 else b)]) for i in range(1000)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>").repartitionByRange(
-        2, "vec_id"
-    )
-    # capture what the sampling actually collects by fitting on a small
-    # sample and checking the learned codes separate the two clusters —
-    # impossible if only cluster A was sampled (all-A training degenerates)
-    w = fit_partitioner_on_sample(df, n_bits=6, sample_rows=200, seed=7)
-    from neural_locality_sensitive_hashing_spark.learned.partitioner import (
-        hash_codes_numpy,
-    )
-    import numpy as _np
-
-    ca = hash_codes_numpy(_np.stack([a]), w)[0][0]
-    cb = hash_codes_numpy(_np.stack([b]), w)[0][0]
-    assert ca != cb
 
 
 def test_hardest_negative_mining_trains():
@@ -224,28 +147,6 @@ def test_probe_budget_validated():
         make_learned_code_udf(w, n_probes=9)  # 2^3 = 8 max
 
 
-def test_pca_partitioner_bits():
-    """AE-as-PCA partitioner: bits follow the top principal direction and
-    the (W, b) contract matches hash_codes_numpy."""
-    from neural_locality_sensitive_hashing_spark.learned.partitioner import (
-        train_pca_partitioner,
-    )
-
-    rng = np.random.default_rng(4)
-    # dominant variance along a known axis
-    x = np.zeros((300, 8))
-    x[:, 3] = rng.standard_normal(300) * 10
-    x += 0.1 * rng.standard_normal((300, 8))
-    w = train_pca_partitioner(x, n_bits=3)
-    codes = np.array([c[0] for c in hash_codes_numpy(x, w)])
-    # first (strongest) bit must equal the sign of the centered dim-3 value
-    top_bit = (codes >> 2) & 1
-    want = (x[:, 3] - x[:, 3].mean() > 0).astype(int)
-    agree = (top_bit == want).mean()
-    assert agree >= 0.95 or agree <= 0.05  # sign of PC is canonical either way
-    assert len(set(codes)) >= 2
-
-
 def test_minibatch_epoch_permutation_trains():
     """R1+R6 (nlsh/trainers/triplet.py:104-108): batch_size enables the
     reference's shuffled epoch iteration — one Adam step per minibatch over
@@ -320,25 +221,6 @@ def test_multiband_union_beats_single_band(spark, clustered_vectors):
     for r in rows:
         bands_seen = {c >> n_bits for c in r}
         assert bands_seen == {0, 1, 2, 3}  # offsets keep bands disjoint
-
-
-def test_multiband_learned_dedup_finds_exact_dups(spark):
-    """The multi-band learned partitioner as the DEDUP bucketer (the north
-    star's 'learned partitioner replacing random banding'): same gate as
-    the single-code path."""
-    rng = np.random.default_rng(5)
-    vocab = [f"w{i:04d}" for i in range(5000)]
-    docs = []
-    for i in range(60):
-        toks = [vocab[j] for j in rng.integers(0, 5000, 80)]
-        docs.append((2 * i, " ".join(toks)))
-        docs.append((2 * i + 1, " ".join(toks)))
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    pairs = learned_dup_pairs(df, CFG, n_bands=4, n_probes=2)
-    got = {(r.a, r.b) for r in pairs.collect()}
-    want = {(2 * i, 2 * i + 1) for i in range(60)}
-    missed = want - got
-    assert not missed, f"multiband learned partitioner missed: {missed}"
 
 
 def test_feature_bagged_multiband():

@@ -1,8 +1,8 @@
 """No orphan engine code: every module of the package is reachable by
 import from an entry point (``__spark_entry__.py``, ``bench.py``, ``tools/*.py``,
-``perfbench/*.py``, the package ``__init__``), every top-level function of the
-dedup path's operator modules is used by non-test code, and every
-``DedupConfig`` field is read there. Static AST scans, with function-local
+``perfbench/*.py``, the package ``__init__``), every top-level function and
+class of the package is used by non-test code, and every ``DedupConfig``
+field is read there. Static AST scans, with function-local
 imports included; no Spark session."""
 
 from __future__ import annotations
@@ -64,13 +64,22 @@ def test_no_orphan_engine_modules():
     assert _unreachable() == set()
 
 
-# the dedup path's operator modules (signatures -> bands -> candidates ->
-# verify -> union-find): each of their top-level functions must be used
-DEDUP_OPERATORS = ("dedup", "candidates", "verify", "connected_components")
+# top-level names no non-test code reads that stay, each for a reason
+KEPT = {
+    # per-doc references the fused signature kernel is tested against
+    # (tests/test_minhash.py::test_fused_kernel_bit_identical_to_reference)
+    ("functions.minhash", "minhash_numpy"),
+    ("functions.minhash", "gram_hashes_python"),
+    ("functions.minhash", "shingle_hashes_python"),
+    # the exact-Jaccard reference sets of tests/test_e2e.py
+    ("functions.text", "shingle_set"),
+    # the engine's one Structured Streaming entry point
+    ("streaming.incremental", "run_incremental"),
+}
 
 
 def _reads() -> list[tuple[str, str, tuple[str, str | None]]]:
-    """(name, base, (module, enclosing top-level function or None)) for
+    """(name, base, (module, enclosing top-level function, class or None)) for
     every name or attribute read in non-test code; ``base`` is the last
     name of an attribute's owner (``cfg`` in ``self.cfg.x``), else "".
     Import statements and ``def`` names are not reads."""
@@ -80,7 +89,8 @@ def _reads() -> list[tuple[str, str, tuple[str, str | None]]]:
     for path in files:
         module = _name(path)
         for top in ast.parse(path.read_text(), str(path)).body:
-            where = (module, top.name if isinstance(top, ast.FunctionDef) else None)
+            named = isinstance(top, (ast.FunctionDef, ast.ClassDef))
+            where = (module, top.name if named else None)
             for node in ast.walk(top):
                 if isinstance(node, ast.Name):
                     reads.append((node.id, "", where))
@@ -92,20 +102,21 @@ def _reads() -> list[tuple[str, str, tuple[str, str | None]]]:
 
 
 def _dead_functions(reads) -> set[tuple[str, str]]:
-    """(module, name) of each top-level function of ``DEDUP_OPERATORS``
-    that nothing uses: no read outside its own body, other than from a
-    function already found dead (so a helper that only a dead function
-    calls is dead too)."""
-    funcs = {
-        (f"{PKG}.operators.{mod}", node.name)
-        for mod in DEDUP_OPERATORS
-        for node in ast.parse((ROOT / PKG / "operators" / f"{mod}.py").read_text()).body
-        if isinstance(node, ast.FunctionDef)
+    """(module, name) of each top-level function or class of the package,
+    ``KEPT`` aside, that nothing uses: no read outside its own body, other
+    than from a definition already found dead (so a helper that only a
+    dead function calls is dead too)."""
+    defs = {
+        (_name(path), node.name)
+        for path in (ROOT / PKG).rglob("*.py")
+        for node in ast.parse(path.read_text()).body
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef))
     }
+    defs -= {(f"{PKG}.{mod}", name) for mod, name in KEPT}
     dead: set[tuple[str, str]] = set()
     while True:
         newly = {
-            f for f in funcs - dead
+            f for f in defs - dead
             if not any(
                 name == f[1] and where != f and where not in dead
                 for name, _, where in reads
@@ -117,9 +128,10 @@ def _dead_functions(reads) -> set[tuple[str, str]]:
 
 
 def test_no_dead_dedup_operator_functions():
-    # a dead function is deleted with its tests, not kept for them
+    # covers every module of the package, the dedup operators included: a
+    # dead function or class is deleted with its tests, not kept for them
     dead = _dead_functions(_reads())
-    assert {f"{m.rpartition('.')[2]}.{fn}" for m, fn in dead} == set()
+    assert {f"{m[len(PKG) + 1:]}.{fn}" for m, fn in dead} == set()
 
 
 def test_every_config_field_is_read():

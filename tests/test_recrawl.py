@@ -164,31 +164,3 @@ def test_planted_crawls_queries(spark):
     assert len(stats) == N_CRAWL_BASE + 1
     assert stats["no-scheme.example.com/page?x=1"] == 2
     assert set(stats.values()) == {2, 3}
-
-
-def test_recrawl_augmented_corpus_collapses_to_base(spark):
-    """datagen.augment_with_recrawls: every variant URL canonicalizes back
-    onto its base page and the NEWER recrawl row wins — survivors carry
-    exactly the original text multiset, so content dedup downstream is
-    invariant to the augmentation (the 1M-doc bench cross-check, in
-    miniature)."""
-    from collections import Counter
-
-    from neural_locality_sensitive_hashing_spark.datagen import (
-        augment_with_recrawls,
-        generate_pages,
-    )
-
-    base, _ = generate_pages(400, 7)
-    aug = augment_with_recrawls(base, 0.3, 7)
-    assert aug.num_rows == 400 + 120
-    df = spark.createDataFrame(aug.to_pandas())
-    surv = latest_crawl_per_url(df).select("doc_id", "text", "n_crawls").collect()
-    assert len(surv) == 400
-    # text multiset preserved exactly
-    assert Counter(r.text for r in surv) == Counter(base.column("text").to_pylist())
-    # recrawled pages: the recrawl row (doc_id >= 400) won, with n_crawls=2
-    twice = [r for r in surv if r.n_crawls == 2]
-    assert len(twice) == 120
-    assert all(r.doc_id >= 400 for r in twice)
-    assert all(r.n_crawls == 1 for r in surv if r.doc_id < 400)

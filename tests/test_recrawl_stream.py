@@ -1,5 +1,5 @@
 """Incremental recrawl tier: batch-equivalence, replay idempotence,
-partition-pruned upserts, and the streaming driver."""
+partition-pruned upserts and the jobs of a batch."""
 
 from __future__ import annotations
 
@@ -14,7 +14,6 @@ from neural_locality_sensitive_hashing_spark.operators.recrawl import (
 from neural_locality_sensitive_hashing_spark.planted import ensure_planted_crawls
 from neural_locality_sensitive_hashing_spark.streaming.recrawl_stream import (
     IncrementalRecrawl,
-    run_incremental_recrawl,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -40,7 +39,7 @@ def _store_set(sink):
 
 def test_incremental_equals_batch_and_replay_is_noop(spark, tmp_path):
     crawls = _crawls(spark)
-    sink = IncrementalRecrawl(spark, str(tmp_path), id_col="crawl_id")
+    sink = IncrementalRecrawl(spark, str(tmp_path))
     batches = [
         crawls.where(F.col("crawl_id") % 3 == i).persist() for i in range(3)
     ]
@@ -66,7 +65,7 @@ def test_upsert_touches_only_hashed_partitions(spark, tmp_path):
     canonical URL hashes into — every other pfx dir's file set stays
     byte-identical (the store-size-independent per-batch write bound)."""
     crawls = _crawls(spark)
-    sink = IncrementalRecrawl(spark, str(tmp_path), id_col="crawl_id")
+    sink = IncrementalRecrawl(spark, str(tmp_path))
     sink.process_batch(crawls, 0)
 
     def listing():
@@ -90,35 +89,12 @@ def test_upsert_touches_only_hashed_partitions(spark, tmp_path):
     assert len(changed) == 1, changed
 
 
-def test_streaming_driver_matches_batch(spark, tmp_path):
-    """End-to-end through readStream + foreachBatch (AvailableNow), with
-    the input split across files arriving in separate micro-batches."""
-    crawls = _crawls(spark).select(
-        F.col("crawl_id").alias("doc_id"), "url", "warc_ts",
-        "html", "text", "lang",
-    )
-    in_dir = str(tmp_path / "in")
-    for i in range(2):
-        (
-            crawls.where(F.col("doc_id") % 2 == i)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(in_dir)
-        )
-    sink = run_incremental_recrawl(spark, in_dir, str(tmp_path / "state"))
-    got = {
-        (r.canonical_url, r.crawl_id, r.n_crawls)
-        for r in sink.latest_crawls().collect()
-    }
-    assert got == _batch_truth(spark)
-
-
 def test_empty_first_batch_is_skipped(spark, tmp_path):
     """A zero-row micro-batch on a FRESH store must not create a
     parquet-less store directory (which would fail every later read with
     unable-to-infer-schema); on an existing store it must be a no-op."""
     crawls = _crawls(spark)
-    sink = IncrementalRecrawl(spark, str(tmp_path), id_col="crawl_id")
+    sink = IncrementalRecrawl(spark, str(tmp_path))
     empty = crawls.where(F.lit(False))
     sink.process_batch(empty, 0)  # fresh store: must not write _SUCCESS-only dir
     assert not os.path.exists(sink.store)
@@ -127,3 +103,28 @@ def test_empty_first_batch_is_skipped(spark, tmp_path):
     assert before == _batch_truth(spark)
     sink.process_batch(empty, 2)  # existing store: no-op
     assert _store_set(sink) == before
+
+
+@pytest.mark.parametrize("budget", [8])
+def test_recrawl_batch_job_budget(spark, tmp_path, budget):
+    """The store is read with its schema (no footer-inference job): a
+    batch that merges into an existing store runs at most ``budget`` jobs,
+    and counting the store at most 2."""
+    crawls = _crawls(spark)
+    sink = IncrementalRecrawl(spark, str(tmp_path))
+    sink.process_batch(crawls.where(F.col("crawl_id") % 2 == 0), 0)
+    sc = spark.sparkContext
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    second = crawls.where(F.col("crawl_id") % 2 == 1)
+    merge = jobs(f"recrawl-batch-{tmp_path.name}", lambda: sink.process_batch(second, 1))
+    assert 0 < merge <= budget, f"{merge} jobs > budget {budget}"
+    count = jobs(f"recrawl-count-{tmp_path.name}", lambda: sink.latest_crawls().count())
+    assert 0 < count <= 2, f"{count} jobs to count the store"

@@ -6,10 +6,13 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from neural_locality_sensitive_hashing_spark.config import DedupConfig
-from neural_locality_sensitive_hashing_spark.operators.suffix import long_repeat_pairs
+from neural_locality_sensitive_hashing_spark.operators.suffix import (
+    WINNOW_WINDOW as W,
+    long_repeat_pairs,
+    long_repeat_pairs_exact,
+)
 
 CFG = DedupConfig(long_repeat_min_tokens=64)
-W = 16
 
 
 def _words(rng, n):
@@ -23,20 +26,20 @@ def test_shared_block_detected_and_absent_block_not(spark):
     b = " ".join(block + _words(rng, 300))
     c = " ".join(_words(rng, 400))
     df = spark.createDataFrame([(0, a), (1, b), (2, c)], "doc_id long, text string")
-    pairs = long_repeat_pairs(df, CFG, winnow_window=W).collect()
+    pairs = long_repeat_pairs(df, CFG).collect()
     assert [(p.a, p.b) for p in pairs] == [(0, 1)]
 
 
 def test_short_docs_no_fp(spark):
     df = spark.createDataFrame([(0, "a b c"), (1, "a b c")], "doc_id long, text string")
-    assert long_repeat_pairs(df, CFG, winnow_window=W).count() == 0
+    assert long_repeat_pairs(df, CFG).count() == 0
 
 
 def test_planted_longrepeat_groups_recovered(spark, pages_1k):
     pages_path, truth_path = pages_1k
     pages = spark.read.parquet(pages_path)
     truth = spark.read.parquet(truth_path)
-    pairs = long_repeat_pairs(pages, CFG, winnow_window=W).persist()
+    pairs = long_repeat_pairs(pages, CFG).persist()
     lr = truth.where(F.col("kind") == "longrepeat")
     want = {}
     for r in lr.collect():
@@ -59,10 +62,6 @@ def test_exact_verify_reports_exact_longest_run(spark):
     comfortably above it) must come back at exactly 149 even though the
     two docs also share a second, shorter 80-token block (the max, not
     any run, is reported)."""
-    from neural_locality_sensitive_hashing_spark.operators.suffix import (
-        long_repeat_pairs_exact,
-    )
-
     rng = np.random.default_rng(23)
     long_block = _words(rng, 149)
     short_block = _words(rng, 80)
@@ -72,7 +71,7 @@ def test_exact_verify_reports_exact_longest_run(spark):
     df = spark.createDataFrame(
         [(0, a), (1, b), (2, c)], "doc_id long, text string"
     )
-    got = long_repeat_pairs_exact(df, CFG, winnow_window=W).collect()
+    got = long_repeat_pairs_exact(df, CFG).collect()
     assert [(r.a, r.b, r.max_run) for r in got] == [(0, 1, 149)]
 
 
@@ -83,15 +82,11 @@ def test_exact_verify_agrees_with_lane_diagonal_kernel(spark, pages_1k):
     and every lane pair at or above the winnowing guarantee bound
     (gram_len + window - 1) must be present in the exact pass — the
     no-false-negatives theorem, end to end."""
-    from neural_locality_sensitive_hashing_spark.operators.suffix import (
-        long_repeat_pairs_exact,
-    )
-
     pages_path, _ = pages_1k
     pages = spark.read.parquet(pages_path)
     exact = {
         (r.a, r.b): r.max_run
-        for r in long_repeat_pairs_exact(pages, CFG, winnow_window=W).collect()
+        for r in long_repeat_pairs_exact(pages, CFG).collect()
     }
     assert exact, "fixture must produce at least one candidate pair"
 
@@ -135,49 +130,12 @@ def test_exact_verify_agrees_with_lane_diagonal_kernel(spark, pages_1k):
             assert pair in exact, (pair, run)
 
 
-def test_exact_verify_persist_grams_equivalent(spark):
-    """persist_grams=True (the real-cluster memory knob) must be purely a
-    physical choice: identical (a, b, max_run) output as the default
-    recompute path on the same input."""
-    from neural_locality_sensitive_hashing_spark.operators.suffix import (
-        long_repeat_pairs_exact,
-    )
-
-    rng = np.random.default_rng(31)
-    block = _words(rng, 100)
-    rows = [
-        (0, " ".join(_words(rng, 80) + block + _words(rng, 40))),
-        (1, " ".join(block + _words(rng, 120))),
-        (2, " ".join(_words(rng, 200))),
-        (3, " ".join(_words(rng, 60) + block)),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    base = sorted(
-        (r.a, r.b, r.max_run)
-        for r in long_repeat_pairs_exact(df, CFG, winnow_window=W).collect()
-    )
-    cached = sorted(
-        (r.a, r.b, r.max_run)
-        for r in long_repeat_pairs_exact(
-            df, CFG, winnow_window=W, persist_grams=True
-        ).collect()
-    )
-    spark.catalog.clearCache()
-    assert base == cached and base, base
-
-
 def test_exact_verify_complete_only_contract(spark):
-    """The default output must be exact AND complete over what it
-    returns: no row below the winnowing guarantee bound
-    (gram_len + winnow_window - 1), and the default set must equal the
-    best-effort (complete_only=False) set thresholded at the bound —
-    a sub-bound shared block (here 70 < 79 tokens) must never surface
-    in the default output even when winnowing happens to sample it."""
-    from neural_locality_sensitive_hashing_spark.operators.suffix import (
-        long_repeat_pairs_exact,
-        release_caches,
-    )
-
+    """The output is exact AND complete over what it returns: no row
+    below the winnowing guarantee bound (gram_len + WINNOW_WINDOW - 1),
+    and a pair sharing only a sub-bound block never surfaces — neither
+    one whose 70-token block winnowing misses nor one whose 78-token
+    block it samples into the candidates."""
     bound = CFG.long_repeat_min_tokens + W - 1
     rng = np.random.default_rng(41)
     long_block = _words(rng, 110)  # >= bound: guaranteed + kept
@@ -188,46 +146,20 @@ def test_exact_verify_complete_only_contract(spark):
         (2, " ".join(_words(rng, 50) + sub_block + _words(rng, 50))),
         (3, " ".join(sub_block + _words(rng, 90))),
     ]
+    sampled_block = _words(rng, 78)  # one token under the bound
+    rows += [
+        (4, " ".join(_words(rng, 40) + sampled_block + _words(rng, 40))),
+        (5, " ".join(sampled_block + _words(rng, 80))),
+    ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    strict = sorted(
-        (r.a, r.b, r.max_run)
-        for r in long_repeat_pairs_exact(df, CFG, winnow_window=W).collect()
+    cands = {(r.a, r.b) for r in long_repeat_pairs(df, CFG).collect()}
+    got = sorted(
+        (r.a, r.b, r.max_run) for r in long_repeat_pairs_exact(df, CFG).collect()
     )
-    loose = sorted(
-        (r.a, r.b, r.max_run)
-        for r in long_repeat_pairs_exact(
-            df, CFG, winnow_window=W, complete_only=False
-        ).collect()
-    )
-    release_caches()
-    assert all(run >= bound for _, _, run in strict)
-    assert strict == [t for t in loose if t[2] >= bound]
-    assert (0, 1, 110) in strict
-    # every loose row is still EXACT, including any best-effort one
-    for a, b, run in loose:
-        if (a, b) == (2, 3):
-            assert run == 70
-
-
-def test_release_caches_unpersists_suffix_stage(spark):
-    """release_caches must drop exactly the suffix-stage cached
-    intermediates registered by long_repeat_pairs_exact."""
-    from neural_locality_sensitive_hashing_spark.operators import suffix
-
-    rng = np.random.default_rng(43)
-    block = _words(rng, 90)
-    df = spark.createDataFrame(
-        [(0, " ".join(block + _words(rng, 40))), (1, " ".join(block))],
-        "doc_id long, text string",
-    )
-    suffix.long_repeat_pairs_exact(
-        df, CFG, winnow_window=W, persist_grams=True
-    ).collect()
-    assert len(suffix._LIVE_CACHES) == 2  # cand + grams
-    handles = list(suffix._LIVE_CACHES)
-    suffix.release_caches()
-    assert not suffix._LIVE_CACHES
-    assert all(h.storageLevel.useMemory is False for h in handles)
+    spark.catalog.clearCache()
+    assert cands == {(0, 1), (4, 5)}
+    assert all(run >= bound for _, _, run in got)
+    assert got == [(0, 1, 110)]
 
 
 def test_job_long_repeat_exact_tier_merges_minhash_invisible_pairs(tmp_path):
@@ -291,5 +223,5 @@ def test_job_long_repeat_exact_tier_merges_minhash_invisible_pairs(tmp_path):
          "--pages", pages_path, "--long-repeat-exact", "50"],
         cwd=repo, timeout=60, capture_output=True, text=True, env=env,
     )
-    assert r.returncode != 0
+    assert r.returncode == 2
     assert "guarantee bound" in r.stderr

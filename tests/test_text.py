@@ -80,21 +80,11 @@ def test_analysis_kernels(spark):
         T.token_count(F.col("text")).alias("n"),
         T.lang_id(F.col("text")).alias("lang"),
         T.quality_score(F.col("text")).alias("q"),
-        T.fingerprint(F.col("text")).alias("fp"),
     ).collect()
     assert rows[0].n == 10
     assert rows[0].lang == "en"
     assert rows[1].lang == "de"
     assert 0.0 <= rows[0].q <= 1.0
-    assert isinstance(rows[0].fp, int)
-
-
-def test_fingerprint_whitespace_normalized(spark):
-    df = spark.createDataFrame([("a  b   c", "a b c")], "t1 string, t2 string")
-    r = df.select(
-        (T.fingerprint(F.col("t1")) == T.fingerprint(F.col("t2"))).alias("eq")
-    ).first()
-    assert r.eq
 
 
 def test_bpe_token_count_literals(spark):

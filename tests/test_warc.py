@@ -15,7 +15,6 @@ from hypothesis import strategies as st
 from neural_locality_sensitive_hashing_spark.sources.warc import (
     encode_warc,
     iter_warc_records,
-    parse_warc_records,
     read_warc,
     warc_pages,
 )
@@ -38,7 +37,7 @@ def _records(n: int, seed: int = 5) -> list[dict]:
 @pytest.mark.parametrize("gz", [False, True])
 def test_roundtrip(gz):
     recs = _records(7)
-    got = parse_warc_records(encode_warc(recs, gzip_members=gz))
+    got = list(iter_warc_records(encode_warc(recs, gzip_members=gz)))
     assert len(got) == len(recs)
     for want, have in zip(recs, got):
         assert have["warc_type"] == "response"
@@ -62,7 +61,7 @@ def test_embedded_magic_in_body():
             "html": b"<html>second real page</html>",
         },
     ]
-    got = parse_warc_records(encode_warc(recs, gzip_members=False))
+    got = list(iter_warc_records(encode_warc(recs, gzip_members=False)))
     assert [g["url"] for g in got] == [r["url"] for r in recs]
     assert got[0]["body"] == recs[0]["html"]
 
@@ -76,17 +75,17 @@ def test_resync_past_garbage_and_truncation():
         b"\x00garbage\xff" + blobs[0] + b"noise WARC/ not-magic" + blobs[1]
         + blobs[2] + blobs[3][: len(blobs[3]) // 2]  # truncated mid-content
     )
-    got = parse_warc_records(spliced)
+    got = list(iter_warc_records(spliced))
     assert [g["url"] for g in got] == [r["url"] for r in recs[:3]]
     # gzip flavour: corrupt tail member yields the clean prefix members
     gz = encode_warc(recs[:2], gzip_members=True)
-    assert len(parse_warc_records(gz + b"\x1f\x8b\x08trunc")) == 2
+    assert len(list(iter_warc_records(gz + b"\x1f\x8b\x08trunc"))) == 2
 
 
 @settings(max_examples=200, deadline=None)
 @given(st.binary(max_size=600))
 def test_total_on_arbitrary_bytes(payload):
-    out = parse_warc_records(payload)
+    out = list(iter_warc_records(payload))
     assert isinstance(out, list)
 
 
@@ -94,7 +93,7 @@ def test_total_on_arbitrary_bytes(payload):
 @given(st.binary(max_size=200), st.integers(0, 400))
 def test_total_on_corrupted_real_archive(tail, cut):
     base = encode_warc(_records(3, seed=2), gzip_members=False)
-    out = parse_warc_records(base[: min(cut, len(base))] + tail)
+    out = list(iter_warc_records(base[: min(cut, len(base))] + tail))
     assert isinstance(out, list)
 
 
@@ -232,77 +231,11 @@ def test_job_tool_from_warc_end_to_end(tmp_path):
     input_urls = {r["url"] for r in recs}
     survivor_rows = []
     for f in os.listdir(survivors_dir):
-        survivor_rows += parse_warc_records(
+        survivor_rows += list(iter_warc_records(
             (survivors_dir / f).read_bytes()
-        )
+        ))
     assert len(survivor_rows) == 50
     assert {r["url"] for r in survivor_rows} <= input_urls
-
-
-def test_streaming_warc_ingestion_matches_batch_tier(spark, tmp_path):
-    """Continuous crawl ingestion: archives drained one-per-micro-batch
-    through run_incremental_recrawl_warc must leave the latest-crawl
-    store EQUAL to the batch tier over the same directory — including
-    cross-archive recrawls, where a later micro-batch must replace a
-    winner the store already holds."""
-    from pyspark.sql import functions as F
-
-    from neural_locality_sensitive_hashing_spark.operators.recrawl import (
-        latest_crawl_per_url,
-    )
-    from neural_locality_sensitive_hashing_spark.streaming.recrawl_stream import (
-        run_incremental_recrawl_warc,
-    )
-
-    warc_dir = tmp_path / "crawl"
-    warc_dir.mkdir()
-
-    def rec(url, day, hour, tag):
-        return {
-            "url": url,
-            "date": datetime(2024, 5, day, hour, 0, 0),
-            "html": b"<html><main>" + tag + b"</main></html>",
-        }
-
-    archives = [
-        # archive 0: two fresh pages
-        [rec("https://a.com/x", 1, 0, b"x v1"), rec("https://b.com/y", 1, 1, b"y v1")],
-        # archive 1: recrawl of a.com/x under a tracking variant (newer)
-        [rec("https://a.com/x?utm_source=s", 2, 0, b"x v2"),
-         rec("https://c.com/z", 2, 1, b"z v1")],
-        # archive 2: OLDER duplicate of b.com/y (must NOT replace) and a
-        # third, newest crawl of a.com/x
-        [rec("https://B.com/y/", 1, 0, b"y v0"), rec("https://a.com/x#f", 3, 0, b"x v3")],
-    ]
-    for i, recs in enumerate(archives):
-        (warc_dir / f"arc{i}.warc.gz").write_bytes(encode_warc(recs))
-
-    sink = run_incremental_recrawl_warc(
-        spark, str(warc_dir), str(tmp_path / "state"), store_parts=4
-    )
-    got = sorted(
-        (r.canonical_url, r.url, r.warc_ts, r.n_crawls)
-        for r in sink.latest_crawls().collect()
-    )
-
-    batch = latest_crawl_per_url(
-        read_warc(spark, str(warc_dir)).withColumn(
-            "crawl_id", F.xxhash64("path", "seq")
-        ),
-        id_col="crawl_id",
-    )
-    want = sorted(
-        (r.canonical_url, r.url, r.warc_ts, r.n_crawls)
-        for r in batch.select(
-            "canonical_url", "url", "warc_ts", "n_crawls"
-        ).collect()
-    )
-    assert got == want
-    by_canon = {g[0]: g for g in got}
-    assert by_canon["https://a.com/x"][2] == datetime(2024, 5, 3, 0, 0, 0)
-    assert by_canon["https://a.com/x"][3] == 3
-    assert by_canon["https://b.com/y"][2] == datetime(2024, 5, 1, 1, 0, 0)
-    assert by_canon["https://b.com/y"][3] == 2
 
 
 def test_warc_11_and_fractional_dates():
@@ -315,7 +248,7 @@ def test_warc_11_and_fractional_dates():
         gzip_members=False,
     )
     as11 = rec.replace(b"WARC/1.0\r\n", b"WARC/1.1\r\n", 1)
-    got = parse_warc_records(as11)
+    got = list(iter_warc_records(as11))
     assert len(got) == 1 and got[0]["url"] == "https://v.com/p"
 
     frac = rec.replace(
@@ -324,7 +257,7 @@ def test_warc_11_and_fractional_dates():
     )
     # same byte length not guaranteed -> fix Content-Length is NOT needed:
     # WARC-Date is a header, content-length covers only the content block
-    got = parse_warc_records(frac)
+    got = list(iter_warc_records(frac))
     assert len(got) == 1
     assert got[0]["date"] == datetime(2024, 6, 1, 8, 0, 0, 123456)
 
@@ -337,7 +270,7 @@ def test_hostile_magic_flood_parses_in_linear_time():
 
     flood = b"WARC/1.0\r\n" * 131072  # 1.3 MB of pure magic
     t0 = time.perf_counter()
-    out = parse_warc_records(flood + b"garbage tail")
+    out = list(iter_warc_records(flood + b"garbage tail"))
     dt = time.perf_counter() - t0
     assert out == []
     assert dt < 10.0, f"magic flood took {dt:.1f}s — resync regressed to quadratic?"
@@ -359,7 +292,7 @@ def test_record_straddling_gzip_members():
     for part in (raw[:cut], raw[cut:]):
         co = zlib.compressobj(6, zlib.DEFLATED, 31)
         members += co.compress(part) + co.flush()
-    got = parse_warc_records(members)
+    got = list(iter_warc_records(members))
     assert [g["url"] for g in got] == [r["url"] for r in recs]
     assert [g["body"] for g in got] == [r["html"] for r in recs]
 
@@ -404,7 +337,7 @@ def test_carryover_with_tiny_chunks(monkeypatch):
 
     monkeypatch.setattr(w, "_GZIP_CHUNK", 64)
     recs = _records(5, seed=51)
-    got = w.parse_warc_records(w.encode_warc(recs))
+    got = list(w.iter_warc_records(w.encode_warc(recs)))
     assert [g["url"] for g in got] == [r["url"] for r in recs]
     assert [g["body"] for g in got] == [r["html"] for r in recs]
 
@@ -434,7 +367,7 @@ def test_malformed_record_then_valid_across_chunks(monkeypatch):
     raw = bad + w.encode_warc([good_rec], gzip_members=False)
     co = _zlib.compressobj(6, _zlib.DEFLATED, 31)
     gz = co.compress(raw) + co.flush()
-    got = w.parse_warc_records(gz)
+    got = list(w.iter_warc_records(gz))
     assert [g["url"] for g in got] == ["https://good.com/y"]
 
 
@@ -455,7 +388,7 @@ def test_hostile_unterminated_header_is_capped(monkeypatch):
 
     raw = hostile + w.encode_warc([good_rec], gzip_members=False)
     co = _zlib.compressobj(6, _zlib.DEFLATED, 31)
-    got = w.parse_warc_records(co.compress(raw) + co.flush())
+    got = list(w.iter_warc_records(co.compress(raw) + co.flush()))
     assert [g["url"] for g in got] == ["https://after.com/z"]
 
 
@@ -482,7 +415,7 @@ def test_hostile_content_length_is_capped(monkeypatch):
     }
     raw = hostile + w.encode_warc([good], gzip_members=False)
     co = _zlib.compressobj(6, _zlib.DEFLATED, 31)
-    got = w.parse_warc_records(co.compress(raw) + co.flush())
+    got = list(w.iter_warc_records(co.compress(raw) + co.flush()))
     assert [g["url"] for g in got] == ["https://ok.com/page"]
 
 
@@ -494,7 +427,7 @@ def test_fractional_date_roundtrip_through_encode():
         "date": datetime(2024, 8, 3, 1, 2, 3, 123456),
         "html": b"<html><main>f</main></html>",
     }
-    got = parse_warc_records(encode_warc([rec]))
+    got = list(iter_warc_records(encode_warc([rec])))
     assert got[0]["date"] == rec["date"]
 
 
@@ -541,7 +474,7 @@ def test_wet_roundtrip(gz):
     from neural_locality_sensitive_hashing_spark.sources.warc import encode_wet
 
     recs = _wet_records(9)
-    got = parse_warc_records(encode_wet(recs, gzip_members=gz))
+    got = list(iter_warc_records(encode_wet(recs, gzip_members=gz)))
     assert len(got) == len(recs)
     for want, have in zip(recs, got):
         assert have["warc_type"] == "conversion"
@@ -721,9 +654,9 @@ def test_job_tool_from_wet_end_to_end(tmp_path):
     input_urls = {r["url"] for r in recs}
     survivor_rows = []
     for f in os.listdir(survivors_dir):
-        survivor_rows += parse_warc_records(
+        survivor_rows += list(iter_warc_records(
             (survivors_dir / f).read_bytes()
-        )
+        ))
     assert len(survivor_rows) == 50
     assert all(r["warc_type"] == "conversion" for r in survivor_rows)
     assert {r["url"] for r in survivor_rows} <= input_urls
@@ -731,69 +664,3 @@ def test_job_tool_from_wet_end_to_end(tmp_path):
     survivor_texts = {r["body"].decode("utf-8") for r in survivor_rows}
     assert survivor_texts <= {r["text"] for r in recs}
     assert base_texts[0] in survivor_texts
-
-
-def test_streaming_wet_ingestion_matches_batch_tier(spark, tmp_path):
-    """WET flavour of continuous ingestion: text archives drained
-    one-per-micro-batch through run_incremental_recrawl_wet leave the
-    latest-crawl store EQUAL to the batch tier over the same directory,
-    including the cross-archive winner replacement and the
-    older-duplicate no-replace cases."""
-    from pyspark.sql import functions as F
-
-    from neural_locality_sensitive_hashing_spark.operators.recrawl import (
-        latest_crawl_per_url,
-    )
-    from neural_locality_sensitive_hashing_spark.sources.warc import (
-        encode_wet,
-        read_wet,
-    )
-    from neural_locality_sensitive_hashing_spark.streaming.recrawl_stream import (
-        run_incremental_recrawl_wet,
-    )
-
-    wet_dir = tmp_path / "crawl_wet"
-    wet_dir.mkdir()
-
-    def rec(url, day, hour, tag):
-        return {
-            "url": url,
-            "date": datetime(2024, 6, day, hour, 0, 0),
-            "text": tag,
-        }
-
-    archives = [
-        [rec("https://a.com/x", 1, 0, "x v1"), rec("https://b.com/y", 1, 1, "y v1")],
-        [rec("https://a.com/x?utm_source=s", 2, 0, "x v2"),
-         rec("https://c.com/z", 2, 1, "z v1")],
-        [rec("https://B.com/y/", 1, 0, "y v0"), rec("https://a.com/x#f", 3, 0, "x v3")],
-    ]
-    for i, recs in enumerate(archives):
-        (wet_dir / f"arc{i}.wet.gz").write_bytes(encode_wet(recs))
-
-    sink = run_incremental_recrawl_wet(
-        spark, str(wet_dir), str(tmp_path / "state_wet"), store_parts=4
-    )
-    got = sorted(
-        (r.canonical_url, r.url, r.warc_ts, r.n_crawls)
-        for r in sink.latest_crawls().collect()
-    )
-
-    batch = latest_crawl_per_url(
-        read_wet(spark, str(wet_dir)).withColumn(
-            "crawl_id", F.xxhash64("path", "seq")
-        ),
-        id_col="crawl_id",
-    )
-    want = sorted(
-        (r.canonical_url, r.url, r.warc_ts, r.n_crawls)
-        for r in batch.select(
-            "canonical_url", "url", "warc_ts", "n_crawls"
-        ).collect()
-    )
-    assert got == want
-    by_canon = {g[0]: g for g in got}
-    assert by_canon["https://a.com/x"][2] == datetime(2024, 6, 3, 0, 0, 0)
-    assert by_canon["https://a.com/x"][3] == 3
-    assert by_canon["https://b.com/y"][2] == datetime(2024, 6, 1, 1, 0, 0)
-    assert by_canon["https://b.com/y"][3] == 2

@@ -119,7 +119,8 @@ def main() -> None:
         "MinHash pairs — catches the MinHash-invisible case (one long "
         "verbatim block inside otherwise-unrelated docs, i.e. low global "
         "Jaccard). MIN_RUN must be >= the winnowing guarantee bound "
-        "(long_repeat_min_tokens + 16 - 1 = 79 at defaults) so the tier "
+        "(long_repeat_min_tokens + the winnowing window - 1 = 79 at "
+        "defaults) so the tier "
         "merges a COMPLETE pair set, not a sampled one",
     )
     ap.add_argument(
@@ -184,8 +185,16 @@ def main() -> None:
         minhash_dup_pairs,
     )
     from neural_locality_sensitive_hashing_spark.operators.suffix import (
+        WINNOW_WINDOW,
         long_repeat_pairs_exact,
     )
+
+    cfg = DedupConfig(shingle_hash_bytes=args.shingle_bytes)
+    lre_bound = cfg.long_repeat_min_tokens + WINNOW_WINDOW - 1
+    if args.long_repeat_exact is not None and args.long_repeat_exact < lre_bound:
+        ap.error(f"--long-repeat-exact {args.long_repeat_exact} is below the "
+                 f"winnowing guarantee bound {lre_bound}: pairs under the bound "
+                 "are best-effort, so merging on them would be nondeterministic")
 
     builder = SparkSession.builder.appName("nlsh-dedup-job")
     if args.shuffle_partitions:
@@ -201,14 +210,6 @@ def main() -> None:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     cores = spark.sparkContext.defaultParallelism
-    cfg = DedupConfig(shingle_hash_bytes=args.shingle_bytes)
-    lre_bound = cfg.long_repeat_min_tokens + 16 - 1
-    if args.long_repeat_exact is not None and args.long_repeat_exact < lre_bound:
-        raise SystemExit(
-            f"--long-repeat-exact {args.long_repeat_exact} is below the "
-            f"winnowing guarantee bound {lre_bound}: pairs under the bound "
-            "are best-effort, so merging on them would be nondeterministic"
-        )
 
     if args.from_warc or args.from_wet:
         from neural_locality_sensitive_hashing_spark.sources.warc import (
