@@ -44,8 +44,9 @@ def banded_signatures_fused(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     signs and bands documents — batch, the resumable pipeline and the
     stream all call it. One Arrow kernel tokenizes, shingles, MinHashes and bands
     (``make_shingle_sig_udf``): the 1 KB/doc signature never leaves the
-    Python worker, only its ``num_bands`` band hashes do."""
-    docs = fan_out(docs)
+    Python worker, only its ``num_bands`` band hashes do. Its parallelism
+    comes from the signed frame's bytes (``partitioning.fan_out``)."""
+    docs = fan_out(docs.select("doc_id", "text"))
     udf = make_shingle_sig_udf(
         cfg.shingle_k, cfg.num_perm, cfg.minhash_seed,
         num_bands=cfg.num_bands, rows_per_band=cfg.rows_per_band,

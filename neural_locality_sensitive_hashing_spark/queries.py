@@ -219,7 +219,8 @@ def _spark_shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from neural_locality_sensitive_hashing_spark.partitioning import fan_out
 
     # r10: the sf documents table reads as ONE scan partition, which ran
-    # this kernel single-threaded (partitioning.py); no-op at real scale
+    # this kernel single-threaded; fan_out spreads it over the slots from
+    # 1 MiB of docs up (partitioning.py), a no-op at real scale
     return fan_out(docs).select(
         "doc_id", make_gram_hash_text_udf(CFG.shingle_k)(F.col("text")).alias("sh")
     )
@@ -2447,7 +2448,8 @@ def q_benchmark_decontam(
     # r10: fused Arrow gram kernel (see _spark_shingled) — the
     # contamination probe only compares gram equality and distinct
     # counts, so the hash family is free to change; fan_out parallelizes
-    # the kernel over the single-file sf scan (no-op at real scale)
+    # the kernel over a single-file sf scan of 1 MiB or more (no-op at
+    # real scale)
     sh = fan_out(docs).select(
         "doc_id", make_gram_hash_text_udf(DECON_K)(F.col("text")).alias("sh")
     )

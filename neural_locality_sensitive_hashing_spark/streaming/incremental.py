@@ -24,9 +24,11 @@ The batch's signatures, candidates and gathered set table are each
 computed once, by the one job of a ``localCheckpoint`` (after the shuffle
 stages feeding it) that every later reader reuses; all three are released
 when the batch ends, on success and on failure
-(``checkpoints.local_checkpoints``). A store-probing batch runs 12 Spark
-jobs: sign 2, candidates 3, gather 3, verify + pair append 3 (two of them
-broadcasts), signature append 1.
+(``checkpoints.local_checkpoints``). A store-probing batch runs 11 Spark
+jobs: sign 1, candidates 3, gather 3, verify + pair append 3 (two of them
+broadcasts), signature append 1. A micro-batch is under
+``partitioning.fan_out``'s byte floor, so it signs on its scan's own
+partitions (one task for a 150-doc batch) with no fan-out exchange.
 
 State lives in parquet stores (Iceberg-style append tables), not in Spark's
 operator state — so the stream can restart from its checkpoint.
@@ -40,8 +42,10 @@ each kept sorted by its key —
 A doc's bands sit beside its set, so one append stores both: no window in
 which a doc's bands are stored but its set is not. A batch appends its
 rows to each store sorted within the partitions they already have: no
-extra exchange, at most ``spark.sql.shuffle.partitions`` files per append
-(the parallelism the batch's signatures fan out to). Per batch the stream
+extra exchange, and each append coalesced to at most
+``spark.sql.shuffle.partitions`` files. The signature append writes one
+file per partition the batch signed on: one for a batch in one scan
+split under the fan-out floor. Per batch the stream
 reads the signature store once, as one frame with two readers: the
 candidate pass scans its WHOLE (doc_id, bands) columns (parquet prunes
 ``sh``; the exploded rows enter the pass's one exchange beside the new
@@ -295,10 +299,11 @@ class IncrementalDeduper:
             dups = jaccard_verify(cands, all_sets, cfg).withColumn(
                 "batch_id", F.lit(int(batch_id))
             )
-            # at most one file per batch partition, i.e. per shuffle partition
-            # (the signatures fan out to that many): the verified pairs can
-            # come out of a join streamed over new + old sets, with more
-            # partitions, and coalesce merges those without an exchange
+            # at most one file per shuffle partition: the signatures keep
+            # the partitions they were signed on (one for a batch under
+            # fan_out's byte floor), and the verified pairs can come out
+            # of a join streamed over new + old sets, with more partitions,
+            # which coalesce merges without an exchange
             parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
             for df, (path, (key, schema)) in zip((dups, new_sigs), self.stores.items()):
                 (

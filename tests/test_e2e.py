@@ -103,11 +103,12 @@ def test_decontam_broadcast_gate_and_shuffle_fallback(spark):
 
 # Spark jobs of one minhash_dedup_clusters(...).collect() on pages_1k
 # (1,000 docs, the join-verify path): the verify gate's aggregate over the
-# persisted signatures 4 (with the exchanges it runs under adaptive
-# execution), the candidate and verify exchanges 4, union-find 2 (the
-# pairs checkpoint, the Arrow collect of the edges), the singleton join's
-# collect 2.
-BATCH_JOBS = 12
+# persisted signatures 3 (the kernel signs on the scan's one partition:
+# the docs are under fan_out's byte floor; the rest are the exchanges the
+# aggregate runs under adaptive execution), the candidate and verify
+# exchanges 4, union-find 2 (the pairs checkpoint, the Arrow collect of
+# the edges), the singleton join's collect 2.
+BATCH_JOBS = 11
 
 
 @pytest.mark.parametrize("budget", [BATCH_JOBS])

@@ -1,9 +1,9 @@
 """No orphan engine code: every module of the package is reachable by
 import from an entry point (``__spark_entry__.py``, ``bench.py``, ``tools/*.py``,
-``perfbench/*.py``, the package ``__init__``), every top-level function and
-class of the package is used by non-test code, and every ``DedupConfig``
-field is read there. Static AST scans, with function-local
-imports included; no Spark session."""
+``perfbench/*.py``, the package ``__init__``), every top-level function,
+class and module-level constant of the package is read by non-test code,
+and every ``DedupConfig`` field is read there. Static AST scans, with
+function-local imports included; no Spark session."""
 
 from __future__ import annotations
 
@@ -78,20 +78,42 @@ KEPT = {
 }
 
 
+def _top_names(top: ast.stmt) -> list[str]:
+    """The names a top-level statement defines: a function or class, or
+    the plain-name targets of a module-level assignment (dunders such as
+    ``__all__`` aside)."""
+    if isinstance(top, (ast.FunctionDef, ast.ClassDef)):
+        return [top.name]
+    if isinstance(top, ast.Assign):
+        targets = top.targets
+    elif isinstance(top, ast.AnnAssign):
+        targets = [top.target]
+    else:
+        return []
+    return [
+        n.id for t in targets for n in ast.walk(t)
+        if isinstance(n, ast.Name) and not n.id.startswith("__")
+    ]
+
+
 def _reads() -> list[tuple[str, str, tuple[str, str | None]]]:
-    """(name, base, (module, enclosing top-level function, class or None)) for
-    every name or attribute read in non-test code; ``base`` is the last
-    name of an attribute's owner (``cfg`` in ``self.cfg.x``), else "".
-    Import statements and ``def`` names are not reads."""
+    """(name, base, (module, enclosing top-level definition or None)) for
+    every name or attribute read (``Load`` context) in non-test code;
+    ``base`` is the last name of an attribute's owner (``cfg`` in
+    ``self.cfg.x``), else "". A module-level assignment encloses what its
+    value reads. Assignment targets, import statements and ``def`` names
+    are not reads."""
     files = [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
     files += sorted((ROOT / PKG).rglob("*.py")) + _tool_files()
     reads = []
     for path in files:
         module = _name(path)
         for top in ast.parse(path.read_text(), str(path)).body:
-            named = isinstance(top, (ast.FunctionDef, ast.ClassDef))
-            where = (module, top.name if named else None)
+            names = _top_names(top)
+            where = (module, names[0] if names else None)
             for node in ast.walk(top):
+                if not isinstance(getattr(node, "ctx", None), ast.Load):
+                    continue
                 if isinstance(node, ast.Name):
                     reads.append((node.id, "", where))
                 elif isinstance(node, ast.Attribute):
@@ -102,15 +124,15 @@ def _reads() -> list[tuple[str, str, tuple[str, str | None]]]:
 
 
 def _dead_functions(reads) -> set[tuple[str, str]]:
-    """(module, name) of each top-level function or class of the package,
-    ``KEPT`` aside, that nothing uses: no read outside its own body, other
-    than from a definition already found dead (so a helper that only a
-    dead function calls is dead too)."""
+    """(module, name) of each top-level function, class or module-level
+    constant of the package, ``KEPT`` aside, that nothing uses: no read
+    outside its own definition, other than from a definition already found
+    dead (so a helper that only a dead function calls is dead too)."""
     defs = {
-        (_name(path), node.name)
+        (_name(path), name)
         for path in (ROOT / PKG).rglob("*.py")
         for node in ast.parse(path.read_text()).body
-        if isinstance(node, (ast.FunctionDef, ast.ClassDef))
+        for name in _top_names(node)
     }
     defs -= {(f"{PKG}.{mod}", name) for mod, name in KEPT}
     dead: set[tuple[str, str]] = set()
@@ -129,7 +151,8 @@ def _dead_functions(reads) -> set[tuple[str, str]]:
 
 def test_no_dead_dedup_operator_functions():
     # covers every module of the package, the dedup operators included: a
-    # dead function or class is deleted with its tests, not kept for them
+    # dead function, class or constant is deleted with its tests, not kept
+    # for them
     dead = _dead_functions(_reads())
     assert {f"{m[len(PKG) + 1:]}.{fn}" for m, fn in dead} == set()
 

@@ -23,10 +23,10 @@ SF_DIR = "/root/testdata/sf0.001"
 
 # name -> max allowed shuffle exchanges (None = exact 0 asserted separately)
 PLAN_BOUNDS = {
-    # +1 (r10) = the conditional small-scan fan-out repartition
-    # (partitioning.py) that parallelizes the signature kernel over a
-    # single-file scan; a no-op (no exchange) once the scan has >= session
-    # parallelism partitions, i.e. on any at-scale corpus
+    # +1 (r10) = the conditional fan-out repartition (partitioning.py)
+    # that parallelizes the signature kernel over a scan of 1 MiB or more
+    # with fewer than two partitions per slot; no exchange below that
+    # size or on any at-scale corpus
     "minhash_dedup_pairs": 3,
     # union-find labels come back from the driver as a local relation, so
     # the plan is the doc scan broadcast-joined with them: no exchange

@@ -22,8 +22,10 @@ def _data_files(store: str) -> list[str]:
 
 
 def _shuffle_parts(spark) -> int:
-    """A batch's partition count: the signatures fan out to the shuffle
-    parallelism, and each store append is coalesced to it."""
+    """The most files a batch appends to a store: each append is coalesced
+    to the shuffle parallelism. A batch under ``fan_out``'s byte floor
+    signs on its scan's own partitions and appends that many (one for a
+    single-split batch)."""
     return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
@@ -344,6 +346,22 @@ def test_compact_every_auto_trigger(spark, pages_1k, tmp_path):
     assert streamed == batch
 
 
+def test_small_batch_appends_one_signature_file(spark, pages_1k, tmp_path):
+    """A ~170-doc batch in one scan split is under ``fan_out``'s byte
+    floor: it signs in one task and appends one signature file, also when
+    it probes a store."""
+    from neural_locality_sensitive_hashing_spark.streaming.incremental import (
+        IncrementalDeduper,
+    )
+
+    pages = spark.read.parquet(pages_1k[0])
+    dedup = IncrementalDeduper(spark, CFG, str(tmp_path / "state"))
+    for i in range(2):
+        before = len(_data_files(dedup.sig_store))
+        dedup.process_batch(pages.where(f"doc_id % 6 = {i}"), i)
+        assert len(_data_files(dedup.sig_store)) - before == 1, i
+
+
 def test_dup_pairs_readable_when_early_batches_verify_nothing(spark, tmp_path):
     """A batch that verifies ZERO dup pairs appends an empty frame to a
     fresh pair store, leaving a _SUCCESS-only directory; the store readers
@@ -424,12 +442,12 @@ def test_batches_release_their_intermediates(spark, pages_1k, tmp_path):
 
 
 # Spark jobs of a store-probing micro-batch of ~170 docs in one scan
-# partition: sign 2 (the fan-out exchange, the kernel + checkpoint),
+# partition, under fan_out's byte floor: sign 1 (the kernel + checkpoint),
 # candidates 3 (the (band, bucket) exchange over new ∪ stored bands, the
 # dropDuplicates exchange, the checkpoint), gather 3 (the distinct id
 # exchange, its broadcast, the checkpoint), verify 3 (two set-table
 # broadcasts, the verify + pair append), the signature append 1.
-STREAM_BATCH_JOBS = 12
+STREAM_BATCH_JOBS = 11
 
 
 @pytest.mark.parametrize("budget", [STREAM_BATCH_JOBS])

@@ -106,9 +106,11 @@ def main() -> None:
     ap.add_argument(
         "--max-partition-bytes",
         default="8m",
-        help="parquet scan split size; small enough that a single-file "
-        "local corpus still fans out across all cores (at cluster scale "
-        "inputs are many files and the default 128m applies)",
+        help="parquet scan split size. The signing stage fans a corpus of "
+        "1 MiB or more out to the shuffle parallelism unless it already "
+        "reads as two splits per core; a smaller split only spreads the "
+        "scan itself (at cluster scale inputs are many files and the "
+        "default 128m applies)",
     )
     ap.add_argument(
         "--long-repeat-exact", type=int, default=None, metavar="MIN_RUN",
