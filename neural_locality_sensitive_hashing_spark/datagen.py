@@ -29,6 +29,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 VOCAB_SIZE = 50_000
+# token-length range of the unique, near-duplicate and exact-duplicate docs
+DOC_LEN_LO, DOC_LEN_HI = 50, 600
 _EPOCH_2025 = np.datetime64("2025-01-01T00:00:00", "us")
 
 
@@ -49,10 +51,10 @@ def _make_html(site: int, idx: int, text: str) -> bytes:
 
 
 class _Zipf:
-    def __init__(self, rng: np.random.Generator, vocab_size: int = VOCAB_SIZE):
+    def __init__(self, rng: np.random.Generator):
         self.rng = rng
-        self.vocab = np.array([f"w{i:05d}" for i in range(vocab_size)])
-        p = 1.0 / np.arange(1, vocab_size + 1) ** 1.07
+        self.vocab = np.array([f"w{i:05d}" for i in range(VOCAB_SIZE)])
+        p = 1.0 / np.arange(1, VOCAB_SIZE + 1) ** 1.07
         self.cdf = np.cumsum(p / p.sum())
 
     def tokens(self, n: int) -> np.ndarray:
@@ -75,12 +77,7 @@ def _mutate(rng: np.random.Generator, toks: np.ndarray, rate: float, z: _Zipf) -
     return out
 
 
-def generate_pages(
-    n_docs: int,
-    seed: int = 42,
-    doc_len_lo: int = 50,
-    doc_len_hi: int = 600,
-) -> tuple[pa.Table, pa.Table]:
+def generate_pages(n_docs: int, seed: int = 42) -> tuple[pa.Table, pa.Table]:
     """-> (pages arrow table, truth_groups arrow table)."""
     rng = np.random.default_rng(seed)
     z = _Zipf(rng)
@@ -105,7 +102,7 @@ def generate_pages(
 
     # 55% unique token soup
     for _ in range(n_unique):
-        ln = int(rng.integers(doc_len_lo, doc_len_hi + 1))
+        ln = int(rng.integers(DOC_LEN_LO, DOC_LEN_HI + 1))
         add(z.tokens(ln), next_group, 0.0, "unique")
         next_group += 1
 
@@ -118,7 +115,7 @@ def generate_pages(
         size = min(size, n_neardup - made)
         if size < 2:
             break
-        ln = int(rng.integers(doc_len_lo, doc_len_hi + 1))
+        ln = int(rng.integers(DOC_LEN_LO, DOC_LEN_HI + 1))
         base = z.tokens(ln)
         rate = mut_rates[int(rng.integers(0, len(mut_rates)))]
         add(base, next_group, 0.0, "neardup")
@@ -134,7 +131,7 @@ def generate_pages(
         size = min(size, n_exact - made)
         if size < 2:
             break
-        ln = int(rng.integers(doc_len_lo, doc_len_hi + 1))
+        ln = int(rng.integers(DOC_LEN_LO, DOC_LEN_HI + 1))
         base = z.tokens(ln)
         for _ in range(size):
             add(base, next_group, 0.0, "exact")
@@ -161,7 +158,7 @@ def generate_pages(
         next_group += 1
         made += 2
     while made < n_longrep:  # odd remainder -> unique filler
-        ln = int(rng.integers(doc_len_lo, doc_len_hi + 1))
+        ln = int(rng.integers(DOC_LEN_LO, DOC_LEN_HI + 1))
         add(z.tokens(ln), next_group, 0.0, "unique")
         next_group += 1
         made += 1

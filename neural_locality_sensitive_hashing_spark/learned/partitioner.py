@@ -12,6 +12,9 @@ Code:    bits = p > 0.5, packed MSB-first (mirrors ``nlsh/utils.pyx:7-15``)
 Loss:    contrastive pull/push (siamese semantics) +
          bucket-balance penalty mean_k (mean_i p_ik - 0.5)^2 — the
          "proposed" trainer's oversized-bucket penalty in closed form.
+         The reference's other objectives (triplet, hardest-negative
+         mining, sampled labels, minibatch epochs) are not carried: no
+         query trains with them.
 Probe:   deterministic multi-probe — flip subsets of the least-confident
          bits (|p-0.5| smallest), the deterministic counterpart of the
          reference's Bernoulli probe sampling (``nlsh/hashings.py:77-83``).
@@ -29,60 +32,25 @@ def _sigmoid(z: np.ndarray) -> np.ndarray:
     return 1.0 / (1.0 + np.exp(-np.clip(z, -30, 30)))
 
 
+# the fit's hyperparameters: Adam steps (one full-sample step per epoch),
+# learning rate, push-hinge margin and weight of the bucket-balance term
+EPOCHS = 60
+LR = 0.05
+MARGIN = 1.0
+BALANCE_WEIGHT = 0.5
+
+
 def train_partitioner(
-    x: np.ndarray,
-    n_bits: int = 16,
-    epochs: int = 60,
-    lr: float = 0.05,
-    margin: float = 1.0,
-    balance_weight: float = 0.5,
-    seed: int = 42,
-    negative_mode: str = "random",
-    pos_mask_k: int = 8,
-    objective: str = "contrastive",
-    label_bernoulli_p: float | None = None,
-    batch_size: int | None = None,
+    x: np.ndarray, n_bits: int = 16, seed: int = 42
 ) -> dict[str, np.ndarray]:
     """Fit (W, b) on a sample matrix x (n, d). Positive pairs = exact
     nearest neighbor of each row within the sample (the reference's
-    precomputed self-kNN, ``precompute.py:57-67``). Negatives: ``random``
-    draws uniform rows per epoch; ``hardest`` mines the closest
-    non-positive row in the CURRENT code space each epoch — the
-    reference's masked-argmin hard-negative mining
-    (``nlsh/trainers/triplet.py:44-74``); the mask covers the data-space
-    top-``pos_mask_k`` neighborhood (the reference masks its precomputed
-    kNN set) so likely-positives are never mined as negatives. Adam with
+    precomputed self-kNN, ``precompute.py:57-67``); negatives are uniform
+    rows drawn each epoch. Each epoch takes one full-sample Adam step with
     AMSGrad, mirroring the reference's fit loop
-    (``nlsh/trainers/base.py:68-79``).
-
-    ``objective``:
-      * ``contrastive`` (default) — independent pull ||p_a − p_pos||² +
-        hinge push on negatives (siamese semantics,
-        ``nlsh/trainers/siamese.py:9-20``).
-      * ``triplet`` — the reference's actual shared-anchor form
-        (``nlsh/trainers/triplet.py:16-26``):
-        mean(clamp(d(a,p) − d(a,n) + margin, 0)) on code probabilities;
-        both terms gate on the SAME per-anchor hinge activity.
-
-    ``label_bernoulli_p`` (R4, ``nlsh/trainers/siamese.py:45-46``): when
-    set, each anchor draws label ~ Bernoulli(p) per epoch and contributes
-    ONLY its pull term (label=1) or ONLY its push term (label=0) — the
-    reference's sampled-label contrastive batch construction. Contrastive
-    objective only.
-
-    ``batch_size`` (R1+R6, ``nlsh/trainers/triplet.py:104-108``): when
-    set, each epoch visits the sample in a fresh random PERMUTATION and
-    takes one Adam step per minibatch — the reference's shuffled
-    epoch-iteration; ``None`` (default) keeps the original full-batch
-    step (one gradient per epoch, order-independent), bit-identical to
-    previous rounds. Deliberate divergence from the reference: the
-    trailing partial batch IS trained on (the reference's
-    ``n_batches = len // batch_size`` drops it, wasting up to
-    batch_size-1 samples per epoch); the balance term keeps its
-    full-batch per-step magnitude (see the in-step comment: per-step
-    gradient mix is the invariant Adam responds to — measured)."""
-    if objective not in ("contrastive", "triplet"):
-        raise ValueError(f"unknown objective {objective!r}")
+    (``nlsh/trainers/base.py:68-79``), on an independent pull
+    ||p_a − p_pos||² plus a hinge push on the negatives (siamese
+    semantics, ``nlsh/trainers/siamese.py:9-20``)."""
     rng = np.random.default_rng(seed)
     n, d = x.shape
     xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
@@ -97,99 +65,33 @@ def train_partitioner(
     mw, vw, vw_hat = np.zeros_like(w), np.zeros_like(w), np.zeros_like(w)
     mb, vb, vb_hat = np.zeros_like(b), np.zeros_like(b), np.zeros_like(b)
     beta1, beta2, eps = 0.9, 0.999, 1e-8
-    t = 0
-    rows = np.arange(n)
-    if negative_mode == "hardest":
-        # data-space likely-positive mask: self + top-k cosine neighbors
-        k_mask = min(pos_mask_k, n - 2)
-        near = np.argpartition(-sim, k_mask, axis=1)[:, :k_mask]
-
-    def adam_step(anchors: np.ndarray, neg_a: np.ndarray) -> None:
-        """One gradient step with the given anchor rows (full sample or a
-        minibatch). Codes are evaluated for ALL rows (pos/neg partners may
-        fall outside the batch); the balance term always averages the full
-        sample, as in the full-batch form."""
-        nonlocal w, b, t, mw, vw, vw_hat, mb, vb, vb_hat
-        m = len(anchors)
-        z = xn @ w + b
-        p = _sigmoid(z)
-        dp = np.zeros_like(p)
-
-        diff_p = p[anchors] - p[pos[anchors]]
-        diff_n = p[anchors] - p[neg_a]
-        if objective == "triplet":
-            # shared-anchor hinge: clamp(d(a,p) - d(a,n) + margin, 0) —
-            # one activity gate drives BOTH the pull and the push
-            dist_p = (diff_p**2).sum(axis=1)
-            dist_n = (diff_n**2).sum(axis=1)
-            active = (dist_p - dist_n + margin > 0).astype(np.float64)[:, None]
-            np.add.at(dp, anchors, (2 * diff_p - 2 * diff_n) * active / m)
-            np.add.at(dp, pos[anchors], -2 * diff_p * active / m)
-            np.add.at(dp, neg_a, 2 * diff_n * active / m)
-        else:
-            if label_bernoulli_p is not None:
-                lbl = (rng.random(m) < label_bernoulli_p).astype(np.float64)[:, None]
-            else:
-                lbl = None
-            # pull: ||p_i - p_pos||^2
-            pull_g = 2 * diff_p / m if lbl is None else 2 * diff_p * lbl / m
-            np.add.at(dp, anchors, pull_g)
-            np.add.at(dp, pos[anchors], -pull_g)
-            # push: max(0, margin - ||p_i - p_neg||^2)
-            dist_n = (diff_n**2).sum(axis=1)
-            active = (dist_n < margin).astype(np.float64)[:, None]
-            if lbl is not None:
-                active = active * (1.0 - lbl)
-            np.add.at(dp, anchors, -2 * diff_n * active / m)
-            np.add.at(dp, neg_a, 2 * diff_n * active / m)
-        # balance: (mean_i p_ik - 0.5)^2 per bit, averaged over the FULL
-        # sample, UNSCALED in minibatch mode — deliberately. The per-STEP
-        # gradient mix is what Adam (normalized step sizes) responds to,
-        # and it already matches the full-batch form: the pair terms are
-        # per-anchor means (/m) and the balance term a full-sample mean
-        # (/n) in both modes. The per-EPOCH-total argument ("balance
-        # accrues n/batch_size times per epoch") would instead scale this
-        # by m/n — measured (n=1024, batch 32, anisotropic sample), that
-        # scale UNDER-weights the regularizer and lets codes drift to
-        # hot/cold buckets: mean per-bit imbalance 0.041-0.056 scaled vs
-        # 0.009-0.013 full-batch, restored to ~0.0095 unscaled.
-        mean_p = p.mean(axis=0)
-        dp += balance_weight * 2 * (mean_p - 0.5)[None, :] / n
+    for t in range(1, EPOCHS + 1):
+        neg = rng.integers(0, n, size=n)
+        p = _sigmoid(xn @ w + b)
+        diff_p = p - p[pos]
+        diff_n = p - p[neg]
+        # pull: ||p_i - p_pos||^2
+        dp = 2 * diff_p / n
+        np.add.at(dp, pos, -2 * diff_p / n)
+        # push: max(0, margin - ||p_i - p_neg||^2)
+        active = ((diff_n**2).sum(axis=1) < MARGIN).astype(np.float64)[:, None]
+        dp += -2 * diff_n * active / n
+        np.add.at(dp, neg, 2 * diff_n * active / n)
+        # balance: (mean_i p_ik - 0.5)^2 per bit
+        dp += BALANCE_WEIGHT * 2 * (p.mean(axis=0) - 0.5)[None, :] / n
 
         dz = dp * p * (1 - p)
         gw = xn.T @ dz
         gb = dz.sum(axis=0)
 
-        t += 1
         mw = beta1 * mw + (1 - beta1) * gw
         vw = beta2 * vw + (1 - beta2) * gw**2
         vw_hat = np.maximum(vw_hat, vw)  # amsgrad
-        w -= lr * (mw / (1 - beta1**t)) / (np.sqrt(vw_hat / (1 - beta2**t)) + eps)
+        w -= LR * (mw / (1 - beta1**t)) / (np.sqrt(vw_hat / (1 - beta2**t)) + eps)
         mb = beta1 * mb + (1 - beta1) * gb
         vb = beta2 * vb + (1 - beta2) * gb**2
         vb_hat = np.maximum(vb_hat, vb)
-        b -= lr * (mb / (1 - beta1**t)) / (np.sqrt(vb_hat / (1 - beta2**t)) + eps)
-
-    for _ in range(epochs):
-        if negative_mode == "hardest":
-            # mine in the current code-probability space: nearest row
-            # outside the likely-positive neighborhood (masked argmin)
-            p_cur = _sigmoid(xn @ w + b)
-            sq = (p_cur**2).sum(axis=1)
-            d2 = sq[:, None] + sq[None, :] - 2.0 * (p_cur @ p_cur.T)  # (n, n)
-            d2[rows, rows] = np.inf
-            d2[rows[:, None], near] = np.inf
-            neg = d2.argmin(axis=1)
-        else:
-            neg = rng.integers(0, n, size=n)
-        if batch_size is None:
-            adam_step(rows, neg)
-        else:
-            # R1: fresh permutation per epoch; R6: one step per minibatch
-            perm = rng.permutation(n)
-            for i in range(0, n, batch_size):
-                anchors = perm[i : i + batch_size]
-                adam_step(anchors, neg[anchors])
+        b -= LR * (mb / (1 - beta1**t)) / (np.sqrt(vb_hat / (1 - beta2**t)) + eps)
 
     return {"W": w.astype(np.float64), "b": b.astype(np.float64)}
 
@@ -200,7 +102,6 @@ def train_multiband_partitioner(
     n_bits: int = 10,
     seed: int = 42,
     feature_bag_frac: float | None = None,
-    **train_kwargs,
 ) -> list[dict[str, np.ndarray]]:
     """Fit ``n_bands`` INDEPENDENT learned codes (seeds seed..seed+B-1) —
     the learned analogue of MinHash banding's OR-amplification.  A single
@@ -227,16 +128,12 @@ def train_multiband_partitioner(
             bag_rng = np.random.default_rng(seed + 7919 * (band + 1))
             k = max(2, int(round(feature_bag_frac * d)))
             cols = np.sort(bag_rng.choice(d, size=k, replace=False))
-            sub = train_partitioner(
-                x[:, cols], n_bits=n_bits, seed=seed + band, **train_kwargs
-            )
+            sub = train_partitioner(x[:, cols], n_bits=n_bits, seed=seed + band)
             w_full = np.zeros((d, n_bits))
             w_full[cols] = sub["W"]
             out.append({"W": w_full, "b": sub["b"]})
         else:
-            out.append(
-                train_partitioner(x, n_bits=n_bits, seed=seed + band, **train_kwargs)
-            )
+            out.append(train_partitioner(x, n_bits=n_bits, seed=seed + band))
     return out
 
 

@@ -8,16 +8,15 @@ exact distance → top-k, ``nlsh/indexer.py:56-96``) in DataFrame form:
   native distance + ranking window. Small/test scale only; at 100 TB the
   LSH paths below replace them. L2 serves the reference's SIFT-euclidean
   datasets (``nlsh/data.py:112-201``); cosine serves GloVe-angular.
-- ``hyperplane_codes`` + ``ann_lsh``: signed-random-projection LSH — the
+- ``hyperplane_params`` + ``ann_lsh``: signed-random-projection LSH — the
   reference's learned encoder (``nlsh/hashings.py:66-92``) degenerates to
   random hyperplanes when untrained; banding the code bits gives the same
-  multi-probe recall knob (``eval.py:148-196``) as a (bands × bits) split.
-  Queries may probe ``n_probes`` codes per band (flip the lowest-|margin|
-  bits — the deterministic analogue of the reference's Bernoulli probe
-  sampling, ``nlsh/hashings.py:77-83``).
+  recall knob (``eval.py:148-196``) as a (bands × bits) split. Queries
+  probe their own bucket only: the multi-probe query paths live on the
+  learned and IVF codes (``operators/learned.py``).
 - ``ann_lsh_l2``: E2LSH (p-stable) bucketing — bucket = floor((x·v + b)/w)
   per projection, r projections concatenated per band — for Euclidean
-  neighbors.
+  neighbors, one probe per band.
 - ``embedding_dup_pairs``: embedding-cosine near-duplicate PAIRS (the J2
   self-join flavor): LSH-bucketed candidates + exact-cosine verify by
   default; an explicitly size-gated broadcast-matmul fast path for small
@@ -229,25 +228,14 @@ def hyperplane_params(dim: int, num_bands: int, bits_per_band: int, seed: int) -
     return rng.standard_normal((num_bands * bits_per_band, dim))
 
 
-def make_hyperplane_udf(
-    planes: np.ndarray, num_bands: int, bits_per_band: int, n_probes: int = 1
-):
+def make_hyperplane_udf(planes: np.ndarray, num_bands: int, bits_per_band: int):
     """pandas_udf: array<float> embedding -> array<bigint> band bucket codes.
 
     Batch kernel: one (batch, dim) x (dim, nbits) matmul, sign, MSB-first
     bit-pack per band (the reference's bit-pack semantics,
     ``nlsh/utils.pyx:7-15``), then mix the band index in so bands don't
-    collide with each other. With ``n_probes`` > 1, each band also emits
-    codes with its 1..n_probes-1 lowest-|projection| bits flipped one at a
-    time — the deterministic counterpart of the reference's sampled probes
-    (``nlsh/hashings.py:77-83``): low |margin| = least-confident sign.
-    Output length is num_bands * n_probes; band index = position // n_probes.
+    collide with each other. Output length is num_bands.
     """
-    if n_probes > (1 << bits_per_band):
-        raise ValueError(
-            f"n_probes={n_probes} exceeds 2^bits_per_band={1 << bits_per_band}: "
-            "a band of b bits only has 2^b distinct codes to probe"
-        )
     p = planes.T.copy()  # (dim, nbits)
     weights = (1 << np.arange(bits_per_band - 1, -1, -1, dtype=np.int64))  # MSB-first
 
@@ -258,39 +246,13 @@ def make_hyperplane_udf(
         ok = [i for i, v in enumerate(vecs_np) if v is not None]
         if ok:
             m = np.stack([np.asarray(vecs_np[i], dtype=np.float64) for i in ok])
-            proj = m @ p  # (n, nbits)
-            bits = (proj > 0).astype(np.int64)
+            bits = (m @ p > 0).astype(np.int64)  # (n, nbits)
             bands = bits.reshape(len(ok), num_bands, bits_per_band)
             packed = (bands * weights).sum(axis=2)  # (n, num_bands)
             band_mix = np.arange(num_bands, dtype=np.int64) << np.int64(32)
             base = packed + band_mix
-            if n_probes <= 1:
-                for j, i in enumerate(ok):
-                    out[i] = base[j]
-            else:
-                margins = np.abs(proj).reshape(len(ok), num_bands, bits_per_band)
-                # per band: bit positions sorted by ascending |margin|
-                flip_order = margins.argsort(axis=2)  # (n, bands, bits)
-                # probe m flips the least-confident-bit subset encoded by
-                # the binary mask m (same gray-mask expansion as the
-                # learned kernel) — supports n_probes up to 2^bits
-                weight_of = (
-                    np.int64(1) << (bits_per_band - 1 - flip_order)
-                )  # (n, bands, bits): xor weight of the r-th least-confident bit
-                probes = np.empty((len(ok), num_bands, n_probes), dtype=np.int64)
-                probes[:, :, 0] = base
-                for m in range(1, n_probes):
-                    flip = np.zeros_like(base)
-                    mm, j = m, 0
-                    while mm:
-                        if mm & 1:
-                            flip = flip ^ weight_of[:, :, j]
-                        mm >>= 1
-                        j += 1
-                    probes[:, :, m] = base ^ flip
-                flat = probes.reshape(len(ok), num_bands * n_probes)
-                for j, i in enumerate(ok):
-                    out[i] = flat[j]
+            for j, i in enumerate(ok):
+                out[i] = base[j]
         return pd.Series(out)
 
     return codes
@@ -346,30 +308,6 @@ def cosine_topk(cand: DataFrame, queries: DataFrame, corpus: DataFrame, k: int) 
     return _gather_rank(cand, queries, corpus, k, _cosine_udf, "cosine", F.desc)
 
 
-def ann_lsh_candidates(
-    queries: DataFrame,
-    corpus: DataFrame,
-    dim: int,
-    num_bands: int = 8,
-    bits_per_band: int = 8,
-    n_probes: int = 1,
-    seed: int = 42,
-) -> DataFrame:
-    """Deduped (query_id, neighbor_id) candidate pairs from the hyperplane
-    bucket join — exposed separately so the probe sweep can measure the
-    recall-vs-candidate-count curve (the reference's tuning artifact,
-    ``eval.py:148-196``)."""
-    planes = hyperplane_params(dim, num_bands, bits_per_band, seed)
-    corpus_udf = make_hyperplane_udf(planes, num_bands, bits_per_band, n_probes=1)
-    query_udf = make_hyperplane_udf(planes, num_bands, bits_per_band, n_probes=n_probes)
-
-    # NOT fanned out (r10 A/B): the hyperplane code kernel is one cheap
-    # matmul, and the repartition cost beat the parallelism gain
-    # (interleaved medians 1.20 vs 0.99 s) — unlike the md5-family text
-    # kernels where fan_out wins (partitioning.py)
-    return code_join_candidates(queries, corpus, query_udf, corpus_udf)
-
-
 def ann_lsh(
     queries: DataFrame,
     corpus: DataFrame,
@@ -377,7 +315,6 @@ def ann_lsh(
     k: int = 10,
     num_bands: int = 8,
     bits_per_band: int = 8,
-    n_probes: int = 1,
     seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k cosine via hyperplane-LSH bucket join.
@@ -385,9 +322,14 @@ def ann_lsh(
     (id, bucket) explosions equi-join on bucket (band index is mixed into
     the bucket value) — the same J1 bucket join as the reference's index
     probe. Pairs dedup BEFORE the vectors are gathered back (J3), then a
-    vectorized exact-cosine kernel re-ranks. ``n_probes`` widens the query
-    probe set per band (recall knob at constant index)."""
-    cand = ann_lsh_candidates(queries, corpus, dim, num_bands, bits_per_band, n_probes, seed)
+    vectorized exact-cosine kernel re-ranks."""
+    planes = hyperplane_params(dim, num_bands, bits_per_band, seed)
+    udf = make_hyperplane_udf(planes, num_bands, bits_per_band)
+    # NOT fanned out (r10 A/B): the hyperplane code kernel is one cheap
+    # matmul, and the repartition cost beat the parallelism gain
+    # (interleaved medians 1.20 vs 0.99 s) — unlike the md5-family text
+    # kernels where fan_out wins (partitioning.py)
+    cand = code_join_candidates(queries, corpus, udf, udf)
     return cosine_topk(cand, queries, corpus, k)
 
 
@@ -413,7 +355,6 @@ def make_e2lsh_udf(
     num_bands: int,
     rows_per_band: int,
     bucket_width: float,
-    n_probes: int = 1,
 ):
     """pandas_udf: embedding -> array<bigint> per-band bucket ids.
 
@@ -423,44 +364,10 @@ def make_e2lsh_udf(
     widths apart (false candidates removed by the exact re-rank); keeping
     the combine to plain integer arithmetic makes the banding replayable
     in the DuckDB oracle. rows_per_band is capped at 2 to fit the
-    positional pack below the band tag.
-
-    ``n_probes`` > 1 is the L2 multi-probe (K6 for the Euclidean path —
-    Lv et al.'s multi-probe LSH, VLDB'07): per band, the full RANKED
-    PERTURBATION SEQUENCE over Δ ∈ {-1,0,+1}^r \\ {0} — every combination
-    of stepping each quantized coordinate one cell down, up, or not at
-    all — scored by Lv et al.'s success-probability proxy
-    score(Δ) = Σ_j dist_j(Δ_j)², where dist_j(-1) = frac_j (distance to
-    the lower cell boundary), dist_j(+1) = 1 − frac_j, dist_j(0) = 0;
-    probes are emitted in ascending score order (nearest-boundary
-    single steps first, then away-steps / multi-coordinate steps as
-    their probability warrants). Supports up to 3^rows_per_band probes
-    per band — the L2 path's recall knob now reaches the same depth
-    class as the hyperplane path's 2^b probe masks. Probe sets are
-    nested in n_probes (same ranking for every depth), so recall is
-    monotone in n_probes by construction."""
+    positional pack below the band tag."""
     if rows_per_band > 2:
         raise ValueError("e2lsh positional pack supports rows_per_band <= 2")
-    if n_probes > 3**rows_per_band:
-        raise ValueError(
-            f"n_probes={n_probes} exceeds 3^rows_per_band={3 ** rows_per_band}: "
-            "an r-coordinate cell only has 3^r - 1 distinct one-step neighbors"
-        )
     vt = v.T.copy()
-    # all non-identity perturbation vectors, fixed enumeration order
-    # (deterministic tie-break for equal scores)
-    _deltas = np.array(
-        [
-            d
-            for d in (
-                [(d0,) for d0 in (-1, 0, 1)]
-                if rows_per_band == 1
-                else [(d0, d1) for d0 in (-1, 0, 1) for d1 in (-1, 0, 1)]
-            )
-            if any(d)
-        ],
-        dtype=np.int64,
-    )  # (P, r): P = 3^r - 1
 
     @pandas_udf(ArrayType(LongType()))
     def codes(vecs: pd.Series) -> pd.Series:
@@ -469,36 +376,10 @@ def make_e2lsh_udf(
         ok = [i for i, x in enumerate(vecs_np) if x is not None]
         if ok:
             m = np.stack([np.asarray(vecs_np[i], dtype=np.float64) for i in ok])
-            pos = (m @ vt + b) / bucket_width  # (n, bands*r)
-            q = np.floor(pos).astype(np.int64)
-            n = len(ok)
-            qb = q.reshape(n, num_bands, rows_per_band)
-            band_tag = np.arange(num_bands, dtype=np.int64) << np.int64(32)
-
-            def pack(cells: np.ndarray) -> np.ndarray:
-                c = np.mod(cells, 65536)
-                if rows_per_band == 2:
-                    return band_tag + c[:, :, 0] * 65536 + c[:, :, 1]
-                return band_tag + c[:, :, 0]
-
-            probes = [pack(qb)]
-            if n_probes > 1:
-                frac = (pos - q).reshape(n, num_bands, rows_per_band)
-                # Lv et al. score of each perturbation vector: sum over the
-                # stepped coordinates of the squared distance from the query
-                # to the boundary being crossed (down-step crosses the lower
-                # boundary at distance frac, up-step the upper at 1 - frac)
-                down = frac**2  # (n, bands, r)
-                up = (1.0 - frac) ** 2
-                score = (
-                    (_deltas[None, None, :, :] == -1) * down[:, :, None, :]
-                    + (_deltas[None, None, :, :] == 1) * up[:, :, None, :]
-                ).sum(axis=3)  # (n, bands, P)
-                order = score.argsort(axis=2, kind="stable")  # ranked sequence
-                for p in range(n_probes - 1):
-                    sel = order[:, :, p]  # (n, bands) -> delta index
-                    probes.append(pack(qb + _deltas[sel]))
-            flat = np.stack(probes, axis=2).reshape(n, num_bands * len(probes))
+            q = np.floor((m @ vt + b) / bucket_width).astype(np.int64)  # (n, bands*r)
+            c = np.mod(q.reshape(len(ok), num_bands, rows_per_band), 65536)
+            flat = np.arange(num_bands, dtype=np.int64) << np.int64(32)
+            flat = flat + (c[:, :, 0] * 65536 + c[:, :, 1] if rows_per_band == 2 else c[:, :, 0])
             for j, i in enumerate(ok):
                 out[i] = flat[j]
         return pd.Series(out)
@@ -527,20 +408,13 @@ def ann_lsh_l2(
     num_bands: int = 16,
     rows_per_band: int = 2,
     bucket_width: float = 4.0,
-    n_probes: int = 1,
     seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k Euclidean neighbors via E2LSH bucket join; exact
-    L2 re-rank (vectorized kernel) after pair dedup. ``n_probes`` widens
-    each query's probe set toward adjacent quantization cells (multi-probe,
-    corpus hashed once) — the recall knob at constant index."""
+    L2 re-rank (vectorized kernel) after pair dedup."""
     v, b = e2lsh_params(dim, num_bands, rows_per_band, bucket_width, seed)
     udf = make_e2lsh_udf(v, b, num_bands, rows_per_band, bucket_width)
-    q_udf = make_e2lsh_udf(
-        v, b, num_bands, rows_per_band, bucket_width, n_probes=n_probes
-    )
-
-    cand = code_join_candidates(queries, corpus, q_udf, udf)
+    cand = code_join_candidates(queries, corpus, udf, udf)
     return _gather_rank(cand, queries, corpus, k, _l2_udf, "dist", F.asc)
 
 
@@ -549,14 +423,17 @@ def ann_lsh_l2(
 # ---------------------------------------------------------------------------
 
 
-def derive_banding(
-    tau: float, miss_prob: float = 1e-7, max_bands: int = 32
-) -> tuple[int, int]:
+# the per-pair miss probability the derived banding stays below: at test
+# scale the LSH pair set equals the exact-threshold oracle's
+_MISS_PROB = 1e-7
+
+
+def derive_banding(tau: float, max_bands: int = 32) -> tuple[int, int]:
     """(num_bands, bits_per_band) from the hyperplane S-curve: a pair at
     cosine tau agrees on one random-hyperplane bit with probability
     p = 1 − arccos(tau)/π and collides in a b-bit band with p^b; B bands
     miss it with (1 − p^b)^B. Returns the LARGEST b whose required
-    B = ceil(ln(miss_prob)/ln(1 − p^b)) fits in max_bands — maximal
+    B = ceil(ln(_MISS_PROB)/ln(1 − p^b)) fits in max_bands — maximal
     selectivity (random-pair collision mass scales ~(1/2)^b per band) at
     the guaranteed recall floor. tau=0.4 derives (32, 2) — the round-2
     hardwired worst case; tau=0.8 derives (32, 4): 4× fewer random
@@ -569,14 +446,14 @@ def derive_banding(
         pb = p**bits
         if pb >= 1.0:
             continue
-        bands = int(np.ceil(np.log(miss_prob) / np.log(1.0 - pb)))
+        bands = int(np.ceil(np.log(_MISS_PROB) / np.log(1.0 - pb)))
         if bands <= max_bands:
             best = (bands, bits)
         else:
             break
     if best is None:
         raise ValueError(
-            f"no banding with <= {max_bands} bands reaches miss_prob {miss_prob} at tau={tau}"
+            f"no banding with <= {max_bands} bands reaches miss_prob {_MISS_PROB} at tau={tau}"
         )
     return best
 
@@ -680,8 +557,6 @@ def embedding_dup_pairs_lsh(
     emb: DataFrame,
     tau: float,
     dim: int,
-    num_bands: int | None = None,
-    bits_per_band: int | None = None,
     seed: int = 42,
     max_bands: int = 32,
 ) -> DataFrame:
@@ -689,9 +564,8 @@ def embedding_dup_pairs_lsh(
     verify. The default 100 TB plan: no crossJoin; past the broadcast gate
     no driver collect either.
 
-    Banding is DERIVED from tau via the S-curve (``derive_banding``) unless
-    both knobs are passed explicitly: the per-pair miss probability stays
-    below 1e-7 at the given tau, so the LSH output EQUALS the
+    Banding is DERIVED from tau via the S-curve (``derive_banding``): the
+    per-pair miss probability stays below 1e-7 at the given tau, so the LSH output EQUALS the
     exact-threshold oracle at test scale, while higher taus automatically
     get more selective bands (tau=0.4 → 32×2, tau=0.8 → 32×4 with ~4×
     less random-collision fan-out per band).
@@ -712,15 +586,12 @@ def embedding_dup_pairs_lsh(
     below (dedup exchange -> gather joins -> pair-batch kernel) is
     unchanged. Both branches compute identical float64 cosines; the
     native round(...,6) >= tau filter is the semantic gate in both."""
-    if num_bands is None or bits_per_band is None:
-        if (num_bands is None) != (bits_per_band is None):
-            raise ValueError("pass both num_bands and bits_per_band, or neither")
-        # a larger band budget always buys strictly MORE selective bands:
-        # required B grows ~(1/p)^b ≈ 1.26^b (tau=0.8) while random-pair
-        # collision mass falls ~B/2^b — raise max_bands on diffuse corpora
-        num_bands, bits_per_band = derive_banding(tau, max_bands=max_bands)
+    # a larger band budget always buys strictly MORE selective bands:
+    # required B grows ~(1/p)^b ≈ 1.26^b (tau=0.8) while random-pair
+    # collision mass falls ~B/2^b — raise max_bands on diffuse corpora
+    num_bands, bits_per_band = derive_banding(tau, max_bands=max_bands)
     planes = hyperplane_params(dim, num_bands, bits_per_band, seed)
-    udf = make_hyperplane_udf(planes, num_bands, bits_per_band, n_probes=1)
+    udf = make_hyperplane_udf(planes, num_bands, bits_per_band)
 
     ec = emb.select(
         F.col("vec_id").alias("doc_id"), F.explode(udf(F.col("embedding"))).alias("bucket")

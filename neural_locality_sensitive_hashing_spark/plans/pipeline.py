@@ -171,11 +171,3 @@ class DedupPipeline:
             metrics[f"band_{band:02d}_max_bucket"] = float(row["max_bucket"])
         self.catalog.write_metrics(metrics, run_id=self._fps["clusters"])
         return clusters, report
-
-    # -- resume helpers -------------------------------------------------------
-
-    def drop_from(self, stage: str) -> None:
-        """Simulate a mid-pipeline kill: drop this stage and everything after."""
-        idx = self.STAGES.index(stage)
-        for s in self.STAGES[idx:]:
-            self.catalog.drop_snapshot(s)

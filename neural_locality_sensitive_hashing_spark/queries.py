@@ -14,7 +14,6 @@ Tokenization contract shared by Spark and SQL oracles:
 from __future__ import annotations
 
 import functools
-import operator as _op
 from collections.abc import Callable
 
 import numpy as np
@@ -35,6 +34,9 @@ from neural_locality_sensitive_hashing_spark.operators.dedup import (
 )
 
 CFG = DedupConfig()
+# the correctness tables (sf0.01) from which the lazily generated oracles
+# of get_oracles() read their planted fixtures and fitted weights
+ORACLE_SF_DIR = "/root/testdata/sf0.01"
 NGRAM_TAU = 0.5  # exact n-gram Jaccard threshold for the pairs query
 
 
@@ -144,7 +146,7 @@ def _sql_h60(expr: str) -> str:
     return f"CAST(('0x' || substring(md5({expr}), 1, 15)) AS BIGINT)"
 
 
-def _h60_gram_udf(k: int, distinct: bool = False, winnow: int = 0):
+def _h60_gram_udf(k: int, winnow: int):
     """Fused Arrow kernel: text -> array<bigint> of _h60 k-gram hashes —
     BIT-IDENTICAL to the native chain `transform(shingles(tokens(text),
     k), _h60)` (tokenize on the Java \\s class, space-join k-token grams,
@@ -153,11 +155,10 @@ def _h60_gram_udf(k: int, distinct: bool = False, winnow: int = 0):
     allocates per-element JVM garbage that stalls the shared local heap
     at high thread counts (the same effect the fused MinHash kernel
     documents, functions/minhash.py), while the worker computes the gram
-    bytes + md5 with no shared GC. ``distinct`` de-dupes gram STRINGS
-    first (simhash's array_distinct semantics); ``winnow`` > 0 applies
-    the sliding-window-of-w minimum + distinct over the positional gram
-    hashes (longrepeat_winnowed's fingerprint selection) — both replayed
-    exactly as the native expressions compute them, so every consumer's
+    bytes + md5 with no shared GC. The kernel then applies the
+    sliding-window-of-``winnow`` minimum + distinct over the positional gram
+    hashes (longrepeat_winnowed's fingerprint selection), replayed
+    exactly as the native expressions compute it, so every consumer's
     oracle stays value-identical."""
     import hashlib
     import re
@@ -182,8 +183,6 @@ def _h60_gram_udf(k: int, distinct: bool = False, winnow: int = 0):
                 grams = [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
             else:
                 grams = [" ".join(toks)]
-            if distinct:
-                grams = list(dict.fromkeys(grams))
             hs = np.fromiter(
                 (
                     int.from_bytes(md5(g.encode("utf-8")).digest()[:8], "big") >> 4
@@ -192,11 +191,9 @@ def _h60_gram_udf(k: int, distinct: bool = False, winnow: int = 0):
                 dtype=np.int64,
                 count=len(grams),
             )
-            if winnow:
-                if len(hs) >= winnow:
-                    hs = np.lib.stride_tricks.sliding_window_view(hs, winnow).min(axis=1)
-                hs = np.unique(hs)
-            out.append(hs)
+            if len(hs) >= winnow:
+                hs = np.lib.stride_tricks.sliding_window_view(hs, winnow).min(axis=1)
+            out.append(np.unique(hs))
         return pd.Series(out)
 
     return h60_grams
@@ -292,11 +289,11 @@ def q_exact_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_exact_dup_pairs(sf_dir: str = "/root/testdata/sf0.01") -> str:
+def _sql_exact_dup_pairs() -> str:
     """Oracle over the same two tables (documents + the planted parquet)."""
     from neural_locality_sensitive_hashing_spark.planted import ensure_planted
 
-    docs_planted, _ = ensure_planted(sf_dir)
+    docs_planted, _ = ensure_planted(ORACLE_SF_DIR)
     return f"""
 WITH alld AS (
   SELECT doc_id, text FROM documents
@@ -556,7 +553,7 @@ def q_recrawl_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return recrawl_stats(crawls)
 
 
-def _sql_canonical_crawls(sf_dir: str) -> str:
+def _sql_canonical_crawls() -> str:
     """DuckDB CTE replaying operators/recrawl.py::canonical_url with
     string/regexp functions (DuckDB has no parse_url): scheme+authority
     lowercased, www. prefixes and default ports stripped, fragment
@@ -569,7 +566,7 @@ def _sql_canonical_crawls(sf_dir: str) -> str:
     )
     from neural_locality_sensitive_hashing_spark.planted import ensure_planted_crawls
 
-    crawls = ensure_planted_crawls(sf_dir)
+    crawls = ensure_planted_crawls(ORACLE_SF_DIR)
     scheme = r"[a-zA-Z][a-zA-Z0-9+.\-]*"
     return f"""
 raw AS (SELECT * FROM read_parquet('{crawls}')),
@@ -602,9 +599,9 @@ canon AS (
 """
 
 
-def _sql_recrawl_latest(sf_dir: str = "/root/testdata/sf0.01") -> str:
+def _sql_recrawl_latest() -> str:
     return f"""
-WITH {_sql_canonical_crawls(sf_dir)}
+WITH {_sql_canonical_crawls()}
 SELECT crawl_id, canonical_url, n_crawls FROM (
   SELECT crawl_id, canonical_url,
          row_number() OVER (PARTITION BY canonical_url
@@ -615,9 +612,9 @@ SELECT crawl_id, canonical_url, n_crawls FROM (
 """
 
 
-def _sql_recrawl_stats(sf_dir: str = "/root/testdata/sf0.01") -> str:
+def _sql_recrawl_stats() -> str:
     return f"""
-WITH {_sql_canonical_crawls(sf_dir)}
+WITH {_sql_canonical_crawls()}
 SELECT canonical_url, count(*) AS n_crawls
 FROM canon GROUP BY canonical_url HAVING count(*) > 1
 """
@@ -684,9 +681,9 @@ def q_crawl_host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_crawl_host_stats(sf_dir: str = "/root/testdata/sf0.01") -> str:
+def _sql_crawl_host_stats() -> str:
     return f"""
-WITH {_sql_canonical_crawls(sf_dir)}
+WITH {_sql_canonical_crawls()}
 SELECT regexp_extract(canonical_url, '{_HOST_RE}', 1) AS host,
        count(*) AS n_crawls,
        count(DISTINCT canonical_url) AS n_pages
@@ -822,7 +819,7 @@ def q_wet_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(out_dir, ignore_errors=True)
 
 
-def _sql_planted_pages_with_lang(sf_dir: str) -> str:
+def _sql_planted_pages_with_lang() -> str:
     """Shared oracle CTE body for the archive-roundtrip lanes: the
     planted crawls table itself, with lang re-derived by the SAME
     stopword-score CASE the doc_profile oracle pins against
@@ -831,7 +828,7 @@ def _sql_planted_pages_with_lang(sf_dir: str) -> str:
     (url, warc_ts, text, lang)."""
     from neural_locality_sensitive_hashing_spark.planted import ensure_planted_crawls
 
-    crawls = ensure_planted_crawls(sf_dir)
+    crawls = ensure_planted_crawls(ORACLE_SF_DIR)
     return f"""
 raw AS (SELECT url, warc_ts, text FROM read_parquet('{crawls}')),
 toks AS (SELECT *, {_SQL_TOKS} AS t FROM raw),
@@ -848,21 +845,21 @@ pages AS (
 )"""
 
 
-def _sql_warc_pages(sf_dir: str = "/root/testdata/sf0.01") -> str:
+def _sql_warc_pages() -> str:
     return f"""
-WITH {_sql_planted_pages_with_lang(sf_dir)}
+WITH {_sql_planted_pages_with_lang()}
 SELECT url, warc_ts, text, lang FROM pages
 """
 
 
-def _sql_wet_pages(sf_dir: str = "/root/testdata/sf0.01") -> str:
+def _sql_wet_pages() -> str:
     """Oracle for the mixed-archive WET lane: the planted pages table
     once per source family — q_wet_pages reads the SAME mixed directory
     through BOTH sources, and each must recover exactly the planted
     rows from its own family's archives (the WARC side re-deriving text
     from html, the WET side shipping text as-is)."""
     return f"""
-WITH {_sql_planted_pages_with_lang(sf_dir)}
+WITH {_sql_planted_pages_with_lang()}
 SELECT s.src, p.url, p.warc_ts, p.text, p.lang
 FROM pages p
 CROSS JOIN (SELECT 'warc' AS src UNION ALL SELECT 'wet') s
@@ -895,7 +892,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_pii_scrub(sf_dir: str = "/root/testdata/sf0.01") -> str:
+def _sql_pii_scrub() -> str:
     from neural_locality_sensitive_hashing_spark.functions.pii import (
         EMAIL_RE,
         EMAIL_TOKEN,
@@ -904,7 +901,7 @@ def _sql_pii_scrub(sf_dir: str = "/root/testdata/sf0.01") -> str:
     )
     from neural_locality_sensitive_hashing_spark.planted import ensure_planted_pii
 
-    pii_path = ensure_planted_pii(sf_dir)
+    pii_path = ensure_planted_pii(ORACLE_SF_DIR)
     return f"""
 WITH alld AS (
   SELECT doc_id, text FROM documents
@@ -925,7 +922,7 @@ SIMHASH_CHUNKS = 4  # pigeonhole: hamming<=3 pairs share >=1 of 4 exact chunks
 SIMHASH_HAMMING_MAX = 3
 
 
-def _simhash60_code_udf(k: int = CFG.shingle_k):
+def _simhash60_code_udf():
     """Fused Arrow kernel: text -> 60-bit SimHash code under the shared
     md5/_h60 contract — value-identical to the expression pipeline
     (distinct k-gram h60s -> per-bit +1/-1 sums -> sign pack with >= 0
@@ -935,6 +932,7 @@ def _simhash60_code_udf(k: int = CFG.shingle_k):
     import hashlib
     import re
 
+    k = CFG.shingle_k
     ws_re = re.compile(r"[ \t\n\x0b\f\r]+")  # Java regex \s class
     bit_idx = np.arange(SIMHASH_BITS_SQL, dtype=np.uint64)
 
@@ -1364,16 +1362,16 @@ def q_learned_bagged_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     return learned_ann_multiband(queries, emb, wl, k=ANN_K, n_probes=LEARNED_PROBES)
 
 
-def _sql_learned_bagged_ann(sf_dir: str = "/root/testdata/sf0.01") -> str:
-    return _sql_multiband_replay(_bagged_weights_for(sf_dir), BAG_BITS)
+def _sql_learned_bagged_ann() -> str:
+    return _sql_multiband_replay(_bagged_weights_for(ORACLE_SF_DIR), BAG_BITS)
 
 
-def _sql_learned_multiband_ann(sf_dir: str = "/root/testdata/sf0.01") -> str:
+def _sql_learned_multiband_ann() -> str:
     """Oracle for q_learned_multiband_ann: the single-band replay
     (_sql_learned_ann) with a band column threaded through every CTE;
     candidates join on (band, code) — equivalent to the engine's
     band-offset buckets."""
-    return _sql_multiband_replay(_multiband_weights_for(sf_dir), LEARNED_BITS)
+    return _sql_multiband_replay(_multiband_weights_for(ORACLE_SF_DIR), LEARNED_BITS)
 
 
 def _sql_multiband_replay(wl, h: int) -> str:
@@ -1446,11 +1444,11 @@ SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {ANN_K}
 """
 
 
-def _sql_learned_ann(sf_dir: str = "/root/testdata/sf0.01") -> str:
+def _sql_learned_ann() -> str:
     """Oracle for q_learned_ann_cosine: full SQL replay of the learned
     multi-probe query path with the fitted (W, b) embedded as literals.
-    Generated against the driver's correctness sf_dir (sf0.01)."""
-    w = _learned_weights_for(sf_dir)
+    Generated against ORACLE_SF_DIR (sf0.01)."""
+    w = _learned_weights_for(ORACLE_SF_DIR)
     W, b = w["W"], w["b"]  # (dim, n_bits), (n_bits,)
     h = LEARNED_BITS
     rows = []
@@ -1656,8 +1654,7 @@ ANN_K = 10
 def q_ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH approximate neighbors (J1 bucket join + exact
     re-rank). Value-checked against a DuckDB oracle that replays the same
-    hyperplanes; the multi-probe recall knob is exercised in
-    tests/test_similarity.py and BENCH/PROBE_SWEEP.md."""
+    hyperplanes; queries probe their own bucket in each band."""
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 32)
     return S.ann_lsh(
@@ -1805,8 +1802,8 @@ def q_ivf_ann_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_ann(queries, emb, cb, k=ANN_K, n_probes=IVF_PROBES)
 
 
-def _sql_ivf_ann(sf_dir: str = "/root/testdata/sf0.01") -> str:
-    cb = _ivf_codebook_for(sf_dir)
+def _sql_ivf_ann() -> str:
+    cb = _ivf_codebook_for(ORACLE_SF_DIR)
     rows = []
     for i in range(cb.shape[0]):
         arr = "[" + ", ".join(repr(float(v)) for v in cb[i]) + "]"
@@ -2121,11 +2118,11 @@ WHERE round(list_dot_product(l.v, r.v)
       >= {EMB_DUP_TAU}
 """
 
-def _sql_embedding_dup_pairs_hi(sf_dir: str = "/root/testdata/sf0.01") -> str:
+def _sql_embedding_dup_pairs_hi() -> str:
     """Oracle over embeddings ∪ the planted_embeddings parquet table."""
     from neural_locality_sensitive_hashing_spark.planted import ensure_planted
 
-    _, emb_planted = ensure_planted(sf_dir)
+    _, emb_planted = ensure_planted(ORACLE_SF_DIR)
     return f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
       FROM (SELECT vec_id, embedding FROM embeddings
@@ -2411,17 +2408,11 @@ DECON_MOD = 20  # benchmark set = doc_id % DECON_MOD == 0 (~5% pseudo-eval set)
 # inert at every test/bench sf (max doc_id 5000) while bounding the
 # broadcast at <=10k docs' grams forever.
 DECON_MAX_BENCH_ID = 200_000
-
-
+# the benchmark side's broadcast gate, in docs
 DECON_MAX_BROADCAST_BENCH_DOCS = 1_000_000
 
 
-def q_benchmark_decontam(
-    spark: SparkSession,
-    sf_dir: str,
-    broadcast: bool = True,
-    max_broadcast_bench_docs: int = DECON_MAX_BROADCAST_BENCH_DOCS,
-) -> DataFrame:
+def q_benchmark_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/eval contamination check (the GPT-3-style n-gram
     decontamination pass every LLM data pipeline runs): flag corpus
     documents sharing at least one k-token gram with a benchmark set,
@@ -2436,8 +2427,7 @@ def q_benchmark_decontam(
     the final per-doc hit aggregation. The broadcast is SIZE-GATED (same
     loud gate as embedding_dup_pairs_broadcast): a mis-sized "benchmark"
     past DECON_MAX_BROADCAST_BENCH_DOCS raises instead of silently
-    OOMing the driver, with broadcast=False as the shuffle-gram-join
-    fallback for genuinely large contamination sources."""
+    OOMing the driver."""
     docs = load(spark, sf_dir, "documents")
     from neural_locality_sensitive_hashing_spark.functions.minhash import (
         make_gram_hash_text_udf,
@@ -2461,19 +2451,16 @@ def q_benchmark_decontam(
         .select(F.col("doc_id").alias("bench_id"), F.explode("sh").alias("g"))
     )
     cg = sh.where(~is_bench).select("doc_id", F.explode("sh").alias("g"))
-    if broadcast:
-        # limit(max+1) lets the scan stop as soon as the gate is decided —
-        # the gate must not itself cost a full corpus pass at 100 TB
-        n_bench = docs.where(is_bench).limit(max_broadcast_bench_docs + 1).count()
-        if n_bench > max_broadcast_bench_docs:
-            raise ValueError(
-                f"benchmark side exceeds the {max_broadcast_bench_docs}-doc "
-                "broadcast gate; broadcasting would OOM the driver — rerun "
-                "with broadcast=False (shuffle gram join)"
-            )
-        bg = F.broadcast(bg)
+    # limit(max+1) lets the scan stop as soon as the gate is decided —
+    # the gate must not itself cost a full corpus pass at 100 TB
+    n_bench = docs.where(is_bench).limit(DECON_MAX_BROADCAST_BENCH_DOCS + 1).count()
+    if n_bench > DECON_MAX_BROADCAST_BENCH_DOCS:
+        raise ValueError(
+            f"benchmark side exceeds the {DECON_MAX_BROADCAST_BENCH_DOCS}-doc "
+            "broadcast gate: broadcasting its grams would OOM the driver"
+        )
     return (
-        cg.join(bg, "g")
+        cg.join(F.broadcast(bg), "g")
         .groupBy("doc_id")
         .agg(
             F.countDistinct("bench_id").alias("n_bench_docs"),

@@ -13,12 +13,14 @@ import os
 from pyspark.sql import SparkSession
 
 _TMPFS_MIN_FREE_BYTES = 2 * 1024**3
+_TMPFS_SCRATCH = "/dev/shm/spark-scratch"
 
 
-def _tmpfs_scratch(path: str = "/dev/shm/spark-scratch") -> str | None:
+def _tmpfs_scratch() -> str | None:
     """tmpfs scratch dir iff opted in AND the mount has real headroom."""
     if os.environ.get("SPARK_GRAFT_TMPFS", "") != "1":
         return None
+    path = _TMPFS_SCRATCH
     mount = os.path.dirname(path)
     if not os.path.isdir(mount):
         return None

@@ -26,7 +26,6 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
 # the append tables' columns, as the Spark writer of earlier versions typed
@@ -111,16 +110,5 @@ class CheckpointCatalog:
         pq.write_table(data, self._path(table, "." + name))
         os.replace(self._path(table, "." + name), self._path(table, name))
 
-    def _read(self, table: str, schema: pa.Schema) -> DataFrame | None:
-        if not os.path.exists(self._path(table)):
-            return None
-        return self.spark.read.schema(from_arrow_schema(schema)).parquet(self._path(table))
-
-    def lineage(self) -> DataFrame | None:
-        return self._read("_lineage", LINEAGE)
-
     def write_metrics(self, metrics: dict[str, float], run_id: str) -> None:
         self._append("_metrics", METRICS, [(run_id, k, float(v)) for k, v in metrics.items()])
-
-    def metrics(self) -> DataFrame | None:
-        return self._read("_metrics", METRICS)

@@ -549,10 +549,10 @@ def wet_pages(spark, path: str):
 # ---------------------------------------------------------------------------
 
 
-def write_warc(pages, out_dir: str, gzip_members: bool = True):
+def write_warc(pages, out_dir: str):
     """Distributed WARC sink — the inverse of :func:`read_warc`: a
     ``(url, warc_ts, html)`` DataFrame becomes one Common-Crawl-layout
-    archive per partition (``part-NNNNN.warc[.gz]``), so dedup survivors
+    archive of gzip members per partition (``part-NNNNN.warc.gz``), so dedup survivors
     / keep-list output can be re-shipped to WARC-consuming tooling
     without a collect.
 
@@ -577,27 +577,22 @@ def write_warc(pages, out_dir: str, gzip_members: bool = True):
     Returns a ``(file, records)`` manifest DataFrame (one row per
     written archive; the action that triggers the write is the caller's
     — e.g. ``.collect()`` on the manifest)."""
-    return _archive_sink(
-        pages, out_dir, "html", ".warc", gzip_members, encode_warc, bytes
-    )
+    return _archive_sink(pages, out_dir, "html", ".warc", encode_warc, bytes)
 
 
-def write_wet(pages, out_dir: str, gzip_members: bool = True):
+def write_wet(pages, out_dir: str):
     """Distributed WET sink — the inverse of :func:`read_wet`: a
     ``(url, warc_ts, text)`` DataFrame becomes one Common-Crawl-layout
-    extracted-text archive per partition (``part-NNNNN.wet[.gz]``), so
+    extracted-text archive per partition (``part-NNNNN.wet.gz``), so
     dedup survivors re-ship to WET-consuming tooling WITHOUT their html
     payloads — typically several times smaller than the WARC form of
     the same keep-list. Identical Spark shape, retry-safety (tmp +
     atomic rename), null filtering, stale-output clearing, and
     ``(file, records)`` manifest contract as :func:`write_warc`."""
-    return _archive_sink(
-        pages, out_dir, "text", ".wet", gzip_members, encode_wet, str
-    )
+    return _archive_sink(pages, out_dir, "text", ".wet", encode_wet, str)
 
 
-def _archive_sink(pages, out_dir, payload_col, ext_base, gzip_members,
-                  encode_fn, payload_py):
+def _archive_sink(pages, out_dir, payload_col, ext_base, encode_fn, payload_py):
     """Shared partition-per-archive sink core (see write_warc's contract
     docs): each task streams ITS OWN partition through ``encode_fn`` and
     atomically renames one ``part-NNNNN{ext}`` file; no shuffle, no
@@ -618,7 +613,7 @@ def _archive_sink(pages, out_dir, payload_col, ext_base, gzip_members,
     for stale in _os.listdir(out_dir):
         if stale.startswith(("part-", ".tmp-")) and ext_base in stale:
             _os.unlink(_os.path.join(out_dir, stale))
-    ext = ext_base + (".gz" if gzip_members else "")
+    ext = ext_base + ".gz"
 
     def write_partition(batches):
         # stream the partition's batches into one archive
@@ -640,11 +635,7 @@ def _archive_sink(pages, out_dir, payload_col, ext_base, gzip_members,
                         pdf["url"], pdf["warc_ts"], pdf[payload_col]
                     )
                 ]
-                fh.write(
-                    encode_fn(
-                        recs, gzip_members=gzip_members, id_offset=n
-                    )
-                )
+                fh.write(encode_fn(recs, id_offset=n))
                 n += len(recs)
         _os.replace(tmp, final)  # atomic: retries never leave half files
         yield pd.DataFrame({"file": [final], "records": [n]})

@@ -76,7 +76,7 @@ state_dir has to be re-ingested.
 `rewrite_data_files`): it rewrites a store into ceil(store bytes ÷
 ``spark.sql.files.maxPartitionBytes``) key-range-sorted files — one file
 at test scale, one parallel task per file at scale — through a
-crash-safe directory swap. Wire it with ``compact_every`` or call
+crash-safe directory swap. Callers run it with
 ``IncrementalDeduper.compact_stores()`` between triggers.
 
 Equivalence contract vs a batch run over the union of all inputs:
@@ -222,16 +222,9 @@ def recover_store(path: str) -> None:
 class IncrementalDeduper:
     """foreachBatch sink: maintains the signature and dup-pair stores."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        cfg: DedupConfig,
-        state_dir: str,
-        compact_every: int | None = None,
-    ):
+    def __init__(self, spark: SparkSession, cfg: DedupConfig, state_dir: str):
         self.spark = spark
         self.cfg = cfg
-        self.compact_every = compact_every
         # path -> (sort key, schema), in append order
         self.stores = {
             os.path.join(state_dir, name): (key, schema) for name, key, schema in STORES
@@ -253,8 +246,7 @@ class IncrementalDeduper:
 
     def compact_stores(self) -> None:
         """Maintenance: rewrite each store's per-batch small files into
-        key-sorted files of up to ``spark.sql.files.maxPartitionBytes``.
-        Runs automatically every ``compact_every`` batches when set."""
+        key-sorted files of up to ``spark.sql.files.maxPartitionBytes``."""
         for path, (key, schema) in self.stores.items():
             compact_parquet_store(self.spark, path, key, schema)
 
@@ -313,8 +305,6 @@ class IncrementalDeduper:
                     .write.mode("append")
                     .parquet(path)
                 )
-        if self.compact_every and (int(batch_id) + 1) % self.compact_every == 0:
-            self.compact_stores()
 
     def dup_pairs(self) -> DataFrame:
         return (
@@ -338,11 +328,10 @@ def run_incremental(
     spark: SparkSession,
     input_dir: str,
     state_dir: str,
-    cfg: DedupConfig | None = None,
+    cfg: DedupConfig,
 ) -> IncrementalDeduper:
     """Drain all available files from input_dir through the incremental
     pipeline (Trigger.AvailableNow) and return the deduper for inspection."""
-    cfg = cfg or DedupConfig()
     dedup = IncrementalDeduper(spark, cfg, state_dir)
     stream = (
         spark.readStream.schema(PAGES_SCHEMA)

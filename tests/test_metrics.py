@@ -20,14 +20,16 @@ def test_recall_at_k_golden(spark):
 
 
 def test_pipeline_writes_metrics_table(spark, pages_1k, tmp_path):
+    from pyspark.sql.pandas.types import from_arrow_schema
+
     from neural_locality_sensitive_hashing_spark.config import DedupConfig
     from neural_locality_sensitive_hashing_spark.plans.pipeline import DedupPipeline
+    from neural_locality_sensitive_hashing_spark.sources.checkpoint import METRICS
 
     pages = spark.read.parquet(pages_1k[0])
     pipe = DedupPipeline(spark, DedupConfig(), str(tmp_path / "ckpt"), "pages_1k")
     pipe.run(pages)
-    m = pipe.catalog.metrics()
-    assert m is not None
+    m = spark.read.schema(from_arrow_schema(METRICS)).parquet(str(tmp_path / "ckpt" / "_metrics"))
     rows = {r.metric: r.value for r in m.collect()}
     assert rows["n_docs"] == 1000.0
     assert rows["dup_pairs"] > 0

@@ -2,15 +2,31 @@
 
 from __future__ import annotations
 
+import os
 from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from neural_locality_sensitive_hashing_spark.config import DedupConfig
 from neural_locality_sensitive_hashing_spark.plans.pipeline import DedupPipeline
+from neural_locality_sensitive_hashing_spark.sources.checkpoint import LINEAGE, METRICS
 
 CFG = DedupConfig()
+
+
+def drop_from(pipe, stage):
+    """Simulate a mid-pipeline kill: drop this stage and everything after."""
+    for s in DedupPipeline.STAGES[DedupPipeline.STAGES.index(stage):]:
+        pipe.catalog.drop_snapshot(s)
+
+
+def read_table(spark, pipe, table, schema):
+    """One of the catalog's append tables (``_lineage``, ``_metrics``)."""
+    return spark.read.schema(from_arrow_schema(schema)).parquet(
+        os.path.join(pipe.catalog.base, table)
+    )
 
 
 @pytest.fixture(scope="module")
@@ -46,7 +62,7 @@ def test_full_run_then_resume_is_identical_and_skips_stages(spark, pipeline_env)
 
     # kill after cand_pairs: drop dup_pairs + clusters, resume; the
     # re-verified (a, b, jaccard) rows are bit-identical
-    pipe.drop_from("dup_pairs")
+    drop_from(pipe, "dup_pairs")
     clusters3, rep3 = pipe.run(pages)
     assert rep3.cached_stages() == {"signatures", "cand_pairs"}
     assert _dup_pair_rows(pipe) == pairs1
@@ -71,7 +87,8 @@ def test_lineage_written(spark, pages_1k, tmp_path):
     pages = spark.read.parquet(pages_1k[0])
     pipe = DedupPipeline(spark, CFG, str(tmp_path / "ckpt"), input_token="pages_1k")
     _, rep = pipe.run(pages)
-    lineage = pipe.catalog.lineage().groupBy("stage", "fingerprint").agg(F.sum("rows"))
+    lineage = read_table(spark, pipe, "_lineage", LINEAGE)
+    lineage = lineage.groupBy("stage", "fingerprint").agg(F.sum("rows"))
     sums = {(stage, fp): n for stage, fp, n in lineage.collect()}
     assert len(sums) == len(DedupPipeline.STAGES)
     for s in rep.stages:
@@ -80,11 +97,12 @@ def test_lineage_written(spark, pages_1k, tmp_path):
     assert rep.stages[0].rows == pages.count()
 
     def metric_rows():
-        return Counter(r for r in pipe.catalog.metrics().collect() if r.metric != "wall_sec")
+        metrics = read_table(spark, pipe, "_metrics", METRICS).collect()
+        return Counter(r for r in metrics if r.metric != "wall_sec")
 
     fresh = metric_rows()
     assert {r.metric for r in fresh} >= {"n_docs", "dup_pairs", "avg_jaccard", "n_clusters"}
-    pipe.drop_from("clusters")
+    drop_from(pipe, "clusters")
     _, rep2 = pipe.run(pages)
     assert rep2.cached_stages() == {"signatures", "cand_pairs", "dup_pairs"}
     assert [s.rows for s in rep2.stages] == [s.rows for s in rep.stages]
@@ -156,7 +174,7 @@ def test_keep_list_stage_resumes_from_clusters(spark, pipeline_env):
     clusters = pipe.catalog.read_snapshot("clusters")
     assert len(kl1) == clusters.select("cluster_id").distinct().count()
 
-    pipe.drop_from("keep_list")
+    drop_from(pipe, "keep_list")
     _, rep = pipe.run(pages)
     assert rep.cached_stages() == {
         "signatures", "cand_pairs", "dup_pairs", "clusters"
@@ -205,3 +223,23 @@ def test_job_checkpoint_mode_reports_and_resumes(pages_1k, tmp_path):
     assert second["clusters"] == straight["clusters"]
     recrawl = run_job("recrawl", "--checkpoint-dir", ckpt, "--recrawl-dedup")
     assert recrawl["resumed_stages"] == []
+
+
+def test_input_token_sees_a_rewrite_behind_a_glob(tmp_path):
+    """The job's resume token folds in every file it reads: rewriting the
+    one file a ``--pages`` glob matches changes the token, as it does for
+    a directory or a plain file, so the rerun does not resume stale
+    snapshots. Spark-free."""
+    from tools.run_dedup_job import _input_token
+
+    data = tmp_path / "pages"
+    data.mkdir()
+    part = data / "part-0.parquet"
+    part.write_bytes(b"first")
+    specs = [str(data / "*.parquet"), str(data), str(part)]
+    before = {spec: _input_token(spec, 5, False) for spec in specs}
+    assert before == {spec: _input_token(spec, 5, False) for spec in specs}
+    part.write_bytes(b"second")
+    os.utime(part, ns=(1, 1))
+    for spec in specs:
+        assert _input_token(spec, 5, False) != before[spec], spec

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+from neural_locality_sensitive_hashing_spark import session
 from neural_locality_sensitive_hashing_spark.session import (
     _TMPFS_MIN_FREE_BYTES,
     _tmpfs_scratch,
@@ -22,7 +23,8 @@ def test_tmpfs_opt_in_with_headroom(monkeypatch, tmp_path):
     os.makedirs(os.path.dirname(target))
     st = os.statvfs(os.path.dirname(target))
     free = st.f_bavail * st.f_frsize
-    got = _tmpfs_scratch(target)
+    monkeypatch.setattr(session, "_TMPFS_SCRATCH", target)
+    got = _tmpfs_scratch()
     if free >= _TMPFS_MIN_FREE_BYTES:
         assert got == target and os.path.isdir(target)
     else:
@@ -31,4 +33,5 @@ def test_tmpfs_opt_in_with_headroom(monkeypatch, tmp_path):
 
 def test_tmpfs_missing_mount(monkeypatch, tmp_path):
     monkeypatch.setenv("SPARK_GRAFT_TMPFS", "1")
-    assert _tmpfs_scratch(str(tmp_path / "nope" / "scratch")) is None
+    monkeypatch.setattr(session, "_TMPFS_SCRATCH", str(tmp_path / "nope" / "scratch"))
+    assert _tmpfs_scratch() is None

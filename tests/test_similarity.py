@@ -48,51 +48,6 @@ def test_knn_golden_small(spark):
     assert got[2] == {3, 4}
 
 
-def test_e2lsh_multiprobe_recall_monotone(spark, vectors):
-    """L2 multi-probe (K6 for the Euclidean path): the Lv et al. ranked
-    perturbation sequence over {-1,0,+1}^r reaches 3^r probes per band,
-    recall is monotone in probe depth (nested probe sets), and the probe
-    sets include the base cell."""
-    from neural_locality_sensitive_hashing_spark.operators.similarity import (
-        ann_lsh_l2,
-        knn_bruteforce_l2,
-    )
-
-    q = vectors.where(F.col("vec_id") < 30)
-    exact: dict[int, set] = {}
-    for r in knn_bruteforce_l2(q, vectors, k=10).collect():
-        exact.setdefault(r.query_id, set()).add(r.neighbor_id)
-
-    def recall(n_probes: int) -> float:
-        got: dict[int, set] = {}
-        rows = ann_lsh_l2(
-            q, vectors, dim=16, k=10, bucket_width=1.5, n_probes=n_probes
-        ).collect()
-        for r in rows:
-            got.setdefault(r.query_id, set()).add(r.neighbor_id)
-        return sum(
-            len(exact[k_] & got.get(k_, set())) / len(exact[k_]) for k_ in exact
-        ) / len(exact)
-
-    # depths beyond the old 1 + r cap: 5 and 9 = 3^2 now legal
-    r1, r3, r5, r9 = recall(1), recall(3), recall(5), recall(9)
-    assert r3 >= r1, f"multi-probe lowered recall: {r1} -> {r3}"
-    assert r5 >= r3 >= r1, f"recall not monotone: {r1}, {r3}, {r5}"
-    assert r9 >= r5, f"recall not monotone at full depth: {r5} -> {r9}"
-    assert r3 >= 0.7, f"multi-probe recall too low: {r3}"
-
-    import pytest as _pytest
-
-    from neural_locality_sensitive_hashing_spark.operators.similarity import (
-        e2lsh_params,
-        make_e2lsh_udf,
-    )
-
-    v, b = e2lsh_params(16, 16, 2, 1.5, 42)
-    with _pytest.raises(ValueError, match="n_probes"):
-        make_e2lsh_udf(v, b, 16, 2, 1.5, n_probes=10)  # > 3^2
-
-
 def test_knn_rank_and_dedup(spark, vectors):
     q = vectors.where(F.col("vec_id") < 5)
     nn = knn_bruteforce(q, vectors, k=10).collect()

@@ -114,7 +114,7 @@ def test_hyperplane_hot_bucket_aqe_skew_split(spark):
         rows.append((1000 + i, [float(x) for x in rng.normal(size=dim)]))
     emb = spark.createDataFrame(rows, "doc_id long, embedding array<double>")
     planes = hyperplane_params(dim, nb, bpb, 42)
-    udf = make_hyperplane_udf(planes, nb, bpb, n_probes=1)
+    udf = make_hyperplane_udf(planes, nb, bpb)
     ec = emb.select("doc_id", F.explode(udf(F.col("embedding"))).alias("bucket"))
 
     conf = {

@@ -312,40 +312,6 @@ def test_stream_and_pipeline_band_like_batch(spark, pages_1k, tmp_path):
     assert got
 
 
-def test_compact_every_auto_trigger(spark, pages_1k, tmp_path):
-    """compact_every=2 compacts after batches 1 and 3 (0-indexed ids 1, 3):
-    the batches between append at most one file per batch partition, and
-    after batch 3 every store holds ceil(bytes ÷ maxPartitionBytes) files
-    — one here, each store being far below maxPartitionBytes."""
-    from neural_locality_sensitive_hashing_spark.streaming.incremental import (
-        IncrementalDeduper,
-    )
-
-    pages_path, _ = pages_1k
-    pages = spark.read.parquet(pages_path)
-    dedup = IncrementalDeduper(
-        spark, CFG, str(tmp_path / "state"), compact_every=2
-    )
-    stores = (dedup.sig_store, dedup.pair_store)
-    for i in range(4):
-        before = {s: len(_data_files(s)) for s in stores}
-        dedup.process_batch(pages.where(f"doc_id % 4 = {i}"), i)
-        if i % 2 == 0:
-            for s in stores:
-                assert len(_data_files(s)) - before[s] <= _shuffle_parts(spark), s
-
-    for s in stores:
-        assert _compacted_file_count(spark, s) == len(_data_files(s)) == 1, s
-
-    from neural_locality_sensitive_hashing_spark.operators.dedup import (
-        minhash_dup_pairs as _mdp,
-    )
-
-    streamed = {(r.a, r.b) for r in dedup.dup_pairs().collect()}
-    batch = {(r.a, r.b) for r in _mdp(pages, CFG).collect()}
-    assert streamed == batch
-
-
 def test_small_batch_appends_one_signature_file(spark, pages_1k, tmp_path):
     """A ~170-doc batch in one scan split is under ``fan_out``'s byte
     floor: it signs in one task and appends one signature file, also when

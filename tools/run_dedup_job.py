@@ -12,10 +12,29 @@ also the resumable pipeline's per-stage cached/rows/wall.
 from __future__ import annotations
 
 import argparse
+import glob
 import hashlib
 import json
 import os
 import time
+
+
+def _input_files(pages_path: str):
+    """(name, path) of each file the job reads from ``pages_path``: a
+    directory's files under their relative names, the file itself with no
+    name, and each match of a glob (which Spark expands) the same way,
+    named under its matched path."""
+    if os.path.isdir(pages_path):
+        for root, _, files in sorted(os.walk(pages_path)):
+            for f in sorted(files):
+                p = os.path.join(root, f)
+                yield os.path.relpath(p, pages_path), p
+    elif os.path.exists(pages_path):
+        yield None, pages_path
+    else:
+        for match in sorted(glob.glob(pages_path)):
+            for name, p in _input_files(match):
+                yield match if name is None else os.path.join(match, name), p
 
 
 def _input_token(pages_path: str, n_docs: int, recrawl_dedup: bool) -> str:
@@ -26,15 +45,10 @@ def _input_token(pages_path: str, n_docs: int, recrawl_dedup: bool) -> str:
     counted before the recrawl pre-stage, so the flag is folded in too:
     a run with it dedups other pages than one without."""
     h = hashlib.sha256(f"{pages_path}@{n_docs}@recrawl={recrawl_dedup}".encode())
-    if os.path.isdir(pages_path):
-        for root, _, files in sorted(os.walk(pages_path)):
-            for f in sorted(files):
-                p = os.path.join(root, f)
-                st = os.stat(p)
-                h.update(f"{os.path.relpath(p, pages_path)}:{st.st_size}:{st.st_mtime_ns}".encode())
-    elif os.path.exists(pages_path):
-        st = os.stat(pages_path)
-        h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
+    for name, p in _input_files(pages_path):
+        st = os.stat(p)
+        stamp = f"{st.st_size}:{st.st_mtime_ns}"
+        h.update((stamp if name is None else f"{name}:{stamp}").encode())
     return h.hexdigest()[:24]
 
 
